@@ -49,18 +49,28 @@ deleted; FALSE and NULL survive — SQL three-valued logic).
 
 from __future__ import annotations
 
+import datetime
 import functools
+import glob
 import json
 import os
+import re
 import shutil
+import struct
 import time
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 CHECKPOINT_EVERY = 10
+
+# commit ops that only add rows: both change feeds replay their adds as
+# inserts, and the strict streaming source admits them
+APPEND_OPS = ("create", "append", "stream_append", "copy_into")
 
 # Stats are kept for flat orderable types only; nested/binary columns
 # are readable but never pruned on.
@@ -135,8 +145,6 @@ class LakeTable:
         never leaves a torn commit at the committed name."""
         os.makedirs(self.log_dir, exist_ok=True)
         if "ts" not in commit:
-            import time
-
             # commit wall-clock (epoch seconds) — what timestamp time
             # travel resolves against; legacy commits without it fall
             # back to the log file's mtime
@@ -261,6 +269,46 @@ class LakeTable:
             os.path.join(self.log_dir, f"{v:08d}.checkpoint.json")
         ) as f:
             return json.load(f)  # legacy JSON checkpoint (pre-parquet)
+
+    def _check_assign_types(
+        self,
+        spark: SparkSession,
+        state: dict,
+        assigns: dict[str, Column],
+        with_source: bool = False,
+    ) -> None:
+        """The gate for SET assignments, analysis-only and run BEFORE
+        any scan or staging: assigned columns must exist and must not
+        be GENERATED (assign their dependencies — the engine derives
+        or validates them), and each RAW expression resolves
+        against an empty ``t`` frame of the table schema (cross-joined
+        to an ``s`` twin for MERGE), so a drifting expression fails as a
+        ValueError here — not as a runtime ANSI cast mid-write (the
+        CASE projection that applies it later coerces branches to a
+        common type, which would mask the drift from the staged
+        frame's schema)."""
+        schema = StructType.fromJson(state["schema"])
+        unknown = sorted(set(assigns) - set(schema.names))
+        if unknown:
+            raise ValueError(f"SET names unknown columns: {unknown}")
+        locked = sorted(set(assigns) & set(self._generated(state)))
+        if locked:
+            raise ValueError(
+                f"columns {locked} are GENERATED ALWAYS AS — assign "
+                "their dependencies instead"
+            )
+        probe = spark.createDataFrame([], schema).alias("t")
+        if with_source:
+            probe = probe.join(
+                spark.createDataFrame([], schema).alias("s"), how="cross"
+            )
+        self._check_types(
+            state,
+            probe.select(
+                *[assigns.get(c, F.col(f"t.`{c}`")).alias(c)
+                  for c in schema.names]
+            ),
+        )
 
     def _check_types(self, state: dict, df: DataFrame) -> None:
         """Shared-column TYPE gate for every write path. Names alone
@@ -482,15 +530,15 @@ class LakeTable:
             df = df.select(
                 *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
             )
-            if partition_by:
+            if partition_by and any(c in mapping for c in partition_by):
                 # partition columns are barred from mapping, so this
-                # is always the identity on them — asserted cheaply
-                assert all(c not in mapping for c in partition_by)
+                # is always the identity on them — checked explicitly
+                # so the contract still fires under ``python -O``
+                raise ValueError(
+                    f"partition columns {partition_by} must not be "
+                    "column-mapped"
+                )
         os.makedirs(self.data_dir, exist_ok=True)
-        stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
-        writer = df.write.mode("errorifexists")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
         # Spark 4.1 local mode: concurrent Python-data-source
         # streaming queries in one JVM can corrupt a job's ONCE-
         # serialized stage binary (java.io.OptionalDataException at
@@ -501,23 +549,18 @@ class LakeTable:
         # side-effect-free, so this transient — and only this one —
         # retries with backoff instead of failing the caller's commit.
         for attempt in range(4):
+            stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")
+            writer = df.write.mode("errorifexists")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
             try:
                 writer.parquet(stage)
                 break
             except Exception as e:  # noqa: BLE001 - allowlist below
                 shutil.rmtree(stage, ignore_errors=True)
-                if (
-                    "OptionalDataException" not in str(e)
-                    or attempt == 3
-                ):
+                if "OptionalDataException" not in str(e) or attempt == 3:
                     raise
                 time.sleep(0.2 * (attempt + 1))
-                stage = os.path.join(
-                    self.path, f"_stage-{uuid.uuid4().hex}"
-                )
-                writer = df.write.mode("errorifexists")
-                if partition_by:
-                    writer = writer.partitionBy(*partition_by)
         prefix = uuid.uuid4().hex[:8]
         moved = []  # data/-relative paths
         seq = 0
@@ -626,7 +669,8 @@ class LakeTable:
         no thread overhead on the common uncommitted-CDF path. Each
         staging writes to its own uuid stage dir and appends to its
         own meta list, so the only shared state is Spark's own
-        thread-safe job submission."""
+        thread-safe job submission. If any staging raises, the files
+        its siblings staged are unlinked before the error propagates."""
         live = [(i, df, pby) for i, (df, pby) in enumerate(jobs)
                 if df is not None]
         out: list[list[dict]] = [[] for _ in jobs]
@@ -634,15 +678,21 @@ class LakeTable:
             for i, df, pby in live:
                 out[i] = self._stage_files(df, partition_by=pby)
             return out
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=len(live)) as pool:
             futs = [
                 (i, pool.submit(self._stage_files, df, partition_by=pby))
                 for i, df, pby in live
             ]
-            for i, fut in futs:
-                out[i] = fut.result()
+        # the pool has drained: if any staging raised, no commit will
+        # reference its siblings' files — reclaim them, then raise
+        errs = [f.exception() for _, f in futs if f.exception()]
+        if errs:
+            for _, f in futs:
+                if not f.exception():
+                    self._reclaim([m["path"] for m in f.result()])
+            raise errs[0]
+        for i, fut in futs:
+            out[i] = fut.result()
         return out
 
     def _partition_by(self, state: dict) -> list[str] | None:
@@ -806,16 +856,23 @@ class LakeTable:
             return self._scan(spark, state, rel_paths)
         base = self._scan(spark, state, rel_paths, meta=True)
         if dvp:
-            dv = spark.read.schema("_dv_file string, _dv_row long").parquet(
-                *[os.path.join(self.path, p) for p in dvp]
-            )
-            base = base.join(
-                dv,
-                (base["_lake_file"] == dv["_dv_file"])
-                & (base["_lake_ridx"] == dv["_dv_row"]),
-                "left_anti",
-            )
+            base = self._minus_dv(spark, base, dvp)
         return base if keep_meta else base.drop("_lake_file", "_lake_ridx")
+
+    def _minus_dv(
+        self, spark: SparkSession, base: DataFrame, dv_paths: list[str]
+    ) -> DataFrame:
+        """``base`` (a ``meta=True`` scan) minus every (file, row-index)
+        pair recorded in the ``dv_paths`` sidecars."""
+        dv = spark.read.schema("_dv_file string, _dv_row long").parquet(
+            *[os.path.join(self.path, p) for p in dv_paths]
+        )
+        return base.join(
+            dv,
+            (base["_lake_file"] == dv["_dv_file"])
+            & (base["_lake_ridx"] == dv["_dv_row"]),
+            "left_anti",
+        )
 
     def _stage_dv(self, matched: DataFrame) -> dict[str, dict]:
         """Write ``matched`` (columns ``_dv_file`` string basename,
@@ -913,10 +970,8 @@ class LakeTable:
             # posture). Resolve each expression against the incoming
             # frame; compute columns the frame omits, validate ones it
             # provides via the shared write-path contract.
-            import re as _re
-
             for col, sql in sorted(generated.items()):
-                if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", col):
+                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", col):
                     raise ValueError(
                         f"generated column name {col!r} must be an "
                         "identifier"
@@ -1003,8 +1058,6 @@ class LakeTable:
         commit: dict = {"op": "append", "remove": []}
         stage_mapping = None  # default: staging re-reads the log's
         if merge_schema:
-            from pyspark.sql.types import StructField
-
             if extra and state.get("config", {}).get(
                 "column_mapping"
             ) is not None:
@@ -1149,9 +1202,16 @@ class LakeTable:
             },
         )
 
-    # -- reading -------------------------------------------------------
-
     # -- CHECK constraints ------------------------------------------------
+
+    def _alter(self, state: dict, **fields) -> int:
+        """Commit a metadata-only ``alter`` (no file added or removed)
+        as the version after ``state``; returns it."""
+        v = state["version"] + 1
+        self._write_commit(
+            v, {"op": "alter", "add": [], "remove": [], **fields}
+        )
+        return v
 
     def constraints(self) -> dict[str, str]:
         """The table's CHECK constraints, ``{name: sql_expr}``."""
@@ -1179,8 +1239,6 @@ class LakeTable:
         FILE state only — like Delta RESTORE it does not re-validate,
         so rolling back past a constraint's add can resurrect
         violating rows; drop the constraint first if that matters."""
-        import re
-
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(
                 f"constraint name {name!r} must be an identifier"
@@ -1195,8 +1253,6 @@ class LakeTable:
                 f"CHECK ({cons[name]})"
             )
         # analysis-only expression gate against the bare table schema
-        from pyspark.sql.types import BooleanType
-
         empty = spark.createDataFrame(
             [], StructType.fromJson(state["schema"])
         )
@@ -1236,14 +1292,10 @@ class LakeTable:
                 spark, state["schema"], {name: expr_sql}, {}
             ),
         }
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "alter", "add": [], "remove": [], "config": cfg,
-             "constraint": {"action": "add", "name": name,
-                            "expr": expr_sql}},
+        return self._alter(
+            state, config=cfg,
+            constraint={"action": "add", "name": name, "expr": expr_sql},
         )
-        return v
 
     # -- column mapping (rename / drop without rewrite) -------------------
 
@@ -1253,8 +1305,6 @@ class LakeTable:
         directory layout and the manifest's partition values), and
         must not be referenced by a CHECK constraint (conservative
         word-boundary test — drop the constraint first)."""
-        import re
-
         names = [f["name"] for f in state["schema"]["fields"]]
         if col not in names:
             raise ValueError(f"no column {col!r} in {names}")
@@ -1302,8 +1352,6 @@ class LakeTable:
         (see :meth:`_guard_column_ddl`). A stream running across the
         rename keeps its analysis-time schema until restart — the
         standard mid-stream evolution contract."""
-        import re
-
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", new):
             raise ValueError(f"column name {new!r} must be an identifier")
         state = self._state()
@@ -1319,14 +1367,10 @@ class LakeTable:
                 f["name"] = new
         cfg = dict(state.get("config", {}))
         cfg["column_mapping"] = mapping
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "alter", "add": [], "remove": [], "schema": schema,
-             "config": cfg,
-             "column": {"action": "rename", "from": old, "to": new}},
+        return self._alter(
+            state, schema=schema, config=cfg,
+            column={"action": "rename", "from": old, "to": new},
         )
-        return v
 
     def drop_column(self, name: str) -> int:
         """DROP a column METADATA-ONLY: the field leaves the logical
@@ -1348,14 +1392,10 @@ class LakeTable:
         ]
         cfg = dict(state.get("config", {}))
         cfg["column_mapping"] = mapping
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "alter", "add": [], "remove": [], "schema": schema,
-             "config": cfg,
-             "column": {"action": "drop", "name": name}},
+        return self._alter(
+            state, schema=schema, config=cfg,
+            column={"action": "drop", "name": name},
         )
-        return v
 
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT — metadata-only commit."""
@@ -1371,13 +1411,10 @@ class LakeTable:
         proofs = dict(cfg.get("native_proofs") or {})
         proofs.pop(f"check:{name}", None)
         cfg["native_proofs"] = proofs
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "alter", "add": [], "remove": [], "config": cfg,
-             "constraint": {"action": "drop", "name": name}},
+        return self._alter(
+            state, config=cfg,
+            constraint={"action": "drop", "name": name},
         )
-        return v
 
     def add_columns(self, fields) -> int:
         """ALTER TABLE ADD COLUMNS — METADATA-ONLY widen (the
@@ -1397,8 +1434,6 @@ class LakeTable:
 
         ``fields``: a ``StructType`` or list of ``StructField``.
         """
-        import re as _re
-
         flds = (
             list(fields.fields)
             if isinstance(fields, StructType)
@@ -1410,7 +1445,7 @@ class LakeTable:
         names = [f["name"] for f in state["schema"]["fields"]]
         seen: set[str] = set()
         for f in flds:
-            if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", f.name):
+            if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", f.name):
                 raise ValueError(
                     f"column name {f.name!r} must be an identifier"
                 )
@@ -1424,10 +1459,9 @@ class LakeTable:
             StructField(f.name, f.dataType, True).jsonValue()
             for f in flds
         ]
-        commit: dict = {
-            "op": "alter", "add": [], "remove": [], "schema": schema,
-            "column": {"action": "add",
-                       "names": [f.name for f in flds]},
+        extra: dict = {
+            "schema": schema,
+            "column": {"action": "add", "names": [f.name for f in flds]},
         }
         if state.get("config", {}).get("column_mapping") is not None:
             cfg = dict(state.get("config", {}))
@@ -1435,10 +1469,8 @@ class LakeTable:
             for f in flds:
                 mp[f.name] = f"{f.name}_{uuid.uuid4().hex[:8]}"
             cfg["column_mapping"] = mp
-            commit["config"] = cfg
-        v = state["version"] + 1
-        self._write_commit(v, commit)
-        return v
+            extra["config"] = cfg
+        return self._alter(state, **extra)
 
     # config keys the engine itself owns — each has a dedicated API
     # with its own guards, so none is settable as a free-form property
@@ -1491,13 +1523,10 @@ class LakeTable:
                 cur[key] = val
             changed[key] = val
         cfg["properties"] = cur
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "alter", "add": [], "remove": [], "config": cfg,
-             "properties": {"action": "set", "values": changed}},
+        return self._alter(
+            state, config=cfg,
+            properties={"action": "set", "values": changed},
         )
-        return v
 
     def unset_properties(self, keys) -> int:
         """ALTER TABLE UNSET TBLPROPERTIES — strict (Delta without IF
@@ -1516,13 +1545,10 @@ class LakeTable:
         for k in ks:
             del cur[k]
         cfg["properties"] = cur
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "alter", "add": [], "remove": [], "config": cfg,
-             "properties": {"action": "unset", "values": sorted(ks)}},
+        return self._alter(
+            state, config=cfg,
+            properties={"action": "unset", "values": sorted(ks)},
         )
-        return v
 
     @staticmethod
     def _native_proofs(
@@ -1592,13 +1618,10 @@ class LakeTable:
         cfg["native_proofs"] = self._native_proofs(
             spark, state["schema"], cons, gen
         )
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "alter", "add": [], "remove": [], "config": cfg,
-             "native_proofs": {"action": "refresh"}},
+        return self._alter(
+            state, config=cfg,
+            native_proofs={"action": "refresh"},
         )
-        return v
 
     def _commit_ts(self, v: int) -> float:
         """A commit's wall-clock time: the recorded 'ts' action, or the
@@ -1676,11 +1699,7 @@ class LakeTable:
         else:
             files = sorted(state["files"])
         if version is not None:
-            referenced = list(files)
-            for p in files:
-                referenced += (
-                    state["files"][p].get("dv") or {}
-                ).get("paths", [])
+            referenced = list(files) + self._dv_paths_of(state, files)
             missing = [
                 p
                 for p in referenced
@@ -1750,7 +1769,7 @@ class LakeTable:
             ).append(p)
         return cand, clean
 
-    # -- delete --------------------------------------------------------
+    # -- row mutations -------------------------------------------------
 
     def delete_where(
         self,
@@ -1774,18 +1793,18 @@ class LakeTable:
            rewritten; every other file is carried by reference.
 
         ``mode='dv'`` — MERGE-ON-READ deletion vectors (the public
-        Delta DV design, VLDB 2023): no data file is read twice or
-        rewritten at all. The matched rows' (file, row-index) pairs are
-        written as parquet sidecars under data/ and recorded per file
-        in the manifest; every snapshot read anti-joins them out. The
-        delete costs O(matched indexes) writes — at 100 TB, removing
-        0.1% of rows stops rewriting terabytes. The flip side is a
-        read-path anti-join and stats that become upper bounds
-        (pruning stays sound: deleted rows only shrink a file's true
-        range, never widen it); :meth:`compact` materializes the
-        vectors away when they accumulate. Repeated dv deletes are
-        cumulative and exact: the match scan runs on the LIVE view, so
-        already-deleted rows can never re-match or double-count.
+        Delta DV design, VLDB 2023): no data file is rewritten at all.
+        The matched rows' (file, row-index) pairs are written as
+        parquet sidecars under data/ and recorded per file in the
+        manifest; every snapshot read anti-joins them out. The delete
+        costs O(matched indexes) writes — at 100 TB, removing 0.1% of
+        rows stops rewriting terabytes. The flip side is a read-path
+        anti-join and stats that become upper bounds (pruning stays
+        sound: deleted rows only shrink a file's true range, never
+        widen it); :meth:`compact` materializes the vectors away when
+        they accumulate. Repeated dv deletes are cumulative and exact:
+        the match scan runs on the LIVE view, so already-deleted rows
+        can never re-match or double-count.
 
         Both modes persist CDF pre-images on ``cdf=True`` tables and
         commit with ``op='delete'``, so the change feed and the strict
@@ -1796,67 +1815,14 @@ class LakeTable:
         """
         if mode not in ("rewrite", "dv"):
             raise ValueError("mode must be 'rewrite' or 'dv'")
-        state = self._state()
-        all_files = sorted(state["files"])
-        if prune is not None:
-            cand, _ = self._prune_split(state, *prune)
-        else:
-            cand = all_files
-        pby = self._partition_by(state)
-        if mode == "dv":
-            return self._delete_where_dv(spark, state, predicate, cand)
-        touched: list[str] = []
-        rows_deleted = 0
-        if cand:
-            scan = self._scan_live(spark, state, cand, keep_meta=True)
-            hits = (
-                scan.groupBy("_lake_file")
-                .agg(
-                    F.sum(predicate.cast("long")).alias("_matches")
-                )
-                .where(F.col("_matches") > 0)
-                .collect()
-            )
-            by_name = {os.path.basename(p): p for p in cand}
-            for r in hits:
-                touched.append(by_name[r["_lake_file"]])
-                rows_deleted += r["_matches"]
-        add: list[dict] = []
-        cdf_delete: list[dict] = []
-        if touched:
-            survivors = self._scan_live(spark, state, touched).where(
-                # NULL predicate rows survive: keep unless literally TRUE
-                ~predicate.eqNullSafe(F.lit(True))
-            )
-            # change feed: persist the removed-row pre-images so
-            # read_changes_since can replay this commit as -1 rows;
-            # the two stagings read the same touched files and are
-            # independent, so they overlap (guide §2.6)
-            add, cdf_delete = self._stage_files_par([
-                (survivors, pby),
-                (
-                    self._scan_live(spark, state, touched).where(
-                        predicate.eqNullSafe(F.lit(True))
-                    )
-                    if self._cdf_enabled(state)
-                    else None,
-                    pby,
-                ),
-            ])
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "delete", "add": add, "remove": touched,
-             "predicate": str(predicate), "rows_deleted": rows_deleted,
-             **({"cdf_delete": cdf_delete}
-                if self._cdf_enabled(state) else {})},
+        # only literally TRUE rows go: FALSE and NULL rows survive
+        hit = predicate.eqNullSafe(F.lit(True))
+        r = self._mutate(
+            spark, self._state(), "delete", mode, hit, hit,
+            prune=prune, count_as="rows_deleted",
+            extra={"predicate": str(predicate)},
         )
-        return {
-            "version": v,
-            "rows_deleted": rows_deleted,
-            "files_rewritten": len(touched),
-            "files_kept": len(all_files) - len(touched),
-        }
+        return _pick(r, "rows_deleted")
 
     def replace_where(
         self,
@@ -1885,7 +1851,8 @@ class LakeTable:
         is carried by reference. On a table partitioned by the
         predicate column the touched set is exactly the region's
         partitions — the day-repair loop costs O(region), never
-        O(table).
+        O(table). The survivor rewrite, the pre-images and ``df``
+        stage in one parallel batch.
 
         CDF on ``cdf=True`` tables: the region's pre-images persist as
         the delete side and ONLY the staged ``df`` files are the
@@ -1905,76 +1872,20 @@ class LakeTable:
         df = df.select(*cols)
         self._check_types(state, df)
         self._enforce_constraints(state, df, "replace_where")
-        if df.where(
-            ~predicate.eqNullSafe(F.lit(True))
-        ).limit(1).count():
+        hit = predicate.eqNullSafe(F.lit(True))
+        if df.where(~hit).limit(1).count():
             raise ValueError(
                 "replace_where: incoming rows must ALL satisfy the "
                 f"predicate {predicate} — rows outside the replaced "
                 "region would break idempotent re-runs (widen the "
                 "predicate or filter the batch)"
             )
-        all_files = sorted(state["files"])
-        cand = (
-            self._prune_split(state, *prune)[0]
-            if prune is not None
-            else all_files
+        r = self._mutate(
+            spark, state, "replace_where", "rewrite", hit, hit,
+            prune=prune, incoming=lambda _hit, _src: df,
+            count_as="rows_deleted", extra={"predicate": str(predicate)},
         )
-        pby = self._partition_by(state)
-        touched: list[str] = []
-        rows_deleted = 0
-        if cand:
-            scan = self._scan_live(spark, state, cand, keep_meta=True)
-            hits = (
-                scan.groupBy("_lake_file")
-                .agg(F.sum(predicate.cast("long")).alias("_matches"))
-                .where(F.col("_matches") > 0)
-                .collect()
-            )
-            by_name = {os.path.basename(p): p for p in cand}
-            for r in hits:
-                touched.append(by_name[r["_lake_file"]])
-                rows_deleted += r["_matches"]
-        survivor_add: list[dict] = []
-        cdf_delete: list[dict] = []
-        if touched:
-            survivors = self._scan_live(spark, state, touched).where(
-                ~predicate.eqNullSafe(F.lit(True))
-            )
-            # survivor rewrite, pre-image persist, and the incoming
-            # region all stage independently — overlap (guide §2.6)
-            survivor_add, cdf_delete, new_add = self._stage_files_par([
-                (survivors, pby),
-                (
-                    self._scan_live(spark, state, touched).where(
-                        predicate.eqNullSafe(F.lit(True))
-                    )
-                    if self._cdf_enabled(state)
-                    else None,
-                    pby,
-                ),
-                (df, pby),
-            ])
-        else:
-            new_add = self._stage_files(df, partition_by=pby)
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "replace_where",
-             "add": survivor_add + new_add, "remove": touched,
-             "predicate": str(predicate),
-             "rows_deleted": rows_deleted,
-             **({"cdf_delete": cdf_delete,
-                 "cdf_insert": list(new_add)}
-                if self._cdf_enabled(state) else {})},
-        )
-        return {
-            "version": v,
-            "rows_deleted": rows_deleted,
-            "rows_inserted": sum(m.get("rows", 0) for m in new_add),
-            "files_rewritten": len(touched),
-            "files_kept": len(all_files) - len(touched),
-        }
+        return _pick(r, "rows_deleted", "rows_inserted")
 
     def copy_into(
         self, spark: SparkSession, source, file_format: str = "parquet"
@@ -1999,11 +1910,9 @@ class LakeTable:
         (header=true) or json, both read UNDER the table's
         non-generated schema. GENERATED columns compute per the write
         contract; constraints enforce atomically."""
-        import glob as _glob
-
         state = self._state()
         if isinstance(source, str):
-            paths = _glob.glob(source)
+            paths = glob.glob(source)
         else:
             paths = [str(p) for p in source]
         paths = sorted(os.path.abspath(p) for p in paths)
@@ -2075,51 +1984,255 @@ class LakeTable:
             "rows_loaded": sum(m.get("rows", 0) for m in add),
         }
 
-    def _delete_where_dv(
+    def _mutate(
         self,
         spark: SparkSession,
         state: dict,
-        predicate: Column,
-        cand: list[str],
+        op: str,
+        mode: str,
+        changed: Column,
+        drop: Column,
+        *,
+        post: Callable[[DataFrame], DataFrame] | None = None,
+        gate: Callable[[DataFrame], None] | None = None,
+        prune: tuple[str, str, object] | None = None,
+        source: DataFrame | None = None,
+        keys: list[str] | None = None,
+        lands: bool = False,
+        incoming: Callable[[list[str], DataFrame | None], DataFrame | None]
+        | None = None,
+        count_as: str | None = None,
+        extra: dict | None = None,
     ) -> dict:
-        """The dv-mode body of :meth:`delete_where`: match on the LIVE
-        view of the candidates, stage the matched (file, row-index)
-        pairs as dv parquet, and commit the cumulatively-merged file
-        metas under the ``dv`` action — zero data files rewritten."""
-        dv_metas: list[dict] = []
-        cdf_delete: list[dict] = []
-        rows_deleted = 0
-        if cand:
-            live = self._scan_live(spark, state, cand, keep_meta=True)
-            matched = live.where(predicate.eqNullSafe(F.lit(True)))
-            new_dv = self._stage_dv(
-                matched.select(
-                    F.col("_lake_file").alias("_dv_file"),
-                    F.col("_lake_ridx").alias("_dv_row"),
+        """The ONE row-mutation core under delete, update, replace,
+        merge and CDC apply: find → stage → commit, each step once.
+
+        A front end validates its inputs and describes the mutation as
+        flags over the candidates' live rows, aliased ``t`` — with a
+        ``source``, left-outer-joined on ``keys`` to the frozen source,
+        aliased ``s``: ``changed`` (the row's content changes) and
+        ``drop`` (the row is deleted; implies ``changed``), both
+        null-free booleans, plus ``post``, a full-row projection that
+        yields a changed row's post-image and any other row unchanged.
+
+        1. Freeze ``source`` (its columns are the table's plus any
+           front-end extras): stage its parquet once — ``rows_source``
+           without a ``count()``, and every join re-reads the staged
+           files instead of recomputing the lineage — drop empty part
+           files, and enforce the MERGE precondition that the source
+           is key-unique (a target row matching two source rows is
+           nondeterministic — Delta throws too; NULL keys never match,
+           so they are exempt).
+        2. Candidates: the stats ``prune`` (must be implied by the
+           mutation) or all files.
+        3. ONE per-file aggregation over the candidates yields the
+           touched files (a changed row), the hit files (a source
+           match — the insert anti-join scope) and the row counts.
+           Files where nothing changes stay shared by reference.
+        4. Stage. ``mode='rewrite'``: touched files rewrite through
+           ``post`` minus the dropped rows, in ONE parallel batch with
+           the CDF pre-images (-1 side), the changed rows' post-images
+           (+1 side; carried rows of rewritten files never appear) and
+           the ``incoming(hit, frozen source)`` rows (guide §2.6: the
+           jobs are independent, so their tasks overlap).
+           ``mode='dv'``: the changed rows become deletion vectors and
+           their post-images land as new files — zero rewrites for any
+           mutation. ``gate`` vets the post-images before anything
+           stages. ``lands=True`` means every source row lands
+           (unconditional ``SET *`` and ``INSERT *``): the frozen
+           source files ARE the commit's incoming files, so the front
+           end drops every matched row instead of projecting
+           post-images, and ``gate`` vets the frozen source instead.
+           Otherwise the frozen source was scratch and is unlinked.
+        5. ONE commit: ``op`` plus ``extra``, ``count_as`` naming the
+           changed-row count, ``mode``/``dv`` in dv mode, and
+           ``cdf_delete`` (+ ``cdf_insert`` unless ``op='delete'``) on
+           ``cdf=True`` tables. A failure before the commit lands — a
+           staging job raising or the O_EXCL gate lost to a concurrent
+           writer — unlinks every data file this attempt staged, so a
+           retry loop leaves no orphans; once the commit file exists
+           nothing is reclaimed.
+
+        Returns every count a front end may report; each picks its
+        own keys (:func:`_pick`)."""
+        cdf_on = self._cdf_enabled(state)
+        pby = self._partition_by(state)
+        table = StructType.fromJson(state["schema"])
+        cols = table.names
+        all_files = sorted(state["files"])
+        staged: list[str] = []  # data/ files this attempt wrote
+        try:
+            src_add: list[dict] = []
+            src_df = None
+            matched = F.lit(False)
+            if source is not None:
+                src_add = self._stage_files(source, partition_by=pby)
+                staged += [m["path"] for m in src_add]
+                # empty part files carry no rows — never reference them
+                self._reclaim([m["path"] for m in src_add if not m["rows"]])
+                src_add = [m for m in src_add if m["rows"]]
+                src_df = self._scan(
+                    spark,
+                    state,
+                    [m["path"] for m in src_add],
+                    schema=StructType(
+                        table.fields
+                        + [f for f in source.schema.fields
+                           if f.name not in cols]
+                    ),
                 )
+                nn = functools.reduce(
+                    lambda a, b: a & b, [F.col(k).isNotNull() for k in keys]
+                )
+                if (
+                    src_df.where(nn)
+                    .groupBy(*keys)
+                    .agg(F.count(F.lit(1)).alias("_n"))
+                    .where(F.col("_n") > 1)
+                    .limit(1)
+                    .count()
+                ):
+                    raise ValueError(
+                        f"{op} source is not key-unique on {keys} — a "
+                        "multi-match is nondeterministic"
+                    )
+                if lands and gate is not None:
+                    gate(src_df)
+                matched = _matched()
+                on = functools.reduce(
+                    lambda a, b: a & b,
+                    [F.col(f"t.`{k}`") == F.col(f"s.`{k}`") for k in keys],
+                )
+                s_side = src_df.withColumn("_s_match", F.lit(True)).alias("s")
+
+            def rows(files: list[str], meta: bool = True) -> DataFrame:
+                # _lake_file/_lake_ridx are captured ON the scan (metadata
+                # columns are gone after a join); the live view excludes
+                # dv rows, so a deleted row never matches or changes.
+                # Without meta a dv-free file set keeps the plain scan:
+                # the optimizer does not prune an unused row index
+                t = self._scan_live(spark, state, files, keep_meta=meta)
+                t = t.alias("t")
+                return t if src_df is None else t.join(s_side, on, "left_outer")
+
+            def image(df: DataFrame) -> DataFrame:  # the target row as is
+                return df.select(*[F.col(f"t.`{c}`").alias(c) for c in cols])
+
+            cand = (
+                self._prune_split(state, *prune)[0]
+                if prune is not None
+                else all_files
             )
-            rows_deleted = sum(d["deleted"] for d in new_dv.values())
-            dv_metas = self._fold_dv_metas(state, cand, new_dv)
-            if dv_metas and self._cdf_enabled(state):
-                cdf_delete = self._stage_files(
-                    matched.drop("_lake_file", "_lake_ridx"),
-                    partition_by=self._partition_by(state),
+            hit: list[str] = []
+            touched: list[str] = []
+            n_changed = n_matched = n_both = 0
+            if cand:
+                by_name = {os.path.basename(p): p for p in cand}
+                per_file = (
+                    rows(cand)
+                    .groupBy("_lake_file")
+                    .agg(
+                        F.sum(changed.cast("long")).alias("_c"),
+                        F.sum(matched.cast("long")).alias("_m"),
+                        F.sum((changed & matched).cast("long")).alias("_cm"),
+                    )
+                    .where((F.col("_c") > 0) | (F.col("_m") > 0))
+                    .collect()
                 )
+                for r in per_file:
+                    n_changed += r["_c"]
+                    n_matched += r["_m"]
+                    n_both += r["_cm"]
+                    if r["_m"]:
+                        hit.append(by_name[r["_lake_file"]])
+                    if r["_c"]:
+                        touched.append(by_name[r["_lake_file"]])
+                hit.sort()
+                touched.sort()
+
+            remove: list[str] = []
+            dv_metas: list[dict] = []
+            rewrite = pre = post_rows = None
+            if touched:
+                tf = rows(touched, meta=mode == "dv")
+                if cdf_on:
+                    pre = image(tf.where(changed))
+                if post is not None:
+                    post_rows = post(tf.where(changed & ~drop))
+                    if gate is not None:
+                        gate(post_rows)
+                if mode == "dv":
+                    new_dv = self._stage_dv(
+                        tf.where(changed).select(
+                            F.col("_lake_file").alias("_dv_file"),
+                            F.col("_lake_ridx").alias("_dv_row"),
+                        )
+                    )
+                    staged += [p for d in new_dv.values() for p in d["paths"]]
+                    dv_metas = self._fold_dv_metas(state, touched, new_dv)
+                else:
+                    remove = touched
+                    rewrite = (post or image)(tf.where(~drop))
+                    if not cdf_on:
+                        post_rows = None  # the rewrite carries them
+            ins = incoming(hit, src_df) if incoming is not None else None
+            rew_add, pre_add, post_add, ins_add = self._stage_files_par([
+                (rewrite, pby), (pre, pby), (post_rows, pby), (ins, pby),
+            ])
+            staged += [
+                m["path"]
+                for part in (rew_add, pre_add, post_add, ins_add)
+                for m in part
+            ]
+            lead = src_add if lands else []
+            if not lands:
+                self._reclaim([m["path"] for m in src_add])  # scratch
+            commit = {
+                "op": op,
+                "add": lead + rew_add
+                + (post_add if mode == "dv" else []) + ins_add,
+                "remove": remove,
+                **(extra or {}),
+            }
+            if count_as is not None:
+                commit[count_as] = n_changed
+            if mode == "dv":
+                commit["mode"] = "dv"
+                commit["dv"] = dv_metas
+            if cdf_on:
+                commit["cdf_delete"] = pre_add
+                if op != "delete":
+                    commit["cdf_insert"] = lead + post_add + ins_add
+        except BaseException:
+            self._reclaim(staged)
+            raise
         v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "delete", "mode": "dv", "add": [], "remove": [],
-             "dv": dv_metas, "predicate": str(predicate),
-             "rows_deleted": rows_deleted,
-             **({"cdf_delete": cdf_delete}
-                if self._cdf_enabled(state) else {})},
-        )
+        try:
+            self._write_commit(v, commit)
+        except ConcurrentCommitError:
+            self._reclaim(staged)
+            raise
         return {
             "version": v,
-            "rows_deleted": rows_deleted,
-            "files_rewritten": 0,
-            "files_kept": len(state["files"]),
+            **({count_as: n_changed} if count_as is not None else {}),
+            "rows_matched": n_matched,
+            "rows_matched_changed": n_both,
+            "rows_not_matched_by_source_changed": n_changed - n_both,
+            "rows_inserted": sum(m["rows"] for m in ins_add),
+            "rows_source": sum(m["rows"] for m in src_add),
+            "files_rewritten": len(remove),
+            "files_kept": len(all_files) - len(remove),
         }
+
+    def _reclaim(self, paths: list[str]) -> None:
+        """Unlink table-relative data files no commit references (a
+        failed or losing attempt's stagings, a scratch source). Files
+        already gone are fine."""
+        for p in paths:
+            try:
+                os.unlink(os.path.join(self.path, p))
+            except FileNotFoundError:
+                pass
 
     def _fold_dv_metas(
         self, state: dict, cand: list[str], new_dv: dict[str, dict]
@@ -2140,6 +2253,62 @@ class LakeTable:
             }
             metas.append(m)
         return metas
+
+    def _merge_inserts(
+        self,
+        spark: SparkSession,
+        state: dict,
+        keys: list[str],
+        hit: list[str],
+        src: DataFrame,
+        cond: str | None,
+        insert_set: dict[str, str] | None,
+        what: str,
+    ) -> DataFrame:
+        """MERGE's not-matched insert side: the frozen source
+        anti-joined against the HIT files' live keys (a NULL-key
+        source row matches nothing and inserts — SQL semantics), gated
+        by ``cond`` on IS TRUE (bare source columns — only the source
+        row is in scope), projected through ``insert_set`` and CHECKed.
+
+        ``insert_set`` is SQL ``INSERT (cols) VALUES (exprs)``:
+        assigned columns take their expression cast to the column's
+        type (store-assignment coercion), omitted non-generated
+        columns insert NULL, omitted GENERATED columns are computed
+        (provided ones validate) — the Delta insert contract."""
+        table = StructType.fromJson(state["schema"])
+        cols = table.names
+        ins = (
+            src.join(
+                self._scan_live(spark, state, hit).select(*keys),
+                keys,
+                "left_anti",
+            )
+            if hit
+            else src
+        )
+        if cond is not None:
+            ins = ins.where(_is_true(cond))
+        if insert_set is not None:
+            gen = self._generated(state)
+            ins = self._apply_generated(
+                state,
+                ins.select(
+                    *[
+                        (
+                            F.expr(insert_set[f.name])
+                            if f.name in insert_set
+                            else F.lit(None)
+                        ).cast(f.dataType).alias(f.name)
+                        for f in table.fields
+                        if f.name in insert_set or f.name not in gen
+                    ]
+                ),
+                what,
+            )
+        ins = ins.select(*cols)
+        self._enforce_constraints(state, ins, what)
+        return ins
 
     # -- update ---------------------------------------------------------
 
@@ -2190,194 +2359,48 @@ class LakeTable:
             raise ValueError("set_exprs must assign at least one column")
         state = self._state()
         cols = [f["name"] for f in state["schema"]["fields"]]
-        unknown = sorted(set(set_exprs) - set(cols))
-        if unknown:
-            raise ValueError(f"SET names unknown columns: {unknown}")
         gen = self._generated(state)
-        locked = sorted(set(set_exprs) & set(gen))
-        if locked:
-            raise ValueError(
-                f"columns {locked} are GENERATED ALWAYS AS — assign "
-                "their dependencies; the engine recomputes them"
-            )
         assigns = {
             c: (e if isinstance(e, Column) else F.lit(e))
             for c, e in set_exprs.items()
         }
-        # analysis-only type gate BEFORE any scan or staging: resolve
-        # each assignment against the bare table schema so a drifting
-        # expression fails as a ValueError here — not as a runtime ANSI
-        # cast mid-write (Spark coerces when/otherwise branches to a
-        # common type, which would mask the drift from the staged
-        # frame's schema)
-        self._check_types(
-            state,
-            spark.createDataFrame(
-                [], StructType.fromJson(state["schema"])
-            ).select(*[assigns.get(c, F.col(c)).alias(c) for c in cols]),
-        )
-        matched_true = predicate.eqNullSafe(F.lit(True))
-        pby = self._partition_by(state)
-        all_files = sorted(state["files"])
-        cand = (
-            self._prune_split(state, *prune)[0]
-            if prune is not None
-            else all_files
-        )
+        self._check_assign_types(spark, state, assigns)
+        hit = predicate.eqNullSafe(F.lit(True))
 
-        def post_image(df: DataFrame) -> DataFrame:
-            # matched rows only -> assigned values, one projection;
-            # generated columns then RECOMPUTE over the post-assignment
-            # row (Delta's contract: dependencies changed, so the
-            # generated value follows)
-            out = df.where(matched_true).select(
-                *[assigns.get(c, F.col(c)).alias(c) for c in cols]
-            )
-            for c, sql in sorted(gen.items()):
-                out = out.withColumn(c, F.expr(sql))
-            return out
-
-        if mode == "dv":
-            return self._update_where_dv(
-                spark, state, predicate, cand, cols, assigns, post_image
-            )
-
-        touched: list[str] = []
-        rows_updated = 0
-        if cand:
-            scan = self._scan_live(spark, state, cand, keep_meta=True)
-            hits = (
-                scan.groupBy("_lake_file")
-                .agg(F.sum(matched_true.cast("long")).alias("_matches"))
-                .where(F.col("_matches") > 0)
-                .collect()
-            )
-            by_name = {os.path.basename(p): p for p in cand}
-            for r in hits:
-                touched.append(by_name[r["_lake_file"]])
-                rows_updated += r["_matches"]
-        add: list[dict] = []
-        cdf_delete: list[dict] = []
-        cdf_insert: list[dict] = []
-        if touched:
-            tdf = self._scan_live(spark, state, touched)
-            rewritten = tdf.select(
+        def post(df: DataFrame) -> DataFrame:
+            out = df.select(
                 *[
-                    F.when(matched_true, assigns[c])
-                    .otherwise(F.col(c))
-                    .alias(c)
+                    F.when(hit, assigns[c]).otherwise(F.col(c)).alias(c)
                     if c in assigns
                     else F.col(c)
                     for c in cols
                 ],
-                *([matched_true.alias("_upd_m")] if gen else []),
+                *([hit.alias("_upd_m")] if gen else []),
             )
-            if gen:
-                # recompute generated columns for MATCHED rows over the
-                # post-assignment values; carried-over rows keep theirs
-                for c, sql in sorted(gen.items()):
-                    rewritten = rewritten.withColumn(
-                        c,
-                        F.when(F.col("_upd_m"), F.expr(sql)).otherwise(
-                            F.col(c)
-                        ),
-                    )
-                rewritten = rewritten.drop("_upd_m")
-            self._check_types(state, rewritten)
-            # gate only the post-images (carried-over rows satisfied
-            # the constraints when they were written) — O(matched)
-            self._enforce_constraints(
-                state, post_image(tdf), "update_where post-images"
-            )
-            # rewrite + the two CDF sides all derive from the touched
-            # files independently — overlap their jobs (guide §2.6)
-            cdf_on = self._cdf_enabled(state)
-            add, cdf_delete, cdf_insert = self._stage_files_par([
-                (rewritten, pby),
-                (tdf.where(matched_true) if cdf_on else None, pby),
-                (post_image(tdf) if cdf_on else None, pby),
-            ])
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "update", "add": add, "remove": touched,
-             "predicate": str(predicate),
-             "set": {c: str(e) for c, e in assigns.items()},
-             "rows_updated": rows_updated,
-             **({"cdf_delete": cdf_delete, "cdf_insert": cdf_insert}
-                if self._cdf_enabled(state) else {})},
-        )
-        return {
-            "version": v,
-            "rows_updated": rows_updated,
-            "files_rewritten": len(touched),
-            "files_kept": len(all_files) - len(touched),
-        }
+            # generated columns RECOMPUTE over the post-assignment row
+            # (Delta's contract: dependencies changed, so the generated
+            # value follows); carried-over rows keep theirs
+            for c, sql in sorted(gen.items()):
+                out = out.withColumn(
+                    c, F.when(F.col("_upd_m"), F.expr(sql)).otherwise(F.col(c))
+                )
+            return out.drop("_upd_m") if gen else out
 
-    def _update_where_dv(
-        self,
-        spark: SparkSession,
-        state: dict,
-        predicate: Column,
-        cand: list[str],
-        cols: list[str],
-        assigns: dict,
-        post_image,
-    ) -> dict:
-        """The dv-mode body of :meth:`update_where`: dv-delete the
-        matched rows (zero rewrites of existing files) and append
-        their post-images as new files — ONE atomic commit, so no read
-        can see the delete without the insert."""
-        matched_true = predicate.eqNullSafe(F.lit(True))
-        pby = self._partition_by(state)
-        dv_metas: list[dict] = []
-        add: list[dict] = []
-        cdf_delete: list[dict] = []
-        rows_updated = 0
-        if cand:
-            live = self._scan_live(spark, state, cand, keep_meta=True)
-            matched = live.where(matched_true)
-            new_dv = self._stage_dv(
-                matched.select(
-                    F.col("_lake_file").alias("_dv_file"),
-                    F.col("_lake_ridx").alias("_dv_row"),
-                )
+        def gate(post_rows: DataFrame) -> None:
+            # only the post-images: carried-over rows satisfied the
+            # constraints when they were written — O(matched)
+            self._check_types(state, post_rows)
+            self._enforce_constraints(
+                state, post_rows, "update_where post-images"
             )
-            rows_updated = sum(d["deleted"] for d in new_dv.values())
-            dv_metas = self._fold_dv_metas(state, cand, new_dv)
-            if dv_metas:
-                post = post_image(
-                    self._scan_live(spark, state, cand)
-                )
-                self._check_types(state, post)
-                self._enforce_constraints(
-                    state, post, "update_where post-images"
-                )
-                add, cdf_delete = self._stage_files_par([
-                    (post, pby),
-                    (
-                        matched.select(*cols)
-                        if self._cdf_enabled(state)
-                        else None,
-                        pby,
-                    ),
-                ])
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "update", "mode": "dv", "add": add, "remove": [],
-             "dv": dv_metas, "predicate": str(predicate),
-             "set": {c: str(e) for c, e in assigns.items()},
-             "rows_updated": rows_updated,
-             **({"cdf_delete": cdf_delete, "cdf_insert": list(add)}
-                if self._cdf_enabled(state) else {})},
+
+        r = self._mutate(
+            spark, state, "update", mode, hit, F.lit(False),
+            post=post, gate=gate, prune=prune, count_as="rows_updated",
+            extra={"predicate": str(predicate),
+                   "set": {c: str(e) for c, e in assigns.items()}},
         )
-        return {
-            "version": v,
-            "rows_updated": rows_updated,
-            "files_rewritten": 0,
-            "files_kept": len(state["files"]),
-        }
+        return _pick(r, "rows_updated")
 
     # -- merge (upsert) ------------------------------------------------
 
@@ -2404,10 +2427,11 @@ class LakeTable:
         'update'``) or kept (``'keep'`` — insert-only merge); source
         rows matching no target row are inserted. The source must be
         key-unique (the standard MERGE precondition — a multi-match
-        would make the result nondeterministic).
+        would make the result nondeterministic); every clause shape in
+        both modes raises ``ValueError`` on a duplicated non-NULL key.
 
         Same copy-on-write discipline as :meth:`delete_where`: an
-        optional stats ``prune`` plus ONE semi-join scan find the
+        optional stats ``prune`` plus ONE join scan find the
         files that contain matched keys; in ``'update'`` mode only
         those are rewritten (their unmatched rows carried over); every
         other file is shared by reference. ``'keep'`` mode rewrites
@@ -2423,12 +2447,12 @@ class LakeTable:
         commit's incoming files, and the semi/anti joins re-read the
         staged parquet instead of recomputing the source plan.
 
-        ``mode='dv'`` (update-matched merges only) is the Delta DV
-        MERGE shape: matched target rows become DELETION VECTORS and
-        the staged source is the commit's only incoming data — zero
-        existing files rewritten, so a trickle upsert stops paying
-        even the O(matched files) rewrite and writes O(source rows +
-        matched indexes). The flip side is the read-path anti-join
+        ``mode='dv'`` is the Delta DV MERGE shape: changed target rows
+        become DELETION VECTORS and only post-images and inserts land
+        as files (for the unconditional update merge, the staged
+        source itself) — zero existing files rewritten, so a trickle
+        upsert stops paying even the O(matched files) rewrite and
+        writes O(source rows + matched indexes). The flip side is the read-path anti-join
         until :meth:`compact` folds the vectors away.
 
         **Full clause grammar** (the Delta ``whenMatched…`` /
@@ -2477,13 +2501,15 @@ class LakeTable:
           TRUE. Forces full-table candidacy (any file may hold a
           not-matched row), exactly like Delta.
 
-        Conditional/delete/by-source merges run the general
-        clause engine (:meth:`_merge_general`): files whose rows
-        actually CHANGE are found first (one join pass), only those
-        rewrite — a matched file where every condition fails is
-        untouched. ``mode='dv'`` composes with every clause: changed
-        rows become deletion vectors, replacement post-images and
-        inserts are the only data written.
+        Every clause shape runs the one row-mutation core
+        (:meth:`_mutate`): files whose rows actually CHANGE are found
+        by one join pass and only those rewrite — a matched file where
+        every condition fails is untouched. Two shapes skip work the
+        inputs make unnecessary: the unconditional update merge
+        (``SET *`` + ``INSERT *``) lands every source row, so the
+        frozen source files are the commit's incoming files and the
+        matched files only shed their matched rows; an insert-only
+        ``'keep'`` merge changes no row, so it rewrites zero files.
         """
         if when_matched not in ("update", "keep", "delete"):
             raise ValueError(
@@ -2539,15 +2565,12 @@ class LakeTable:
                 raise ValueError("matched_clauses must be non-empty")
             norm = []
             for i, cl in enumerate(matched_clauses):
-                if len(cl) == 2:
-                    action, cond, sm = cl[0], cl[1], None
-                elif len(cl) == 3:
-                    action, cond, sm = cl
-                else:
+                if len(cl) not in (2, 3):
                     raise ValueError(
                         f"matched clause #{i}: expected (action, "
                         "condition) or (action, condition, set_map)"
                     )
+                action, cond, sm = (*cl, None)[:3]
                 if action not in ("update", "delete", "keep"):
                     raise ValueError(
                         f"matched clause #{i}: action must be "
@@ -2571,39 +2594,6 @@ class LakeTable:
                     )
                 norm.append((action, cond, sm))
             matched_clauses = norm
-        general = (
-            when_matched == "delete"
-            or matched_condition is not None
-            or matched_clauses is not None
-            or when_not_matched != "insert"
-            or not_matched_condition is not None
-            or not_matched_insert_set is not None
-            or when_not_matched_by_source is not None
-        )
-        if general:
-            return self._merge_general(
-                spark,
-                source,
-                keys,
-                when_matched=when_matched,
-                matched_condition=matched_condition,
-                matched_clauses=matched_clauses,
-                when_not_matched=when_not_matched,
-                not_matched_condition=not_matched_condition,
-                not_matched_insert_set=not_matched_insert_set,
-                when_not_matched_by_source=when_not_matched_by_source,
-                not_matched_by_source_condition=(
-                    not_matched_by_source_condition
-                ),
-                not_matched_by_source_set=not_matched_by_source_set,
-                prune=prune,
-                mode=mode,
-            )
-        if mode == "dv" and when_matched != "update":
-            raise ValueError(
-                "mode='dv' applies to when_matched='update' only "
-                "(keep-mode merges already rewrite nothing)"
-            )
         state = self._state()
         source = self._apply_generated(state, source, "merge_into source")
         cols = [f["name"] for f in state["schema"]["fields"]]
@@ -2612,213 +2602,8 @@ class LakeTable:
                 f"merge schema mismatch: table {cols} vs source "
                 f"{source.columns}"
             )
-        self._check_types(state, source)
-        all_files = sorted(state["files"])
-        cand = (
-            self._prune_split(state, *prune)[0]
-            if prune is not None
-            else all_files
-        )
-        pby = self._partition_by(state)
-
-        src_add = self._stage_files(source.select(*cols), partition_by=pby)
-        rows_source = sum(m["rows"] for m in src_add)
-        # empty part files carry no rows — drop them from the commit
-        # and from disk so the log never references dead weight
-        for m in [m for m in src_add if m["rows"] == 0]:
-            os.unlink(os.path.join(self.path, m["path"]))
-        src_add = [m for m in src_add if m["rows"] > 0]
-        src_df = self._scan(spark, state, [m["path"] for m in src_add])
-        if when_matched == "update":
-            # every source row is written — gate the staged scan (one
-            # cheap parquet re-read, never a lineage recompute); 'keep'
-            # mode gates only the anti-joined inserts below
-            self._enforce_constraints(state, src_df, "merge_into source")
-        skeys = src_df.select(*keys)
-
-        if mode == "dv":
-            # matched target rows -> deletion vectors; the staged
-            # source is the commit's only incoming data
-            dv_metas: list[dict] = []
-            cdf_delete_dv: list[dict] = []
-            n_matched = 0
-            if cand:
-                live = self._scan_live(spark, state, cand, keep_meta=True)
-                matched = live.join(skeys, keys, "left_semi")
-                new_dv = self._stage_dv(
-                    matched.select(
-                        F.col("_lake_file").alias("_dv_file"),
-                        F.col("_lake_ridx").alias("_dv_row"),
-                    )
-                )
-                n_matched = sum(d["deleted"] for d in new_dv.values())
-                dv_metas = self._fold_dv_metas(state, cand, new_dv)
-                if dv_metas and self._cdf_enabled(state):
-                    cdf_delete_dv = self._stage_files(
-                        matched.select(*cols), partition_by=pby
-                    )
-            v = state["version"] + 1
-            self._write_commit(
-                v,
-                {"op": "merge", "mode": "dv", "add": list(src_add),
-                 "remove": [], "dv": dv_metas, "merge_keys": keys,
-                 "when_matched": "update",
-                 **({"cdf_delete": cdf_delete_dv,
-                     "cdf_insert": list(src_add)}
-                    if self._cdf_enabled(state) else {})},
-            )
-            return {
-                "version": v,
-                "rows_matched": n_matched,
-                "rows_source": rows_source,
-                "files_rewritten": 0,
-                "files_kept": len(all_files),
-            }
-
-        touched: list[str] = []
-        n_matched = 0
-        if cand:
-            # _lake_file is captured ON the scan (metadata columns are
-            # gone after a join), and the live scan excludes dv rows so
-            # a previously-deleted row never counts as a match
-            scan = self._scan_live(spark, state, cand, keep_meta=True)
-            hits = (
-                scan.join(skeys, keys, "left_semi")
-                .groupBy("_lake_file")
-                .agg(F.count(F.lit(1)).alias("_matches"))
-                .collect()
-            )
-            by_name = {os.path.basename(p): p for p in cand}
-            for r in hits:
-                touched.append(by_name[r["_lake_file"]])
-                n_matched += r["_matches"]
-
-        cdf_delete: list[dict] = []
-        if when_matched == "update":
-            add = list(src_add)
-            remove = touched
-            if touched:
-                tdf = self._scan_live(spark, state, touched)
-                # carried-row rewrite and matched pre-images (the -1
-                # side of the merge's row delta; the +1 side is
-                # src_add itself) both anti/semi-join the same staged
-                # source against the same touched files — independent,
-                # so their jobs overlap (guide §2.6)
-                carried, cdf_delete = self._stage_files_par([
-                    (tdf.join(skeys, keys, "left_anti"), pby),
-                    (
-                        tdf.join(skeys, keys, "left_semi")
-                        if self._cdf_enabled(state)
-                        else None,
-                        pby,
-                    ),
-                ])
-                add += carried
-        else:
-            # insert-only: zero files rewritten — stage ONLY the
-            # anti-joined inserts; matched target rows stay in place
-            remove = []
-            if touched:
-                tkeys = self._scan_live(spark, state, touched).select(
-                    *keys
-                )
-                inserted = src_df.join(tkeys, keys, "left_anti")
-            else:
-                inserted = src_df
-            self._enforce_constraints(
-                state, inserted, "merge_into inserts"
-            )
-            add = self._stage_files(inserted, partition_by=pby)
-            # the staged source was scratch here — reclaim it eagerly
-            for m in src_add:
-                os.unlink(os.path.join(self.path, m["path"]))
-            src_add = []
-        # change-feed sides: +1 rows are the incoming files (update:
-        # the staged source; keep: the anti-joined inserts), -1 rows
-        # are the matched pre-images staged above (update mode only).
-        # Both sides share ONE shape — full file dicts — so a consumer
-        # (and the next producer) never meets the r8 path-string/dict
-        # asymmetry the judge flagged.
-        cdf_insert = list(src_add if when_matched == "update" else add)
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "merge", "add": add, "remove": remove,
-             "merge_keys": keys, "when_matched": when_matched,
-             **({"cdf_delete": cdf_delete, "cdf_insert": cdf_insert}
-                if self._cdf_enabled(state) else {})},
-        )
-        return {
-            "version": v,
-            "rows_matched": n_matched,
-            "rows_source": rows_source,
-            "files_rewritten": len(remove),
-            "files_kept": len(all_files) - len(remove),
-        }
-
-    def _merge_general(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        keys: list[str],
-        when_matched: str,
-        matched_condition: str | None,
-        matched_clauses: list[tuple] | None,
-        when_not_matched: str,
-        not_matched_condition: str | None,
-        not_matched_insert_set: dict[str, str] | None,
-        when_not_matched_by_source: str | None,
-        not_matched_by_source_condition: str | None,
-        not_matched_by_source_set: dict[str, str] | None,
-        prune: tuple[str, str, object] | None,
-        mode: str,
-    ) -> dict:
-        """The full-grammar MERGE clause engine (see
-        :meth:`merge_into` for the surface contract). One shape for
-        every clause combination:
-
-        1. Freeze the source once (staged parquet — scratch here,
-           reclaimed at the end) and enforce the key-uniqueness
-           precondition with one small aggregation (a multi-match
-           target row is nondeterministic — Delta throws too).
-        2. Candidate files: files that can hold a matched key
-           (stats-``prune`` + semi-join, as the fast path) — unless a
-           by-source clause is present, which forces full-table
-           candidacy (ANY file may hold a not-matched row; inherent
-           to the semantics, same as Delta).
-        3. ONE left-outer join of the candidates' live rows against
-           the frozen source, aliased ``t``/``s`` so conditions
-           resolve qualified names; per-file counts of rows each
-           clause actually CHANGES come from one aggregation. Files
-           where every condition failed are untouched — a
-           conditional merge that changes 10 rows rewrites the files
-           holding those 10 rows, not every file with a key match.
-        4. ``mode='rewrite'``: touched files rewrite via a CASE
-           projection (matched-update takes ``s.*``, by-source-update
-           applies its SET exprs, delete rows drop); ``mode='dv'``:
-           changed rows become deletion vectors and only replacement
-           post-images land as files — zero rewrites for ANY clause
-           mix.
-        5. Inserts anti-join the frozen source against the HIT files'
-           live keys (a null-key source row matches nothing and
-           inserts, SQL semantics), gated by ``not_matched_condition``.
-
-        Clause conditions apply on IS TRUE semantics: false OR null
-        keeps the row (update/delete clauses fire only on TRUE).
-        CDF sides are exact row deltas: pre-images of changed rows
-        (-1), post-images of surviving changed rows plus inserts
-        (+1) — carried-over rows of rewritten files never appear.
-        """
         nms = when_not_matched_by_source
         nms_set = not_matched_by_source_set or {}
-        state = self._state()
-        source = self._apply_generated(state, source, "merge_into source")
-        cols = [f["name"] for f in state["schema"]["fields"]]
-        if sorted(source.columns) != sorted(cols):
-            raise ValueError(
-                f"merge schema mismatch: table {cols} vs source "
-                f"{source.columns}"
-            )
         bad_set = sorted(set(nms_set) - set(cols))
         if bad_set:
             raise ValueError(
@@ -2826,344 +2611,63 @@ class LakeTable:
                 f"{bad_set}"
             )
         self._check_types(state, source)
-        all_files = sorted(state["files"])
-        pby = self._partition_by(state)
         gen = self._generated(state)
-
-        # the ordered matched-clause chain: first clause whose
-        # condition is TRUE fires per row (Delta's evaluation order);
-        # the single-clause surface is its one-element degenerate
-        # case. Normalized shape: (action, condition, set_map) — a
-        # None set_map on an update clause means full-row SET *.
+        # the single-clause surface is the chain's one-element case
         clauses: list[tuple] = (
             list(matched_clauses)
             if matched_clauses is not None
             else [(when_matched, matched_condition, None)]
         )
         set_maps = [sm for _a, _c, sm in clauses if sm]
-        for sm in set_maps:
-            bad = sorted(set(sm) - set(cols))
-            if bad:
-                raise ValueError(f"SET names unknown columns: {bad}")
-            locked = sorted(set(sm) & set(gen))
-            if locked:
-                raise ValueError(
-                    f"columns {locked} are GENERATED ALWAYS AS — "
-                    "assign their dependencies; post-images are "
-                    "validated against the generation expressions"
-                )
         if not_matched_insert_set is not None:
             bad = sorted(set(not_matched_insert_set) - set(cols))
             if bad:
                 raise ValueError(
                     f"INSERT names unknown columns: {bad}"
                 )
-        if set_maps:
-            # analysis-only type gate BEFORE any staging, the
-            # update_where posture: resolve each RAW set expression
-            # against empty t/s frames (raw, because the CASE
-            # projection that applies it later coerces branches to a
-            # common type, which would mask drift until a runtime
-            # ANSI cast mid-write)
-            schema_t = StructType.fromJson(state["schema"])
-            probe = (
-                spark.createDataFrame([], schema_t)
-                .alias("t")
-                .join(
-                    spark.createDataFrame([], schema_t).alias("s"),
-                    how="cross",
-                )
+        for sm in set_maps:
+            self._check_assign_types(
+                spark, state, {c: F.expr(e) for c, e in sm.items()},
+                with_source=True,
             )
-            for sm in set_maps:
-                self._check_types(
-                    state,
-                    probe.select(
-                        *[
-                            (
-                                F.expr(sm[c])
-                                if c in sm
-                                else F.col(f"t.`{c}`")
-                            ).alias(c)
-                            for c in cols
-                        ]
-                    ),
-                )
-
-        def _is_true(cond: str | None):
-            # clause fires on IS TRUE: false or NULL -> no-op
-            return (
-                F.coalesce(F.expr(cond), F.lit(False))
-                if cond is not None
-                else F.lit(True)
-            )
-
-        # 1. freeze the source (scratch staging; reclaimed below)
-        src_add = self._stage_files(source.select(*cols), partition_by=pby)
-        for m in [m for m in src_add if m["rows"] == 0]:
-            os.unlink(os.path.join(self.path, m["path"]))
-        src_add = [m for m in src_add if m["rows"] > 0]
-        rows_source = sum(m["rows"] for m in src_add)
-        src_df = self._scan(spark, state, [m["path"] for m in src_add])
-        nn = functools.reduce(
-            lambda a, b: a & b, [F.col(k).isNotNull() for k in keys]
+        changed, drop, post = _merge_flags(
+            cols, clauses, nms, not_matched_by_source_condition, nms_set
         )
-        dup = (
-            src_df.where(nn)
-            .groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > 1)
-            .limit(1)
-            .count()
+        general = (
+            when_matched == "delete"
+            or matched_condition is not None
+            or matched_clauses is not None
+            or when_not_matched != "insert"
+            or not_matched_condition is not None
+            or not_matched_insert_set is not None
+            or nms is not None
         )
-        if dup:
-            for m in src_add:
-                os.unlink(os.path.join(self.path, m["path"]))
-            raise ValueError(
-                "merge source is not key-unique on "
-                f"{keys} — a multi-match is nondeterministic"
-            )
+        lands = not general and when_matched == "update"
+        if lands:
+            # every source row lands: matched rows leave their files
+            # and the frozen source files carry the post-images and
+            # inserts alike — gate all of them, from the staged scan
+            drop, post = changed, None
 
-        # 2. candidacy
-        if nms is not None:
-            cand = all_files  # any file may hold a not-matched row
+            def gate(src: DataFrame) -> None:
+                self._enforce_constraints(state, src, "merge_into source")
         else:
-            cand = (
-                self._prune_split(state, *prune)[0]
-                if prune is not None
-                else all_files
-            )
-        skeys = src_df.select(*keys)
-        on = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(f"t.`{k}`") == F.col(f"s.`{k}`") for k in keys],
-        )
-        src_flag = src_df.withColumn("_s_match", F.lit(True)).alias("s")
 
-        def _joined(files: list[str]):
-            """(joined frame, flag columns) over ``files``' live rows:
-            ``upd_fires`` is the ordered list of (fire predicate,
-            set_map) per UPDATE clause — first-match semantics across
-            the whole chain (a fired 'keep' clause blocks later
-            clauses and changes nothing); ``m_del`` ORs the delete
-            clauses' fire predicates."""
-            tgt = self._scan_live(
-                spark, state, files, keep_meta=True
-            ).alias("t")
-            j = tgt.join(src_flag, on, "left_outer")
-            is_m = F.col("s.`_s_match`").isNotNull()
-            upd_fires: list[tuple] = []
-            m_del = F.lit(False)
-            prior = F.lit(False)  # an earlier clause already fired
-            for action, cond, sm in clauses:
-                fire = is_m & ~prior & _is_true(cond)
-                if action == "update":
-                    upd_fires.append((fire, sm))
-                elif action == "delete":
-                    m_del = m_del | fire
-                prior = prior | (is_m & _is_true(cond))
-            n_fire = (
-                (~is_m) & _is_true(not_matched_by_source_condition)
-                if nms is not None
-                else F.lit(False)
-            )
-            return j, is_m, upd_fires, m_del, n_fire
-
-        # 3. hit files (insert anti-join scope) + touched files (rows
-        #    actually changed) from ONE aggregation over candidates
-        hit_files: list[str] = []
-        touched: list[str] = []
-        n_matched = n_m_fire = n_n_fire = 0
-        if cand:
-            j, is_m, upd_fires, m_del, n_fire = _joined(cand)
-            m_upd = functools.reduce(
-                lambda a, b: a | b,
-                [f for f, _ in upd_fires],
-                F.lit(False),
-            )
-            m_fire = m_upd | m_del
-            per_file = (
-                j.groupBy(F.col("t.`_lake_file`").alias("_f"))
-                .agg(
-                    F.sum(is_m.cast("long")).alias("_m"),
-                    F.sum(m_fire.cast("long")).alias("_mf"),
-                    F.sum(n_fire.cast("long")).alias("_nf"),
-                )
-                .collect()
-            )
-            by_name = {os.path.basename(p): p for p in cand}
-            for r in per_file:
-                n_matched += r["_m"]
-                n_m_fire += r["_mf"]
-                n_n_fire += r["_nf"]
-                if r["_m"]:
-                    hit_files.append(by_name[r["_f"]])
-                if r["_mf"] or r["_nf"]:
-                    touched.append(by_name[r["_f"]])
-            hit_files.sort()
-            touched.sort()
-
-        def _out_col(c: str, upd_fires, n_fire):
-            # per-UPDATE-clause branches in chain order (fire flags
-            # are mutually exclusive by first-match construction): a
-            # SET map takes its expression for assigned columns and
-            # falls through to the target value for the rest; a None
-            # map is the full-row SET * replace
-            branches = []
-            for fire, sm in upd_fires:
-                if sm is None:
-                    branches.append((fire, F.col(f"s.`{c}`")))
-                elif c in sm:
-                    branches.append((fire, F.expr(sm[c])))
-            if nms == "update":
-                branches.append(
-                    (
-                        n_fire,
-                        F.expr(nms_set[c])
-                        if c in nms_set
-                        else F.col(f"t.`{c}`"),
+            def gate(post_rows: DataFrame) -> None:
+                if gen and (nms == "update" or set_maps):
+                    # SET exprs could leave a generated column stale
+                    # (full-row SET * rows take the whole source row,
+                    # already validated above)
+                    self._apply_generated(
+                        state, post_rows, "merge_into SET post-images"
                     )
+                self._enforce_constraints(
+                    state, post_rows, "merge_into changed rows"
                 )
-            e = None
-            for pred, val in branches:
-                e = F.when(pred, val) if e is None else e.when(pred, val)
-            base = F.col(f"t.`{c}`")
-            return (base if e is None else e.otherwise(base)).alias(c)
 
-        # 4. rewrite / dv over the touched files
-        cdf_on = self._cdf_enabled(state)
-        cdf_delete: list[dict] = []
-        cdf_insert: list[dict] = []
-        add: list[dict] = []
-        remove: list[str] = []
-        dv_metas: list[dict] = []
-        if touched:
-            j, is_m, upd_fires, m_del, n_fire = _joined(touched)
-            m_upd = functools.reduce(
-                lambda a, b: a | b,
-                [f for f, _ in upd_fires],
-                F.lit(False),
-            )
-            drop = m_del | (n_fire & F.lit(nms == "delete"))
-            changed = m_upd | m_del | n_fire
-            post_rows = j.where(changed & ~drop).select(
-                *[_out_col(c, upd_fires, n_fire) for c in cols]
-            )
-            if gen and (nms == "update" or set_maps):
-                # SET exprs (matched-clause or by-source) could leave
-                # a generated column stale — validate the post-images
-                # (full-row SET * rows take the whole source row,
-                # already validated at source staging)
-                self._apply_generated(
-                    state, post_rows, "merge_into SET post-images"
-                )
-            self._enforce_constraints(
-                state, post_rows, "merge_into changed rows"
-            )
-            pre_images = (
-                j.where(changed).select(
-                    *[F.col(f"t.`{c}`").alias(c) for c in cols]
-                )
-                if cdf_on
-                else None
-            )
-            if mode == "dv":
-                new_dv = self._stage_dv(
-                    j.where(changed).select(
-                        F.col("t.`_lake_file`").alias("_dv_file"),
-                        F.col("t.`_lake_ridx`").alias("_dv_row"),
-                    )
-                )
-                dv_metas = self._fold_dv_metas(state, touched, new_dv)
-                # post-images and pre-images stage independently —
-                # overlap their jobs (guide §2.6)
-                post_add, cdf_delete = self._stage_files_par([
-                    (post_rows, pby),
-                    (pre_images, pby),
-                ])
-                add += post_add
-                if cdf_on:
-                    # the post-image files ARE the +1 side — same
-                    # file dicts, staged once (fast-dv-path shape)
-                    cdf_insert += list(post_add)
-            else:
-                remove = touched
-                # rewritten files carry unchanged rows too — the
-                # +1 side needs its own changed-rows-only staging;
-                # all three derive from the same join independently,
-                # so their jobs overlap (guide §2.6)
-                rew_add, cdf_delete, cdf_ins_part = (
-                    self._stage_files_par([
-                        (
-                            j.where(~drop).select(
-                                *[_out_col(c, upd_fires, n_fire)
-                                  for c in cols]
-                            ),
-                            pby,
-                        ),
-                        (pre_images, pby),
-                        (post_rows if cdf_on else None, pby),
-                    ])
-                )
-                add += rew_add
-                if cdf_on:
-                    cdf_insert += cdf_ins_part
-
-        # 5. inserts
-        n_inserted = 0
-        if when_not_matched == "insert":
-            if hit_files:
-                tkeys = self._scan_live(spark, state, hit_files).select(
-                    *keys
-                )
-                ins = src_df.join(tkeys, keys, "left_anti")
-            else:
-                ins = src_df
-            if not_matched_condition is not None:
-                ins = ins.where(_is_true(not_matched_condition))
-            if not_matched_insert_set is not None:
-                # INSERT (cols) VALUES (exprs): assigned columns take
-                # their expression cast to the column's type (SQL
-                # INSERT store-assignment coercion), omitted
-                # non-generated columns insert NULL, omitted GENERATED
-                # columns are computed (provided ones validate) — the
-                # Delta insert contract
-                iset = not_matched_insert_set
-                ftypes = {
-                    f.name: f.dataType
-                    for f in StructType.fromJson(state["schema"]).fields
-                }
-                proj = []
-                for c in cols:
-                    if c in iset:
-                        proj.append(
-                            F.expr(iset[c]).cast(ftypes[c]).alias(c)
-                        )
-                    elif c in gen:
-                        continue  # recomputed below
-                    else:
-                        proj.append(F.lit(None).cast(ftypes[c]).alias(c))
-                ins = self._apply_generated(
-                    state, ins.select(*proj), "merge_into inserts"
-                ).select(*cols)
-            self._enforce_constraints(state, ins, "merge_into inserts")
-            ins_add = self._stage_files(ins, partition_by=pby)
-            n_inserted = sum(m["rows"] for m in ins_add)
-            add += ins_add
-            if cdf_on:
-                cdf_insert += list(ins_add)
-
-        # the frozen source was scratch — reclaim it eagerly
-        for m in src_add:
-            os.unlink(os.path.join(self.path, m["path"]))
-
-        v = state["version"] + 1
-        commit = {
-            "op": "merge",
-            "add": add,
-            "remove": remove,
-            "merge_keys": keys,
-            "when_matched": when_matched,
-            "clauses": {
+        extra = {"merge_keys": keys, "when_matched": when_matched}
+        if general:
+            extra["clauses"] = {
                 "matched_condition": matched_condition,
                 "matched_clauses": (
                     [[a, c, sm] for a, c, sm in clauses]
@@ -3178,25 +2682,29 @@ class LakeTable:
                     not_matched_by_source_condition
                 ),
                 "not_matched_by_source_set": nms_set or None,
-            },
-        }
-        if mode == "dv":
-            commit["mode"] = "dv"
-            commit["dv"] = dv_metas
-        if cdf_on:
-            commit["cdf_delete"] = cdf_delete
-            commit["cdf_insert"] = cdf_insert
-        self._write_commit(v, commit)
-        return {
-            "version": v,
-            "rows_matched": n_matched,
-            "rows_matched_changed": n_m_fire,
-            "rows_not_matched_by_source_changed": n_n_fire,
-            "rows_inserted": n_inserted,
-            "rows_source": rows_source,
-            "files_rewritten": len(remove),
-            "files_kept": len(all_files) - len(remove),
-        }
+            }
+        r = self._mutate(
+            spark, state, "merge", mode, changed, drop,
+            post=post, gate=gate,
+            # a by-source clause: ANY file may hold a not-matched row
+            prune=None if nms is not None else prune,
+            source=source.select(*cols), keys=keys, lands=lands,
+            incoming=(
+                None
+                if lands or when_not_matched != "insert"
+                else lambda hit, src: self._merge_inserts(
+                    spark, state, keys, hit, src, not_matched_condition,
+                    not_matched_insert_set, "merge_into inserts",
+                )
+            ),
+            extra=extra,
+        )
+        return _pick(
+            r, "rows_matched",
+            *(("rows_matched_changed", "rows_not_matched_by_source_changed",
+               "rows_inserted") if general else ()),
+            "rows_source",
+        )
 
     def apply_changes(
         self,
@@ -3219,26 +2727,26 @@ class LakeTable:
         consumers need the batch boundary to be the consistency
         boundary.
 
-        Same copy-on-write discipline as :meth:`merge_into`: one
-        semi-join scan (against the keys of BOTH ops) finds the files
-        holding any affected row; only those rewrite — their surviving
-        rows (not upserted, not deleted) carry over — and every other
-        file is shared by reference. Upsert rows stage once and their
-        frozen scan feeds both the key join and the commit; delete
-        keys freeze via ``localCheckpoint`` (distributed, never a
-        driver collect). The commit is a ``merge`` (with
-        ``cdc: True``): the strict streaming feed refuses it like any
-        rewrite, CDF mode replays it exactly — removed pre-images
-        (updated + deleted) are the -1 side, the staged upserts the
-        +1 side. Source must be key-unique across BOTH ops (the MERGE
+        It is a MERGE on the one mutation core (:meth:`_mutate`): the
+        clause chain ``[('delete', s.op = 'd'), ('update', SET *)]``
+        plus an insert gated on ``op = 'u'``. One join scan finds the
+        files holding any affected row; only those rewrite — their
+        surviving rows (not upserted, not deleted) carry over — and
+        every other file is shared by reference. The whole batch stages
+        once, so every join re-reads one frozen snapshot of a possibly
+        nondeterministic source lineage. The commit is a ``merge``
+        (with ``cdc: True``): the strict streaming feed refuses it like
+        any rewrite, CDF mode replays it exactly — removed pre-images
+        (updated + deleted) are the -1 side, the upserts the +1 side.
+        Source must be key-unique across BOTH ops (the MERGE
         precondition — a key that is both upserted and deleted in one
         batch is ambiguous); NULL keys never match (SQL semantics):
         a NULL-key 'u' inserts, a NULL-key 'd' no-ops.
 
         ``mode='dv'`` — merge-on-read CDC apply: matched rows of BOTH
-        ops become deletion vectors and only the staged upserts land
-        as new files, zero existing files rewritten (the high-rate CDC
-        tail path; :meth:`compact` folds the vectors away later).
+        ops become deletion vectors and only the upserts land as new
+        files, zero existing files rewritten (the high-rate CDC tail
+        path; :meth:`compact` folds the vectors away later).
 
         Returns ``{version, rows_upserts, rows_deletes, rows_matched,
         files_rewritten, files_kept}``."""
@@ -3271,129 +2779,38 @@ class LakeTable:
             )
         self._check_types(state, source.drop(op_col))
         op = F.col(op_col)
-        bad = source.where(~op.isin("u", "d")).limit(1).count()
-        if bad:
+        tally = source.agg(
+            F.sum((~op.isin("u", "d")).cast("long")).alias("bad"),
+            F.sum((op == "u").cast("long")).alias("u"),
+            F.sum((op == "d").cast("long")).alias("d"),
+        ).first()
+        if tally["bad"]:
             raise ValueError(
                 f"{op_col!r} must be 'u' or 'd' for every source row"
             )
-        all_files = sorted(state["files"])
-        cand = (
-            self._prune_split(state, *prune)[0]
-            if prune is not None
-            else all_files
+        q = f"`{op_col}`"
+        changed, drop, post = _merge_flags(
+            cols, [("delete", f"s.{q} = 'd'", None), ("update", None, None)]
         )
-        pby = self._partition_by(state)
-
-        ups_add = self._stage_files(
-            source.where(op == "u").select(*cols), partition_by=pby
+        r = self._mutate(
+            spark, state, "merge", mode, changed, drop, post=post,
+            gate=lambda d: self._enforce_constraints(
+                state, d, "apply_changes upserts"
+            ),
+            prune=prune,
+            source=source.where(op.isin("u", "d")).select(*cols, op_col),
+            keys=keys,
+            incoming=lambda hit, src: self._merge_inserts(
+                spark, state, keys, hit, src, f"{q} = 'u'", None,
+                "apply_changes upserts",
+            ),
+            extra={"merge_keys": keys, "when_matched": "update",
+                   "cdc": True},
         )
-        rows_upserts = sum(m["rows"] for m in ups_add)
-        for m in [m for m in ups_add if m["rows"] == 0]:
-            os.unlink(os.path.join(self.path, m["path"]))
-        ups_add = [m for m in ups_add if m["rows"] > 0]
-        ups_df = self._scan(spark, state, [m["path"] for m in ups_add])
-        self._enforce_constraints(state, ups_df, "apply_changes upserts")
-        # tombstone keys: frozen DISTRIBUTED (localCheckpoint), so the
-        # key join and the CDF pre-image scan see one snapshot of a
-        # possibly nondeterministic source lineage — never a collect
-        dkeys = (
-            source.where(op == "d").select(*keys).localCheckpoint()
-        )
-        rows_deletes = dkeys.count()
-        skeys = ups_df.select(*keys).unionByName(dkeys)
+        r["rows_upserts"] = tally["u"] or 0
+        r["rows_deletes"] = tally["d"] or 0
+        return _pick(r, "rows_upserts", "rows_deletes", "rows_matched")
 
-        if mode == "dv":
-            # matched rows of BOTH ops -> deletion vectors; the staged
-            # upserts are the commit's only incoming data (tombstones
-            # add nothing) — zero-rewrite CDC apply, one atomic commit
-            dv_metas: list[dict] = []
-            cdf_delete_dv: list[dict] = []
-            n_matched = 0
-            if cand:
-                live = self._scan_live(spark, state, cand, keep_meta=True)
-                matched = live.join(skeys, keys, "left_semi")
-                new_dv = self._stage_dv(
-                    matched.select(
-                        F.col("_lake_file").alias("_dv_file"),
-                        F.col("_lake_ridx").alias("_dv_row"),
-                    )
-                )
-                n_matched = sum(d["deleted"] for d in new_dv.values())
-                dv_metas = self._fold_dv_metas(state, cand, new_dv)
-                if dv_metas and self._cdf_enabled(state):
-                    cdf_delete_dv = self._stage_files(
-                        matched.select(*cols), partition_by=pby
-                    )
-            v = state["version"] + 1
-            self._write_commit(
-                v,
-                {"op": "merge", "mode": "dv", "add": list(ups_add),
-                 "remove": [], "dv": dv_metas, "merge_keys": keys,
-                 "when_matched": "update", "cdc": True,
-                 **({"cdf_delete": cdf_delete_dv,
-                     "cdf_insert": list(ups_add)}
-                    if self._cdf_enabled(state) else {})},
-            )
-            return {
-                "version": v,
-                "rows_upserts": rows_upserts,
-                "rows_deletes": rows_deletes,
-                "rows_matched": n_matched,
-                "files_rewritten": 0,
-                "files_kept": len(all_files),
-            }
-
-        touched: list[str] = []
-        n_matched = 0
-        if cand:
-            # live scan: dv-deleted rows never match; _lake_file is
-            # captured at scan level so the semi-join can't erase it
-            scan = self._scan_live(spark, state, cand, keep_meta=True)
-            hits = (
-                scan.join(skeys, keys, "left_semi")
-                .groupBy("_lake_file")
-                .agg(F.count(F.lit(1)).alias("_matches"))
-                .collect()
-            )
-            by_name = {os.path.basename(p): p for p in cand}
-            for r in hits:
-                touched.append(by_name[r["_lake_file"]])
-                n_matched += r["_matches"]
-
-        add = list(ups_add)
-        cdf_delete: list[dict] = []
-        if touched:
-            tdf = self._scan_live(spark, state, touched)
-            # carried rows and pre-images of EVERYTHING removed
-            # (updated and deleted rows alike are the feed's -1 side)
-            # stage independently — overlap (guide §2.6)
-            carried, cdf_delete = self._stage_files_par([
-                (tdf.join(skeys, keys, "left_anti"), pby),
-                (
-                    tdf.join(skeys, keys, "left_semi")
-                    if self._cdf_enabled(state)
-                    else None,
-                    pby,
-                ),
-            ])
-            add += carried
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "merge", "add": add, "remove": touched,
-             "merge_keys": keys, "when_matched": "update", "cdc": True,
-             **({"cdf_delete": cdf_delete,
-                 "cdf_insert": list(ups_add)}
-                if self._cdf_enabled(state) else {})},
-        )
-        return {
-            "version": v,
-            "rows_upserts": rows_upserts,
-            "rows_deletes": rows_deletes,
-            "rows_matched": n_matched,
-            "files_rewritten": len(touched),
-            "files_kept": len(all_files) - len(touched),
-        }
 
     # -- streaming sink (exactly-once) -----------------------------------
 
@@ -3478,9 +2895,7 @@ class LakeTable:
             if c["op"] == "alter":
                 continue  # metadata-only: no rows added or rewritten
                 # (the streaming source skips these too)
-            if c["op"] not in (
-                "create", "append", "stream_append", "copy_into"
-            ):
+            if c["op"] not in APPEND_OPS:
                 raise ValueError(
                     f"non-append commit v{v} ({c['op']}) in range — "
                     "row identity rewritten; re-read the table"
@@ -3544,9 +2959,7 @@ class LakeTable:
         for v in range(version + 1, cur + 1):
             c = self._read_commit(v)
             op = c["op"]
-            if op in (
-                "create", "append", "stream_append", "copy_into"
-            ):
+            if op in APPEND_OPS:
                 ins += [(v, f["path"], ()) for f in c.get("add", [])]
             elif op == "compact":
                 continue  # rewrite-identity: no row-level change
@@ -3601,16 +3014,11 @@ class LakeTable:
                 )
                 rels = sorted({p for _, p in pairs})
                 if dvk:
-                    base = self._scan(spark, state, rels, meta=True)
-                    dv = spark.read.schema(
-                        "_dv_file string, _dv_row long"
-                    ).parquet(*[os.path.join(self.path, q) for q in dvk])
                     scan = (
-                        base.join(
-                            dv,
-                            (base["_lake_file"] == dv["_dv_file"])
-                            & (base["_lake_ridx"] == dv["_dv_row"]),
-                            "left_anti",
+                        self._minus_dv(
+                            spark,
+                            self._scan(spark, state, rels, meta=True),
+                            list(dvk),
                         )
                         .withColumnRenamed("_lake_file", "_cdf_file")
                         .drop("_lake_ridx")
@@ -3680,72 +3088,57 @@ class LakeTable:
         filter column, not just the ingest-order one."""
         state = self._state()
         pby = self._partition_by(state)
-        scoped: set[str] | None = None
+        files = sorted(state["files"])
         if where is not None:
             conds = where if isinstance(where, list) else [where]
-            scoped = set(self._prune_candidates(state, conds))
+            files = self._prune_candidates(state, conds)
         if cluster_by:
             if pby and set(cluster_by) & set(pby):
                 raise ValueError(
                     f"cluster_by {cluster_by} overlaps partition columns "
                     f"{pby} — partition values are already file-exact"
                 )
+        else:
+            # bin-pack candidates: undersized files, plus any file
+            # carrying a deletion vector — rewriting it MATERIALIZES the
+            # dv away (Delta's REORG...APPLY(PURGE) role), so reads stop
+            # paying the anti-join once churn has been compacted
+            dved = [
+                p for p in files
+                if (state["files"][p].get("dv") or {}).get("deleted", 0) > 0
+            ]
             files = sorted(
-                scoped if scoped is not None else state["files"]
+                {
+                    p for p in files
+                    if state["files"][p]["bytes"] < target_file_bytes // 2
+                }
+                | set(dved)
             )
-            if not files:
-                return {"version": state["version"], "files_compacted": 0}
-            # live scan: a z-order rewrite MATERIALIZES deletion
-            # vectors away — the rewritten files carry no dv and the
-            # old sidecars age out with their versions
-            df = self._scan_live(spark, state, files)
-            total = sum(state["files"][p]["bytes"] for p in files)
-            n_out = max(1, round(total / target_file_bytes))
-            zed = df.withColumn(
-                "_z", _zorder_column(df, cluster_by)
-            )
+            if len(files) < 2 and not dved:
+                files = []
+        if not files:
+            return {"version": state["version"], "files_compacted": 0}
+        total = sum(state["files"][p]["bytes"] for p in files)
+        n_out = max(1, round(total / target_file_bytes))
+        # live scan: the rewritten files carry no dv and the old
+        # sidecars age out with their versions
+        packed = self._scan_live(spark, state, files)
+        if cluster_by:
             packed = (
-                zed.repartitionByRange(n_out, "_z")
+                packed.withColumn("_z", _zorder_column(packed, cluster_by))
+                .repartitionByRange(n_out, "_z")
                 .sortWithinPartitions("_z")
                 .drop("_z")
             )
-            add = self._stage_files(packed, partition_by=pby)
-            v = state["version"] + 1
-            self._write_commit(
-                v, {"op": "compact", "add": add, "remove": files,
-                    "cluster_by": cluster_by}
-            )
-            return {"version": v, "files_compacted": len(files),
-                    "files_written": len(add)}
-        # bin-pack candidates: undersized files, plus any file carrying
-        # a deletion vector — rewriting it MATERIALIZES the dv away
-        # (Delta's REORG...APPLY(PURGE) role), so reads stop paying the
-        # anti-join once churn has been compacted
-        in_scope = sorted(
-            scoped if scoped is not None else state["files"]
-        )
-        dved = [
-            p for p in in_scope
-            if (state["files"][p].get("dv") or {}).get("deleted", 0) > 0
-        ]
-        small = sorted(
-            {
-                p for p in in_scope
-                if state["files"][p]["bytes"] < target_file_bytes // 2
-            }
-            | set(dved)
-        )
-        if len(small) < 2 and not dved:
-            return {"version": state["version"], "files_compacted": 0}
-        total = sum(state["files"][p]["bytes"] for p in small)
-        n_out = max(1, round(total / target_file_bytes))
-        packed = self._scan_live(spark, state, small).coalesce(n_out)
+        else:
+            packed = packed.coalesce(n_out)
         add = self._stage_files(packed, partition_by=pby)
         v = state["version"] + 1
         self._write_commit(
-            v, {"op": "compact", "add": add, "remove": small}
+            v, {"op": "compact", "add": add, "remove": files,
+                **({"cluster_by": cluster_by} if cluster_by else {})}
         )
-        return {"version": v, "files_compacted": len(small),
+        return {"version": v, "files_compacted": len(files),
                 "files_written": len(add)}
 
     def clone_shallow(
@@ -4003,18 +3396,14 @@ class LakeTable:
                 "Pass force=True only when no writer or stream can "
                 "be live (tests, offline maintenance)."
             )
-        import time
-
         vs = self._commit_versions()
 
         def _live_of(state: dict) -> set[str]:
             # a version's live set is its data files PLUS the deletion-
             # vector sidecars its manifest references — reclaiming a dv
             # would resurrect deleted rows
-            out = set(state["files"])
-            for m in state["files"].values():
-                out |= set((m.get("dv") or {}).get("paths", []))
-            return out
+            files = list(state["files"])
+            return set(files) | set(self._dv_paths_of(state, files))
 
         live: set[str] = set()
         for v in vs[-keep_versions:]:
@@ -4188,21 +3577,108 @@ def _remove_dv_of(state: dict, paths) -> dict:
     return {"remove_dv": rd} if rd else {}
 
 
+def _pick(r: dict, *keys: str) -> dict:
+    """A row mutator's public result from :meth:`LakeTable._mutate`'s
+    counts: ``version``, the mutator's own ``keys``, then the file
+    tallies every mutator reports."""
+    return {k: r[k] for k in ("version", *keys, "files_rewritten",
+                              "files_kept")}
+
+
+def _matched() -> Column:
+    """TRUE on a target row of the mutation core's ``t``/``s`` join
+    that found a source row."""
+    return F.col("s.`_s_match`").isNotNull()
+
+
+def _is_true(cond: str | None) -> Column:
+    """A clause condition on IS TRUE semantics: false or NULL is a
+    no-op; no condition always fires."""
+    return (
+        F.coalesce(F.expr(cond), F.lit(False))
+        if cond is not None
+        else F.lit(True)
+    )
+
+
+def _merge_flags(
+    cols: list[str],
+    clauses: list[tuple],
+    nms: str | None = None,
+    nms_cond: str | None = None,
+    nms_set: dict[str, str] | None = None,
+) -> tuple[Column, Column, Callable[[DataFrame], DataFrame]]:
+    """Compile a MERGE clause chain into the mutation core's row flags
+    over the ``t``/``s`` join: ``(changed, drop, post)``.
+
+    ``clauses`` is the ordered matched chain of ``(action, condition,
+    set_map)``: per matched row the FIRST clause whose condition is
+    TRUE fires (Delta's evaluation order) — a fired ``'keep'`` blocks
+    later clauses and changes nothing, ``'delete'`` drops the row,
+    ``'update'`` takes its SET map (assigned columns take their
+    expression, the rest KEEP the target value) or, with ``None``, the
+    whole source row (``SET *``). ``nms`` (``'delete'`` | ``'update'``)
+    fires on target rows with no source row where ``nms_cond`` is
+    TRUE, updating through ``nms_set`` over ``t.col``."""
+    nms_set = nms_set or {}
+    is_m = _matched()
+    upd_fires: list[tuple] = []
+    m_del = F.lit(False)
+    prior = F.lit(False)  # an earlier clause already fired
+    for action, cond, sm in clauses:
+        fire = is_m & ~prior & _is_true(cond)
+        if action == "update":
+            upd_fires.append((fire, sm))
+        elif action == "delete":
+            m_del = m_del | fire
+        prior = prior | (is_m & _is_true(cond))
+    n_fire = (~is_m) & _is_true(nms_cond) if nms is not None else F.lit(False)
+    changed = functools.reduce(
+        lambda a, b: a | b, [f for f, _ in upd_fires], m_del | n_fire
+    )
+    drop = m_del | n_fire if nms == "delete" else m_del
+
+    def out_col(c: str) -> Column:
+        # per-UPDATE-clause branches in chain order (fire flags are
+        # mutually exclusive by first-match construction)
+        branches = []
+        for fire, sm in upd_fires:
+            if sm is None:
+                branches.append((fire, F.col(f"s.`{c}`")))
+            elif c in sm:
+                branches.append((fire, F.expr(sm[c])))
+        if nms == "update":
+            branches.append(
+                (
+                    n_fire,
+                    F.expr(nms_set[c]) if c in nms_set else F.col(f"t.`{c}`"),
+                )
+            )
+        e = None
+        for pred, val in branches:
+            e = F.when(pred, val) if e is None else e.when(pred, val)
+        base = F.col(f"t.`{c}`")
+        return (base if e is None else e.otherwise(base)).alias(c)
+
+    def post(df: DataFrame) -> DataFrame:
+        return df.select(*[out_col(c) for c in cols])
+
+    return changed, drop, post
+
+
 def _parse_ts(ts) -> float:
     """A timestamp input (epoch number, numeric string, ISO-8601
     string — naive read as UTC — or ``datetime``) as epoch seconds."""
-    import datetime as _dt
-
     if isinstance(ts, str):
         try:  # numeric string (DataSource options are strings)
             ts = float(ts)
         except ValueError:
-            d = _dt.datetime.fromisoformat(ts)
+            d = datetime.datetime.fromisoformat(ts)
             if d.tzinfo is None:
-                d = d.replace(tzinfo=_dt.timezone.utc)
+                d = d.replace(tzinfo=datetime.timezone.utc)
             ts = d.timestamp()
-    elif isinstance(ts, _dt.datetime):
-        d = ts if ts.tzinfo else ts.replace(tzinfo=_dt.timezone.utc)
+    elif isinstance(ts, datetime.datetime):
+        d = ts if ts.tzinfo else ts.replace(tzinfo=datetime.timezone.utc)
         ts = d.timestamp()
     return float(ts)
 
@@ -4259,8 +3735,10 @@ def with_occ_retry(op, attempts: int = 5):
     concurrency loop. Safe because every mutator re-resolves table
     state at entry, so a retry serializes AFTER the winning commit
     (appends are blind-safe; delete/merge recompute their file sets
-    against the new state). Data files staged by a losing attempt are
-    unreferenced and reclaimed by vacuum. Raises the last conflict if
+    against the new state). A losing row mutation (delete, update,
+    replace, merge, CDC apply) unlinks the data files it staged before
+    the conflict propagates; a losing append, overwrite or compact
+    leaves its files unreferenced for vacuum. Raises the last conflict if
     ``attempts`` is exhausted (a genuinely hot table needs a queue,
     not more retries)."""
     last: ConcurrentCommitError | None = None
@@ -4286,10 +3764,8 @@ def _footer_norm(v):
     scan collected under the UTC session pin: tz-aware timestamps
     (TIMESTAMP(MICROS, adjustedToUTC=true) columns) become naive UTC
     datetimes; everything else passes through."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime) and v.tzinfo is not None:
-        return v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return v
 
 
@@ -4310,8 +3786,6 @@ def _parse_partition_value(raw: str, simple_type: str):
     exactly as the old basePath+schema stats scan did. Raises on
     anything it cannot reproduce faithfully — the caller then falls
     back to the scan."""
-    import datetime as _dt
-
     if simple_type in ("tinyint", "smallint", "int", "bigint"):
         return int(raw)
     if simple_type == "float":
@@ -4320,8 +3794,6 @@ def _parse_partition_value(raw: str, simple_type: str):
         # "0.1" -> 0.10000000149011612, not 0.1). Round-trip through
         # float32 so pruning compares against the value actually seen
         # in data; a bare float(raw) here wrongly prunes files.
-        import struct
-
         return struct.unpack("<f", struct.pack("<f", float(raw)))[0]
     if simple_type == "double":
         return float(raw)
@@ -4332,9 +3804,9 @@ def _parse_partition_value(raw: str, simple_type: str):
     if simple_type == "string":
         return raw
     if simple_type == "date":
-        return _dt.date.fromisoformat(raw)
+        return datetime.date.fromisoformat(raw)
     if simple_type in ("timestamp", "timestamp_ntz"):
-        return _dt.datetime.fromisoformat(raw)
+        return datetime.datetime.fromisoformat(raw)
     raise ValueError(f"unsupported partition type {simple_type}")
 
 

@@ -159,3 +159,93 @@ def test_full_mutator_chain_readback(spark, tmp_path, corpus):
     assert df.where(F.col("tag").isNull()).count() == len(state)
     assert df.where(F.col("tag") == "new").count() == 1
     assert df.count() == len(state) + 1
+
+
+def _net_changes(t, spark, since):
+    """The change feed since ``since`` folded to a net signed multiset
+    of (k, grp, v) rows — what a downstream consumer maintains."""
+    from collections import Counter
+
+    ch, _ = t.read_changes_since(spark, since)
+    net = Counter()
+    for r in ch.collect():
+        net[(r["k"], r["grp"], r["v"])] += (
+            1 if r["_change_type"] == "insert" else -1
+        )
+    return {row: n for row, n in net.items() if n}
+
+
+def _src(spark, rows, op=False):
+    schema = "k long, grp string, v double" + (", _op string" if op else "")
+    return spark.createDataFrame(rows, schema)
+
+
+# Every row mutator on a cdf=True table, each as (name, call(t, spark,
+# mode)). All run in rewrite and dv mode on the same corpus and must
+# agree on the snapshot and the net change feed.
+MUTATIONS = [
+    ("delete_where", lambda t, s, m: t.delete_where(
+        s, F.col("v") > 3.0, mode=m)),
+    ("update_where", lambda t, s, m: t.update_where(
+        s, F.col("k") <= 2, {"grp": F.lit("u"), "v": F.col("v") + 1.0},
+        mode=m)),
+    ("merge_update", lambda t, s, m: t.merge_into(
+        s, _src(s, [(1, "m", 0.5), (None, "m", 1.5), (50, "m", 2.5)]),
+        ["k"], mode=m)),
+    ("merge_clause_chain", lambda t, s, m: t.merge_into(
+        s, _src(s, [(1, "m", 0.5), (2, "m", 1.5), (3, None, None),
+                    (60, "m", 6.0)]),
+        ["k"], mode=m,
+        matched_clauses=[("delete", "t.v > 5"),
+                         ("update", "s.v IS NOT NULL", {"grp": "s.grp"})],
+        not_matched_condition="v IS NOT NULL")),
+    ("merge_by_source_delete", lambda t, s, m: t.merge_into(
+        s, _src(s, [(1, "m", 0.5), (70, "m", 7.0)]), ["k"], mode=m,
+        when_not_matched_by_source="delete",
+        not_matched_by_source_condition="t.k IS NULL OR t.k > 2")),
+    ("apply_changes", lambda t, s, m: t.apply_changes(
+        s, _src(s, [(1, "c", 1.0, "u"), (3, None, None, "d"),
+                    (None, None, None, "d"), (80, "c", 8.0, "u")], op=True),
+        ["k"], mode=m)),
+]
+
+
+@pytest.mark.parametrize(
+    "name,mutate", MUTATIONS, ids=[n for n, _ in MUTATIONS]
+)
+def test_rewrite_dv_parity(spark, tmp_path, corpus, name, mutate):
+    """rewrite and dv mode are one mutation seen two ways: the same
+    snapshot, the same net change feed, and dv rewrites zero files."""
+    seen = {}
+    for mode in ("rewrite", "dv"):
+        t = LakeTable.create(
+            _mk(spark, corpus), str(tmp_path / mode), cdf=True
+        )
+        v0 = t.version()
+        res = mutate(t, spark, mode)
+        seen[mode] = (_rows(t.read(spark)), _net_changes(t, spark, v0))
+        if mode == "dv":
+            assert res["files_rewritten"] == 0
+    assert seen["rewrite"] == seen["dv"]
+
+
+def test_replace_where_snapshot_and_feed(spark, tmp_path, corpus):
+    """replace_where (rewrite only): the region's rows leave, the
+    incoming rows land, and the net feed is exactly that swap."""
+    t = LakeTable.create(_mk(spark, corpus), str(tmp_path / "t"), cdf=True)
+    v0 = t.version()
+    incoming = [(1, "r", 100.0), (2, "r", None)]
+    res = t.replace_where(
+        spark, _mk(spark, incoming), F.col("k").isin(1, 2)
+    )
+    gone = [r for r in corpus if r[0] in (1, 2)]
+    kept = [r for r in corpus if r[0] not in (1, 2)]
+    assert res["rows_deleted"] == len(gone)
+    assert res["rows_inserted"] == len(incoming)
+    assert _rows(t.read(spark)) == _rows(_mk(spark, kept + incoming))
+    want = {r: 1 for r in incoming}
+    for r in gone:
+        want[r] = want.get(r, 0) - 1
+    assert _net_changes(t, spark, v0) == {
+        r: n for r, n in want.items() if n
+    }

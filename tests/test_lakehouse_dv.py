@@ -327,11 +327,22 @@ def test_merge_dv_zero_rewrite(spark, tmp_path):
     assert rows == {5: -5, 105: -105, 2000: 1}
 
 
-def test_merge_dv_keep_mode_rejected(spark, tmp_path):
-    t = _mk(spark, str(tmp_path / "t"), n=10, files=1)
-    src = spark.createDataFrame([(1, 1)], "id long, v long")
-    with pytest.raises(ValueError, match="keep"):
-        t.merge_into(spark, src, ["id"], when_matched="keep", mode="dv")
+def test_merge_dv_keep_mode_rewrites_nothing(spark, tmp_path):
+    """An insert-only keep merge changes no target row, so dv mode is
+    the same commit as rewrite mode: zero files rewritten, no vectors,
+    only the unmatched source rows land."""
+    src = spark.createDataFrame([(1, 100), (50, 5)], "id long, v long")
+    got = {}
+    for mode in ("rewrite", "dv"):
+        t = _mk(spark, str(tmp_path / mode), n=10, files=1)
+        before = _data_files(t)
+        r = t.merge_into(spark, src, ["id"], when_matched="keep", mode=mode)
+        assert r["rows_matched"] == 1 and r["files_rewritten"] == 0
+        assert _data_files(t).items() >= before.items()
+        assert all(not m.get("dv") for m in t._state()["files"].values())
+        got[mode] = sorted(tuple(x) for x in t.read(spark).collect())
+    assert got["rewrite"] == got["dv"]
+    assert (1, 1) in got["dv"] and (50, 5) in got["dv"]
 
 
 def test_merge_dv_cdf_fold_parity(spark, tmp_path):

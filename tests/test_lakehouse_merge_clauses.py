@@ -1,4 +1,4 @@
-"""Full MERGE clause grammar (`merge_into`'s general engine).
+"""Full MERGE clause grammar (`merge_into` on the row-mutation core).
 
 Pins the Delta `whenMatched…` / `whenNotMatched…` /
 `whenNotMatchedBySource…` surface re-expressed Spark-first:
@@ -345,23 +345,52 @@ def test_clause_chain_validation(spark, tmp_path):
         )
 
 
-def test_source_must_be_key_unique(spark, tmp_path):
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+@pytest.mark.parametrize("when_matched", ["update", "keep", "delete"])
+def test_source_must_be_key_unique(spark, tmp_path, when_matched, mode):
     t = _mk(spark, str(tmp_path / "t"))
+    v0 = t.version()
     dup = spark.createDataFrame(
-        [(1, "a", 1.0, "S"), (1, "b", 2.0, "S")],
+        [(1, "x", 1.0, "S"), (1, "y", 2.0, "S"),
+         (3, "z", 3.0, "S"), (3, "w", 4.0, "S")],
         "id long, name string, price double, grp string",
     )
     with pytest.raises(ValueError, match="key-unique"):
-        t.merge_into(spark, dup, ["id"], when_matched="delete")
+        t.merge_into(
+            spark, dup, ["id"], when_matched=when_matched, mode=mode
+        )
+    assert t.version() == v0
+    # the refused attempt's frozen source is reclaimed, not orphaned
+    live = set(t._state()["files"])
+    on_disk = {
+        os.path.relpath(os.path.join(root, n), t.path)
+        for root, _d, names in os.walk(t.data_dir)
+        for n in names
+    }
+    assert on_disk == live
     # null keys never match and are NOT multi-matches
     nulls = spark.createDataFrame(
         [(None, "a", 1.0, "S"), (None, "b", 2.0, "S")],
         "id long, name string, price double, grp string",
     )
-    r = t.merge_into(
-        spark, nulls, ["id"], when_matched="delete"
+    t.merge_into(
+        spark, nulls, ["id"], when_matched=when_matched, mode=mode
     )
-    assert r["rows_inserted"] == 2
+    assert t.read(spark).where(F.col("id").isNull()).count() == 2
+
+
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_apply_changes_key_both_upserted_and_deleted(spark, tmp_path, mode):
+    t = _mk(spark, str(tmp_path / "t"))
+    v0 = t.version()
+    src = spark.createDataFrame(
+        [(2, "u", 1.0, "S", "u"), (2, None, None, None, "d"),
+         (None, "n", 1.0, "S", "u"), (None, None, None, None, "d")],
+        "id long, name string, price double, grp string, _op string",
+    )
+    with pytest.raises(ValueError, match="key-unique"):
+        t.apply_changes(spark, src, ["id"], mode=mode)
+    assert t.version() == v0
 
 
 def test_grammar_validation_errors(spark, tmp_path):

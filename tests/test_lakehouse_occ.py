@@ -191,3 +191,98 @@ def test_worker_commit_payload_is_json_clean(tmp_path):
     assert json.loads(
         (Path(path) / "_log" / "00000001.json").read_text()
     )["writer"] == 3
+
+
+def _referenced(t) -> set[str]:
+    """Every data file some committed version names: data adds, CDF
+    sides, and deletion-vector sidecars."""
+    out: set[str] = set()
+    for v in t._commit_versions():
+        c = t._read_commit(v)
+        for key in ("add", "cdf_delete", "cdf_insert", "dv"):
+            for m in c.get(key, []):
+                out.add(m["path"] if isinstance(m, dict) else m)
+                if isinstance(m, dict) and m.get("dv"):
+                    out |= set(m["dv"]["paths"])
+    return out
+
+
+def _on_disk(t) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(root, n), t.path)
+        for root, _d, names in os.walk(t.data_dir)
+        for n in names
+    }
+
+
+def test_failed_sibling_staging_reclaims_attempt_files(spark, tmp_path):
+    """A cdf=True update stages its rewrite, pre-images and post-images
+    in one parallel batch. When one staging raises, the files its
+    siblings already moved into data/ are unlinked: nothing the failed
+    attempt wrote outlives it, and the table reads as before."""
+    import threading
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    base = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
+    )
+    t = LakeTable.create(base.repartition(2), str(tmp_path / "t"), cdf=True)
+    before = sorted(tuple(r) for r in t.read(spark).collect())
+    real_stage = t._stage_files
+    calls = {"n": 0}
+    lock = threading.Lock()
+
+    def flaky_stage(*a, **kw):
+        with lock:
+            calls["n"] += 1
+            n = calls["n"]
+        if n == 2:
+            raise RuntimeError("staging job died")
+        return real_stage(*a, **kw)
+
+    t._stage_files = flaky_stage
+    with pytest.raises(RuntimeError, match="staging job died"):
+        t.update_where(spark, F.col("k") < 5, {"v": F.lit(0.0)})
+    t._stage_files = real_stage
+    assert calls["n"] == 3  # all three stagings ran; one raised
+    assert t.version() == 0
+    assert _on_disk(t) == _referenced(t)
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == before
+
+
+def test_losing_mutation_reclaims_its_staged_files(spark, tmp_path):
+    """A row mutation whose O_EXCL commit loses unlinks the files it
+    staged before the conflict reaches with_occ_retry, so the retry
+    loop leaves no orphans for vacuum (contrast the append above)."""
+    from pyspark.sql import functions as F
+
+    from olist_data_warehouse_spark.sources.lakehouse import with_occ_retry
+
+    base = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 2.0).alias("v")
+    )
+    t = LakeTable.create(base.repartition(2), str(tmp_path / "t"), cdf=True)
+    competitor = LakeTable(t.path)
+    raced = {"n": 0}
+    real_write = t._write_commit
+
+    def racing_write(v, commit):
+        if raced["n"] < 2:  # lose once in each mode
+            raced["n"] += 1
+            competitor._write_commit(
+                v, {"op": "append", "add": [], "remove": []}
+            )
+        return real_write(v, commit)
+
+    t._write_commit = racing_write
+    for mode, m in (("rewrite", 7), ("dv", 5)):
+        with_occ_retry(
+            lambda: t.delete_where(spark, F.col("k") % m == 0, mode=mode)
+        )
+    t._write_commit = real_write
+    assert raced["n"] == 2
+    assert _on_disk(t) == _referenced(t)
+    # multiples of 7 (6 rows) or 5 (8 rows), 0 and 35 counted once
+    assert t.read(spark).count() == 40 - 12
