@@ -1184,7 +1184,7 @@ from olist_data_warehouse_spark.operators import graphann  # noqa: E402
     "returns that truth — which IS SQL-expressible and hash-checked "
     "by the DuckDB oracle (the sim_ivf_topk_mp truth at the same "
     "cells/probes). A broken graph build or beam search fails the "
-    "in-engine assert; a broken exact path fails the hash. At 100 TB "
+    "in-engine recall gate; a broken exact path fails the hash. At 100 TB "
     "the cell is the unit of build/storage/search — the IVF scale "
     "story with a graph inside each bucket, higher recall per "
     "candidate visited than the flat cell scan.",
@@ -1208,10 +1208,11 @@ def sim_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     for r in recall:
-        assert r["recall"] >= 0.9, (
-            f"NSW recall vs cell-restricted truth below contract: "
-            f"query {r['query_id']} = {r['recall']:.2f}"
-        )
+        if r["recall"] < 0.9:
+            raise RuntimeError(
+                f"NSW recall vs cell-restricted truth below contract: "
+                f"query {r['query_id']} = {r['recall']:.2f}"
+            )
     return truth
 
 
@@ -1245,7 +1246,7 @@ FROM ranked WHERE rn <= 10
     "quality from probe coverage, which the IVF recall entries "
     "already measure), then returns the global brute-force top-10 — "
     "which the DuckDB oracle recomputes and hash-matches. A broken "
-    "graph build or beam search fails the in-engine assert; a broken "
+    "graph build or beam search fails the in-engine recall gate; a broken "
     "exact path fails the hash.",
 )
 def sim_nsw_recall_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1304,8 +1305,9 @@ def sim_nsw_recall_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     for r in recall:
-        assert r["recall"] >= 0.9, (
-            f"NSW recall vs cell-restricted truth below contract: "
-            f"query {r['query_id']} = {r['recall']:.2f}"
-        )
+        if r["recall"] < 0.9:
+            raise RuntimeError(
+                f"NSW recall vs cell-restricted truth below contract: "
+                f"query {r['query_id']} = {r['recall']:.2f}"
+            )
     return similarity.brute_force_topk(e, qids, k=k)

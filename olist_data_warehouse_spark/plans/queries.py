@@ -1891,8 +1891,7 @@ DRIVER_PRIORITY = [
     "q1_top_units_dw", "q1_top_units_oltp",
     "q2_top_revenue_dw", "q3_conversion_dw",
     "j7_incremental_delta", "j7_merge_upsert",
-    "dedup_pipeline_eval", "dedup_cdc_chunks", "dedup_containment",
-    "multi_decode_meta", "stream_sessionize", "samp_cluster_split",
+    "dedup_pipeline_eval", "dedup_cdc_chunks",
     # Everything else follows in registration order — each has at
     # least one prior driver-green row (r1-r13) and runs continuously
     # via tests/test_queries_oracle.py, bench.py, and entry().

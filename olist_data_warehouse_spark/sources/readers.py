@@ -4,10 +4,18 @@ Everything is a declarative ``spark.read`` so Catalyst keeps predicate
 pushdown / column pruning / partition pruning. At 100 TB the only scan
 knob that matters is *not defeating* those: never ``.cache()`` a raw
 scan, never materialize wider than the query needs.
+
+Parquet scans take their schema from the file's footer, read on the
+driver (:func:`footer_schema`): Spark would otherwise run one job per
+``spark.read.parquet`` just to infer it. The footer mapping reproduces
+Spark's inference exactly; a type it does not map falls back to the
+inferred read and logs the fallback on the ``olist`` logger.
 """
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -17,10 +25,109 @@ from olist_data_warehouse_spark.schemas import TESTDATA
 
 TESTDATA_TABLES = tuple(TESTDATA)
 
+# Fast-path decisions log under the package logger ``olist``.
+log = logging.getLogger("olist.readers")
+
+# Parquet INT(bitWidth, signed) -> Spark type, as Spark infers it.
+_INT_TYPES = {
+    (8, True): T.ByteType(), (16, True): T.ShortType(),
+    (32, True): T.IntegerType(), (64, True): T.LongType(),
+    (8, False): T.ShortType(), (16, False): T.IntegerType(),
+    (32, False): T.LongType(),
+}
+# Unannotated physical types. INT96 is Spark's legacy timestamp; binary
+# is left unmapped (``binaryAsString`` decides it).
+_PLAIN_TYPES = {
+    "BOOLEAN": T.BooleanType(), "INT32": T.IntegerType(),
+    "INT64": T.LongType(), "FLOAT": T.FloatType(),
+    "DOUBLE": T.DoubleType(), "INT96": T.TimestampType(),
+}
+
+
+def _conf_on(spark: SparkSession, key: str, default: str) -> bool:
+    return spark.conf.get(key, default).strip().lower() == "true"
+
+
+def _leaf_type(spark: SparkSession, col) -> T.DataType | None:
+    """Spark type of one parquet leaf column, from its physical and
+    logical type (never the stored ``ARROW:schema``); None if unmapped.
+    The parquet format ties each logical type to its physical types
+    (STRING to BYTE_ARRAY, DATE to INT32, ...), so the logical type
+    alone picks the Spark type."""
+    phys, kind = col.physical_type, col.logical_type.type
+    info = json.loads(col.logical_type.to_json())
+    if kind == "NONE":
+        return _PLAIN_TYPES.get(phys)
+    if kind == "DECIMAL":
+        return T.DecimalType(col.precision, col.scale)
+    if kind == "STRING":
+        return T.StringType()
+    if kind == "DATE":
+        return T.DateType()
+    if kind == "INT":
+        return _INT_TYPES.get((info["bitWidth"], info["isSigned"]))
+    if kind == "TIMESTAMP":
+        if info["timeUnit"] == "nanoseconds":
+            if _conf_on(spark, "spark.sql.legacy.parquet.nanosAsLong", "false"):
+                return T.LongType()
+            return None
+        if info["isAdjustedToUTC"] or not _conf_on(
+            spark, "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+        ):
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    return None
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark would infer for the parquet file ``path``, built
+    on the driver from the file's footer — no Spark job.
+
+    Maps flat primitive columns and 3-level LISTs of a primitive; every
+    field (and array element) is nullable, as Spark's file sources make
+    them. Returns None for anything else — a directory or non-local
+    path, a struct/map/legacy-list column, an unmapped leaf type, an
+    unreadable footer — so the caller falls back to inference.
+    """
+    if not os.path.isfile(path):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        pschema = pq.ParquetFile(path).schema
+        arrow = pschema.to_arrow_schema()
+    except (OSError, pa.ArrowException):
+        return None
+    fields: list[T.StructField] = []
+    for col in (pschema.column(i) for i in range(len(pschema))):
+        parts = col.path.split(".")
+        name = parts[0]
+        dt = _leaf_type(spark, col)
+        if dt is None:
+            return None
+        if len(parts) == 3 and parts[1] == "list" \
+                and col.max_repetition_level == 1 \
+                and pa.types.is_list(arrow.field(name).type):
+            dt = T.ArrayType(dt, True)
+        elif len(parts) != 1 or col.max_repetition_level != 0:
+            return None
+        fields.append(T.StructField(name, dt, True))
+    return T.StructType(fields)
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Base-table scan (S1). Parquet: columnar, min/max stats, pushdown."""
-    return spark.read.parquet(path)
+    """Base-table scan (S1). Parquet: columnar, min/max stats, pushdown.
+
+    The schema comes from the footer (:func:`footer_schema`, no Spark
+    job); an unmapped file is read with Spark's own inference instead,
+    and the fallback is logged.
+    """
+    schema = footer_schema(spark, path)
+    if schema is None:
+        log.info("footer schema unmapped, inferring: %s", path)
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_csv(
@@ -130,6 +237,13 @@ def load_testdata(
 ) -> dict[str, DataFrame]:
     """Load the driver's parquet tables for ``sf_dir`` as DataFrames.
 
+    Each table is read through :func:`read_parquet`: its schema comes
+    from the parquet footer on the driver, so loading launches no Spark
+    job (an inferred read costs one job per table). A table whose
+    footer holds a type the mapping does not cover is read with Spark's
+    inference instead, and the fallback is logged on ``olist.readers``.
+    The plans handed to Catalyst are the same either way.
+
     Session confs are (re)applied here, at the read boundary, because
     callers may hand us *any* SparkSession — not necessarily one built
     by our ``session.py`` (the correctness driver builds its own).
@@ -165,7 +279,7 @@ def load_testdata(
     for name in tables or TESTDATA_TABLES:
         p = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(p):
-            df = _normalize_timestamps(spark.read.parquet(p))
+            df = _normalize_timestamps(read_parquet(spark, p))
             if heal_set is None or name in heal_set:
                 df = _heal_partitioning(spark, df, p)
             out[name] = df

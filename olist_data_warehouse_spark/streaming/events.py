@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from olist_data_warehouse_spark.schemas import TESTDATA
+from olist_data_warehouse_spark.sources.readers import read_parquet
 
 # The parquet file source needs an explicit schema. Requesting plain
 # TIMESTAMP (LTZ) over the file's TIMESTAMP(MICROS, NTZ) physical type
@@ -46,9 +47,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Generation-aware, mirroring the batch reader exactly: supports the
     current TIMESTAMP(MICROS, NTZ) testdata and the older
-    TIMESTAMP(NANOS) generation (detected from the parquet footer via a
-    one-off batch schema probe — metadata read only, no data scan), so
-    batch and stream can never disagree about which files they accept.
+    TIMESTAMP(NANOS) generation (detected from the parquet footer on the
+    driver, through the batch reader's ``read_parquet`` — no Spark job),
+    so batch and stream can never disagree about which files they accept.
     """
     # Pin UTC exactly like the batch reader (sources.readers
     # load_testdata): the NTZ micros are read verbatim into LTZ, so all
@@ -67,7 +68,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
-    probe = spark.read.parquet(path).schema
+    probe = read_parquet(spark, path).schema
     nanos = any(
         f.name == "ts" and f.dataType.simpleString() == "bigint"
         for f in probe.fields

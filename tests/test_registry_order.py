@@ -97,3 +97,9 @@ def test_readme_registry_count_matches():
         f"README says {m.group(1)} but REGISTRY has {len(REGISTRY)} — "
         "update README.md in the same commit that changes the registry"
     )
+
+
+def test_priority_list_fits_the_driver_cap():
+    """The driver evaluates 50 entries; a priority name past the cap is
+    never evaluated, so the list must not grow beyond it."""
+    assert len(DRIVER_PRIORITY) <= 50

@@ -496,3 +496,122 @@ def test_vacuum_versioned_rejects_keep_zero(spark, tmp_path):
     W.write_versioned(spark.range(3).withColumnRenamed("id", "x"), p)
     with pytest.raises(ValueError):
         W.vacuum_versioned(p, keep=0)
+
+
+# -- footer schemas ------------------------------------------------------
+
+SALES_TABLES = ("orders", "lineitem", "part", "supplier", "nation", "region")
+
+
+def _footer_flavours():
+    """One tmp-file flavour per timestamp/nested/logical type the footer
+    mapping covers: name -> (table, pq.write_table kwargs)."""
+    import datetime
+    import decimal
+
+    import pyarrow as pa
+
+    ts = [datetime.datetime(2024, 3, 9, 1, 2, 3, 456789), None]
+    naive = pa.array(ts, pa.timestamp("us"))
+    utc = pa.array(ts, pa.timestamp("us", tz="UTC"))
+    ms = dict(coerce_timestamps="ms", allow_truncated_timestamps=True)
+    return {
+        "micros_ntz": (pa.table({"t": naive}), {}),
+        "micros_utc": (pa.table({"t": utc}), {}),
+        "millis": (pa.table({"t": naive, "u": utc}), ms),
+        "nanos": (
+            pa.table({"t": pa.array(ts, pa.timestamp("ns"))}),
+            dict(version="2.6", coerce_timestamps=None, store_schema=False),
+        ),
+        "int96": (pa.table({"t": naive}),
+                  dict(use_deprecated_int96_timestamps=True)),
+        "list_float": (
+            pa.table({"v": pa.array([[1.0, None], None],
+                                    pa.list_(pa.float32()))}),
+            {},
+        ),
+        "date": (pa.table({"d": pa.array([datetime.date(2020, 2, 29), None])}),
+                 {}),
+        "decimal": (
+            pa.table({
+                f"d{p}": pa.array([decimal.Decimal("1.25"), None],
+                                  pa.decimal128(p, 2))
+                for p in (5, 12, 30)
+            }),
+            {},
+        ),
+        "ints": (
+            pa.table({
+                str(t): pa.array([1, None], t)
+                for t in (pa.int8(), pa.int16(), pa.int32(), pa.int64(),
+                          pa.uint8(), pa.uint16(), pa.uint32())
+            }),
+            {},
+        ),
+    }
+
+
+def test_footer_schema_equals_inferred_schema(spark, sf_dir, tmp_path):
+    """The footer schema is exactly what Spark infers (types, nullability,
+    metadata) for every testdata table and every flavour of tmp file."""
+    import pyarrow.parquet as pq
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    paths = [os.path.join(sf_dir, f"{n}.parquet") for n in readers.TESTDATA_TABLES]
+    for name, (table, kw) in _footer_flavours().items():
+        p = str(tmp_path / f"{name}.parquet")
+        pq.write_table(table, p, **kw)
+        paths.append(p)
+    for p in paths:
+        got = readers.footer_schema(spark, p)
+        assert got is not None, p
+        assert got == spark.read.parquet(p).schema, p
+
+
+def test_footer_schema_unmapped_type_falls_back_and_logs(
+    spark, tmp_path, caplog
+):
+    """A struct column is outside the footer mapping: the read falls
+    back to Spark's inference, returns the same DataFrame, and says so
+    on the ``olist`` logger."""
+    import logging
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "region.parquet")
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([1, 2], pa.int32()),
+                  "meta": pa.array([{"x": 1}, None])}),
+        p,
+    )
+    assert readers.footer_schema(spark, p) is None
+    caplog.set_level(logging.INFO, logger="olist")
+    got = readers.load_testdata(spark, str(tmp_path), ("region",))["region"]
+    want = spark.read.parquet(p)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    hits = [r for r in caplog.records
+            if r.name.startswith("olist") and p in r.getMessage()]
+    assert hits and "inferring" in hits[0].getMessage()
+
+
+def test_load_testdata_launches_no_spark_job(spark, sf_dir):
+    """Loading the six sales tables runs no job: the schemas come from
+    the footers. The inferred reads of the same files, run after under
+    their own group, are the control that the count sees jobs at all."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setJobGroup("footer-load", "load_testdata")
+    try:
+        t = readers.load_testdata(spark, sf_dir, SALES_TABLES)
+        sc.setJobGroup("footer-infer", "inferred reads")
+        for n in SALES_TABLES:
+            spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc.listenerBus().waitUntilEmpty(30000)
+    assert set(t) == set(SALES_TABLES)
+    assert list(sc.statusTracker().getJobIdsForGroup("footer-load")) == []
+    assert len(sc.statusTracker().getJobIdsForGroup("footer-infer")) == 6
