@@ -65,6 +65,8 @@ from pyspark.sql.types import StructField, StructType
 
 from olist_data_warehouse_spark.sources.lakehouse import (
     _STATS_TYPES,
+    LakeTable,
+    _cdf_pairs,
     _norm_path,
 )
 
@@ -215,15 +217,12 @@ class LakeBatchReader(DataSourceReader):
 
         if self.mode == "cdf":
             # row-delta feed: replay the commits in (since, end] as
-            # signed file slices (read_changes_since's dispatch, through
-            # the DataSource surface). Stats pruning applies PER ENTRY —
-            # pre-image and add entries carry full stats — and every
-            # filter stays residual, so pruning a provably-clean slice
-            # from either change side never alters the filtered fold.
-            from olist_data_warehouse_spark.sources.lakestream import (
-                _cdf_pairs,
-            )
-
+            # signed file slices (the shared `_cdf_pairs` dispatch,
+            # through the DataSource surface). Stats pruning applies PER
+            # ENTRY — pre-image and add entries carry full stats — and
+            # every filter stays residual, so pruning a provably-clean
+            # slice from either change side never alters the filtered
+            # fold.
             out = []
             for v in range(self.since + 1, end + 1):
                 for kind, e in _cdf_pairs(t._read_commit(v)):
@@ -546,13 +545,15 @@ class LakeBatchWriter(DataSourceArrowWriter):
     Each executor task streams its Arrow batches into ONE parquet file
     per partition tuple it sees (one total on unpartitioned tables),
     directly under the table's data/ (immutable unique names — a
-    crashed or aborted task's files are simply never referenced, and
-    vacuum's retention window reclaims them, exactly like a losing OCC
-    writer's staging). Per-column min/max/null stats compute
-    EXECUTOR-SIDE from the Arrow data — the manifest needs no second
-    Spark scan, unlike the LakeTable.append path. The driver's
-    ``commit`` assembles the add list and writes the log commit under
-    the standard OCC retry; ``abort`` unlinks every staged file.
+    crashed task's files are simply never referenced, and vacuum's
+    retention window reclaims them). Per-column min/max/null stats
+    compute EXECUTOR-SIDE from the Arrow data — the manifest needs no
+    second Spark scan, unlike the LakeTable.append path. The driver's
+    ``commit`` assembles the add list and lands it through
+    ``LakeTable._commit`` as a blind writer (append and overwrite do
+    not depend on what they read, so a lost gate retries the commit
+    alone); ``abort``, a txn replay and an exhausted retry unlink
+    every staged file.
 
     Partitioned targets (r10 verdict #2 — the refusal is lifted):
     each task splits its batches by partition tuple with a vectorized
@@ -918,80 +919,56 @@ class LakeBatchWriter(DataSourceArrowWriter):
         return _WrittenFile(files_json=json.dumps(files))
 
     def commit(self, messages) -> None:
-        import json
-
-        from olist_data_warehouse_spark.sources.lakehouse import (
-            LakeTable,
-            with_occ_retry,
-        )
-
-        import os
-
-        add = []
-        for m in messages:
-            if m is None or not m.files_json:
-                continue
-            # manifest-ready dicts assembled executor-side (stats
-            # already _json_safe'd there)
-            add += json.loads(m.files_json)
-        t = LakeTable(self.path)
-        schema = json.loads(self.schema_json)
-        txn = (
+        self._land(
+            messages,
             {"app": self.txn_app, "batch": self.txn_version}
             if self.txn_app is not None
-            else None
+            else None,
         )
 
-        def _commit_once():
-            if t.version() is None:
-                t._write_commit(
-                    0,
-                    {"op": "create", "add": add, "remove": [],
-                     "schema": schema, "config": {"cdf": False},
-                     **({"txn": txn} if txn else {})},
-                )
-                return
-            state = t._state()
-            if txn and txn["batch"] <= state["txns"].get(
-                txn["app"], -1
-            ):
-                # idempotent replay (Delta's txnAppId/txnVersion): a
-                # retried job re-ran the write — drop its staged files
-                # and land NOTHING (exactly-once for batch retries)
-                for f in add:
-                    try:
-                        os.unlink(os.path.join(self.path, f["path"]))
-                    except OSError:
-                        pass
-                return
-            v = state["version"] + 1
-            if self.overwrite:
-                t._write_commit(
-                    v,
-                    {"op": "overwrite", "add": add,
-                     "remove": sorted(state["files"]), "schema": schema,
-                     **({"txn": txn} if txn else {})},
-                )
-            else:
-                t._write_commit(
-                    v, {"op": "append", "add": add, "remove": [],
-                        **({"txn": txn} if txn else {})}
-                )
+    def _land(self, messages, txn: dict | None, op: str = "append"):
+        """Commit the tasks' files as ``op`` — or as the table's
+        ``create`` when none exists, or as an ``overwrite`` — through
+        ``LakeTable._commit``: blind (a lost gate retries under fresh
+        state), txn-deduped, staged files unlinked on a replay."""
+        add = _staged_metas(messages)
+        schema = json.loads(self.schema_json)
 
-        with_occ_retry(_commit_once)
+        def build(state: dict | None) -> dict:
+            if state is None:
+                return {"op": "create", "add": add, "remove": [],
+                        "schema": schema, "config": {"cdf": False}}
+            if self.overwrite:
+                return {"op": "overwrite", "add": add,
+                        "remove": sorted(state["files"]),
+                        "schema": schema}
+            return {"op": op, "add": add, "remove": []}
+
+        t = LakeTable(self.path)
+        t._commit(
+            t._state() if t.version() is not None else None,
+            build,
+            [m["path"] for m in add],
+            txn=txn,
+            blind=True,
+        )
 
     def abort(self, messages) -> None:
-        import json
-        import os
+        LakeTable(self.path)._reclaim(
+            [m["path"] for m in _staged_metas(messages)]
+        )
 
-        for m in messages:
-            if m is None or not m.files_json:
-                continue
-            for f in json.loads(m.files_json):
-                try:
-                    os.unlink(os.path.join(self.path, f["path"]))
-                except OSError:
-                    pass
+
+def _staged_metas(messages) -> list[dict]:
+    """The manifest-ready file dicts the write tasks reported (stats
+    already ``_json_safe``'d executor-side); zero-row tasks report
+    none."""
+    return [
+        m
+        for msg in messages
+        if msg is not None and msg.files_json
+        for m in json.loads(msg.files_json)
+    ]
 
 
 class LakeStreamSinkWriter(LakeBatchWriter, DataSourceStreamArrowWriter):
@@ -1012,60 +989,20 @@ class LakeStreamSinkWriter(LakeBatchWriter, DataSourceStreamArrowWriter):
     files unlinked, so no row ever lands twice. ``app`` comes from
     ``.option('app', ...)`` — required, because two queries sharing
     a default id would wrongly dedup each other's batches (Delta's
-    ``txnAppId`` posture). A concurrent writer costs one OCC retry of
-    the commit decision only; files never restage."""
+    ``txnAppId`` posture). Both sinks commit through the same
+    ``LakeTable._commit`` path, blind: a concurrent writer costs a
+    retry of the commit alone (the dedup re-checked under fresh
+    state, so a replica that wins the race drops this epoch's
+    files); files never restage."""
 
     def __init__(self, app: str, **kwargs):
         super().__init__(**kwargs)
         self.app = app
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803
-        import json
-        import os
-
-        from olist_data_warehouse_spark.sources.lakehouse import (
-            LakeTable,
-            with_occ_retry,
+        self._land(
+            messages, {"app": self.app, "batch": batchId}, "stream_append"
         )
-
-        add = []
-        for m in messages:
-            if m is None or not m.files_json:
-                continue
-            add += json.loads(m.files_json)
-        t = LakeTable(self.path)
-        schema = json.loads(self.schema_json)
-
-        def _drop_staged() -> None:
-            for f in add:
-                try:
-                    os.unlink(os.path.join(self.path, f["path"]))
-                except OSError:
-                    pass
-
-        def _commit_once() -> None:
-            if t.version() is None:
-                t._write_commit(
-                    0,
-                    {"op": "create", "add": add, "remove": [],
-                     "schema": schema, "config": {"cdf": False},
-                     "txn": {"app": self.app, "batch": batchId}},
-                )
-                return
-            cur = t._state()
-            if batchId <= cur["txns"].get(self.app, -1):
-                # epoch replay: this batch already committed before
-                # the checkpoint advanced — exactly-once means the
-                # replay's staged files are dropped, not re-added
-                _drop_staged()
-                return
-            t._write_commit(
-                cur["version"] + 1,
-                {"op": "stream_append", "add": add, "remove": [],
-                 "txn": {"app": self.app, "batch": batchId}},
-            )
-
-        with_occ_retry(_commit_once)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         LakeBatchWriter.abort(self, messages)

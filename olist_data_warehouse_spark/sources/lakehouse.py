@@ -59,7 +59,7 @@ import shutil
 import struct
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -67,6 +67,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 CHECKPOINT_EVERY = 10
+
+# commit attempts before a ConcurrentCommitError reaches the caller:
+# a blind writer's own retries (LakeTable._commit) and the default of
+# with_occ_retry's whole-operation retries
+OCC_ATTEMPTS = 5
 
 # commit ops that only add rows: both change feeds replay their adds as
 # inserts, and the strict streaming source admits them
@@ -101,18 +106,22 @@ class LakeTable:
     decodes in bulk. Tables written before the switch (JSON
     checkpoints) stay readable.
 
-    Concurrency contract: every commit races the O_EXCL gate
-    (:meth:`_write_commit`). The streaming sink auto-retries its
-    commit — stream_append is append-only with no read set, so a
-    fresh-state retry is always serializable. The read-dependent
-    mutators (append's schema read, overwrite/delete_where/merge_into/
-    compact's file-set reads) deliberately surface
+    Concurrency contract: every write lands through ONE commit path,
+    :meth:`_commit`, which races the O_EXCL gate
+    (:meth:`_write_commit`), dedups txn replays, records ``remove_dv``
+    and unlinks what a failed attempt staged. Blind writers — the
+    streaming sinks and the DataSource append and overwrite, whose
+    commit does not depend on what they read — retry the commit alone
+    under fresh state, so a concurrent writer costs them a log retry,
+    never a restage. The read-dependent writers (append's schema
+    read, overwrite/delete_where/merge_into/compact's file-set reads,
+    every metadata commit) deliberately surface
     :class:`ConcurrentCommitError` to the CALLER, who retries the
     WHOLE operation (``with_occ_retry(lambda: t.delete_where(...))``)
     so the mutation recomputes against current state — blindly
     re-committing a stale rewrite would silently drop a concurrent
     writer's changes (the write-skew Delta's conflict checker exists
-    to prevent)."""
+    to prevent). A losing attempt leaves no data file behind."""
 
     def __init__(self, path: str):
         self.path = path
@@ -695,6 +704,84 @@ class LakeTable:
             out[i] = fut.result()
         return out
 
+    def _commit(
+        self,
+        state: dict | None,
+        commit: dict | Callable[[dict | None], dict],
+        staged: Iterable[str] = (),
+        *,
+        txn: dict | None = None,
+        blind: bool = False,
+    ) -> int | None:
+        """The ONE commit path: every lake write lands through here, and
+        nothing else calls :meth:`_write_commit`.
+
+        ``state`` is the state the writer read (``None`` when it creates
+        the table); the commit lands as the version after it. ``commit``
+        holds ``op``, ``add``, ``remove`` and the op's own fields — or,
+        for a blind writer, a function of the state that builds them.
+        ``staged`` lists the data files the writer staged for it.
+
+        * Txn dedup (Delta's ``txnAppId``/``txnVersion``): a ``txn =
+          {app, batch}`` at or below the app's last committed batch is a
+          replay — nothing lands and the call returns None. Otherwise
+          the commit records the txn.
+        * Every removed file that carries a deletion vector is recorded
+          in ``remove_dv``, so the change feeds replay its removal as a
+          delete of its LIVE rows only — a raw-file replay would delete
+          again the rows the vector had already deleted. Commits that
+          remove no such file carry no ``remove_dv``.
+        * The O_EXCL gate. A read-dependent writer that loses raises
+          :class:`ConcurrentCommitError`; its caller retries the whole
+          operation (:func:`with_occ_retry`). A ``blind`` writer, whose
+          commit does not depend on what it read (stream and DataSource
+          appends, the DataSource overwrite), retries the commit alone
+          against fresh state, up to ``OCC_ATTEMPTS`` times; its files
+          never restage.
+        * Reclaim: a lost gate or a replay unlinks ``staged``. Once the
+          commit file exists nothing is unlinked.
+
+        Returns the committed version, or None for a replay."""
+        attempts = OCC_ATTEMPTS if blind else 1
+        for attempt in range(attempts):
+            if attempt:
+                state = self._state() if self.version() is not None else None
+            if (
+                txn is not None
+                and state is not None
+                and txn["batch"] <= state["txns"].get(txn["app"], -1)
+            ):
+                self._reclaim(staged)
+                return None
+            body = dict(commit(state) if callable(commit) else commit)
+            rd = {
+                p: state["files"][p]["dv"]
+                for p in body["remove"]
+                if state["files"].get(p, {}).get("dv")
+            }
+            if rd:
+                body["remove_dv"] = rd
+            if txn is not None:
+                body["txn"] = txn
+            v = 0 if state is None else state["version"] + 1
+            try:
+                self._write_commit(v, body)
+                return v
+            except ConcurrentCommitError:
+                if attempt + 1 == attempts:
+                    self._reclaim(staged)
+                    raise
+
+    def _reclaim(self, paths: Iterable[str]) -> None:
+        """Unlink table-relative data files no commit references (a
+        failed or losing attempt's stagings, a scratch source). Files
+        already gone are fine."""
+        for p in paths:
+            try:
+                os.unlink(os.path.join(self.path, p))
+            except FileNotFoundError:
+                pass
+
     def _partition_by(self, state: dict) -> list[str] | None:
         return state.get("config", {}).get("partition_by")
 
@@ -929,9 +1016,8 @@ class LakeTable:
             for d in out.values()
             for p in d["paths"]
         }
-        for m in moved:
-            if m not in referenced:  # empty shuffle partition's part
-                os.unlink(os.path.join(self.data_dir, m))
+        # an empty shuffle partition's part holds no index
+        self._reclaim([f"data/{m}" for m in moved if m not in referenced])
         return out
 
     @classmethod
@@ -1004,7 +1090,6 @@ class LakeTable:
                         f"partition column {c!r} has non-partitionable "
                         f"type {st} (need one of {_STATS_TYPES})"
                     )
-        add = t._stage_files(df, partition_by=partition_by)
         gen_proofs = (
             t._native_proofs(
                 df.sparkSession, df.schema.jsonValue(), {}, generated
@@ -1012,16 +1097,19 @@ class LakeTable:
             if generated
             else None
         )
-        t._write_commit(
-            0, {"op": "create", "add": add, "remove": [],
-                "schema": df.schema.jsonValue(),
-                "config": {"cdf": bool(cdf),
-                           **({"partition_by": list(partition_by)}
-                              if partition_by else {}),
-                           **({"generated": dict(generated)}
-                              if generated else {}),
-                           **({"native_proofs": gen_proofs}
-                              if gen_proofs else {})}}
+        add = t._stage_files(df, partition_by=partition_by)
+        t._commit(
+            None,
+            {"op": "create", "add": add, "remove": [],
+             "schema": df.schema.jsonValue(),
+             "config": {"cdf": bool(cdf),
+                        **({"partition_by": list(partition_by)}
+                           if partition_by else {}),
+                        **({"generated": dict(generated)}
+                           if generated else {}),
+                        **({"native_proofs": gen_proofs}
+                           if gen_proofs else {})}},
+            [m["path"] for m in add],
         )
         return t
 
@@ -1103,9 +1191,9 @@ class LakeTable:
             partition_by=self._partition_by(state),
             mapping=stage_mapping,
         )
-        v = state["version"] + 1
-        self._write_commit(v, commit)
-        return v
+        return self._commit(
+            state, commit, [m["path"] for m in commit["add"]]
+        )
 
     def overwrite(self, df: DataFrame) -> int:
         """Replace table contents; old files stay for time travel."""
@@ -1131,15 +1219,13 @@ class LakeTable:
         # drop the constraint first
         self._enforce_constraints(state, df, "overwrite")
         add = self._stage_files(df, partition_by=pby)
-        v = state["version"] + 1
-        self._write_commit(
-            v,
+        return self._commit(
+            state,
             {"op": "overwrite", "add": add,
              "remove": sorted(state["files"]),
-             **_remove_dv_of(state, state["files"]),
              "schema": df.schema.jsonValue()},
+            [m["path"] for m in add],
         )
-        return v
 
     def rollback(
         self, version: int, _provenance: dict | None = None
@@ -1161,18 +1247,15 @@ class LakeTable:
             if p in cur["files"] and old["files"][p] != cur["files"][p]
         }
         removed = (set(cur["files"]) - set(old["files"])) | changed
-        v = cur["version"] + 1
-        self._write_commit(
-            v,
+        return self._commit(
+            cur,
             {"op": "rollback", "rollback_of": version,
              "add": [old["files"][p] for p in sorted(old["files"])
                      if p not in cur["files"] or p in changed],
              "remove": sorted(removed),
-             **_remove_dv_of(cur, removed),
              "schema": old["schema"],
              **(_provenance or {})},
         )
-        return v
 
     def restore(self, version: int | None = None, timestamp=None) -> int:
         """Delta's ``RESTORE TABLE ... TO VERSION / TIMESTAMP AS OF``
@@ -1207,11 +1290,9 @@ class LakeTable:
     def _alter(self, state: dict, **fields) -> int:
         """Commit a metadata-only ``alter`` (no file added or removed)
         as the version after ``state``; returns it."""
-        v = state["version"] + 1
-        self._write_commit(
-            v, {"op": "alter", "add": [], "remove": [], **fields}
+        return self._commit(
+            state, {"op": "alter", "add": [], "remove": [], **fields}
         )
-        return v
 
     def constraints(self) -> dict[str, str]:
         """The table's CHECK constraints, ``{name: sql_expr}``."""
@@ -1971,14 +2052,13 @@ class LakeTable:
         )
         cfg = dict(state.get("config", {}))
         cfg["copy_loaded"] = sorted(loaded | set(new))
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "copy_into", "add": add, "remove": [],
-             "config": cfg, "copy": {"files": len(new)}},
-        )
         return {
-            "version": v,
+            "version": self._commit(
+                state,
+                {"op": "copy_into", "add": add, "remove": [],
+                 "config": cfg, "copy": {"files": len(new)}},
+                [m["path"] for m in add],
+            ),
             "files_loaded": len(new),
             "files_skipped": len(paths) - len(new),
             "rows_loaded": sum(m.get("rows", 0) for m in add),
@@ -2047,11 +2127,10 @@ class LakeTable:
         5. ONE commit: ``op`` plus ``extra``, ``count_as`` naming the
            changed-row count, ``mode``/``dv`` in dv mode, and
            ``cdf_delete`` (+ ``cdf_insert`` unless ``op='delete'``) on
-           ``cdf=True`` tables. A failure before the commit lands — a
-           staging job raising or the O_EXCL gate lost to a concurrent
-           writer — unlinks every data file this attempt staged, so a
-           retry loop leaves no orphans; once the commit file exists
-           nothing is reclaimed.
+           ``cdf=True`` tables, through :meth:`_commit`. A staging job
+           raising or the O_EXCL gate lost to a concurrent writer
+           unlinks every data file this attempt staged, so a retry
+           loop leaves no orphans.
 
         Returns every count a front end may report; each picks its
         own keys (:func:`_pick`)."""
@@ -2206,14 +2285,8 @@ class LakeTable:
         except BaseException:
             self._reclaim(staged)
             raise
-        v = state["version"] + 1
-        try:
-            self._write_commit(v, commit)
-        except ConcurrentCommitError:
-            self._reclaim(staged)
-            raise
         return {
-            "version": v,
+            "version": self._commit(state, commit, staged),
             **({count_as: n_changed} if count_as is not None else {}),
             "rows_matched": n_matched,
             "rows_matched_changed": n_both,
@@ -2223,16 +2296,6 @@ class LakeTable:
             "files_rewritten": len(remove),
             "files_kept": len(all_files) - len(remove),
         }
-
-    def _reclaim(self, paths: list[str]) -> None:
-        """Unlink table-relative data files no commit references (a
-        failed or losing attempt's stagings, a scratch source). Files
-        already gone are fine."""
-        for p in paths:
-            try:
-                os.unlink(os.path.join(self.path, p))
-            except FileNotFoundError:
-                pass
 
     def _fold_dv_metas(
         self, state: dict, cand: list[str], new_dv: dict[str, dict]
@@ -2824,16 +2887,17 @@ class LakeTable:
         Structured Streaming: each micro-batch commit carries a
         ``txn = {app, batch}`` action, and a replayed batch (failure
         between sink write and checkpoint advance) is detected by
-        ``batch_id <= last committed`` and skipped — the public
-        Delta-sink idempotence protocol. Usage::
+        ``batch_id <= last committed`` and lands nothing, its staged
+        files unlinked — the public Delta-sink idempotence protocol.
+        The commit is blind (:meth:`_commit`): a concurrent writer
+        landing mid-batch costs a commit retry, never a restage, and
+        never fails the streaming query. Usage::
 
             q = (df.writeStream.foreachBatch(table.streaming_sink("job1"))
                  .option("checkpointLocation", ...).start())
         """
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_id <= self.last_txn_batch(app):
-                return  # replay of an already-committed batch
             state = self._state()
             cols = [f["name"] for f in state["schema"]["fields"]]
             batch_df = self._apply_generated(
@@ -2847,23 +2911,13 @@ class LakeTable:
                 batch_df.select(*cols),
                 partition_by=self._partition_by(state),
             )
-
-            def _commit() -> None:
-                # files are staged ONCE above; only the commit decision
-                # retries under fresh state, so a CONCURRENT writer
-                # (another app's sink, a batch job, a compaction)
-                # landing mid-batch costs one cheap log retry, never a
-                # restage — and never fails the streaming query
-                cur = self._state()
-                if batch_id <= cur["txns"].get(app, -1):
-                    return  # a replica of this app won the replay race
-                self._write_commit(
-                    cur["version"] + 1,
-                    {"op": "stream_append", "add": add, "remove": [],
-                     "txn": {"app": app, "batch": batch_id}},
-                )
-
-            with_occ_retry(_commit)
+            self._commit(
+                state,
+                {"op": "stream_append", "add": add, "remove": []},
+                [m["path"] for m in add],
+                txn={"app": app, "batch": batch_id},
+                blind=True,
+            )
 
         return write_batch
 
@@ -2957,35 +3011,10 @@ class LakeTable:
         ins: list[tuple[int, str, tuple]] = []
         dels: list[tuple[int, str, tuple]] = []
         for v in range(version + 1, cur + 1):
-            c = self._read_commit(v)
-            op = c["op"]
-            if op in APPEND_OPS:
-                ins += [(v, f["path"], ()) for f in c.get("add", [])]
-            elif op == "compact":
-                continue  # rewrite-identity: no row-level change
-            elif op == "alter":
-                continue  # metadata-only: constraints, no row change
-            elif op in ("overwrite", "rollback", "drop_partitions"):
-                ins += [
-                    (v, f["path"], _dvk(f)) for f in c.get("add", [])
-                ]
-                rd = c.get("remove_dv") or {}
-                dels += [
-                    (v, _p(p), _dvk({"path": _p(p), "dv": rd.get(_p(p))}))
-                    for p in c.get("remove", [])
-                ]
-            elif op in ("delete", "merge", "update", "replace_where"):
-                if "cdf_delete" not in c:
-                    raise ValueError(
-                        f"commit v{v} ({op}) predates CDF or the table "
-                        "was created without cdf=True — row deltas "
-                        "unavailable; re-read the table"
-                    )
-                dels += [(v, _p(f), ()) for f in c["cdf_delete"]]
-                if op in ("merge", "update", "replace_where"):
-                    ins += [(v, _p(p), ()) for p in c.get("cdf_insert", [])]
-            else:
-                raise ValueError(f"unknown commit op {op!r} at v{v}")
+            for kind, e in _cdf_pairs(self._read_commit(v)):
+                (ins if kind == "insert" else dels).append(
+                    (v, _p(e), _dvk(e))
+                )
         state = self._state(cur)
         schema = StructType.fromJson(state["schema"])
         out_cols = [f.name for f in schema.fields] + [
@@ -3133,10 +3162,11 @@ class LakeTable:
         else:
             packed = packed.coalesce(n_out)
         add = self._stage_files(packed, partition_by=pby)
-        v = state["version"] + 1
-        self._write_commit(
-            v, {"op": "compact", "add": add, "remove": files,
-                **({"cluster_by": cluster_by} if cluster_by else {})}
+        v = self._commit(
+            state,
+            {"op": "compact", "add": add, "remove": files,
+             **({"cluster_by": cluster_by} if cluster_by else {})},
+            [m["path"] for m in add],
         )
         return {"version": v, "files_compacted": len(files),
                 "files_written": len(add)}
@@ -3206,8 +3236,8 @@ class LakeTable:
                 }
             add.append(m)
         try:
-            t._write_commit(
-                0,
+            t._commit(
+                None,
                 {"op": "create", "add": add, "remove": [],
                  "schema": state["schema"],
                  "config": dict(state.get("config", {})),
@@ -3301,15 +3331,12 @@ class LakeTable:
                 rows += state["files"][p].get("rows", 0) - (
                     state["files"][p].get("dv") or {}
                 ).get("deleted", 0)
-        v = state["version"] + 1
-        self._write_commit(
-            v,
-            {"op": "drop_partitions", "add": [], "remove": dropped,
-             **_remove_dv_of(state, dropped),
-             "partition_spec": norm, "rows_deleted": rows},
-        )
         return {
-            "version": v,
+            "version": self._commit(
+                state,
+                {"op": "drop_partitions", "add": [], "remove": dropped,
+                 "partition_spec": norm, "rows_deleted": rows},
+            ),
             "files_dropped": len(dropped),
             "rows_deleted": rows,
         }
@@ -3562,19 +3589,39 @@ def _zorder_column(
     return z
 
 
-def _remove_dv_of(state: dict, paths) -> dict:
-    """The ``remove_dv`` commit fragment: for every removed path that
-    carried a deletion vector, record it so CDF consumers replay the
-    removal as a delete of the file's LIVE rows only — a raw-file
-    replay would re-delete rows the dv had already deleted and corrupt
-    the fold. Empty when no removed file has a dv (the common case),
-    keeping those commits byte-identical to the pre-dv shape."""
-    rd = {
-        p: state["files"][p]["dv"]
-        for p in paths
-        if (state["files"].get(p) or {}).get("dv")
-    }
-    return {"remove_dv": rd} if rd else {}
+def _cdf_pairs(c: dict) -> list[tuple[str, object]]:
+    """A commit's row deltas as ``(kind, entry)`` pairs, kind
+    'insert' or 'delete' — the ONE op → delta mapping under both change
+    feeds (:meth:`LakeTable.read_changes_since` and the cdf-mode
+    stream). An entry is a file dict or a bare path; a removed file
+    that carried a deletion vector comes back with its ``remove_dv``
+    record as ``dv``, so it replays its LIVE rows only. Raises when a
+    rewriting commit has no persisted pre-images (the table was
+    created without ``cdf=True``)."""
+    op = c["op"]
+    if op in APPEND_OPS:
+        return [("insert", f) for f in c.get("add", [])]
+    if op in ("compact", "alter"):
+        return []  # rewrite-identity / metadata-only: no row change
+    if op in ("overwrite", "rollback", "drop_partitions"):
+        # no pre-images needed: the remove list IS the delete side
+        rd = c.get("remove_dv") or {}
+        return [("insert", f) for f in c.get("add", [])] + [
+            ("delete", {"path": p, "dv": rd[p]} if p in rd else p)
+            for p in c.get("remove", [])
+        ]
+    if op in ("delete", "merge", "update", "replace_where"):
+        if "cdf_delete" not in c:
+            raise ValueError(
+                f"{op} commit predates CDF or the table was created "
+                "without cdf=True — row deltas unavailable; re-read "
+                "the table"
+            )
+        pairs = [("delete", f) for f in c["cdf_delete"]]
+        if op != "delete":
+            pairs += [("insert", e) for e in c.get("cdf_insert", [])]
+        return pairs
+    raise ValueError(f"unknown commit op {op!r}")
 
 
 def _pick(r: dict, *keys: str) -> dict:
@@ -3729,16 +3776,15 @@ def _stats_might_match(meta: dict, column: str, op: str, value) -> bool:
     return might
 
 
-def with_occ_retry(op, attempts: int = 5):
+def with_occ_retry(op, attempts: int = OCC_ATTEMPTS):
     """Run ``op()`` (a LakeTable mutation closure) retrying on
     :class:`ConcurrentCommitError` — the standard optimistic-
     concurrency loop. Safe because every mutator re-resolves table
     state at entry, so a retry serializes AFTER the winning commit
     (appends are blind-safe; delete/merge recompute their file sets
-    against the new state). A losing row mutation (delete, update,
-    replace, merge, CDC apply) unlinks the data files it staged before
-    the conflict propagates; a losing append, overwrite or compact
-    leaves its files unreferenced for vacuum. Raises the last conflict if
+    against the new state). Every losing write unlinks the data files
+    it staged before the conflict propagates (:meth:`LakeTable._commit`),
+    so the loop leaves no orphans. Raises the last conflict if
     ``attempts`` is exhausted (a genuinely hot table needs a queue,
     not more retries)."""
     last: ConcurrentCommitError | None = None

@@ -110,8 +110,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-APPEND_OPS = ("create", "append", "stream_append", "copy_into")
-
 # A probe record is load-bearing only while a checkpointed offset still
 # aliases it (until the next batch's plain offset replaces it); a week
 # bounds any crash-recovery gap by orders of magnitude while keeping
@@ -253,46 +251,6 @@ def _with_physical(schema_json: str, mapping: dict[str, str]) -> str:
             md["lake_physical"] = p
             f["metadata"] = md
     return json.dumps(d)
-
-
-def _cdf_pairs(c: dict) -> list[tuple[str, object]]:
-    """A commit's row-delta contributions as (kind, file-entry) pairs —
-    the streaming twin of LakeTable.read_changes_since's dispatch.
-    Raises when a rewriting commit has no persisted pre-images (table
-    created without cdf=True)."""
-    op = c["op"]
-    if op in APPEND_OPS:
-        return [("insert", f) for f in c.get("add", [])]
-    if op == "compact":
-        return []  # rewrite-identity: no row-level change
-    if op == "alter":
-        return []  # metadata-only (constraints): no row-level change
-    if op in ("overwrite", "rollback", "drop_partitions"):
-        # a removed file that carried a deletion vector replays its
-        # LIVE rows only: merge the commit's remove_dv record into the
-        # entry so the slice builder threads the mask to the reader
-        rd = c.get("remove_dv") or {}
-        return [("insert", f) for f in c.get("add", [])] + [
-            (
-                "delete",
-                {"path": p, "dv": rd[p]}
-                if (isinstance(p, str) and p in rd)
-                else p,
-            )
-            for p in c.get("remove", [])
-        ]
-    if op in ("delete", "merge", "update", "replace_where"):
-        if "cdf_delete" not in c:
-            raise ValueError(
-                f"{op} commit predates CDF or the table was created "
-                "without cdf=True — row deltas unavailable for the "
-                "cdf-mode stream; re-seed from a full read"
-            )
-        pairs = [("delete", f) for f in c["cdf_delete"]]
-        if op in ("merge", "update", "replace_where"):
-            pairs += [("insert", e) for e in c.get("cdf_insert", [])]
-        return pairs
-    raise ValueError(f"unknown commit op {op!r}")
 
 
 class LakeStreamReader(DataSourceStreamReader):
@@ -553,6 +511,11 @@ class LakeStreamReader(DataSourceStreamReader):
                 "version": self._start,
                 "probe": f"{int(time.time() * 1000)}-{os.getpid()}",
             }
+        from olist_data_warehouse_spark.sources.lakehouse import (
+            APPEND_OPS,
+            _cdf_pairs,
+        )
+
         end, files, nbytes = self._anchor, 0, 0
         for v in range(self._anchor + 1, newest + 1):
             c = self._commit(v)
@@ -594,6 +557,11 @@ class LakeStreamReader(DataSourceStreamReader):
         if hi <= lo:
             return []
         import json
+
+        from olist_data_warehouse_spark.sources.lakehouse import (
+            APPEND_OPS,
+            _cdf_pairs,
+        )
 
         schema_json = _with_physical(
             self.schema_json

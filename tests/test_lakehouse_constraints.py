@@ -163,7 +163,7 @@ def test_add_constraint_validation(spark, tmp_path):
 
 
 def test_alter_commits_invisible_to_cdf(spark, tmp_path):
-    from olist_data_warehouse_spark.sources.lakestream import _cdf_pairs
+    from olist_data_warehouse_spark.sources.lakehouse import _cdf_pairs
 
     t = _mk(spark, str(tmp_path / "t"), n=10, cdf=True)
     v0 = t.version()

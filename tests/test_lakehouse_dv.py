@@ -186,12 +186,37 @@ def test_clone_shares_dv_and_diverges(spark, tmp_path):
     assert src.read(spark).count() == 50  # source untouched
 
 
-def test_cdf_replays_dv_deletes_and_remove_dv(spark, tmp_path):
+def test_clone_change_feed_replays_live_rows_only(spark, tmp_path):
+    """A shallow clone's create commit adds the source's files with
+    their deletion vectors: its change feed inserts the LIVE rows only,
+    as the cdf-mode stream already did."""
+    src = LakeTable.create(
+        spark.range(10).withColumn("v", F.col("id") % 2),
+        str(tmp_path / "src"),
+        cdf=True,
+    )
+    src.delete_where(spark, F.col("id") < 3, mode="dv")
+    clone = src.clone_shallow(str(tmp_path / "clone"))
+    ch, _ = clone.read_changes_since(spark, -1)
+    assert sorted(r["id"] for r in ch.collect()) == list(range(3, 10))
+    assert {r["_change_type"] for r in ch.collect()} == {"insert"}
+
+
+@pytest.mark.parametrize("via", ["table", "datasource"])
+def test_cdf_replays_dv_deletes_and_remove_dv(spark, tmp_path, via):
+    """An overwrite after a dv delete replays only the LIVE rows it
+    removes, whichever front end writes it: ``LakeTable.overwrite`` or
+    ``df.write.format('lake').mode('overwrite')``."""
     t = _mk(spark, str(tmp_path / "t"), n=100, files=2, cdf=True, mod=2)
     t.delete_where(spark, F.col("v") == 1, mode="dv")  # v1: -50
-    t.overwrite(
-        spark.range(3).withColumn("v", F.lit(0).cast("long"))
-    )  # v2: -50 live (NOT -100 raw), +3
+    new = spark.range(3).withColumn("v", F.lit(0).cast("long"))
+    if via == "table":
+        t.overwrite(new)  # v2: -50 live (NOT -100 raw), +3
+    else:
+        lakebatch.register(spark)
+        new.write.format("lake").option("path", t.path).mode(
+            "overwrite"
+        ).save()
     ch, _ = t.read_changes_since(spark, 0)
     per = {
         (r["_change_type"], r["_commit_version"]): r["count"]

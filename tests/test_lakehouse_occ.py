@@ -93,10 +93,12 @@ def test_cross_process_occ_exactly_one_winner_per_version(tmp_path):
     assert state["files"] == {}
 
 
-def test_loser_staged_files_are_vacuumable(spark, tmp_path):
+def test_losing_append_leaves_no_orphans(spark, tmp_path):
     """A losing append attempt has already moved its staged files into
-    data/ — they are unreferenced by any commit and must be reclaimed
-    by vacuum (after the retention window; 0 here, offline)."""
+    data/; the lost O_EXCL gate unlinks them before the conflict reaches
+    with_occ_retry, so the retry loop leaves no orphans. (Vacuum of
+    unreferenced files is covered by test_lakehouse.py's
+    test_vacuum_drops_unreferenced_files.)"""
     from pyspark.sql import functions as F
 
     from olist_data_warehouse_spark.sources.lakehouse import with_occ_retry
@@ -121,18 +123,10 @@ def test_loser_staged_files_are_vacuumable(spark, tmp_path):
     with_occ_retry(lambda: t.append(df))
     t._write_commit = real_write
 
-    referenced = set()
-    for v in t._commit_versions():
-        referenced |= {m["path"] for m in t._read_commit(v).get("add", [])}
-    on_disk = {f"data/{n}" for n in os.listdir(t.data_dir)}
-    orphans = on_disk - referenced
-    assert orphans, "expected the losing attempt's staged files"
-    removed = set(t.vacuum(keep_versions=len(t._commit_versions()),
-                           retention_seconds=0, force=True))
-    assert orphans <= removed
-    # every committed version still fully readable after the vacuum
-    for v in t._commit_versions():
-        t.read(spark, version=v).count()
+    assert raced["done"]
+    assert t.version() == 2  # the competitor's v1, the retried append
+    assert _on_disk(t) == _referenced(t)
+    assert t.read(spark).count() == 40
 
 
 def test_racing_mutators_serialize_via_whole_op_retry(spark, tmp_path):
@@ -255,7 +249,8 @@ def test_failed_sibling_staging_reclaims_attempt_files(spark, tmp_path):
 def test_losing_mutation_reclaims_its_staged_files(spark, tmp_path):
     """A row mutation whose O_EXCL commit loses unlinks the files it
     staged before the conflict reaches with_occ_retry, so the retry
-    loop leaves no orphans for vacuum (contrast the append above)."""
+    loop leaves no orphans for vacuum — in both rewrite and dv mode,
+    like the append above."""
     from pyspark.sql import functions as F
 
     from olist_data_warehouse_spark.sources.lakehouse import with_occ_retry
@@ -286,3 +281,31 @@ def test_losing_mutation_reclaims_its_staged_files(spark, tmp_path):
     assert _on_disk(t) == _referenced(t)
     # multiples of 7 (6 rows) or 5 (8 rows), 0 and 35 counted once
     assert t.read(spark).count() == 40 - 12
+
+
+def test_sink_replay_race_reclaims_staged_files(spark, tmp_path):
+    """A replica of the same app commits this (app, batch) between the
+    foreachBatch sink's staging and its commit. The sink's commit loses
+    the O_EXCL gate, re-checks the txn under fresh state, lands nothing
+    and unlinks the files it staged."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(20).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    t = LakeTable.create(df, str(tmp_path / "t"))
+    replica = LakeTable(t.path)
+    real_stage = t._stage_files
+
+    def racing_stage(*a, **kw):
+        metas = real_stage(*a, **kw)
+        replica.streaming_sink("app")(df, 0)  # the replica wins batch 0
+        return metas
+
+    t._stage_files = racing_stage
+    t.streaming_sink("app")(df, 0)
+    t._stage_files = real_stage
+    assert t.version() == 1  # the replica's commit only
+    assert t.last_txn_batch("app") == 0
+    assert _on_disk(t) == _referenced(t)
+    assert t.read(spark).count() == 40

@@ -201,7 +201,7 @@ def test_update_cdf_replays_delete_plus_insert(spark, tmp_path, mode):
 
 
 def test_update_streaming_cdf_carries_update(spark, tmp_path):
-    from olist_data_warehouse_spark.sources.lakestream import _cdf_pairs
+    from olist_data_warehouse_spark.sources.lakehouse import _cdf_pairs
 
     t = _mk(spark, str(tmp_path / "t"), n=100, files=1, cdf=True)
     t.update_where(spark, F.col("v") == 0, {"v": F.lit(9).cast("long")})
