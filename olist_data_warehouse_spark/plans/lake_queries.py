@@ -15,7 +15,7 @@ surface as a hash mismatch.
 
 Scratch discipline: tables are built under a per-process tmp root,
 rebuilt from scratch on every call (the driver may re-run entries),
-and torn down lazily by the OS tmp reaper — the returned DataFrame
+and removed when the interpreter exits — the returned DataFrame
 lazily reads the staged parquet, so the files must outlive the call.
 
 Reference parity: the reference's staging reloads are DELETE+INSERT
@@ -25,6 +25,7 @@ semantics run as logged, versioned, file-granular commits.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -37,10 +38,29 @@ from olist_data_warehouse_spark.plans.queries import _t, register
 from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
 # Per-process scratch root: concurrent runners (driver, pytest, bench)
-# never collide; a process rebuilds its own table dirs per call.
+# never collide; a process rebuilds its own table dirs per call, and
+# the root goes at interpreter exit.
 _SCRATCH_ROOT = os.path.join(
     tempfile.gettempdir(), f"odw-lake-queries-{os.getpid()}"
 )
+
+
+def _remove_scratch_root(pid: int = os.getpid()) -> None:
+    # a forked child inherits the handler; only the owner removes
+    if os.getpid() == pid:
+        shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
+
+
+atexit.register(_remove_scratch_root)
+
+
+def _require(cond, msg=None) -> None:
+    """An entry's in-entry contract: raises AssertionError(``msg``)
+    when ``cond`` is false. A function, not an ``assert`` statement,
+    so the contract (and any work inside ``cond``) still runs under
+    ``python -O``."""
+    if not cond:
+        raise AssertionError(msg)
 
 
 def _fresh(name: str, sf_dir: str) -> str:
@@ -475,7 +495,7 @@ def lake_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # awaitTermination(timeout) returns False on timeout with the query
     # still running — reading dst then would return a silently PARTIAL
     # result the driver could not tell from a real lakestream/sink bug.
-    assert q.awaitTermination(300), "stream did not drain within 300s"
+    _require(q.awaitTermination(300), "stream did not drain within 300s")
     return dst.read(spark)
 
 
@@ -499,7 +519,7 @@ def lake_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t.overwrite(orders.where(F.col("o_orderstatus") == "F"))
     mid = (t._commit_ts(0) + t._commit_ts(1)) / 2
-    assert t.resolve_timestamp(mid) == 0, "timestamp resolved wrong commit"
+    _require(t.resolve_timestamp(mid) == 0, "timestamp resolved wrong commit")
     return t.read(spark, timestamp=mid)
 
 
@@ -567,8 +587,9 @@ def lake_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_live = sum(
         1 for m in src._state()["files"].values() if m.get("rows", 0) > 0
     )
-    assert res["batches"] >= (n_live + 1) // 2, (
-        f"drain not budget-paced: {res} over {n_live} non-empty files"
+    _require(
+        res["batches"] >= (n_live + 1) // 2,
+        f"drain not budget-paced: {res} over {n_live} non-empty files",
     )
     return dst.read(spark)
 
@@ -659,8 +680,11 @@ def lake_partition_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.drop_partitions({"o_orderstatus": "F"})
     after = t._state()["files"]
     # self-audit: drop is metadata-only — no file rewritten or added
-    assert all(p in before and before[p] == m["bytes"]
-               for p, m in after.items()), "drop rewrote files"
+    _require(
+        all(p in before and before[p] == m["bytes"]
+            for p, m in after.items()),
+        "drop rewrote files",
+    )
     return t.read(spark)
 
 
@@ -737,7 +761,7 @@ def lake_stream_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(300), "cdf stream did not drain within 300s"
+    _require(q.awaitTermination(300), "cdf stream did not drain within 300s")
 
     d = dst.read(spark)
     sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
@@ -798,7 +822,7 @@ def lake_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # divergence audit: the source is byte-identical and fully readable
-    assert src.read(spark).count() == n_src, "clone mutated the source"
+    _require(src.read(spark).count() == n_src, "clone mutated the source")
     return clone.read(spark)
 
 
@@ -837,9 +861,12 @@ def lake_clone_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_src = orders.count()
     clone = src.clone_shallow(_fresh("clone_part_dst", sf_dir))
     # zero-copy audit: the clone owns no data files at creation
-    assert not os.path.isdir(clone.data_dir) or not any(
-        names for _r, _d, names in os.walk(clone.data_dir)
-    ), "clone copied data files"
+    _require(
+        not os.path.isdir(clone.data_dir) or not any(
+            names for _r, _d, names in os.walk(clone.data_dir)
+        ),
+        "clone copied data files",
+    )
     clone.drop_partitions({"o_orderstatus": "F"})
     clone.append(
         orders.where(
@@ -847,7 +874,7 @@ def lake_clone_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # divergence audit: the source is untouched and fully readable
-    assert src.read(spark).count() == n_src, "clone mutated the source"
+    _require(src.read(spark).count() == n_src, "clone mutated the source")
     return clone.read(spark)
 
 
@@ -896,8 +923,9 @@ def lake_pushdown_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a 0/1-file table (degenerate corpora in the input batteries) has
     # nothing to prune; with real range-clustered files the pushed
     # range must shrink planning
-    assert n_all < 2 or n_pruned < n_all, (
-        f"pushdown pruned nothing ({n_pruned}/{n_all})"
+    _require(
+        n_all < 2 or n_pruned < n_all,
+        f"pushdown pruned nothing ({n_pruned}/{n_all})",
     )
     lakebatch.register(spark)
     return (
@@ -1050,11 +1078,11 @@ def lake_write_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append"
     ).save()
     t = LakeTable(path)
-    assert t.version() == 1, f"expected 2 commits, at v{t.version()}"
+    _require(t.version() == 1, f"expected 2 commits, at v{t.version()}")
     # written manifest must be prunable: stats rode the executor write
     for m in t._state()["files"].values():
         if m["rows"] > 0:
-            assert "o_orderkey" in m["stats"], "file missing write stats"
+            _require("o_orderkey" in m["stats"], "file missing write stats")
     return spark.read.format("lake").option("path", path).load()
 
 
@@ -1091,14 +1119,14 @@ def lake_write_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     even.repartition(3).write.format("lake").option("path", path).mode(
         "append"
     ).save()
-    assert t.version() == 1, f"expected 2 commits, at v{t.version()}"
+    _require(t.version() == 1, f"expected 2 commits, at v{t.version()}")
     state = t._state()
     new_files = [
         m for p, m in state["files"].items() if p not in v0_files
     ]
     for m in new_files:
-        assert m.get("partition"), "native file missing partition tuple"
-        assert "o_orderkey" in m["stats"], "file missing write stats"
+        _require(m.get("partition"), "native file missing partition tuple")
+        _require("o_orderkey" in m["stats"], "file missing write stats")
     # pruning on the partition column must skip the other statuses'
     # files — including the natively-written ones. Meaningful only
     # when the appended half spans >1 partition value (a 0/1-row
@@ -1110,12 +1138,14 @@ def lake_write_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     if len(new_vals) > 1 and "F" in new_vals:
         cand, clean = t.prune_files("o_orderstatus", "=", "F")
-        assert clean, (
-            "no provably-clean files: partition stats not recorded"
+        _require(
+            clean,
+            "no provably-clean files: partition stats not recorded",
         )
-        assert any(
-            p not in v0_files for p in clean
-        ), "no natively-written file was prunable"
+        _require(
+            any(p not in v0_files for p in clean),
+            "no natively-written file was prunable",
+        )
     return spark.read.format("lake").option("path", path).load()
 
 
@@ -1161,8 +1191,9 @@ def lake_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="dv",
     )
     r2 = t.delete_where(spark, F.col("o_orderkey") % 7 == 0, mode="dv")
-    assert r1["files_rewritten"] == 0 and r2["files_rewritten"] == 0, (
-        r1, r2,
+    _require(
+        r1["files_rewritten"] == 0 and r2["files_rewritten"] == 0,
+        (r1, r2),
     )
     sig_after = {
         p: (
@@ -1171,7 +1202,7 @@ def lake_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for p in sig_before
     }
-    assert sig_after == sig_before, "a dv delete touched a data file"
+    _require(sig_after == sig_before, "a dv delete touched a data file")
     # live-view accounting: the second delete must have counted ONLY
     # rows the first left alive (overlap rows — high price AND key%7
     # — were already dv-deleted and must not double-count)
@@ -1182,7 +1213,7 @@ def lake_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("o_totalprice") <= 400000.0)
         )
     ).count()
-    assert r2["rows_deleted"] == expect2, (r2, expect2)
+    _require(r2["rows_deleted"] == expect2, (r2, expect2))
     return t.read(spark)
 
 
@@ -1224,10 +1255,11 @@ def lake_dv_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_before = len(st["files"])
         t.compact(spark, target_file_bytes=256 * 1024 * 1024)
         st = t._state()
-        assert not any(m.get("dv") for m in st["files"].values()), (
-            "compact left dv references behind"
+        _require(
+            not any(m.get("dv") for m in st["files"].values()),
+            "compact left dv references behind",
         )
-        assert len(st["files"]) < n_before, "compact did not bin-pack"
+        _require(len(st["files"]) < n_before, "compact did not bin-pack")
     # else: degenerate corpus (empty / all-NULL quantity) — the
     # predicate matched nothing, there is no lifecycle to audit, and
     # the survivor set below is still oracle-exact
@@ -1319,8 +1351,9 @@ def lake_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"o_orderpriority": F.lit("REPRICED")},
         prune=("o_totalprice", ">", 400000.0),
     )
-    assert r1["files_kept"] > 0 or not t._state()["files"], (
-        "stats prune rewrote every file on a range-clustered table"
+    _require(
+        r1["files_kept"] > 0 or not t._state()["files"],
+        "stats prune rewrote every file on a range-clustered table",
     )
     r2 = t.update_where(
         spark,
@@ -1328,7 +1361,7 @@ def lake_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"o_totalprice": F.col("o_totalprice") + F.lit(1.0)},
         mode="dv",
     )
-    assert r2["files_rewritten"] == 0, r2
+    _require(r2["files_rewritten"] == 0, r2)
     return t.read(spark)
 
 
@@ -1385,7 +1418,7 @@ def lake_constraint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError("violating append was accepted")
         except ValueError:
             pass
-        assert t.version() == v0, "refused append left a commit behind"
+        _require(t.version() == v0, "refused append left a commit behind")
     t.append(odd)
     return t.read(spark)
 
@@ -1421,8 +1454,8 @@ def lake_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice", F.col("o_totalprice") + F.lit(10.0)
     )
     r = t.merge_into(spark, src, ["o_orderkey"], mode="dv")
-    assert r["files_rewritten"] == 0, r
-    assert r["rows_matched"] == r["rows_source"], r
+    _require(r["files_rewritten"] == 0, r)
+    _require(r["rows_matched"] == r["rows_source"], r)
     return t.read(spark)
 
 
@@ -1543,20 +1576,21 @@ def lake_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for p in sig_before
     }
-    assert sig_after == sig_before, "column DDL touched a data file"
+    _require(sig_after == sig_before, "column DDL touched a data file")
     r = t.delete_where(
         spark,
         F.col("price") > 400000.0,
         prune=("price", ">", 400000.0),
         mode="dv",
     )
-    assert r["files_rewritten"] == 0, r
+    _require(r["files_rewritten"] == 0, r)
     st = t._state()
     dved = sum(1 for m in st["files"].values() if m.get("dv"))
     if r["rows_deleted"]:
-        assert 0 < dved < len(st["files"]), (
+        _require(
+            0 < dved < len(st["files"]),
             "stats prune did not translate the renamed column "
-            f"({dved} of {len(st['files'])} files took vectors)"
+            f"({dved} of {len(st['files'])} files took vectors)",
         )
     return t.read(spark)
 
@@ -1625,9 +1659,7 @@ def lake_write_governed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).mode("append").save()
         except Exception:
             refused = True
-        assert refused, (
-            "CHECK-violating batch accepted by native writer"
-        )
+        _require(refused, "CHECK-violating batch accepted by native writer")
         bad_gen = probe.withColumn(
             "n_chars", (F.length("text") + F.lit(7)).cast("long")
         )
@@ -1638,11 +1670,9 @@ def lake_write_governed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).save()
         except Exception:
             refused = True
-        assert refused, (
-            "wrong generated value accepted by native writer"
-        )
-        assert t.version() == v0, "refused write left a commit behind"
-        assert set(t._state()["files"]) == files0, "stray manifest file"
+        _require(refused, "wrong generated value accepted by native writer")
+        _require(t.version() == v0, "refused write left a commit behind")
+        _require(set(t._state()["files"]) == files0, "stray manifest file")
     return t.read(spark)
 
 
@@ -1703,12 +1733,12 @@ def lake_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so the sink never creates the table — parity is the source
         return src.read(spark)
     hist = t.history()
-    assert all(
-        h["op"] in ("create", "stream_append") for h in hist
-    ), hist
-    assert t.last_txn_batch("entry_sink") >= 0
+    _require(
+        all(h["op"] in ("create", "stream_append") for h in hist), hist
+    )
+    _require(t.last_txn_batch("entry_sink") >= 0)
     vs = t._commit_versions()
-    assert vs == list(range(len(vs))), vs
+    _require(vs == list(range(len(vs))), vs)
     # replay audit: re-committing an already-committed batchId must
     # drop its staged files and land NO commit (exactly-once)
     import json as _json
@@ -1727,11 +1757,12 @@ def lake_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     msg = w.write(iter(t.read(spark).limit(1).toArrow().to_batches()))
     v0 = t.version()
     w.commit([msg], 0)
-    assert t.version() == v0, "replayed epoch landed a commit"
+    _require(t.version() == v0, "replayed epoch landed a commit")
     for f in _json.loads(msg.files_json or "[]"):
-        assert not os.path.exists(
-            os.path.join(dst, f["path"])
-        ), "replayed epoch left its staged file"
+        _require(
+            not os.path.exists(os.path.join(dst, f["path"])),
+            "replayed epoch left its staged file",
+        )
     return t.read(spark)
 
 
@@ -1820,12 +1851,13 @@ def lake_stream_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         # batch-twin decode of the same (empty) slice
         return multimodal.decode_image_meta(images).select(*out_cols)
     hist = t.history()
-    assert all(
-        rec["op"] in ("create", "stream_append") for rec in hist
-    ), hist
-    assert t.last_txn_batch("entry_decode") >= 0
+    _require(
+        all(rec["op"] in ("create", "stream_append") for rec in hist),
+        hist,
+    )
+    _require(t.last_txn_batch("entry_decode") >= 0)
     vs = t._commit_versions()
-    assert vs == list(range(len(vs))), vs
+    _require(vs == list(range(len(vs))), vs)
     return t.read(spark).select(*out_cols)
 
 
@@ -1877,7 +1909,7 @@ def lake_generated_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError("wrong generated values were accepted")
         except ValueError:
             pass
-        assert t.version() == v0, "refused append left a commit behind"
+        _require(t.version() == v0, "refused append left a commit behind")
     return t.read(spark)
 
 
@@ -1962,13 +1994,14 @@ def lake_sql_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHEN NOT MATCHED BY SOURCE AND t.o_orderstatus = 'F'
              THEN UPDATE SET o_orderpriority = '0-MERGED'
     """)
-    assert r["version"] == 1, r
+    _require(r["version"] == 1, r)
     # degenerate-safe: a sliced corpus may have zero key overlap (all
     # rows land as inserts); an empty source does nothing at all
-    assert (
+    _require(
         r["rows_matched"] + r["rows_inserted"] > 0
-        or r["rows_source"] == 0
-    ), r
+        or r["rows_source"] == 0,
+        r,
+    )
     return t.read(spark)
 
 
@@ -2006,7 +2039,7 @@ def lake_sql_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         f"DELETE FROM {name} AS o WHERE o.o_totalprice >= 300000.0",
     )
-    assert r["files_kept"] > 0, r
+    _require(r["files_kept"] > 0, r)
     return t.read(spark)
 
 
@@ -2047,7 +2080,7 @@ def lake_sql_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             o_totalprice = o_totalprice + 1.0
         WHERE o_orderstatus = 'F'
     """)
-    assert r["rows_updated"] > 0 or r["files_rewritten"] == 0, r
+    _require(r["rows_updated"] > 0 or r["files_rewritten"] == 0, r)
     return t.read(spark)
 
 
@@ -2083,21 +2116,23 @@ def lake_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("sub-floor retention must refuse")
     except ValueError:
         pass
-    assert t.read(spark, version=0).count() == n0, (
-        "a refused vacuum must reclaim nothing"
+    _require(
+        t.read(spark, version=0).count() == n0,
+        "a refused vacuum must reclaim nothing",
     )
-    assert t.vacuum(keep_versions=1) == [], (
-        "a compliant window must keep young files"
+    _require(
+        t.vacuum(keep_versions=1) == [],
+        "a compliant window must keep young files",
     )
     removed = t.vacuum(keep_versions=1, retention_seconds=0, force=True)
-    assert removed, "force + zero retention reclaims v0's files"
+    _require(removed, "force + zero retention reclaims v0's files")
     try:
         t.read(spark, version=0)
         raise AssertionError(
             "time travel past vacuum must fail loudly"
         )
     except FileNotFoundError as e:
-        assert "vacuum" in str(e)
+        _require("vacuum" in str(e))
     return t.read(spark)
 
 
@@ -2140,7 +2175,7 @@ def lake_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CREATE TABLE {name} (o_orderkey BIGINT, o_totalprice DOUBLE,"
         f" o_orderstatus STRING) USING lake LOCATION '{path}'"
     )
-    assert r["created"] is True, r
+    _require(r["created"] is True, r)
     S(
         f"INSERT INTO {name} SELECT o_orderkey, o_totalprice, "
         f"o_orderstatus FROM {src} WHERE o_orderkey % 5 <> 0"
@@ -2150,7 +2185,7 @@ def lake_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"UPDATE {name} SET band = CASE WHEN o_totalprice >= 200000.0"
         f" THEN 'hi' ELSE 'lo' END"
     )
-    assert r["rows_updated"] > 0 or r["files_rewritten"] == 0, r
+    _require(r["rows_updated"] > 0 or r["files_rewritten"] == 0, r)
     S(f"ALTER TABLE {name} RENAME COLUMN band TO price_band")
     S(
         f"ALTER TABLE {name} ADD CONSTRAINT band_domain "
@@ -2201,7 +2236,7 @@ def lake_sql_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = lakesql.sql(
         spark, f"DELETE FROM {name} WHERE o_totalprice > 400000.0"
     )
-    assert r["rows_deleted"] > 0 or r["files_rewritten"] == 0, r
+    _require(r["rows_deleted"] > 0 or r["files_rewritten"] == 0, r)
     return lakesql.sql(spark, f"""
         SELECT o_orderkey, o_totalprice, 'travel' AS via
         FROM {name} VERSION AS OF 0
@@ -2263,8 +2298,8 @@ def lake_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
                o_totalprice + 0.5, o_orderdate, 'BACKFILL'
         FROM {src} WHERE o_totalprice >= 400000.0
     """)
-    assert r["rows_deleted"] == r["rows_inserted"], r
-    assert r["files_kept"] > 0 or r["files_rewritten"] == 0, r
+    _require(r["rows_deleted"] == r["rows_inserted"], r)
+    _require(r["files_kept"] > 0 or r["files_rewritten"] == 0, r)
     return t.read(spark)
 
 
@@ -2303,12 +2338,12 @@ def lake_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     glob = _os.path.join(land, "*", "*.parquet")
     r1 = lakesql.sql(spark, f"COPY INTO {name} FROM '{glob}'")
-    assert r1["files_loaded"] >= 1 and r1["files_skipped"] == 0, r1
+    _require(r1["files_loaded"] >= 1 and r1["files_skipped"] == 0, r1)
     r2 = lakesql.sql(spark, f"COPY INTO {name} FROM '{glob}'")
-    assert r2["files_loaded"] == 0 and r2["rows_loaded"] == 0, r2
+    _require(r2["files_loaded"] == 0 and r2["rows_loaded"] == 0, r2)
     orders.where(
         (F.col("o_orderkey") % 2 != 0) | F.col("o_orderkey").isNull()
     ).coalesce(1).write.parquet(_os.path.join(land, "drop2"))
     r3 = lakesql.sql(spark, f"COPY INTO {name} FROM '{glob}'")
-    assert r3["files_loaded"] >= 1 and r3["files_skipped"] >= 1, r3
+    _require(r3["files_loaded"] >= 1 and r3["files_skipped"] >= 1, r3)
     return t.read(spark)

@@ -9,11 +9,11 @@ SQL-warehouse user types is MERGE AS TEXT, and the reference's own
 entry point is SQL text (SURVEY §3 E1, `Olist DW.sql:254-261`).
 Spark's Python DataSource API has no DML hook (a ``spark.sql("MERGE
 INTO view ...")`` fails at analysis: views are not writable), so this
-module is the honest thin dispatcher: parse the three statement
-shapes over tables registered via
-:func:`~.lakebatch.register_table`, call the existing table engines,
-return their result dicts. Everything else falls through to
-``spark.sql`` untouched, so one entry point serves reads and writes::
+module is the honest thin dispatcher: parse the statement shapes over
+tables registered via :func:`~.lakebatch.register_table`, call the
+existing table engines, return their result dicts. Everything else
+falls through to ``spark.sql`` untouched, so one entry point serves
+reads and writes::
 
     lakebatch.register_table(spark, "orders_lake", path)
     lakesql.sql(spark, '''
@@ -59,8 +59,8 @@ support, nothing they don't):
   LOCATION 'path'`` (zero-copy branch; source gets a retention pin)
 - ``DROP TABLE [IF EXISTS] <name>`` (drops the binding; data stays)
 - ``SHOW TBLPROPERTIES <name>``
-- read extensions inside SELECT/WITH (and the query side of INSERT /
-  CTAS): ``FROM <lake> VERSION|TIMESTAMP AS OF x`` and
+- read extensions inside any query (and the query side of INSERT /
+  CTAS / MERGE USING): ``FROM <lake> VERSION|TIMESTAMP AS OF x`` and
   ``table_changes('<lake>', since_version)`` rewrite to registered
   snapshot/CDF views and run through plain ``spark.sql``
 
@@ -72,134 +72,250 @@ Simple ``col <op> literal`` conjuncts in DELETE/UPDATE predicates are
 auto-derived into the engines' stats ``prune`` fast path, so a SQL
 point-delete skips files exactly like the Python call.
 
-Parsing is a masked-literal scanner, not a full SQL grammar: string
-literals are blanked before any keyword/paren scan, so ``WHERE``
-inside a string can't split a statement, and every expression slice
-is taken from the ORIGINAL text. Unsupported shapes raise ValueError
-with the exact reason — never a silent misparse (anything that
-doesn't look like lake DML falls through to ``spark.sql`` whole).
+Parsing is Spark's own parser plus the extension statements. Every
+statement Spark's grammar covers is read off the unresolved Catalyst
+plan (``parsePlan``): the statement's shape comes from the plan
+nodes, and each expression reaches ``F.expr`` as the user typed it,
+sliced from the original text at the node's parser origin (qualifiers
+are rewritten by splicing at each column reference's origin), so
+comments, quoting and escapes mean exactly what Spark says they mean.
+Spark has no grammar for ``VACUUM``, ``RESTORE``, ``OPTIMIZE``,
+``COPY INTO`` or ``SHALLOW CLONE``, and it reads ``DESCRIBE HISTORY
+/ DETAIL`` as a column description; those keep small anchored
+patterns, routed before the parser (an ``OPTIMIZE ... WHERE``
+predicate still goes through Spark's expression parser). A statement
+Spark's grammar rejects raises ValueError chained from its
+ParseException when it is lake DML/DDL, and reaches ``spark.sql``
+untouched otherwise; unsupported shapes raise ValueError with the
+exact reason — never a silent misparse.
 """
 
 from __future__ import annotations
 
+import json
 import re
 
+from pyspark.errors import ParseException
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    StructField,
+    StructType,
+    _parse_datatype_json_string,
+)
 
 from olist_data_warehouse_spark.sources import lakebatch
 from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
-
-def _mask(text: str) -> str:
-    """Blank the contents of single-quoted literals (keeping length
-    and the quotes), so keyword / paren / comma scans can't be fooled
-    by SQL text inside strings. ``''`` escapes stay inside the
-    literal."""
-    out = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            out.append("'")
-            i += 1
-            while i < n:
-                if text[i] == "'":
-                    if i + 1 < n and text[i + 1] == "'":
-                        out.append("__")
-                        i += 2
-                        continue
-                    break
-                out.append("_")
-                i += 1
-            if i < n:
-                out.append("'")
-                i += 1
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
-def _find_top(masked: str, word: str, start: int = 0) -> int:
-    """Index of the first depth-0 occurrence of keyword ``word``
-    (case-insensitive, word-bounded) at or after ``start``; -1 if
-    none."""
-    pat = re.compile(rf"\b{word}\b", re.IGNORECASE)
-    depth = 0
-    i = start
-    while i < len(masked):
-        c = masked[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(masked, i)
-            if m:
-                return i
-        i += 1
-    return -1
-
-
-def _split_top(text: str, masked: str, sep: str) -> list[str]:
-    """Split ``text`` on depth-0 occurrences of ``sep`` (a single
-    char, e.g. ``,``) located via ``masked``."""
-    parts, depth, last = [], 0, 0
-    for i, c in enumerate(masked):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == sep and depth == 0:
-            parts.append(text[last:i])
-            last = i + 1
-    parts.append(text[last:])
-    return parts
-
-
-def _replace_qualifiers(sql_text: str, mapping: dict[str, str]) -> str:
-    """Rewrite ``alias.`` qualifiers per ``mapping`` (lower-cased
-    alias -> replacement qualifier, '' to strip), skipping string
-    literals. Used to normalize user aliases to the engines' ``t.`` /
-    ``s.`` contract (or to bare names where the engine scopes a
-    single frame)."""
-    if not mapping:
-        return sql_text
-    names = "|".join(re.escape(k) for k in sorted(mapping, key=len,
-                                                  reverse=True))
-    pat = re.compile(rf"\b({names})\s*\.\s*", re.IGNORECASE)
-
-    def _sub(m: re.Match) -> str:
-        repl = mapping[m.group(1).lower()]
-        return f"{repl}." if repl else ""
-
-    out = []
-    masked = _mask(sql_text)
-    i = 0
-    for m in re.finditer(r"'[^']*'", masked):
-        seg = sql_text[i:m.start()]
-        out.append(pat.sub(_sub, seg))
-        out.append(sql_text[m.start():m.end()])
-        i = m.end()
-    out.append(pat.sub(_sub, sql_text[i:]))
-    return "".join(out)
-
-
 _IDENT = r"[A-Za-z_][A-Za-z0-9_.]*"
 
 
-def _name_alias(seg: str) -> tuple[str, str | None]:
-    """Parse ``<name> [AS] [alias]`` -> (name, alias|None)."""
-    toks = seg.split()
-    if not toks:
-        raise ValueError(f"expected a table name in {seg!r}")
-    name = toks[0]
-    rest = [t for t in toks[1:] if t.upper() != "AS"]
-    if len(rest) > 1:
-        raise ValueError(f"cannot parse table reference {seg!r}")
-    return name, (rest[0] if rest else None)
+def _parse(spark: SparkSession, text: str, expression: bool = False):
+    """The unresolved Catalyst plan (or, with ``expression``, the
+    expression tree) Spark's own SQL parser reads from ``text``.
+
+    ``sessionState().sqlParser()`` is internal to Spark — no public
+    API hands back an unresolved plan — so this is the one place that
+    reaches it. The plan-node class names the dispatcher reads are
+    pinned in ``tests/test_lakesql.py``, so a Spark upgrade that
+    renames one fails there, loudly."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    if expression:
+        return parser.parseExpression(text)
+    return parser.parsePlan(text)
+
+
+# ------------------------------------------------------- plan-tree reading
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _opt(jopt):
+    return jopt.get() if jopt.isDefined() else None
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _scala_map(jmap) -> dict[str, str]:
+    out, it = {}, jmap.iterator()
+    while it.hasNext():
+        kv = it.next()
+        out[kv._1()] = kv._2()
+    return out
+
+
+def _span(node, text: str) -> tuple[int, int] | None:
+    """``node``'s [start, stop) in ``text``, or None when it has no
+    position there.
+
+    Catalyst stamps each node with its parser rule's token range, but a
+    predicate (``IN``, ``BETWEEN``, ``LIKE``, ``IS NULL``) or a query
+    under ``ORDER BY``/``LIMIT`` starts at its own keyword, so the
+    start extends through the leftmost child (a time-travel relation's
+    is the table it travels). The boolean literals are shared
+    singletons stamped by whichever statement built them first: a
+    literal stamped from another text has no span here."""
+    kind, o = _kind(node), node.origin()
+    start = _opt(o.startIndex())
+    if start is None or (kind == "Literal" and _opt(o.sqlText()) != text):
+        return None
+    stop = _opt(o.stopIndex()) + 1
+    kids = (
+        [node.relation()] if kind == "RelationTimeTravel"
+        else _seq(node.children())
+    )
+    first = _span(kids[0], text) if kids else None
+    return (min(start, first[0]) if first else start), stop
+
+
+def _text(node, text: str) -> str:
+    span = _span(node, text)
+    return node.sql() if span is None else text[span[0]:span[1]]
+
+
+def _walk(node):
+    """``node`` and its descendants, including the plans reached
+    through ``innerChildren`` (CTE bodies, expression subqueries)."""
+    yield node
+    for c in _seq(node.children()) + _seq(node.innerChildren()):
+        yield from _walk(c)
+
+
+def _relation(node):
+    """(name, alias, node) of a table reference; ``name`` is None when
+    the reference is a subquery."""
+    alias = None
+    if _kind(node) == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    kind = _kind(node)
+    if kind == "UnresolvedIdentifier":
+        parts = node.nameParts()
+    elif kind in ("UnresolvedRelation", "UnresolvedTable",
+                  "UnresolvedTableOrView"):
+        parts = node.multipartIdentifier()
+    else:
+        return None, alias, node
+    return ".".join(_seq(parts)), alias, node
+
+
+def _splice(text: str, cuts, lo: int = 0, hi: int | None = None) -> str:
+    """``text[lo:hi]`` with each ``(start, stop, replacement)`` cut
+    applied."""
+    out, last = [], lo
+    for s, e, repl in sorted(cuts):
+        out += [text[last:s], repl]
+        last = e
+    out.append(text[last:len(text) if hi is None else hi])
+    return "".join(out)
+
+
+_QUALIFIER = re.compile(r"(`(?:[^`]|``)+`|\w+)\s*\.\s*")
+
+
+def _requalify(node, text: str, quals: dict[str, str]) -> str:
+    """The text of expression ``node`` with each column qualifier named
+    in ``quals`` (lower-cased table name or alias -> new qualifier, ''
+    to drop it) rewritten at its column reference's origin. Used to
+    normalize user aliases to the engines' ``t.`` / ``s.`` contract (or
+    to bare names where the engine scopes a single frame); literals
+    and comments pass through verbatim."""
+    span = _span(node, text)
+    if span is None:
+        return node.sql()
+    cuts = []
+    for n in _walk(node):
+        if _kind(n) != "UnresolvedAttribute":
+            continue
+        parts = _seq(n.nameParts())
+        repl = quals.get(parts[0].lower()) if len(parts) > 1 else None
+        if repl is None:
+            continue
+        at = _span(n, text)[0]
+        m = _QUALIFIER.match(text, at)
+        if not m or m.group(1).strip("`").lower() != parts[0].lower():
+            raise ValueError(
+                f"cannot locate qualifier {parts[0]!r} in {text[at:]!r}"
+            )
+        cuts.append((at, m.end(), f"{repl}." if repl else ""))
+    return _splice(text, cuts, *span)
+
+
+def _conjuncts(node) -> list:
+    if _kind(node) == "And":
+        return [c for k in _seq(node.children()) for c in _conjuncts(k)]
+    return [node]
+
+
+_CMP = {
+    "EqualTo": "=", "LessThan": "<", "GreaterThan": ">",
+    "LessThanOrEqual": "<=", "GreaterThanOrEqual": ">=",
+}
+_NUM = re.compile(r"[-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?")
+
+
+def _stats_predicate(node, text: str, quals=()):
+    """``(col, op, number)`` when ``node`` is ``col <op> numeric
+    literal`` over a bare column (or one qualified by a name in
+    ``quals``); None otherwise. The number is an int for integer text
+    and a float otherwise, read from the literal as typed."""
+    op = _CMP.get(_kind(node))
+    if op is None:
+        return None
+    col, lit = _seq(node.children())
+    if _kind(col) != "UnresolvedAttribute":
+        return None
+    parts = _seq(col.nameParts())
+    if len(parts) == 2 and parts[0].lower() in quals:
+        parts = parts[1:]
+    num = _text(lit, text).strip()
+    if len(parts) != 1 or not _NUM.fullmatch(num):
+        return None
+    v = float(num) if ("." in num or "e" in num.lower()) else int(num)
+    return parts[0], op, v
+
+
+def _prune_hint(node, text: str, quals=()):
+    """Derive a stats-prune hint from a predicate: the first of its
+    ``AND``-conjuncts of shape ``col <op> numeric-literal``. Sound
+    because a row matching the whole predicate matches every
+    conjunct, so files outside the conjunct's stats range hold no
+    matches — the same file-skipping Delta derives from DML
+    predicates."""
+    for c in _conjuncts(node):
+        hint = _stats_predicate(c, text, quals)
+        if hint is not None:
+            return hint
+    return None
+
+
+def _no_subquery(spark: SparkSession, node, context: str) -> None:
+    """The dispatcher's DML forms are deliberately FLAT: a subquery
+    inside a DML expression (scalar subquery in SET, ``IN (SELECT …)``
+    or ``EXISTS`` in WHERE, subquery in VALUES) has no engine form, so
+    it is rejected loudly rather than handed to ``F.expr`` (r12
+    verdict #3)."""
+    pattern = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    if node.containsPattern(pattern.PLAN_EXPRESSION()):
+        raise ValueError(
+            f"subqueries are not supported in {context} — the lakesql "
+            "grammar is flat (MERGE USING (SELECT …) is the one "
+            "nested form); materialize the subquery as a temp view "
+            "or use the Python API"
+        )
+
+
+def _predicate(spark, cond, text: str, quals: dict, context: str):
+    """(Column, prune hint) for a WHERE condition (None: every row)."""
+    if cond is None:
+        return F.lit(True), None
+    _no_subquery(spark, cond, context)
+    return (
+        F.expr(_requalify(cond, text, quals)),
+        _prune_hint(cond, text, quals),
+    )
 
 
 def _target(spark: SparkSession, name: str) -> LakeTable | None:
@@ -224,83 +340,6 @@ def _target(spark: SparkSession, name: str) -> LakeTable | None:
     return LakeTable(path)
 
 
-_NUM = re.compile(
-    rf"^\s*({_IDENT})\s*(>=|<=|=|<|>)\s*"
-    r"([-+]?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?)\s*$"
-)
-
-
-def _and_conjuncts(pred: str, masked: str) -> list[tuple[str, str]]:
-    """Split a predicate into its depth-0 AND-conjuncts, locating
-    boundaries on the MASKED string only and slicing both strings at
-    those positions (the mask is length-preserving, so indices
-    align). Splitting the raw text separately would misalign the
-    pair whenever a string literal contains ``' AND '``."""
-    pat = re.compile(r"\bAND\b", re.IGNORECASE)
-    cuts, depth = [], 0
-    for i, c in enumerate(masked):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = pat.match(masked, i)
-            if m:
-                cuts.append((i, m.end()))
-    parts, last = [], 0
-    for s, e in cuts:
-        parts.append((pred[last:s], masked[last:s]))
-        last = e
-    parts.append((pred[last:], masked[last:]))
-    return parts
-
-
-def _no_subquery(mask: str | None, context: str) -> None:
-    """The dispatcher grammar is deliberately FLAT: a nested SELECT
-    inside a DML fragment (scalar subquery in SET, ``IN (SELECT …)``
-    in WHERE, subquery in VALUES) is outside it. Reject loudly —
-    handing Catalyst an expression this grammar did not validate
-    risks the silent-misparse class the module bans (r12 verdict #3).
-    The mask is what gets scanned, so 'SELECT' inside a string
-    literal never trips this."""
-    if mask and re.search(r"\bSELECT\b", mask, re.IGNORECASE):
-        raise ValueError(
-            f"subqueries are not supported in {context} — the lakesql "
-            "grammar is flat (MERGE USING (SELECT …) is the one "
-            "nested form); materialize the subquery as a temp view "
-            "or use the Python API"
-        )
-
-
-def _auto_prune(pred: str, masked: str) -> tuple[str, str, float] | None:
-    """Derive a stats-prune hint from the predicate: the first
-    depth-0 AND-conjunct of shape ``col <op> numeric-literal``. Sound
-    because a row matching the whole predicate matches every
-    conjunct, so files outside the conjunct's stats range hold no
-    matches — the same file-skipping Delta derives from DML
-    predicates."""
-    for part_text, part_mask in _and_conjuncts(pred, masked):
-        if "(" in part_mask or ")" in part_mask:
-            continue
-        m = _NUM.match(part_text)
-        if m and "." not in m.group(1):
-            v = float(m.group(3)) if (
-                "." in m.group(3) or "e" in m.group(3).lower()
-            ) else int(m.group(3))
-            return (m.group(1), m.group(2), v)
-    return None
-
-
-def _parse_where(
-    text: str, masked: str, start: int
-) -> tuple[str, str | None, str | None]:
-    """Split ``text[start:]`` into (head, where-pred, where-masked)."""
-    w = _find_top(masked, "WHERE", start)
-    if w < 0:
-        return text[start:], None, None
-    return text[start:w], text[w + 5:], masked[w + 5:]
-
-
 def _refresh(spark: SparkSession, name: str, result):
     """Re-register ``name``'s SQL binding after a mutating statement.
 
@@ -317,181 +356,137 @@ def _refresh(spark: SparkSession, name: str, result):
     return result
 
 
-def _delete(spark: SparkSession, text: str, masked: str) -> dict:
-    m = re.match(r"\s*DELETE\s+FROM\b", masked, re.IGNORECASE)
-    head, pred, pred_mask = _parse_where(text, masked, m.end())
-    name, alias = _name_alias(head)
+def _strip(*names) -> dict[str, str]:
+    return {n.lower(): "" for n in names if n}
+
+
+# ------------------------------------------------------------------ DML
+
+def _delete(spark: SparkSession, stmt: str, plan) -> dict:
+    name, alias, _ = _relation(plan.table())
     t = _target(spark, name)
     if t is None:
-        return spark.sql(text)
-    strip = {name.lower(): ""}
-    if alias:
-        strip[alias.lower()] = ""
-    if pred is None:
-        predicate, prune = F.lit(True), None
-    else:
-        _no_subquery(pred_mask, "DELETE WHERE")
-        bare = _replace_qualifiers(pred, strip)
-        predicate = F.expr(bare)
-        prune = _auto_prune(bare, _mask(bare))
+        return spark.sql(stmt)
+    cond = plan.condition()
+    if _kind(cond) == "Literal" and cond.sql() == "true":
+        cond = None  # no WHERE: Catalyst fills in TRUE
+    predicate, prune = _predicate(
+        spark, cond, stmt, _strip(name, alias), "DELETE WHERE"
+    )
     return _refresh(
         spark, name, t.delete_where(spark, predicate, prune=prune)
     )
 
 
-def _update(spark: SparkSession, text: str, masked: str) -> dict:
-    m = re.match(r"\s*UPDATE\b", masked, re.IGNORECASE)
-    s = _find_top(masked, "SET", m.end())
-    if s < 0:
-        raise ValueError("UPDATE requires a SET clause")
-    name, alias = _name_alias(text[m.end():s])
+def _update(spark: SparkSession, stmt: str, plan) -> dict:
+    name, alias, _ = _relation(plan.table())
     t = _target(spark, name)
     if t is None:
-        return spark.sql(text)
-    strip = {name.lower(): ""}
-    if alias:
-        strip[alias.lower()] = ""
-    sets_text, pred, pred_mask = _parse_where(text, masked, s + 3)
-    _no_subquery(_mask(sets_text), "UPDATE SET")
-    set_exprs = {
-        c: F.expr(e)
-        for c, e in _parse_sets(sets_text, strip).items()
-    }
-    if pred is None:
-        predicate, prune = F.lit(True), None
-    else:
-        _no_subquery(pred_mask, "UPDATE WHERE")
-        bare = _replace_qualifiers(pred, strip)
-        predicate = F.expr(bare)
-        prune = _auto_prune(bare, _mask(bare))
+        return spark.sql(stmt)
+    strip = _strip(name, alias)
+    set_exprs = {}
+    for a in _seq(plan.assignments()):
+        _no_subquery(spark, a.value(), "UPDATE SET")
+        set_exprs[_seq(a.key().nameParts())[-1]] = F.expr(
+            _requalify(a.value(), stmt, strip)
+        )
+    predicate, prune = _predicate(
+        spark, _opt(plan.condition()), stmt, strip, "UPDATE WHERE"
+    )
     return _refresh(
         spark, name,
         t.update_where(spark, predicate, set_exprs, prune=prune),
     )
 
 
-def _parse_sets(seg: str, qual_map: dict[str, str]) -> dict[str, str]:
-    """``c = expr, ...`` -> {bare col: rewritten expr}."""
-    out: dict[str, str] = {}
-    for a in _split_top(seg, _mask(seg), ","):
-        m = re.match(rf"\s*(?:({_IDENT})\s*\.\s*)?(\w+)\s*=", a)
-        if not m:
-            raise ValueError(f"cannot parse SET assignment {a!r}")
-        out[m.group(2)] = _replace_qualifiers(
-            a[m.end():].strip(), qual_map
-        )
-    return out
+def _clause(spark: SparkSession, action, text: str, quals: dict):
+    """(kind, condition, SET map) of one MERGE WHEN clause, qualifiers
+    rewritten per ``quals``; the SET map is None for ``*``. Kind is
+    "delete" for DELETE and "update" for everything else."""
+    cond = _opt(action.condition())
+    if cond is not None:
+        _no_subquery(spark, cond, "MERGE WHEN clauses")
+        cond = _requalify(cond, text, quals)
+    sets = None
+    if _kind(action) in ("UpdateAction", "InsertAction"):
+        sets = {}
+        for a in _seq(action.assignments()):
+            _no_subquery(spark, a.value(), "MERGE WHEN clauses")
+            sets[_seq(a.key().nameParts())[-1]] = _requalify(
+                a.value(), text, quals
+            )
+    kind = "delete" if _kind(action) == "DeleteAction" else "update"
+    return kind, cond, sets
 
 
-def _merge(spark: SparkSession, text: str, masked: str) -> dict:
-    m = re.match(r"\s*MERGE\s+INTO\b", masked, re.IGNORECASE)
-    u = _find_top(masked, "USING", m.end())
-    if u < 0:
-        raise ValueError("MERGE requires a USING clause")
-    tgt_name, tgt_alias = _name_alias(text[m.end():u])
+def _merge(spark: SparkSession, stmt: str, plan) -> dict:
+    if plan.withSchemaEvolution():
+        raise ValueError("MERGE WITH SCHEMA EVOLUTION is not supported")
+    tgt_name, tgt_alias, _ = _relation(plan.targetTable())
     t = _target(spark, tgt_name)
     if t is None:
-        return spark.sql(text)
-
-    on = _find_top(masked, "ON", u + 5)
-    if on < 0:
-        raise ValueError("MERGE requires an ON clause")
-    src_seg = text[u + 5:on].strip()
-    src_mask = masked[u + 5:on].strip()
-    if src_mask.startswith("("):
-        depth, close = 0, -1
-        for i, c in enumerate(src_mask):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
-        if close < 0:
-            raise ValueError("unbalanced parens in USING subquery")
-        source = spark.sql(
-            _rewrite_reads(
-                spark, src_seg[1:close], src_mask[1:close]
-            )
-        )
-        _n, src_alias = _name_alias("_sub " + src_seg[close + 1:])
-        src_name = None
-    else:
-        src_name, src_alias = _name_alias(src_seg)
-        source = spark.sql(f"SELECT * FROM {src_name}")
-
-    w = _find_when_clause(masked, on + 2)
-    if w < 0:
-        raise ValueError("MERGE requires at least one WHEN clause")
-    on_pred = text[on + 2:w]
+        return spark.sql(stmt)
+    src_name, src_alias, src = _relation(plan.sourceTable())
+    lo, hi = _span(src, stmt)
+    source = spark.sql(
+        "SELECT * FROM ("
+        + _splice(stmt, _read_cuts(spark, stmt, src), lo, hi)
+        + ") AS _src"
+    )
 
     # normalize user aliases (and bare table/view names used as
     # qualifiers) to the engines' t./s. contract
-    to_t = {tgt_name.lower(): "t"}
-    if tgt_alias:
-        to_t[tgt_alias.lower()] = "t"
-    to_s = {}
-    if src_name:
-        to_s[src_name.lower()] = "s"
-    if src_alias:
-        to_s[src_alias.lower()] = "s"
+    to_t = {n.lower(): "t" for n in (tgt_name, tgt_alias) if n}
+    to_s = {n.lower(): "s" for n in (src_name, src_alias) if n}
     qual = {**to_t, **to_s}
     bare_s = {k: "" for k in to_s} | {"s": ""}
     keep_t = {**to_t, **{k: "s" for k in to_s}}
 
     keys = []
-    on_norm = _replace_qualifiers(on_pred, qual)
-    for part in re.split(r"\bAND\b", on_norm, flags=re.IGNORECASE):
-        eq = re.match(
-            r"\s*([ts])\s*\.\s*(\w+)\s*=\s*([ts])\s*\.\s*(\w+)\s*$",
-            part,
-        )
-        if not eq or {eq.group(1), eq.group(3)} != {"t", "s"}:
+    for c in _conjuncts(plan.mergeCondition()):
+        part = _text(c, stmt)
+        refs = [
+            _seq(x.nameParts())
+            for x in (_seq(c.children()) if _kind(c) == "EqualTo" else [])
+            if _kind(x) == "UnresolvedAttribute"
+        ]
+        if len(refs) != 2 or any(len(r) != 2 for r in refs) or {
+            qual.get(r[0].lower(), r[0].lower()) for r in refs
+        } != {"t", "s"}:
             raise ValueError(
                 f"MERGE ON must be a conjunction of t.k = s.k "
-                f"equalities; cannot parse {part.strip()!r}"
+                f"equalities; cannot parse {part!r}"
             )
-        if eq.group(2) != eq.group(4):
+        if refs[0][1] != refs[1][1]:
             raise ValueError(
                 f"MERGE keys must share a column name (engine merges "
-                f"on key names): {part.strip()!r}"
+                f"on key names): {part!r}"
             )
-        keys.append(eq.group(2))
+        keys.append(refs[0][1])
 
-    nm_cond: str | None = None
-    nm_iset: dict[str, str] | None = None
-    has_insert = False
-    nms_action: str | None = None
-    nms_cond: str | None = None
-    nms_set: dict[str, str] | None = None
-
-    body, body_mask = text[w:], masked[w:]
-    starts = []
-    pos = 0
-    while True:
-        k = _find_when_clause(body_mask, pos)
-        if k < 0:
-            break
-        starts.append(k)
-        pos = k + 4
-    matched, inserts, by_source = _collect_clauses(
-        body, body_mask, starts, qual, keep_t, bare_s
-    )
+    matched = [
+        _clause(spark, a, stmt, qual) for a in _seq(plan.matchedActions())
+    ]
+    inserts = [
+        _clause(spark, a, stmt, bare_s)[1:]
+        for a in _seq(plan.notMatchedActions())
+    ]
+    by_source = [
+        _clause(spark, a, stmt, keep_t)
+        for a in _seq(plan.notMatchedBySourceActions())
+    ]
     if len(inserts) > 1:
         raise ValueError("multiple WHEN NOT MATCHED insert clauses "
                          "are not supported")
     if len(by_source) > 1:
         raise ValueError("multiple WHEN NOT MATCHED BY SOURCE clauses "
                          "are not supported")
-    if inserts:
-        has_insert = True
-        nm_cond, nm_iset = inserts[0]
-    if by_source:
-        nms_action, nms_cond, nms_set = by_source[0]
-
+    nm_cond, nm_iset = inserts[0] if inserts else (None, None)
+    nms_action, nms_cond, nms_set = (
+        by_source[0] if by_source else (None, None, None)
+    )
     kwargs: dict = {
-        "when_not_matched": "insert" if has_insert else "keep",
+        "when_not_matched": "insert" if inserts else "keep",
         "not_matched_condition": nm_cond,
         "not_matched_insert_set": nm_iset,
         "when_not_matched_by_source": nms_action,
@@ -507,139 +502,6 @@ def _merge(spark: SparkSession, text: str, masked: str) -> dict:
     )
 
 
-_WHEN_CLAUSE = re.compile(r"WHEN\s+(NOT\s+)?MATCHED\b", re.IGNORECASE)
-
-
-def _find_when_clause(masked: str, start: int = 0) -> int:
-    """Index of the next depth-0 ``WHEN [NOT] MATCHED`` clause head at
-    or after ``start``; -1 if none. A bare depth-0 WHEN (e.g. the WHEN
-    of a ``CASE WHEN … END`` inside an UPDATE SET expression — valid
-    Delta SQL) is NOT a clause boundary (r12 advice)."""
-    pos = start
-    while True:
-        k = _find_top(masked, "WHEN", pos)
-        if k < 0:
-            return -1
-        if _WHEN_CLAUSE.match(masked, k):
-            return k
-        pos = k + 4
-
-
-def _collect_clauses(body, body_mask, starts, qual, keep_t, bare_s):
-    """Parse each WHEN clause segment into the engine's shapes."""
-    matched: list[tuple] = []
-    inserts: list[tuple] = []
-    by_source: list[tuple] = []
-    for i, st in enumerate(starts):
-        end = starts[i + 1] if i + 1 < len(starts) else len(body)
-        seg = body[st + 4:end].strip()
-        seg_mask = body_mask[st + 4:end].strip()
-        _no_subquery(seg_mask, "MERGE WHEN clauses")
-        then = _find_top(seg_mask, "THEN")
-        if then < 0:
-            raise ValueError(f"WHEN clause without THEN: {seg!r}")
-        head, head_mask = seg[:then], seg_mask[:then]
-        action = seg[then + 4:].strip()
-        action_mask = seg_mask[then + 4:].strip()
-        a = _find_top(head_mask, "AND")
-        cond = head[a + 3:] if a >= 0 else None
-        kind = re.sub(r"\s+", " ", (head[:a] if a >= 0 else head)
-                      .strip().upper())
-        if kind == "MATCHED":
-            matched.append(_matched_action(action, action_mask, cond,
-                                           qual))
-        elif kind in ("NOT MATCHED", "NOT MATCHED BY TARGET"):
-            inserts.append(_insert_action(action, action_mask, cond,
-                                          bare_s))
-        elif kind == "NOT MATCHED BY SOURCE":
-            by_source.append(_by_source_action(action, action_mask,
-                                               cond, keep_t))
-        else:
-            raise ValueError(f"cannot parse WHEN clause kind {kind!r}")
-    return matched, inserts, by_source
-
-
-def _matched_action(action, action_mask, cond, qual):
-    cond_n = _replace_qualifiers(cond, qual).strip() if cond else None
-    if re.match(r"DELETE\s*$", action_mask, re.IGNORECASE):
-        return ("delete", cond_n, None)
-    m = re.match(r"UPDATE\s+SET\b", action_mask, re.IGNORECASE)
-    if not m:
-        raise ValueError(
-            f"WHEN MATCHED action must be UPDATE SET or DELETE, "
-            f"got {action!r}"
-        )
-    rest = action[m.end():].strip()
-    if rest == "*":
-        return ("update", cond_n, None)
-    return ("update", cond_n, _parse_sets(rest, qual))
-
-
-def _insert_action(action, action_mask, cond, bare_s):
-    cond_n = (
-        _replace_qualifiers(cond, bare_s).strip() if cond else None
-    )
-    m = re.match(r"INSERT\b", action_mask, re.IGNORECASE)
-    if not m:
-        raise ValueError(
-            f"WHEN NOT MATCHED action must be INSERT, got {action!r}"
-        )
-    rest = action[m.end():].strip()
-    rest_mask = action_mask[m.end():].strip()
-    if rest == "*":
-        return (cond_n, None)
-    cm = re.match(r"\(([^)]*)\)\s*VALUES\s*\(", rest_mask,
-                  re.IGNORECASE)
-    if not cm:
-        raise ValueError(
-            "INSERT must be `INSERT *` or "
-            f"`INSERT (cols) VALUES (exprs)`, got {rest!r}"
-        )
-    cols = [c.strip() for c in rest[1:rest.index(")")].split(",")]
-    vseg = rest[cm.end():]
-    vmask = rest_mask[cm.end():]
-    depth, close = 1, -1
-    for i, c in enumerate(vmask):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                close = i
-                break
-    if close < 0:
-        raise ValueError("unbalanced parens in INSERT VALUES")
-    vals = _split_top(vseg[:close], vmask[:close], ",")
-    if len(cols) != len(vals):
-        raise ValueError(
-            f"INSERT column/value count mismatch: {len(cols)} vs "
-            f"{len(vals)}"
-        )
-    iset = {
-        re.sub(rf"^({_IDENT})\s*\.\s*", "", c): _replace_qualifiers(
-            v, bare_s
-        ).strip()
-        for c, v in zip(cols, vals)
-    }
-    return (cond_n, iset)
-
-
-def _by_source_action(action, action_mask, cond, keep_t):
-    cond_n = (
-        _replace_qualifiers(cond, keep_t).strip() if cond else None
-    )
-    if re.match(r"DELETE\s*$", action_mask, re.IGNORECASE):
-        return ("delete", cond_n, None)
-    m = re.match(r"UPDATE\s+SET\b", action_mask, re.IGNORECASE)
-    if not m:
-        raise ValueError(
-            "WHEN NOT MATCHED BY SOURCE action must be UPDATE SET "
-            f"or DELETE, got {action!r}"
-        )
-    sets = _parse_sets(action[m.end():].strip(), keep_t)
-    return ("update", cond_n, sets)
-
-
 def _table_cols(t: LakeTable) -> tuple[list[str], dict[str, str]]:
     state = t._state()
     return [f["name"] for f in state["schema"]["fields"]], t._generated(
@@ -647,85 +509,45 @@ def _table_cols(t: LakeTable) -> tuple[list[str], dict[str, str]]:
     )
 
 
-def _insert(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        r"\s*INSERT\s+(INTO|OVERWRITE)\b", masked, re.IGNORECASE
-    )
-    overwrite = m.group(1).upper() == "OVERWRITE"
-    rest, rest_mask = text[m.end():], masked[m.end():]
-    hm = re.match(
-        rf"\s*(?:TABLE\s+)?({_IDENT})\s*(\(([^)]*)\))?\s*",
-        rest_mask,
-        re.IGNORECASE,
-    )
-    if not hm:
-        raise ValueError(f"cannot parse INSERT target in {text!r}")
-    name = rest[hm.start(1):hm.end(1)]
+def _insert(spark: SparkSession, stmt: str, plan):
+    """``INSERT INTO|OVERWRITE`` (InsertIntoStatement) and ``INSERT INTO
+    ... REPLACE WHERE`` (OverwriteByExpression)."""
+    replace = _kind(plan) == "OverwriteByExpression"
+    name = _relation(plan.table())[0]
     path = lakebatch.dml_target(spark, name)
     if path is None:
         # not a lake DML target: catalog tables handle INSERT natively
-        return spark.sql(text)
+        return spark.sql(stmt)
+    if not replace and (
+        not plan.partitionSpec().isEmpty() or plan.byName()
+    ):
+        raise ValueError(
+            "INSERT into a lake table is positional: no PARTITION or "
+            "BY NAME clause"
+        )
     t = LakeTable(path)
     cols, gen = _table_cols(t)
-    given = (
-        [c.strip() for c in rest[hm.start(3):hm.end(3)].split(",")]
-        if hm.group(2)
-        else None
-    )
+    given = None if replace else (_seq(plan.userSpecifiedCols()) or None)
     if given is not None:
         bad = sorted(set(given) - set(cols))
         if bad:
             raise ValueError(f"INSERT names unknown columns: {bad}")
-    query = rest[hm.end():]
-    query_mask = rest_mask[hm.end():]
-    # INSERT INTO t REPLACE WHERE pred SELECT ... — Delta's
-    # replaceWhere as a statement: atomic predicate-scoped overwrite
-    replace_pred = None
-    rw = re.match(r"REPLACE\s+WHERE\b", query_mask, re.IGNORECASE)
-    if rw:
-        if overwrite:
-            raise ValueError(
-                "REPLACE WHERE composes with INSERT INTO, not "
-                "INSERT OVERWRITE (which already replaces everything)"
-            )
-        if given is not None:
-            raise ValueError(
-                "REPLACE WHERE takes the full row shape — drop the "
-                "column list"
-            )
-        cuts = [
-            i
-            for i in (
-                _find_top(query_mask, "SELECT", rw.end()),
-                _find_top(query_mask, "VALUES", rw.end()),
-            )
-            if i >= 0
-        ]
-        if not cuts:
-            raise ValueError(
-                "REPLACE WHERE needs a SELECT or VALUES clause"
-            )
-        cut = min(cuts)
-        replace_pred = query[rw.end():cut].strip()
-        if not replace_pred:
-            raise ValueError("REPLACE WHERE needs a predicate")
-        _no_subquery(query_mask[rw.end():cut], "REPLACE WHERE")
-        query, query_mask = query[cut:], query_mask[cut:]
+    if replace:
+        replace_pred = plan.deleteExpr()
+        _no_subquery(spark, replace_pred, "REPLACE WHERE")
+    query = plan.query()
+    if _kind(query) in ("LocalRelation", "UnresolvedInlineTable"):
+        _no_subquery(spark, query, "INSERT VALUES rows")
+    # the query is everything after the statement's own header
+    start = _opt(plan.origin().stopIndex()) + 1
+    df = spark.sql(_splice(stmt, _read_cuts(spark, stmt, query), start))
     names = given if given is not None else cols
-    if re.match(r"VALUES\b", query_mask, re.IGNORECASE):
-        # positional VALUES rows aliased to the target columns
-        _no_subquery(query_mask, "INSERT VALUES rows")
-        df = spark.sql(
-            f"SELECT * FROM ({query}) AS _v({', '.join(names)})"
+    if len(df.columns) != len(names):
+        raise ValueError(
+            f"INSERT column count mismatch: target takes "
+            f"{len(names)}, query produces {len(df.columns)}"
         )
-    else:
-        df = spark.sql(_rewrite_reads(spark, query, query_mask))
-        if len(df.columns) != len(names):
-            raise ValueError(
-                f"INSERT column count mismatch: target takes "
-                f"{len(names)}, query produces {len(df.columns)}"
-            )
-        df = df.toDF(*names)  # SQL INSERT is positional
+    df = df.toDF(*names)  # SQL INSERT is positional
     stype = StructType.fromJson(t._state()["schema"])
     ftypes = {f.name: f.dataType for f in stype.fields}
     # SQL store-assignment coercion: each provided column casts to the
@@ -745,266 +567,81 @@ def _insert(spark: SparkSession, text: str, masked: str):
                 if c in given or c not in gen
             ]
         )
-    if replace_pred is not None:
+    if replace:
         return _refresh(
-            spark,
-            name,
+            spark, name,
             t.replace_where(
-                spark,
-                df,
-                F.expr(replace_pred),
-                prune=_auto_prune(replace_pred, _mask(replace_pred)),
+                spark, df, F.expr(_text(replace_pred, stmt)),
+                prune=_prune_hint(replace_pred, stmt),
             ),
         )
-    v = t.overwrite(df) if overwrite else t.append(df)
+    v = t.overwrite(df) if plan.overwrite() else t.append(df)
     return _refresh(spark, name, {"version": v})
 
 
-def _vacuum(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*VACUUM\s+({_IDENT})\s*(.*)$",
-        masked,
-        re.IGNORECASE | re.DOTALL,
-    )
-    if not m:
-        raise ValueError(f"cannot parse VACUUM statement {text!r}")
-    name = text[m.start(1):m.end(1)]
-    t = _target(spark, name)
-    if t is None:
-        return spark.sql(text)
-    tail = masked[m.start(2):]
-    # Delta VACUUM semantics: reclaim files unreferenced by the
-    # CURRENT version (and older than retention) — keep_versions=1,
-    # not the Python API's history-keeping default of 2; and a bare
-    # VACUUM defaults to Delta's 7-DAY retention, not the Python
-    # API's 24h (r12 advice — an operator typing plain VACUUM must
-    # not reclaim ~6 days earlier than Delta would)
-    kwargs: dict = {
-        "keep_versions": 1,
-        "retention_seconds": 7 * 86400.0,
-    }
-    rm = re.search(
-        r"RETAIN\s+(\d+(?:\.\d+)?)\s+HOURS\b", tail, re.IGNORECASE
-    )
-    if rm:
-        kwargs["retention_seconds"] = float(rm.group(1)) * 3600.0
-    if re.search(r"DRY\s+RUN\b", tail, re.IGNORECASE):
-        kwargs["dry_run"] = True
-    if re.search(r"\bFORCE\b", tail, re.IGNORECASE):
-        kwargs["force"] = True
-    leftover = re.sub(
-        r"RETAIN\s+\d+(?:\.\d+)?\s+HOURS\b|DRY\s+RUN\b|\bFORCE\b",
-        "",
-        tail,
-        flags=re.IGNORECASE,
-    ).strip()
-    if leftover:
-        raise ValueError(
-            f"cannot parse VACUUM clause {leftover!r} (grammar: "
-            "VACUUM t [RETAIN n HOURS] [DRY RUN] [FORCE])"
-        )
-    return _refresh(spark, name, t.vacuum(**kwargs))
+# ------------------------------------------------------------------ reads
 
+def _read_cuts(spark: SparkSession, text: str, plan) -> list:
+    """Splices that rewrite the lake READ extensions inside ``plan`` to
+    registered snapshot views, so plain ``spark.sql`` runs them:
 
-def _restore(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*RESTORE\s+(?:TABLE\s+)?({_IDENT})\s+TO\s+"
-        r"(VERSION|TIMESTAMP)\s+AS\s+OF\s+",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(
-            f"cannot parse RESTORE (grammar: RESTORE [TABLE] t TO "
-            f"VERSION|TIMESTAMP AS OF x): {text!r}"
-        )
-    name = text[m.start(1):m.end(1)]
-    t = _target(spark, name)
-    if t is None:
-        return spark.sql(text)
-    arg = text[m.end():].strip().strip("'\"")
-    if m.group(2).upper() == "VERSION":
-        v = t.restore(version=int(arg))
-    else:
-        v = t.restore(timestamp=arg)
-    return _refresh(spark, name, {"version": v})
+    - ``FROM t VERSION|TIMESTAMP AS OF x`` (RelationTimeTravel) -> a
+      time-travel view over the same table path (Delta's SQL time
+      travel)
+    - ``table_changes('t', since_version)`` (a table-valued function)
+      -> a CDF view (table columns + ``_change_type`` +
+      ``_commit_version`` — Delta's TVF shape on the two-type delta
+      model)
 
-
-def _optimize(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*OPTIMIZE\s+({_IDENT})", masked, re.IGNORECASE
-    )
-    if not m:
-        raise ValueError(f"cannot parse OPTIMIZE statement {text!r}")
-    name = text[m.start(1):m.end(1)]
-    t = _target(spark, name)
-    if t is None:
-        return spark.sql(text)
-    w = _find_top(masked, "WHERE", m.end())
-    z = _find_top(masked, "ZORDER", m.end())
-    cluster_by = None
-    if z >= 0:
-        zm = re.match(
-            r"ZORDER\s+BY\s*\(([^)]*)\)\s*$",
-            masked[z:],
-            re.IGNORECASE,
-        )
-        if not zm:
-            raise ValueError(
-                "cannot parse ZORDER BY (grammar: ZORDER BY (c1, c2))"
-            )
-        seg = text[z:][zm.start(1):zm.end(1)]
-        cluster_by = [c.strip() for c in seg.split(",")]
-    where = None
-    if w >= 0:
-        pred = text[w + 5: z if z >= 0 else len(text)]
-        pred_mask = masked[w + 5: z if z >= 0 else len(masked)]
-        where = []
-        for part_t, part_m in _and_conjuncts(pred, pred_mask):
-            p = _auto_prune(part_t, part_m)
-            if p is None:
-                raise ValueError(
-                    f"OPTIMIZE WHERE must be a conjunction of "
-                    f"`col <op> numeric` stats predicates (compaction "
-                    f"scope is file-granular); cannot translate "
-                    f"{part_t.strip()!r}"
-                )
-            where.append(p)
-    return _refresh(
-        spark,
-        name,
-        t.compact(
-            spark,
-            128 * 1024 * 1024,
-            cluster_by=cluster_by,
-            where=where,
-        ),
-    )
-
-
-def _describe_history(spark: SparkSession, text: str, masked: str):
-    import json as _json
-
-    m = re.match(
-        rf"\s*DESCRIBE\s+HISTORY\s+({_IDENT})\s*"
-        r"(?:LIMIT\s+(\d+))?\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(
-            f"cannot parse DESCRIBE HISTORY statement {text!r}"
-        )
-    t = _target(spark, text[m.start(1):m.end(1)])
-    if t is None:
-        return spark.sql(text)
-    recs = t.history(limit=int(m.group(2)) if m.group(2) else None)
-    rows = [
-        (
-            r["version"],
-            r["op"],
-            r["added"],
-            r["removed"],
-            _json.dumps(
-                {
-                    k: v
-                    for k, v in r.items()
-                    if k not in ("version", "op", "added", "removed")
-                },
-                default=str,
-                sort_keys=True,
-            ),
-        )
-        for r in recs
-    ]
-    return spark.createDataFrame(
-        rows,
-        "version long, op string, added long, removed long, "
-        "detail string",
-    )
-
-
-_AS_OF = re.compile(
-    rf"\b({_IDENT})\s+(VERSION|TIMESTAMP)\s+AS\s+OF\s+"
-    r"('[^']*'|[0-9][\w.:+-]*)",
-    re.IGNORECASE,
-)
-_TABLE_CHANGES = re.compile(
-    r"\btable_changes\s*\(\s*('[^']*')\s*,\s*(-?\d+)\s*\)",
-    re.IGNORECASE,
-)
-
-
-def _rewrite_reads(spark: SparkSession, text: str, masked: str) -> str:
-    """Rewrite the lake READ extensions inside a query to registered
-    snapshot views, so plain ``spark.sql`` runs them:
-
-    - ``FROM t VERSION|TIMESTAMP AS OF x`` -> a time-travel view over
-      the same table path (Delta's SQL time travel)
-    - ``table_changes('t', since_version)`` -> a CDF view (table
-      columns + ``_change_type`` + ``_commit_version`` — Delta's TVF
-      shape on the two-type delta model)
-
-    Non-lake names pass through untouched (Spark reports its own
-    error for syntax it doesn't support). Each distinct (table,
+    Both are found anywhere in the plan — CTEs and subqueries
+    included. Non-lake names pass through untouched (Spark reports its
+    own error for syntax it doesn't support). Each distinct (table,
     as-of) pins its OWN view name, so two travels of the same table
     in one query don't collide."""
-    out, last = [], 0
-    pieces: list[tuple[int, int, str]] = []
-    for m in _AS_OF.finditer(masked):
-        name = text[m.start(1):m.end(1)]
-        path = lakebatch.dml_target(spark, name)
-        if path is None:
-            continue
-        kind = m.group(2).lower()
-        arg = _unquote(text[m.start(3):m.end(3)])
-        view = (
-            f"{name}__{kind}_"
-            + re.sub(r"[^A-Za-z0-9]", "_", arg)[:40]
-        )
-        lakebatch.register_table(spark, view, path, **{kind: arg})
-        pieces.append((m.start(), m.end(), view))
-    for m in _TABLE_CHANGES.finditer(masked):
-        name = _unquote(text[m.start(1):m.end(1)])
-        path = lakebatch.dml_target(spark, name)
-        if path is None:
-            raise ValueError(
-                f"table_changes: {name!r} is not a registered lake "
-                "table"
+    cuts = []
+    for n in _walk(plan):
+        kind = _kind(n)
+        if kind == "RelationTimeTravel":
+            name = _relation(n.relation())[0]
+            path = lakebatch.dml_target(spark, name) if name else None
+            if path is None:
+                continue
+            arg = _opt(n.version())
+            travel = "version"
+            if arg is None:
+                travel = "timestamp"
+                arg = _unquote(_text(_opt(n.timestamp()), text))
+            view = (
+                f"{name}__{travel}_"
+                + re.sub(r"[^A-Za-z0-9]", "_", arg)[:40]
             )
-        since = int(m.group(2))
-        view = f"{name}__changes_{since}".replace("-", "m")
-        lakebatch.register_table(
-            spark, view, path, mode="cdf", since=since
-        )
-        pieces.append((m.start(), m.end(), view))
-    if not pieces:
-        return text
-    for start, end, view in sorted(pieces):
-        out.append(text[last:start])
-        out.append(view)
-        last = end
-    out.append(text[last:])
-    return "".join(out)
-
-
-def _paren_body(
-    text: str, masked: str, start: int
-) -> tuple[str, str, int]:
-    """(body_text, body_mask, index-after-close) of the first balanced
-    paren group at or after ``start``."""
-    i = masked.find("(", start)
-    if i < 0:
-        raise ValueError(f"expected '(' in {text[start:]!r}")
-    depth = 0
-    for j in range(i, len(masked)):
-        if masked[j] == "(":
-            depth += 1
-        elif masked[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return text[i + 1:j], masked[i + 1:j], j + 1
-    raise ValueError(f"unbalanced parentheses in {text!r}")
+            lakebatch.register_table(spark, view, path, **{travel: arg})
+            cuts.append((*_span(n, text), view))
+        elif kind == "UnresolvedTableValuedFunction" and (
+            ".".join(_seq(n.name())).lower() == "table_changes"
+        ):
+            args = [_text(a, text) for a in _seq(n.functionArgs())]
+            if len(args) != 2 or not re.fullmatch(r"-?\d+", args[1]):
+                raise ValueError(
+                    "table_changes takes ('<lake table>', "
+                    f"since_version), got {args}"
+                )
+            name, since = _unquote(args[0]), int(args[1])
+            path = lakebatch.dml_target(spark, name)
+            if path is None:
+                raise ValueError(
+                    f"table_changes: {name!r} is not a registered lake "
+                    "table"
+                )
+            view = f"{name}__changes_{since}".replace("-", "m")
+            lakebatch.register_table(
+                spark, view, path, mode="cdf", since=since
+            )
+            # the function's origin runs over its alias: cut at the ')'
+            last = _span(_seq(n.functionArgs())[-1], text)[1]
+            cuts.append((_span(n, text)[0], text.index(")", last) + 1,
+                         view))
+    return cuts
 
 
 def _unquote(seg: str) -> str:
@@ -1014,301 +651,109 @@ def _unquote(seg: str) -> str:
     return s
 
 
-def _parse_props(body_text: str, body_mask: str) -> dict[str, str]:
-    """``'k' = 'v', k2 = v2`` -> dict (keys/values quoted or bare)."""
-    props: dict[str, str] = {}
-    for pt, pm in zip(
-        _split_top(body_text, body_mask, ","),
-        _split_top(body_mask, body_mask, ","),
-    ):
-        if not pt.strip():
-            continue
-        eq = pm.find("=")
-        if eq < 0:
-            raise ValueError(
-                f"cannot parse property {pt.strip()!r} "
-                "(grammar: 'key' = 'value')"
-            )
-        key, val = _unquote(pt[:eq]), _unquote(pt[eq + 1:])
-        if not key:
-            raise ValueError(f"empty property key in {pt.strip()!r}")
-        if key in props:
-            raise ValueError(f"duplicate property key {key!r}")
-        props[key] = val
-    if not props:
-        raise ValueError("expected at least one property")
-    return props
+# ------------------------------------------------------------------- DDL
 
-
-def _alter(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*ALTER\s+TABLE\s+({_IDENT})\s+", masked, re.IGNORECASE
+def _struct_field(name: str, col) -> StructField:
+    """A column definition (CREATE) or added column (ALTER) as the
+    StructField the engines take."""
+    comment = _opt(col.comment())
+    return StructField(
+        name,
+        _parse_datatype_json_string(col.dataType().json()),
+        col.nullable(),
+        {"comment": comment} if comment is not None else None,
     )
-    if not m:
-        return spark.sql(text)
-    name = text[m.start(1):m.end(1)]
+
+
+def _alter(spark: SparkSession, stmt: str, plan):
+    table = _seq(plan.children())[0]
+    if _kind(table) == "Filter":  # ADD CONSTRAINT wraps its table
+        table = table.child()
+    name = _relation(table)[0]
     t = _target(spark, name)
     if t is None:
         # not a lake DML target: catalog tables ALTER natively
-        return spark.sql(text)
-    tail, tail_mask = text[m.end():], masked[m.end():]
-
-    def _reregister(version: int) -> dict:
-        # a temp view's analysis schema is frozen at registration —
-        # refresh the SQL binding so the ALTERed schema is what the
-        # next spark.sql sees (a stream running across the change
-        # keeps ITS analysis-time schema until restart, as ever)
-        lakebatch.register_table(spark, name, t.path)
-        return {"version": version}
-
-    am = re.match(r"\s*ADD\s+COLUMNS?\b", tail_mask, re.IGNORECASE)
-    if am:
-        rest_mask = tail_mask[am.end():]
-        if rest_mask.lstrip().startswith("("):
-            body, _bm, end = _paren_body(tail, tail_mask, am.end())
-            if tail_mask[end:].strip():
-                raise ValueError(
-                    f"trailing text after ADD COLUMNS: "
-                    f"{tail[end:].strip()!r}"
-                )
-        else:
-            body = tail[am.end():]
-        flds = StructType.fromDDL(body)
-        return _reregister(t.add_columns(flds.fields))
-
-    rm = re.match(
-        rf"\s*RENAME\s+COLUMN\s+({_IDENT})\s+TO\s+({_IDENT})\s*$",
-        tail_mask,
-        re.IGNORECASE,
-    )
-    if rm:
-        return _reregister(
-            t.rename_column(
-                tail[rm.start(1):rm.end(1)], tail[rm.start(2):rm.end(2)]
-            )
-        )
-
-    dm = re.match(
-        rf"\s*DROP\s+COLUMN\s+({_IDENT})\s*$", tail_mask, re.IGNORECASE
-    )
-    if dm:
-        return _reregister(t.drop_column(tail[dm.start(1):dm.end(1)]))
-
-    cm = re.match(
-        rf"\s*ADD\s+CONSTRAINT\s+({_IDENT})\s+CHECK\s*\(",
-        tail_mask,
-        re.IGNORECASE,
-    )
-    if cm:
-        expr, _em, end = _paren_body(tail, tail_mask, cm.end() - 1)
-        if tail_mask[end:].strip():
-            raise ValueError(
-                f"trailing text after CHECK (...): {tail[end:].strip()!r}"
-            )
+        return spark.sql(stmt)
+    kind = _kind(plan)
+    if kind == "AddCheckConstraint":
+        c = plan.checkConstraint()
         return {
             "version": t.add_constraint(
-                spark, tail[cm.start(1):cm.end(1)], expr.strip()
+                spark, c.userProvidedName(), c.condition().strip()
             )
         }
-
-    xm = re.match(
-        rf"\s*DROP\s+CONSTRAINT\s+({_IDENT})\s*$",
-        tail_mask,
-        re.IGNORECASE,
-    )
-    if xm:
-        return {
-            "version": t.drop_constraint(tail[xm.start(1):xm.end(1)])
-        }
-
-    sm = re.match(
-        r"\s*SET\s+TBLPROPERTIES\s*\(", tail_mask, re.IGNORECASE
-    )
-    if sm:
-        body, bm, end = _paren_body(tail, tail_mask, sm.end() - 1)
-        if tail_mask[end:].strip():
+    if kind == "DropConstraint":
+        return {"version": t.drop_constraint(plan.name())}
+    if kind == "SetTableProperties":
+        return {"version": t.set_properties(_scala_map(plan.properties()))}
+    if kind == "UnsetTableProperties":
+        return {"version": t.unset_properties(_seq(plan.propertyKeys()))}
+    if kind == "AddColumns":
+        cols = _seq(plan.columnsToAdd())
+        if any(
+            len(_seq(c.name())) != 1 or _opt(c.position()) is not None
+            or _opt(c.default()) is not None
+            for c in cols
+        ):
             raise ValueError(
-                f"trailing text after TBLPROPERTIES: "
-                f"{tail[end:].strip()!r}"
+                "ADD COLUMNS takes top-level `name type` definitions "
+                "(no nested path, FIRST/AFTER or DEFAULT)"
             )
-        return {"version": t.set_properties(_parse_props(body, bm))}
-
-    um = re.match(
-        r"\s*UNSET\s+TBLPROPERTIES\s*\(", tail_mask, re.IGNORECASE
-    )
-    if um:
-        body, bm, end = _paren_body(tail, tail_mask, um.end() - 1)
-        if tail_mask[end:].strip():
-            raise ValueError(
-                f"trailing text after TBLPROPERTIES: "
-                f"{tail[end:].strip()!r}"
-            )
-        keys = [
-            _unquote(k)
-            for k in _split_top(body, bm, ",")
-            if k.strip()
-        ]
-        return {"version": t.unset_properties(keys)}
-
-    raise ValueError(
-        f"cannot parse ALTER TABLE clause {tail.strip()!r} (supported: "
-        "ADD COLUMNS (defs) | RENAME COLUMN a TO b | DROP COLUMN a | "
-        "ADD CONSTRAINT n CHECK (expr) | DROP CONSTRAINT n | "
-        "SET TBLPROPERTIES ('k'='v', ...) | "
-        "UNSET TBLPROPERTIES ('k', ...))"
-    )
+        v = t.add_columns([_struct_field(c.colName(), c) for c in cols])
+    elif kind == "RenameColumn":
+        v = t.rename_column(
+            ".".join(_seq(plan.column().name())), plan.newName()
+        )
+    else:  # DropColumns
+        cols = _seq(plan.columnsToDrop())
+        if len(cols) != 1:
+            raise ValueError("DROP COLUMN takes exactly one column")
+        v = t.drop_column(".".join(_seq(cols[0].name())))
+    # a temp view's analysis schema is frozen at registration —
+    # refresh the SQL binding so the ALTERed schema is what the
+    # next spark.sql sees (a stream running across the change
+    # keeps ITS analysis-time schema until restart, as ever)
+    lakebatch.register_table(spark, name, t.path)
+    return {"version": v}
 
 
-def _split_generated(
-    cols_ddl: str, cols_mask: str
-) -> tuple[str, dict[str, str]]:
-    """Strip ``GENERATED ALWAYS AS (expr)`` suffixes from a
-    column-def list -> (plain DDL for fromDDL, {col: expr})."""
-    gen: dict[str, str] = {}
-    plain: list[str] = []
-    for pt, pm in zip(
-        _split_top(cols_ddl, cols_mask, ","),
-        _split_top(cols_mask, cols_mask, ","),
+def _create_table(spark: SparkSession, stmt: str, plan):
+    """``CREATE [OR REPLACE] TABLE ... USING lake`` with a column list
+    (CreateTable / ReplaceTable) or a query (the AsSelect forms)."""
+    kind = _kind(plan)
+    spec = plan.tableSpec()
+    or_replace = kind.startswith("Replace")
+    if (_opt(spec.provider()) or "").lower() != "lake" or (
+        or_replace and not plan.orCreate()
     ):
-        gm = re.search(
-            r"\bGENERATED\s+ALWAYS\s+AS\s*\(", pm, re.IGNORECASE
-        )
-        if not gm:
-            plain.append(pt)
-            continue
-        expr, _em, end = _paren_body(pt, pm, gm.end() - 1)
-        if pm[end:].strip():
-            raise ValueError(
-                f"trailing text after GENERATED ALWAYS AS: "
-                f"{pt[end:].strip()!r}"
-            )
-        toks = pt[:gm.start()].split()
-        if not toks:
-            raise ValueError(
-                f"cannot parse generated column def {pt.strip()!r}"
-            )
-        gen[toks[0]] = expr.strip()
-        plain.append(pt[:gm.start()])
-    return ", ".join(plain), gen
-
-
-def _create_table(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+"
-        rf"(IF\s+NOT\s+EXISTS\s+)?({_IDENT})\s*",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
-        return spark.sql(text)
-    or_replace = bool(m.group(1))
-    if_not_exists = bool(m.group(2))
-    if or_replace and if_not_exists:
-        raise ValueError(
-            "CREATE OR REPLACE and IF NOT EXISTS are mutually "
-            "exclusive"
-        )
-    name = text[m.start(3):m.end(3)]
-    off = m.end()
-
-    # CREATE TABLE t SHALLOW CLONE src LOCATION 'p' — zero-copy
-    # branch of a registered lake table (Delta's CLONE shape: the
-    # create commit references the source's files by absolute path;
-    # the source gets a retention pin so its vacuum can't strand us)
-    scm = re.match(
-        rf"\s*SHALLOW\s+CLONE\s+({_IDENT})\s*",
-        masked[off:],
-        re.IGNORECASE,
-    )
-    if scm:
-        src_name = text[off + scm.start(1):off + scm.end(1)]
-        src_path = lakebatch.dml_target(spark, src_name)
-        if src_path is None:
-            return spark.sql(text)  # not a lake source: Spark reports
-        rest_t = text[off + scm.end():]
-        rest_m = masked[off + scm.end():]
-        lm = re.match(
-            r"\s*LOCATION\s+('_*')\s*$", rest_m, re.IGNORECASE
-        )
-        if not lm:
-            raise ValueError(
-                "SHALLOW CLONE takes exactly LOCATION '<path>' "
-                f"(got {rest_t.strip()!r})"
-            )
-        path = _unquote(rest_t[lm.start(1):lm.end(1)])
-        existing = LakeTable(path)
-        if existing.version() is not None:
-            if not if_not_exists:
-                raise FileExistsError(
-                    f"lake table already exists at {path}"
-                )
-            lakebatch.register_table(spark, name, path)
-            return {"version": existing.version(), "created": False}
-        t = LakeTable(src_path).clone_shallow(path)
-        lakebatch.register_table(spark, name, t.path)
-        return {
-            "version": t.version(), "created": True,
-            "cloned_from": src_path,
-        }
-
-    if not re.search(r"\bUSING\s+lake\b", masked, re.IGNORECASE):
-        # not a lake table: catalog CREATEs run natively
-        return spark.sql(text)
-    cols_ddl = cols_mask = None
-    if masked[off:].lstrip().startswith("("):
-        cols_ddl, cols_mask, off = _paren_body(text, masked, off)
-    tail, tail_mask = text[off:], masked[off:]
-    asi = _find_top(tail_mask, "AS")
-    head_t = tail[: asi if asi >= 0 else len(tail)]
-    head_m = tail_mask[: asi if asi >= 0 else len(tail_mask)]
-    select = (
-        _rewrite_reads(spark, tail[asi + 2:], tail_mask[asi + 2:])
-        if asi >= 0
-        else None
-    )
-
-    lm = re.search(r"\bLOCATION\s+('_*')", head_m, re.IGNORECASE)
-    if not lm:
+        # not a lake table: catalog CREATEs (and bare REPLACE) run
+        # natively
+        return spark.sql(stmt)
+    name = _relation(plan.name())[0]
+    path = _opt(spec.location())
+    if path is None:
         raise ValueError(
             "CREATE TABLE ... USING lake needs LOCATION '<path>' "
             "(external-table form; Spark 4.1 Python data sources "
             "cannot carry storage options through the catalog)"
         )
-    path = _unquote(head_t[lm.start(1):lm.end(1)])
-    partition_by = None
-    pm = re.search(
-        r"\bPARTITIONED\s+BY\s*\(([^)]*)\)", head_m, re.IGNORECASE
-    )
-    if pm:
-        partition_by = [
-            c.strip()
-            for c in head_t[pm.start(1):pm.end(1)].split(",")
-            if c.strip()
-        ]
-    props: dict[str, str] = {}
-    tm = re.search(r"\bTBLPROPERTIES\s*\(", head_m, re.IGNORECASE)
-    if tm:
-        body, bm, _end = _paren_body(head_t, head_m, tm.end() - 1)
-        props = _parse_props(body, bm)
-    leftover = re.sub(
-        r"\bUSING\s+lake\b|\bLOCATION\s+'_*'|"
-        r"\bPARTITIONED\s+BY\s*\([^)]*\)|\bTBLPROPERTIES\s*\(.*?\)",
-        "",
-        head_m,
-        flags=re.IGNORECASE | re.DOTALL,
-    ).strip()
-    if leftover:
+    if _opt(spec.comment()) is not None or not (
+        spec.optionExpression().options().isEmpty()
+    ):
         raise ValueError(
-            f"cannot parse CREATE TABLE clause {leftover!r} (grammar: "
-            "CREATE TABLE [IF NOT EXISTS] t [(col type, ...)] USING "
-            "lake LOCATION 'p' [PARTITIONED BY (cols)] "
-            "[TBLPROPERTIES ('k'='v', ...)] [AS SELECT ...])"
+            "CREATE TABLE ... USING lake takes LOCATION, PARTITIONED "
+            "BY and TBLPROPERTIES only (no COMMENT or OPTIONS)"
         )
+    transforms = _seq(plan.partitioning())
+    if any(p.name() != "identity" for p in transforms):
+        raise ValueError("PARTITIONED BY takes plain column names")
+    partition_by = [p.describe() for p in transforms] or None
+    props = _scala_map(spec.properties())
 
     existing = LakeTable(path)
     exists = existing.version() is not None
     if exists and not or_replace:
-        if not if_not_exists:
+        if not plan.ignoreIfExists():
             raise FileExistsError(
                 f"lake table already exists at {path} (use CREATE "
                 "TABLE IF NOT EXISTS to bind it, or CREATE OR "
@@ -1318,20 +763,26 @@ def _create_table(spark: SparkSession, text: str, masked: str):
         return {"version": existing.version(), "created": False}
 
     generated: dict[str, str] = {}
-    if select is not None:
-        if cols_ddl is not None:
-            raise ValueError(
-                "CREATE TABLE ... AS SELECT cannot also declare a "
-                "column list"
+    if kind.endswith("AsSelect"):
+        query = plan.query()
+        df = spark.sql(
+            _splice(
+                stmt, _read_cuts(spark, stmt, query), _span(query, stmt)[0]
             )
-        df = spark.sql(select)
+        )
     else:
-        if cols_ddl is None:
+        cols = _seq(plan.columns())
+        if not cols:
             raise ValueError(
                 "CREATE TABLE needs a column list or AS SELECT"
             )
-        plain_ddl, generated = _split_generated(cols_ddl, cols_mask)
-        df = spark.createDataFrame([], StructType.fromDDL(plain_ddl))
+        for c in cols:
+            expr = _opt(c.generationExpression())
+            if expr is not None:
+                generated[c.name()] = expr.strip()
+        df = spark.createDataFrame(
+            [], StructType([_struct_field(c.name(), c) for c in cols])
+        )
     if exists:
         # OR REPLACE on a live table = one atomic overwrite commit:
         # new contents AND schema land together, old versions stay
@@ -1369,78 +820,144 @@ def _create_table(spark: SparkSession, text: str, masked: str):
     return {"version": t.version(), "created": True}
 
 
-def _copy_into(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*COPY\s+INTO\s+({_IDENT})\s+FROM\s+('_*')\s*"
-        r"(?:FILEFORMAT\s*=\s*(\w+))?\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
-        raise ValueError(
-            f"cannot parse COPY INTO (grammar: COPY INTO t FROM "
-            f"'<path-or-glob>' [FILEFORMAT = PARQUET|CSV|JSON]): "
-            f"{text!r}"
-        )
-    name = text[m.start(1):m.end(1)]
-    t = _target(spark, name)
-    if t is None:
-        return spark.sql(text)
-    src = _unquote(text[m.start(2):m.end(2)])
-    fmt = (m.group(3) or "parquet").lower()
-    return _refresh(spark, name, t.copy_into(spark, src, fmt))
-
-
-def _drop_table(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?({_IDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
-        return spark.sql(text)
-    name = text[m.start(1):m.end(1)]
+def _drop_table(spark: SparkSession, stmt: str, plan):
+    name = _relation(plan.child())[0]
     if lakebatch.dml_target(spark, name) is None:
-        return spark.sql(text)
+        return spark.sql(stmt)
     lakebatch.unregister_table(spark, name)
     return {"dropped": name}
 
 
-def _show_tblproperties(spark: SparkSession, text: str, masked: str):
-    m = re.match(
-        rf"\s*SHOW\s+TBLPROPERTIES\s+({_IDENT})\s*$",
-        masked,
-        re.IGNORECASE,
-    )
-    if not m:
-        return spark.sql(text)
-    name = text[m.start(1):m.end(1)]
-    t = _target(spark, name)
+def _show_tblproperties(spark: SparkSession, stmt: str, plan):
+    t = _target(spark, _relation(plan.table())[0])
     if t is None:
-        return spark.sql(text)
+        return spark.sql(stmt)
     props = dict(t.properties())
     props["cdf"] = "true" if t.detail()["cdf"] else "false"
+    key = _opt(plan.propertyKey())
     return spark.createDataFrame(
-        sorted(props.items()), "key string, value string"
+        sorted((k, v) for k, v in props.items() if key in (None, k)),
+        "key string, value string",
     )
 
 
-def _describe_detail(spark: SparkSession, text: str, masked: str):
-    import json as _json
+# ------------------------------------- statements Spark's grammar lacks
+# Each handler takes the statement's match (its group ``t`` names the
+# lake table the statement acts on) and that table.
 
-    m = re.match(
-        rf"\s*DESCRIBE\s+DETAIL\s+({_IDENT})\s*$",
-        masked,
-        re.IGNORECASE,
+def _vacuum(spark: SparkSession, m, t: LakeTable):
+    # Delta VACUUM semantics: reclaim files unreferenced by the
+    # CURRENT version (and older than retention) — keep_versions=1,
+    # not the Python API's history-keeping default of 2; and a bare
+    # VACUUM defaults to Delta's 7-DAY retention, not the Python
+    # API's 24h (r12 advice — an operator typing plain VACUUM must
+    # not reclaim ~6 days earlier than Delta would). FORCE maps to
+    # force=True, the sub-floor retention override.
+    hours = m["hours"]
+    kwargs: dict = {
+        "keep_versions": 1,
+        "retention_seconds": (
+            float(hours) * 3600.0 if hours else 7 * 86400.0
+        ),
+    }
+    if m["dry"]:
+        kwargs["dry_run"] = True
+    if m["force"]:
+        kwargs["force"] = True
+    return _refresh(spark, m["t"], t.vacuum(**kwargs))
+
+
+def _restore(spark: SparkSession, m, t: LakeTable):
+    arg = m["arg"].strip("'\"")
+    if m["kind"].upper() == "VERSION":
+        v = t.restore(version=int(arg))
+    else:
+        v = t.restore(timestamp=arg)
+    return _refresh(spark, m["t"], {"version": v})
+
+
+def _optimize(spark: SparkSession, m, t: LakeTable):
+    pred, zorder = m["where"], m["zorder"]
+    cluster_by = [c.strip() for c in zorder.split(",")] if zorder else None
+    where = None
+    if pred is not None:
+        where = []
+        for c in _conjuncts(_parse(spark, pred, expression=True)):
+            p = _stats_predicate(c, pred)
+            if p is None:
+                raise ValueError(
+                    f"OPTIMIZE WHERE must be a conjunction of "
+                    f"`col <op> numeric` stats predicates (compaction "
+                    f"scope is file-granular); cannot translate "
+                    f"{_text(c, pred)!r}"
+                )
+            where.append(p)
+    return _refresh(
+        spark, m["t"],
+        t.compact(spark, 128 * 1024 * 1024, cluster_by=cluster_by,
+                  where=where),
     )
-    if not m:
-        return spark.sql(text)
-    name = text[m.start(1):m.end(1)]
-    t = _target(spark, name)
-    if t is None:
-        return spark.sql(text)  # no lake binding: let Spark report
+
+
+def _copy_into(spark: SparkSession, m, t: LakeTable):
+    fmt = (m["fmt"] or "parquet").lower()
+    return _refresh(
+        spark, m["t"], t.copy_into(spark, _unquote(m["src"]), fmt)
+    )
+
+
+def _shallow_clone(spark: SparkSession, m, src: LakeTable):
+    """Zero-copy branch of a registered lake table (Delta's CLONE
+    shape: the create commit references the source's files by
+    absolute path; the source gets a retention pin so its vacuum
+    can't strand us)."""
+    name, path = m["name"], _unquote(m["path"])
+    existing = LakeTable(path)
+    if existing.version() is not None:
+        if not m["if_not_exists"]:
+            raise FileExistsError(
+                f"lake table already exists at {path}"
+            )
+        lakebatch.register_table(spark, name, path)
+        return {"version": existing.version(), "created": False}
+    t = src.clone_shallow(path)
+    lakebatch.register_table(spark, name, t.path)
+    return {
+        "version": t.version(), "created": True,
+        "cloned_from": src.path,
+    }
+
+
+def _describe_history(spark: SparkSession, m, t: LakeTable):
+    recs = t.history(limit=int(m["limit"]) if m["limit"] else None)
+    rows = [
+        (
+            r["version"],
+            r["op"],
+            r["added"],
+            r["removed"],
+            json.dumps(
+                {
+                    k: v
+                    for k, v in r.items()
+                    if k not in ("version", "op", "added", "removed")
+                },
+                default=str,
+                sort_keys=True,
+            ),
+        )
+        for r in recs
+    ]
+    return spark.createDataFrame(
+        rows,
+        "version long, op string, added long, removed long, "
+        "detail string",
+    )
+
+
+def _describe_detail(spark: SparkSession, m, t: LakeTable):
     d = t.detail()
-    js = lambda v: _json.dumps(v, default=str, sort_keys=True)  # noqa: E731
+    js = lambda v: json.dumps(v, default=str, sort_keys=True)  # noqa: E731
     return spark.createDataFrame(
         [(
             d["path"], d["version"], float(d["ts"]), d["num_files"],
@@ -1456,6 +973,93 @@ def _describe_detail(spark: SparkSession, text: str, masked: str):
         "generated string, properties string, cloned_from string, "
         "pins string",
     )
+
+
+# ------------------------------------------------------------- dispatch
+
+_QUOTED = r"'(?:[^']|'')*'"
+
+# (head, full statement, grammar, handler), routed on the head BEFORE
+# Spark's parser: its grammar has none of these, and it misreads
+# DESCRIBE HISTORY/DETAIL as a column description
+_EXTENSIONS = (
+    (r"VACUUM\b",
+     rf"VACUUM\s+(?P<t>{_IDENT})"
+     r"(?:\s+RETAIN\s+(?P<hours>\d+(?:\.\d+)?)\s+HOURS)?"
+     r"(?P<dry>\s+DRY\s+RUN)?(?P<force>\s+FORCE)?",
+     "VACUUM t [RETAIN n HOURS] [DRY RUN] [FORCE]", _vacuum),
+    (r"RESTORE\b",
+     rf"RESTORE\s+(?:TABLE\s+)?(?P<t>{_IDENT})\s+TO\s+"
+     r"(?P<kind>VERSION|TIMESTAMP)\s+AS\s+OF\s+(?P<arg>.+)",
+     "RESTORE [TABLE] t TO VERSION|TIMESTAMP AS OF x", _restore),
+    (r"OPTIMIZE\b",
+     rf"OPTIMIZE\s+(?P<t>{_IDENT})(?:\s+WHERE\s+(?P<where>.+?))?"
+     r"(?:\s+ZORDER\s+BY\s*\((?P<zorder>[^)]*)\))?",
+     "OPTIMIZE t [WHERE <stats conjunction>] [ZORDER BY (c1, c2)]",
+     _optimize),
+    (r"COPY\s+INTO\b",
+     rf"COPY\s+INTO\s+(?P<t>{_IDENT})\s+FROM\s+(?P<src>{_QUOTED})"
+     r"(?:\s+FILEFORMAT\s*=\s*(?P<fmt>\w+))?",
+     "COPY INTO t FROM '<path-or-glob>' [FILEFORMAT = PARQUET|CSV|JSON]",
+     _copy_into),
+    (r"DESCRIBE\s+HISTORY\b",
+     rf"DESCRIBE\s+HISTORY\s+(?P<t>{_IDENT})(?:\s+LIMIT\s+(?P<limit>\d+))?",
+     "DESCRIBE HISTORY t [LIMIT n]", _describe_history),
+    (r"DESCRIBE\s+DETAIL\b",
+     rf"DESCRIBE\s+DETAIL\s+(?P<t>{_IDENT})",
+     "DESCRIBE DETAIL t", _describe_detail),
+    (rf"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?{_IDENT}\s+"
+     r"SHALLOW\s+CLONE\b",
+     r"CREATE\s+TABLE\s+(?P<if_not_exists>IF\s+NOT\s+EXISTS\s+)?"
+     rf"(?P<name>{_IDENT})\s+SHALLOW\s+CLONE\s+(?P<t>{_IDENT})"
+     rf"\s+LOCATION\s+(?P<path>{_QUOTED})",
+     "CREATE TABLE [IF NOT EXISTS] name SHALLOW CLONE t LOCATION "
+     "'<path>'", _shallow_clone),
+)
+
+
+def _extension(spark: SparkSession, stmt: str):
+    """Run ``stmt`` if it is one of the extension statements; None if
+    it is not. A statement whose lake table is no lake binding goes to
+    ``spark.sql`` untouched (Spark reports its own error)."""
+    for head, full, grammar, route in _EXTENSIONS:
+        h = re.match(head, stmt, re.IGNORECASE)
+        if h is None:
+            continue
+        m = re.fullmatch(full + r"\s*", stmt, re.IGNORECASE | re.DOTALL)
+        if m is None:
+            raise ValueError(
+                f"cannot parse {' '.join(h.group(0).upper().split())} "
+                f"clause in {stmt!r} (grammar: {grammar})"
+            )
+        t = _target(spark, m["t"])
+        return spark.sql(stmt) if t is None else route(spark, m, t)
+    return None
+
+
+# unresolved-plan node -> handler
+_ROUTES = {
+    "DeleteFromTable": _delete,
+    "UpdateTable": _update,
+    "MergeIntoTable": _merge,
+    "InsertIntoStatement": _insert,
+    "OverwriteByExpression": _insert,
+    "CreateTable": _create_table,
+    "CreateTableAsSelect": _create_table,
+    "ReplaceTable": _create_table,
+    "ReplaceTableAsSelect": _create_table,
+    "DropTable": _drop_table,
+    "ShowTableProperties": _show_tblproperties,
+    **dict.fromkeys(
+        ("AddColumns", "RenameColumn", "DropColumns", "AddCheckConstraint",
+         "DropConstraint", "SetTableProperties", "UnsetTableProperties"),
+        _alter,
+    ),
+}
+
+# statement heads whose parse errors are lake DML/DDL errors
+_LAKE_HEADS = ("MERGE", "DELETE", "UPDATE", "INSERT", "ALTER", "CREATE",
+               "DROP")
 
 
 def sql(spark: SparkSession, text: str):
@@ -1496,7 +1100,9 @@ def sql(spark: SparkSession, text: str):
       Spark 4.1 Python data sources drop storage options between
       catalog and scan); OR REPLACE on a live table is one atomic
       overwrite commit, history kept -> ``{version, created[,
-      replaced]}``
+      replaced]}``. TBLPROPERTIES keys Spark reserves (``owner``,
+      ``location``, ``provider``, ``external``) are refused, as in
+      Spark SQL
     - ``CREATE TABLE t SHALLOW CLONE src LOCATION 'p'`` ->
       clone_shallow + register_table (zero-copy branch, source
       retention-pinned) -> ``{version, created, cloned_from}``
@@ -1504,47 +1110,36 @@ def sql(spark: SparkSession, text: str):
       external-table semantics: the SQL binding goes, data and log
       stay -> ``{dropped}``
     - ``SHOW TBLPROPERTIES t`` / ``DESCRIBE DETAIL t`` -> DataFrames
-    - SELECT/WITH (and INSERT/CTAS query sides, MERGE USING
+    - any other statement (and INSERT/CTAS query sides, MERGE USING
       subqueries): ``FROM t VERSION|TIMESTAMP AS OF x`` and
       ``table_changes('t', since)`` rewrite to snapshot/CDF views
+
+    The extension statements Spark's grammar lacks are routed first,
+    by their head; every other shape is read from Spark's own parser
+    (:func:`_parse`). A statement Spark cannot parse raises ValueError
+    (chained from the ParseException) when its head is lake DML/DDL,
+    and goes to ``spark.sql`` untouched otherwise.
 
     Every mutating statement re-registers its own SQL binding before
     returning (read-your-writes: Spark pins a Python-DataSource scan
     at a view's first execution).
     """
     stmt = text.strip().rstrip(";").strip()
-    masked = _mask(stmt)
-    head = masked.lstrip().upper()
-    if head.startswith("MERGE"):
-        return _merge(spark, stmt, masked)
-    if head.startswith("DELETE"):
-        return _delete(spark, stmt, masked)
-    if head.startswith("UPDATE"):
-        return _update(spark, stmt, masked)
-    if head.startswith("INSERT"):
-        return _insert(spark, stmt, masked)
-    if head.startswith("VACUUM"):
-        return _vacuum(spark, stmt, masked)
-    if head.startswith("RESTORE"):
-        return _restore(spark, stmt, masked)
-    if head.startswith("OPTIMIZE"):
-        return _optimize(spark, stmt, masked)
-    if re.match(r"\s*DESCRIBE\s+HISTORY\b", head):
-        return _describe_history(spark, stmt, masked)
-    if re.match(r"\s*DESCRIBE\s+DETAIL\b", head):
-        return _describe_detail(spark, stmt, masked)
-    if head.startswith("ALTER"):
-        return _alter(spark, stmt, masked)
-    if head.startswith("CREATE"):
-        return _create_table(spark, stmt, masked)
-    if head.startswith("DROP"):
-        return _drop_table(spark, stmt, masked)
-    if re.match(r"\s*COPY\s+INTO\b", head):
-        return _copy_into(spark, stmt, masked)
-    if re.match(r"\s*SHOW\s+TBLPROPERTIES\b", head):
-        return _show_tblproperties(spark, stmt, masked)
-    if re.match(r"\s*(SELECT|WITH)\b", head):
-        # read-side lake extensions: VERSION|TIMESTAMP AS OF and
-        # table_changes() rewrite to registered snapshot views
-        return spark.sql(_rewrite_reads(spark, stmt, masked))
-    return spark.sql(text)
+    done = _extension(spark, stmt)
+    if done is not None:
+        return done
+    try:
+        plan = _parse(spark, stmt)
+    except ParseException as e:
+        head = stmt.split(None, 1)[0].upper() if stmt else ""
+        if head in _LAKE_HEADS:
+            reason = str(e).strip().splitlines()[0]
+            raise ValueError(
+                f"cannot parse {head} statement: {reason}"
+            ) from e
+        return spark.sql(text)
+    route = _ROUTES.get(_kind(plan))
+    if route is not None:
+        return route(spark, stmt, plan)
+    cuts = _read_cuts(spark, stmt, plan)
+    return spark.sql(_splice(stmt, cuts) if cuts else text)

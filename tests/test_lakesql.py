@@ -105,21 +105,26 @@ def test_sql_update_string_literal_with_keyword(spark, orders, tmp_path):
 
 def test_auto_prune_literal_with_and_inside(spark):
     """Regression (r12 advice, high): an ' AND ' inside a string
-    literal must not misalign conjunct pairing — the old zip of two
-    independent re.split passes emitted a prune hint taken from
-    literal CONTENTS, silently skipping files that held real
-    matches."""
+    literal must not yield a prune hint taken from literal CONTENTS,
+    which would silently skip files that held real matches. The hint
+    is read off Spark's expression tree, where a literal is one leaf
+    whatever its quoting."""
     from olist_data_warehouse_spark.sources.lakesql import (
-        _auto_prune, _mask,
+        _parse, _prune_hint,
     )
-    pred = "msg = 'x AND c = 3 AND y' AND d > 5"
-    assert _auto_prune(pred, _mask(pred)) == ("d", ">", 5)
+
+    def hint(pred):
+        return _prune_hint(_parse(spark, pred, expression=True), pred)
+
+    assert hint("msg = 'x AND c = 3 AND y' AND d > 5") == ("d", ">", 5)
     # literal-only predicate: no numeric conjunct, no hint
-    solo = "msg = 'a AND b = 1'"
-    assert _auto_prune(solo, _mask(solo)) is None
-    # parenthesized conjuncts are skipped, later flat one is used
-    par = "(a = 1 AND b = 2) AND d >= 7"
-    assert _auto_prune(par, _mask(par)) == ("d", ">=", 7)
+    assert hint("msg = 'a AND b = 1'") is None
+    # parentheses only group: the AND-flattened conjuncts are a = 1,
+    # b = 2 and d >= 7, and the first numeric one is the hint
+    assert hint("(a = 1 AND b = 2) AND d >= 7") == ("a", "=", 1)
+    # a double-quoted literal is a string too (Spark's default
+    # dialect), so nothing inside it becomes a conjunct
+    assert hint('msg <> "x AND c = -1 AND y" AND d > 5') == ("d", ">", 5)
 
 
 def test_sql_delete_literal_and_does_not_poison_prune(
@@ -385,6 +390,79 @@ def test_sql_select_falls_through(spark, orders, tmp_path):
     assert got == orders.count()
 
 
+# ------------------------------------------------------- parser seam
+
+_CREATE_GENERATED = (
+    "CREATE TABLE t (k INT, d INT GENERATED ALWAYS AS (k + 1)) "
+    "USING lake LOCATION '/p'"
+)
+# one statement per shape the dispatcher reads off Spark's parser, and
+# the unresolved-plan node it routes on (Spark 4.1)
+_PLAN_NODES = {
+    "DELETE FROM t AS a WHERE a.k > 1": "DeleteFromTable",
+    "UPDATE t SET v = 1 WHERE k = 2": "UpdateTable",
+    "MERGE INTO t USING s ON t.k = s.k "
+    "WHEN MATCHED AND t.v > 1 THEN DELETE "
+    "WHEN MATCHED THEN UPDATE SET * "
+    "WHEN NOT MATCHED THEN INSERT (k) VALUES (s.k) "
+    "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 0": "MergeIntoTable",
+    "INSERT INTO t (k) VALUES (1)": "InsertIntoStatement",
+    "INSERT OVERWRITE t SELECT * FROM s": "InsertIntoStatement",
+    "INSERT INTO t REPLACE WHERE k > 1 SELECT * FROM s":
+        "OverwriteByExpression",
+    "ALTER TABLE t ADD COLUMNS (x INT)": "AddColumns",
+    "ALTER TABLE t RENAME COLUMN x TO y": "RenameColumn",
+    "ALTER TABLE t DROP COLUMN x": "DropColumns",
+    "ALTER TABLE t ADD CONSTRAINT c CHECK (k > 0)": "AddCheckConstraint",
+    "ALTER TABLE t DROP CONSTRAINT c": "DropConstraint",
+    "ALTER TABLE t SET TBLPROPERTIES ('a' = 'b')": "SetTableProperties",
+    "ALTER TABLE t UNSET TBLPROPERTIES ('a')": "UnsetTableProperties",
+    _CREATE_GENERATED: "CreateTable",
+    "CREATE TABLE t USING lake LOCATION '/p' AS SELECT 1 AS k":
+        "CreateTableAsSelect",
+    "CREATE OR REPLACE TABLE t (k INT) USING lake LOCATION '/p'":
+        "ReplaceTable",
+    "CREATE OR REPLACE TABLE t USING lake LOCATION '/p' AS SELECT 1":
+        "ReplaceTableAsSelect",
+    "DROP TABLE IF EXISTS t": "DropTable",
+    "SHOW TBLPROPERTIES t": "ShowTableProperties",
+}
+
+
+def test_parser_seam_plan_nodes(spark, tmp_path, monkeypatch):
+    """Pins the one internal-API seam: ``lakesql._parse`` returns the
+    node classes the dispatcher routes on, the read extensions are
+    reachable through ``children()`` and ``innerChildren()``, a
+    generated column arrives as its text, and DESCRIBE HISTORY /
+    DETAIL never reach the parser (Spark reads both as a column
+    description). A Spark upgrade that renames a node fails here."""
+    from olist_data_warehouse_spark.sources.lakesql import (
+        _kind, _parse, _seq, _walk,
+    )
+
+    for stmt, node in _PLAN_NODES.items():
+        assert _kind(_parse(spark, stmt)) == node, stmt
+    cols = _seq(_parse(spark, _CREATE_GENERATED).columns())
+    assert cols[1].generationExpression().get() == "k + 1"
+    reads = _parse(
+        spark,
+        "WITH c AS (SELECT * FROM t VERSION AS OF 1) SELECT * FROM c "
+        "WHERE k IN (SELECT k FROM table_changes('t', 2))",
+    )
+    kinds = {_kind(n) for n in _walk(reads)}
+    assert {"RelationTimeTravel", "UnresolvedTableValuedFunction"} <= kinds
+
+    t = LakeTable.create(spark.range(3), str(tmp_path / "seam"))
+    lakebatch.register_table(spark, "seam_t", t.path)
+    calls = []
+    monkeypatch.setattr(
+        lakesql, "_parse", lambda *a, **k: calls.append(a[1])
+    )
+    assert lakesql.sql(spark, "DESCRIBE HISTORY seam_t").count() == 1
+    assert lakesql.sql(spark, "DESCRIBE DETAIL seam_t").first()["rows"] == 3
+    assert calls == []
+
+
 # --------------------------------------------- engine-level extensions
 
 def test_engine_partial_set_keeps_unassigned(spark, orders, tmp_path):
@@ -572,9 +650,16 @@ def test_sql_create_insert_alter_roundtrip(spark, tmp_path):
     r = lakesql.sql(
         spark,
         f"CREATE TABLE ddl_t1 (id INT, name STRING) USING lake "
-        f"LOCATION '{p}' TBLPROPERTIES ('owner' = 'alice')",
+        f"LOCATION '{p}' TBLPROPERTIES ('steward' = 'alice')",
     )
     assert r == {"version": 1, "created": True}  # v0 create + v1 props
+    # Spark's grammar reserves 'owner' (and 'location', 'provider',
+    # 'external') as table properties; a lake table follows it
+    with pytest.raises(ValueError, match="owner is a reserved"):
+        lakesql.sql(
+            spark,
+            "ALTER TABLE ddl_t1 SET TBLPROPERTIES ('owner' = 'alice')",
+        )
     lakesql.sql(
         spark, "INSERT INTO ddl_t1 VALUES (1, 'a'), (2, 'b'), (3, 'c')"
     )
@@ -987,7 +1072,7 @@ def test_sql_create_or_replace(spark, tmp_path):
     old = LakeTable(p).read(spark, version=1)
     assert [tuple(x) for x in old.collect()] == [(1, "a")]
     # guards: partition change and generated redeclare refuse
-    with pytest.raises(ValueError, match="mutually exclusive"):
+    with pytest.raises(ValueError, match="cannot parse CREATE.*'NOT'"):
         lakesql.sql(
             spark,
             f"CREATE OR REPLACE TABLE IF NOT EXISTS corp_t (x INT) "
@@ -1085,7 +1170,9 @@ def test_sql_insert_replace_where(spark, orders, tmp_path):
             "INSERT INTO rw_sql REPLACE WHERE o_totalprice >= 400000.0"
             " SELECT * FROM rw_src WHERE o_totalprice < 400000.0",
         )
-    with pytest.raises(ValueError, match="INSERT OVERWRITE"):
+    with pytest.raises(
+        ValueError, match="cannot parse INSERT.*'REPLACE'"
+    ):
         lakesql.sql(
             spark,
             "INSERT OVERWRITE rw_sql REPLACE WHERE o_totalprice > 0 "

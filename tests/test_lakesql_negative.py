@@ -1,9 +1,10 @@
 """Negative-grammar battery for the lakesql dispatcher (r12 verdict
 #3): every statement route gets fed syntax it does NOT support and
 must reject loudly with a targeted message — a silent misparse can
-never ship. Companion mask-mutation guards pin that the rejects scan
-the MASK, so keywords inside string literals never trip them (a
-mutation that breaks one _mask rule fails these).
+never ship. Companion literal guards pin that the rejects read Spark's
+parse tree, so keywords inside string literals never trip them, and
+the misread battery pins that comments and double-quoted literals
+mean what Spark's grammar says.
 
 Rejects for routes not covered here live in test_lakesql.py:
 MERGE cross-named/non-equi ON keys, INSERT unknown columns / count
@@ -91,9 +92,9 @@ def test_replace_where_rejects_subquery_predicate(spark, t):
         )
 
 
-# ------------------------------- mask-mutation guards (literals with
-# keywords must NOT trip the rejects — these fail if a _mask rule or
-# a reject scans raw text instead of the mask)
+# ------------------------------------ literal guards (literals with
+# keywords must NOT trip the rejects — these fail if a reject scans
+# raw text instead of the parse tree)
 
 def test_literal_select_does_not_trip_subquery_reject(spark, t):
     r = lakesql.sql(
@@ -127,7 +128,7 @@ def test_literal_select_in_delete_where_is_fine(spark, t):
 def test_merge_rejects_join_in_using(spark, t):
     """Multi-table USING (a JOIN b) must be parenthesized as a
     subquery; the bare form is outside the grammar."""
-    with pytest.raises(ValueError, match="cannot parse table"):
+    with pytest.raises(ValueError, match="cannot parse MERGE.*'JOIN'"):
         lakesql.sql(
             spark,
             "MERGE INTO neg_t USING a JOIN b ON a.k = b.k "
@@ -147,9 +148,7 @@ def test_merge_rejects_unparseable_when_kind(spark, t):
     spark.range(3).toDF("o_orderkey").createOrReplaceTempView(
         "neg_src2"
     )
-    with pytest.raises(
-        ValueError, match="must be UPDATE SET or DELETE"
-    ):
+    with pytest.raises(ValueError, match="cannot parse MERGE.*'UPSERT'"):
         lakesql.sql(
             spark,
             "MERGE INTO neg_t USING neg_src2 AS s "
@@ -173,10 +172,49 @@ def test_copy_into_rejects_bad_grammar(spark, t):
 
 
 def test_update_rejects_unparseable_set(spark, t):
-    with pytest.raises(ValueError, match="cannot parse SET"):
+    with pytest.raises(ValueError, match="cannot parse UPDATE.*'42'"):
         lakesql.sql(spark, "UPDATE neg_t SET 42")
 
 
 def test_optimize_rejects_bad_zorder(spark, t):
     with pytest.raises(ValueError, match="ZORDER"):
         lakesql.sql(spark, "OPTIMIZE neg_t ZORDER BY o_orderkey")
+
+
+# ----------------------------------------------- misreads of valid SQL
+
+@pytest.mark.parametrize(
+    "stmt, changed",
+    [
+        # the commented-out conjunct must not become the prune hint
+        ("DELETE FROM misread_t WHERE k > 400 -- AND k < 3", 599),
+        # a double-quoted literal is a string: nothing inside it is a
+        # conjunct
+        ("DELETE FROM misread_t WHERE s <> \"x AND k = -1 AND y\" "
+         "AND k > 400", 599),
+        # a commented-out WHERE is no filter at all
+        ("UPDATE misread_t SET v = 1\n-- WHERE k = 2", 1000),
+    ],
+    ids=["comment_conjunct", "double_quoted_and", "comment_where"],
+)
+def test_valid_sql_is_not_misread(spark, tmp_path, stmt, changed):
+    """1,000 rows, k = 0..999 in 8 range files: each statement is
+    valid SQL whose effect a keyword scan over the raw text got wrong
+    (0, 0 and 1 rows changed)."""
+    t = LakeTable.create(
+        spark.range(1000).select(
+            F.col("id").alias("k"), F.lit("y").alias("s"),
+            F.lit(0).alias("v"),
+        ).repartitionByRange(8, "k"),
+        str(tmp_path / "misread"),
+    )
+    lakebatch.register_table(spark, "misread_t", t.path)
+    r = lakesql.sql(spark, stmt)
+    got = t.read(spark)
+    if stmt.startswith("DELETE"):
+        assert r["rows_deleted"] == changed
+        assert got.count() == 1000 - changed
+        assert got.where("k > 400").count() == 0
+    else:
+        assert r["rows_updated"] == changed
+        assert got.where("v = 1").count() == changed
