@@ -85,9 +85,12 @@ Spark has no grammar for ``VACUUM``, ``RESTORE``, ``OPTIMIZE``,
 patterns, routed before the parser (an ``OPTIMIZE ... WHERE``
 predicate still goes through Spark's expression parser). A statement
 Spark's grammar rejects raises ValueError chained from its
-ParseException when it is lake DML/DDL, and reaches ``spark.sql``
-untouched otherwise; unsupported shapes raise ValueError with the
-exact reason — never a silent misparse.
+ParseException when it is a ``CREATE ... USING lake`` or names a lake
+table, and reaches ``spark.sql`` untouched otherwise; unsupported
+shapes raise ValueError with the exact reason — never a silent
+misparse. The one place the lake departs from Spark's grammar: table
+properties Spark reserves for its catalog (``owner``, ``location``,
+``provider``, ``external``) are ordinary keys in a lake table's log.
 """
 
 from __future__ import annotations
@@ -108,6 +111,10 @@ from olist_data_warehouse_spark.sources import lakebatch
 from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_.]*"
+_NOT_RESERVED = "spark.sql.legacy.notReserveProperties"
+_MARK = "\x1f"  # renames a reserved property key past the grammar
+_CREATES = ("CreateTable", "CreateTableAsSelect", "ReplaceTable",
+            "ReplaceTableAsSelect")
 
 
 def _parse(spark: SparkSession, text: str, expression: bool = False):
@@ -139,11 +146,17 @@ def _kind(node) -> str:
     return node.getClass().getSimpleName()
 
 
-def _scala_map(jmap) -> dict[str, str]:
+def _key(k: str) -> str:
+    """A table-property key as the user typed it (without the mark
+    :func:`_unreserve` puts on a reserved one)."""
+    return k.removeprefix(_MARK)
+
+
+def _properties(jmap) -> dict[str, str]:
     out, it = {}, jmap.iterator()
     while it.hasNext():
         kv = it.next()
-        out[kv._1()] = kv._2()
+        out[_key(kv._1())] = kv._2()
     return out
 
 
@@ -502,13 +515,6 @@ def _merge(spark: SparkSession, stmt: str, plan) -> dict:
     )
 
 
-def _table_cols(t: LakeTable) -> tuple[list[str], dict[str, str]]:
-    state = t._state()
-    return [f["name"] for f in state["schema"]["fields"]], t._generated(
-        state
-    )
-
-
 def _insert(spark: SparkSession, stmt: str, plan):
     """``INSERT INTO|OVERWRITE`` (InsertIntoStatement) and ``INSERT INTO
     ... REPLACE WHERE`` (OverwriteByExpression)."""
@@ -526,7 +532,9 @@ def _insert(spark: SparkSession, stmt: str, plan):
             "BY NAME clause"
         )
     t = LakeTable(path)
-    cols, gen = _table_cols(t)
+    state = t._state()
+    stype = StructType.fromJson(state["schema"])
+    cols, gen = stype.fieldNames(), t._generated(state)
     given = None if replace else (_seq(plan.userSpecifiedCols()) or None)
     if given is not None:
         bad = sorted(set(given) - set(cols))
@@ -548,7 +556,6 @@ def _insert(spark: SparkSession, stmt: str, plan):
             f"{len(names)}, query produces {len(df.columns)}"
         )
     df = df.toDF(*names)  # SQL INSERT is positional
-    stype = StructType.fromJson(t._state()["schema"])
     ftypes = {f.name: f.dataType for f in stype.fields}
     # SQL store-assignment coercion: each provided column casts to the
     # target's declared type (ANSI cast — a literal INT lands in a
@@ -685,9 +692,13 @@ def _alter(spark: SparkSession, stmt: str, plan):
     if kind == "DropConstraint":
         return {"version": t.drop_constraint(plan.name())}
     if kind == "SetTableProperties":
-        return {"version": t.set_properties(_scala_map(plan.properties()))}
+        return {"version": t.set_properties(_properties(plan.properties()))}
     if kind == "UnsetTableProperties":
-        return {"version": t.unset_properties(_seq(plan.propertyKeys()))}
+        return {
+            "version": t.unset_properties(
+                [_key(k) for k in _seq(plan.propertyKeys())]
+            )
+        }
     if kind == "AddColumns":
         cols = _seq(plan.columnsToAdd())
         if any(
@@ -748,7 +759,7 @@ def _create_table(spark: SparkSession, stmt: str, plan):
     if any(p.name() != "identity" for p in transforms):
         raise ValueError("PARTITIONED BY takes plain column names")
     partition_by = [p.describe() for p in transforms] or None
-    props = _scala_map(spec.properties())
+    props = _properties(spec.properties())
 
     existing = LakeTable(path)
     exists = existing.version() is not None
@@ -777,6 +788,15 @@ def _create_table(spark: SparkSession, stmt: str, plan):
                 "CREATE TABLE needs a column list or AS SELECT"
             )
         for c in cols:
+            if (
+                _opt(c.defaultValue()) is not None
+                or _opt(c.identityColumnSpec()) is not None
+            ):
+                raise ValueError(
+                    f"column {c.name()!r}: a lake table column takes no "
+                    "DEFAULT or GENERATED ... AS IDENTITY (GENERATED "
+                    "ALWAYS AS (expr) is the computed-column form)"
+                )
             expr = _opt(c.generationExpression())
             if expr is not None:
                 generated[c.name()] = expr.strip()
@@ -1044,10 +1064,7 @@ _ROUTES = {
     "MergeIntoTable": _merge,
     "InsertIntoStatement": _insert,
     "OverwriteByExpression": _insert,
-    "CreateTable": _create_table,
-    "CreateTableAsSelect": _create_table,
-    "ReplaceTable": _create_table,
-    "ReplaceTableAsSelect": _create_table,
+    **dict.fromkeys(_CREATES, _create_table),
     "DropTable": _drop_table,
     "ShowTableProperties": _show_tblproperties,
     **dict.fromkeys(
@@ -1057,9 +1074,80 @@ _ROUTES = {
     ),
 }
 
-# statement heads whose parse errors are lake DML/DDL errors
-_LAKE_HEADS = ("MERGE", "DELETE", "UPDATE", "INSERT", "ALTER", "CREATE",
-               "DROP")
+# A table-property key Spark's grammar reserves for its catalog, as a
+# bare, single- or double-quoted token. A lake table keeps its
+# properties in its own log, where these are ordinary keys.
+_RESERVED_KEY = re.compile(
+    r"(?<![\w'\"`])(['\"]?)(owner|location|provider|external)\1"
+    r"(?![\w'\"`])"
+)
+
+
+def _unreserve(spark: SparkSession, stmt: str):
+    """``stmt`` with its reserved table-property keys (``owner``,
+    ``location``, ``provider``, ``external``) renamed so that Spark's
+    grammar takes them, and its plan; None if Spark still refuses it
+    or it creates no lake table. A rename shifts the parser origins
+    after it, so the caller routes the renamed text with the plan.
+
+    Each candidate token is renamed only if the rename adds a property
+    key: with ``spark.sql.legacy.notReserveProperties`` set, the
+    parser drops every reserved key still spelled as typed, so a
+    renamed token adds a key only where it is one. A column named
+    ``location``, a value, a literal or a comment is never renamed.
+    Handlers read the keys back through :func:`_key`. The conf is the
+    session's: a statement another thread parses during these trials
+    has its reserved keys dropped rather than refused."""
+
+    def n_keys(text: str) -> int:
+        plan = _parse(spark, text)
+        kind = _kind(plan)
+        if kind in _CREATES:
+            return plan.tableSpec().properties().size()
+        if kind == "SetTableProperties":
+            return plan.properties().size()
+        if kind == "UnsetTableProperties":
+            return plan.propertyKeys().size()
+        return 0
+
+    old = spark.conf.get(_NOT_RESERVED, "false")
+    spark.conf.set(_NOT_RESERVED, "true")
+    try:
+        text, keys = stmt, n_keys(stmt)
+        # right to left, so each accepted rename leaves the offsets of
+        # the candidates before it valid
+        for m in reversed(list(_RESERVED_KEY.finditer(stmt))):
+            trial = f"{text[:m.start()]}'{_MARK}{m[2]}'{text[m.end():]}"
+            try:
+                n = n_keys(trial)
+            except ParseException:
+                continue
+            if n > keys:
+                text, keys = trial, n
+    except ParseException:
+        return None
+    finally:
+        spark.conf.set(_NOT_RESERVED, old)
+    try:
+        plan = _parse(spark, text)
+    except ParseException:
+        return None
+    if _kind(plan) in _CREATES and (
+        (_opt(plan.tableSpec().provider()) or "").lower() != "lake"
+    ):
+        return None  # a catalog table: Spark's refusal stands
+    return text, plan
+
+
+# what marks a statement Spark's grammar rejects as meant for the lake:
+# DML/ALTER/DROP naming a table ``t`` that is a lake binding, or a
+# CREATE ... USING lake. Anything else is Spark's to report.
+_LAKE_STATEMENT = re.compile(
+    r"(?:MERGE\s+INTO|DELETE\s+FROM|UPDATE|INSERT\s+(?:INTO|OVERWRITE)"
+    r"(?:\s+TABLE)?|ALTER\s+TABLE|DROP\s+TABLE(?:\s+IF\s+EXISTS)?)"
+    rf"\s+(?P<t>{_IDENT})|CREATE\b.*\bUSING\s+lake\b",
+    re.IGNORECASE | re.DOTALL,
+)
 
 
 def sql(spark: SparkSession, text: str):
@@ -1100,9 +1188,10 @@ def sql(spark: SparkSession, text: str):
       Spark 4.1 Python data sources drop storage options between
       catalog and scan); OR REPLACE on a live table is one atomic
       overwrite commit, history kept -> ``{version, created[,
-      replaced]}``. TBLPROPERTIES keys Spark reserves (``owner``,
-      ``location``, ``provider``, ``external``) are refused, as in
-      Spark SQL
+      replaced]}``. TBLPROPERTIES keys Spark reserves for its catalog
+      (``owner``, ``location``, ``provider``, ``external``) are
+      ordinary properties of a lake table (:func:`_unreserve`);
+      column ``DEFAULT`` and ``IDENTITY`` clauses are refused
     - ``CREATE TABLE t SHALLOW CLONE src LOCATION 'p'`` ->
       clone_shallow + register_table (zero-copy branch, source
       retention-pinned) -> ``{version, created, cloned_from}``
@@ -1117,8 +1206,9 @@ def sql(spark: SparkSession, text: str):
     The extension statements Spark's grammar lacks are routed first,
     by their head; every other shape is read from Spark's own parser
     (:func:`_parse`). A statement Spark cannot parse raises ValueError
-    (chained from the ParseException) when its head is lake DML/DDL,
-    and goes to ``spark.sql`` untouched otherwise.
+    (chained from the ParseException) when it is a ``CREATE ... USING
+    lake`` or names a registered lake table, and goes to ``spark.sql``
+    untouched otherwise.
 
     Every mutating statement re-registers its own SQL binding before
     returning (read-your-writes: Spark pins a Python-DataSource scan
@@ -1131,13 +1221,21 @@ def sql(spark: SparkSession, text: str):
     try:
         plan = _parse(spark, stmt)
     except ParseException as e:
-        head = stmt.split(None, 1)[0].upper() if stmt else ""
-        if head in _LAKE_HEADS:
+        lake = _LAKE_STATEMENT.match(stmt)
+        if lake is None or lake["t"] and (
+            lakebatch.dml_target(spark, lake["t"]) is None
+        ):
+            return spark.sql(text)
+        renamed = None
+        if e.getCondition() == "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY":
+            renamed = _unreserve(spark, stmt)
+        if renamed is None:
+            head = stmt.split(None, 1)[0].upper()
             reason = str(e).strip().splitlines()[0]
             raise ValueError(
                 f"cannot parse {head} statement: {reason}"
             ) from e
-        return spark.sql(text)
+        stmt, plan = renamed
     route = _ROUTES.get(_kind(plan))
     if route is not None:
         return route(spark, stmt, plan)

@@ -6,6 +6,7 @@ SQL surface honest (per-clause SET maps, column-list INSERT)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from olist_data_warehouse_spark.sources import lakebatch, lakesql
@@ -650,16 +651,9 @@ def test_sql_create_insert_alter_roundtrip(spark, tmp_path):
     r = lakesql.sql(
         spark,
         f"CREATE TABLE ddl_t1 (id INT, name STRING) USING lake "
-        f"LOCATION '{p}' TBLPROPERTIES ('steward' = 'alice')",
+        f"LOCATION '{p}' TBLPROPERTIES ('owner' = 'alice')",
     )
     assert r == {"version": 1, "created": True}  # v0 create + v1 props
-    # Spark's grammar reserves 'owner' (and 'location', 'provider',
-    # 'external') as table properties; a lake table follows it
-    with pytest.raises(ValueError, match="owner is a reserved"):
-        lakesql.sql(
-            spark,
-            "ALTER TABLE ddl_t1 SET TBLPROPERTIES ('owner' = 'alice')",
-        )
     lakesql.sql(
         spark, "INSERT INTO ddl_t1 VALUES (1, 'a'), (2, 'b'), (3, 'c')"
     )
@@ -687,6 +681,59 @@ def test_sql_create_insert_alter_roundtrip(spark, tmp_path):
         "SELECT id, score FROM ddl_t1 ORDER BY id"
     ).collect()
     assert [tuple(x) for x in got] == [(1, None), (2, 3.0), (3, 4.5)]
+
+
+def test_sql_reserved_property_keys_are_lake_properties(spark, tmp_path):
+    """Spark's grammar refuses the table properties its catalog owns
+    (owner, location, provider, external). A lake table keeps its
+    properties in its own log, so there they are ordinary keys, in
+    every spelling the property grammar takes. A column named like a
+    reserved key, a comment and a value stay as typed."""
+    p = str(tmp_path / "reserved")
+    lakesql.sql(
+        spark,
+        f"CREATE TABLE res_t (id INT, location STRING) USING lake "
+        f"LOCATION '{p}' -- 'owner' = 'nobody'\n"
+        f"TBLPROPERTIES ('steward' = 'owner', 'owner' = 'alice', "
+        f"location = 'owner')",
+    )
+    assert spark.sql("SELECT * FROM res_t").columns == ["id", "location"]
+    t = LakeTable(p)
+    assert t.properties() == {
+        "steward": "owner", "owner": "alice", "location": "owner"
+    }
+    lakesql.sql(
+        spark,
+        "ALTER TABLE res_t SET TBLPROPERTIES "
+        "(\"provider\" = 'x', external = 'true', owner = 'carol')",
+    )
+    assert t.properties() == {
+        "steward": "owner", "owner": "carol", "location": "owner",
+        "provider": "x", "external": "true",
+    }
+    lakesql.sql(
+        spark, "ALTER TABLE res_t UNSET TBLPROPERTIES ('owner', location)"
+    )
+    assert t.properties() == {
+        "steward": "owner", "provider": "x", "external": "true"
+    }
+    # the renamed key shifts the text after it: the query of a CTAS
+    # must still be read from the right place
+    r = lakesql.sql(
+        spark,
+        f"CREATE OR REPLACE TABLE res_t USING lake LOCATION '{p}' "
+        f"TBLPROPERTIES (owner = 'dave') AS SELECT 7 AS id, 'eu' AS location",
+    )
+    assert r["replaced"]
+    got = spark.sql("SELECT * FROM res_t").collect()
+    assert [tuple(x) for x in got] == [(7, "eu")]
+    assert t.properties()["owner"] == "dave"
+    # a catalog table is Spark's to refuse, with Spark's own error
+    spark.range(1).createOrReplaceTempView("res_plain")
+    with pytest.raises(ParseException, match="owner is a reserved"):
+        lakesql.sql(
+            spark, "ALTER TABLE res_plain SET TBLPROPERTIES ('owner' = 'a')"
+        )
 
 
 def test_sql_add_column_never_resurrects_dropped_data(spark, tmp_path):

@@ -16,6 +16,7 @@ option conflicts, REPLACE WHERE with column list / OVERWRITE.
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import ParseException
 from pyspark.sql import functions as F
 
 from olist_data_warehouse_spark.sources import lakebatch, lakesql
@@ -179,6 +180,55 @@ def test_update_rejects_unparseable_set(spark, t):
 def test_optimize_rejects_bad_zorder(spark, t):
     with pytest.raises(ValueError, match="ZORDER"):
         lakesql.sql(spark, "OPTIMIZE neg_t ZORDER BY o_orderkey")
+
+
+@pytest.mark.parametrize(
+    "column",
+    ["v INT DEFAULT 5", "v BIGINT GENERATED ALWAYS AS IDENTITY"],
+    ids=["default", "identity"],
+)
+def test_create_rejects_column_default_and_identity(
+    spark, tmp_path, column
+):
+    """Spark's grammar takes both clauses, but a lake table has no
+    column default or identity: read past, an INSERT that omits the
+    column would land NULL where the statement promised a value."""
+    p = str(tmp_path / "coldef")
+    with pytest.raises(ValueError, match="DEFAULT or GENERATED"):
+        lakesql.sql(
+            spark,
+            f"CREATE TABLE coldef_t (k INT, {column}) USING lake "
+            f"LOCATION '{p}'",
+        )
+    assert LakeTable(p).version() is None
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        "CREATE VIEW neg_v AS SELEC 1",
+        "DROP FUNCTION",
+        "DELETE FROM neg_not_lake WHERE k >",
+        "ALTER TABLE neg_not_lake ADD COLUMNS",
+    ],
+    ids=["create_view", "drop_function", "delete", "alter"],
+)
+def test_parse_error_outside_the_lake_is_sparks(spark, stmt):
+    """Malformed text that names no lake table (and no ``USING
+    lake``) reaches ``spark.sql`` untouched, so the caller gets
+    Spark's own ParseException, not the lake's ValueError."""
+    with pytest.raises(ParseException):
+        lakesql.sql(spark, stmt)
+
+
+def test_parse_error_in_lake_create_is_a_value_error(spark, tmp_path):
+    with pytest.raises(ValueError, match="cannot parse CREATE") as e:
+        lakesql.sql(
+            spark,
+            f"CREATE TABLE neg_c (k INT,) USING lake "
+            f"LOCATION '{tmp_path / 'neg_c'}'",
+        )
+    assert isinstance(e.value.__cause__, ParseException)
 
 
 # ----------------------------------------------- misreads of valid SQL
