@@ -317,8 +317,7 @@ def interval_overlap_join_binned(
         # bin_us 0 (division by zero in every bin expression), and a
         # single zero-length side bins [floor(s/bin), floor((s-1)/bin)]
         # which can run DESCENDING and emit spurious bins ahead of the
-        # overlap>0 filter. Same guard style as vacuum_versioned's
-        # keep >= 1.
+        # overlap>0 filter.
         raise ValueError(
             "interval lengths must be >= 1 second (end-exclusive "
             f"[s, s+len) intervals): got a={a_len_seconds}, "

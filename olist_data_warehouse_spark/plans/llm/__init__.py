@@ -1,3 +1,3 @@
 """Per-family LLM-pipeline query modules (split from the former
-monolithic plans/llm_queries.py; that module remains the aggregator
-and registration-order keeper)."""
+monolithic plans/llm_queries.py; that module remains the
+aggregator)."""

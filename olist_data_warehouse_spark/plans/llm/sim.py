@@ -1,10 +1,10 @@
 """Similarity-search and ANN query entries.
 
 Split from llm_queries.py; see that module for the shared
-portability invariants and the canonical registration order."""
+portability invariants."""
 
 from __future__ import annotations
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from olist_data_warehouse_spark.operators import (
     bloom,
@@ -1165,6 +1165,34 @@ def sim_pq_trained_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 from olist_data_warehouse_spark.operators import graphann  # noqa: E402
 
 
+def _nsw_recall_gated_truth(e: DataFrame, qids: list[int], k: int):
+    """The exact top-``k`` restricted to each query's 2 probed IVF
+    cells (the ``sim_ivf_topk_mp`` truth), after the partitioned NSW
+    search over the same cells passed the recall gate: per-query
+    recall against that truth must be >= 0.9, or RuntimeError."""
+    got = graphann.nsw_topk(
+        e, qids, k=k, n_cells=8, probes=2, m_links=8, ef=32
+    ).select("query_id", "neighbor_id", F.lit(True).alias("is_got"))
+    truth = similarity.ivf_topk(e, qids, k=k, n_centroids=8, probes=2)
+    recall = (
+        truth.select("query_id", "neighbor_id")
+        .join(got, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            (F.sum(F.when(F.col("is_got"), 1).otherwise(0))
+             / F.count(F.lit(1))).alias("recall")
+        )
+        .collect()
+    )
+    for r in recall:
+        if r["recall"] < 0.9:
+            raise RuntimeError(
+                f"NSW recall vs cell-restricted truth below contract: "
+                f"query {r['query_id']} = {r['recall']:.2f}"
+            )
+    return truth
+
+
 @register(
     "sim_nsw_topk",
     oracle=_IVF_MP_TRUTH_ORACLE,
@@ -1191,29 +1219,7 @@ from olist_data_warehouse_spark.operators import graphann  # noqa: E402
 )
 def sim_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
-    qids = [0, 1, 2, 3, 4]
-    k = 10
-    got = graphann.nsw_topk(
-        e, qids, k=k, n_cells=8, probes=2, m_links=8, ef=32
-    ).select("query_id", "neighbor_id", F.lit(True).alias("is_got"))
-    truth = similarity.ivf_topk(e, qids, k=k, n_centroids=8, probes=2)
-    recall = (
-        truth.select("query_id", "neighbor_id")
-        .join(got, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            (F.sum(F.when(F.col("is_got"), 1).otherwise(0))
-             / F.count(F.lit(1))).alias("recall")
-        )
-        .collect()
-    )
-    for r in recall:
-        if r["recall"] < 0.9:
-            raise RuntimeError(
-                f"NSW recall vs cell-restricted truth below contract: "
-                f"query {r['query_id']} = {r['recall']:.2f}"
-            )
-    return truth
+    return _nsw_recall_gated_truth(e, [0, 1, 2, 3, 4], k=10)
 
 
 @register(
@@ -1252,62 +1258,5 @@ FROM ranked WHERE rn <= 10
 def sim_nsw_recall_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")["embeddings"]
     qids = [0, 1, 2, 3, 4]
-    k = 10
-    got = graphann.nsw_topk(
-        e, qids, k=k, n_cells=8, probes=2, m_links=8, ef=32
-    ).select("query_id", "neighbor_id", F.lit(True).alias("is_got"))
-    # exact truth restricted to each query's probed cells
-    queries = e.filter(F.col("vec_id").isin(qids))
-    q_cells = similarity.ivf_probe_assign(
-        e, 8, probes=2, subject=queries
-    ).select(F.col("vec_id").alias("query_id"), "centroid_id")
-    corpus = e.join(
-        similarity.ivf_assign(e, 8).select("vec_id", "centroid_id"),
-        "vec_id",
-    )
-    qv = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        similarity.l2_norm(F.col("embedding")).alias("_qn"),
-    )
-    cand = (
-        corpus.join(q_cells, "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                similarity.dot(F.col("q_emb"), F.col("embedding"))
-                / (F.col("_qn")
-                   * similarity.l2_norm(F.col("embedding"))),
-                4,
-            ).alias("cos_sim"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos_sim").alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    truth = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id")
-    )
-    recall = (
-        truth.join(got, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            (F.sum(F.when(F.col("is_got"), 1).otherwise(0))
-             / F.count(F.lit(1))).alias("recall")
-        )
-        .collect()
-    )
-    for r in recall:
-        if r["recall"] < 0.9:
-            raise RuntimeError(
-                f"NSW recall vs cell-restricted truth below contract: "
-                f"query {r['query_id']} = {r['recall']:.2f}"
-            )
-    return similarity.brute_force_topk(e, qids, k=k)
+    _nsw_recall_gated_truth(e, qids, k=10)
+    return similarity.brute_force_topk(e, qids, k=10)

@@ -1,7 +1,7 @@
 """Text-analysis, linkage and path query entries.
 
 Split from llm_queries.py; see that module for the shared
-portability invariants and the canonical registration order."""
+portability invariants."""
 
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession

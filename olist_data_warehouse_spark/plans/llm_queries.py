@@ -16,16 +16,12 @@ oracle twin where expressible. Portability invariants used throughout:
 Since r13 this module is the AGGREGATOR over the per-family modules
 in ``plans/llm/`` (dedup / sim / text / samp / multi / sketch /
 analytics, shared helpers in ``common``) — r12 verdict optional #7.
-Importing it registers all 166 entries and restores the historical
-registration order (``_CANONICAL_ORDER``), so ``ordered_registry()``
-is unchanged by the split.
+Importing it registers all 166 entries, family by family in the
+import order below. The 50-entry prefix of ``ordered_registry()`` that
+gets evaluated is ``DRIVER_PRIORITY`` (``plans/queries.py``), so
+nothing depends on the order of the entries after it.
 """
 
-from olist_data_warehouse_spark.plans.queries import REGISTRY
-
-# Import order is arbitrary here; _CANONICAL_ORDER restores the
-# historical registration order below, so ordered_registry() is
-# byte-stable across the split.
 from olist_data_warehouse_spark.plans.llm import dedup  # noqa: F401,E501
 from olist_data_warehouse_spark.plans.llm import sim  # noqa: F401,E501
 from olist_data_warehouse_spark.plans.llm import text  # noqa: F401,E501
@@ -33,187 +29,3 @@ from olist_data_warehouse_spark.plans.llm import samp  # noqa: F401,E501
 from olist_data_warehouse_spark.plans.llm import multi  # noqa: F401,E501
 from olist_data_warehouse_spark.plans.llm import sketch  # noqa: F401,E501
 from olist_data_warehouse_spark.plans.llm import analytics  # noqa: F401,E501
-
-# compat re-exports for external importers
-from olist_data_warehouse_spark.plans.llm.text import _BM25_TERMS  # noqa: F401,E402
-
-_CANONICAL_ORDER = [
-    "text_token_stats",
-    "text_rolling_fingerprint",
-    "text_quality",
-    "text_lang_id",
-    "text_repetition_ratio",
-    "text_pii_redact",
-    "pipe_corpus_curation",
-    "dedup_exact",
-    "dedup_exact_groups",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_minhash_signatures",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_hamming",
-    "decon_ngram_overlap",
-    "sim_bruteforce_topk",
-    "sim_ivf_assign",
-    "sim_ivf_topk",
-    "multi_decode_meta",
-    "multi_extract_features",
-    "multi_resize_meta",
-    "multi_frame_sample",
-    "sim_lsh_assign",
-    "sim_lsh_topk",
-    "dedup_embedding_lsh",
-    "dedup_semdedup",
-    "sim_ivf_topk_mp",
-    "samp_hash_split",
-    "samp_domain_mixture",
-    "samp_stratified",
-    "samp_per_group_topn",
-    "tj_asof_purchase_click",
-    "tj_range_error_clicks",
-    "sk_hll_distinct_users",
-    "sk_hist_quantiles",
-    "json_props_extract",
-    "scd2_supplier_merge",
-    "scd2_point_in_time",
-    "bloom_prefilter_lineitem",
-    "sk_cms_heavy_hitters",
-    "sim_kmeans_refine",
-    "skew_salted_join",
-    "w2_running_total",
-    "w3_lag_delta",
-    "a11_cube",
-    "samp_kfold",
-    "samp_global_fixed",
-    "samp_weighted_pps",
-    "w4_ntile_quartiles",
-    "set_union_distinct",
-    "p11_contains_filter",
-    "multi_audio_meta",
-    "text_word_count",
-    "dedup_cc_groups",
-    "samp_cluster_split",
-    "pack_concat_chunks",
-    "text_unigram_logprob",
-    "text_tfidf_topk",
-    "pack_sliding_windows",
-    "corpus_profile",
-    "samp_token_budget",
-    "samp_label_balance",
-    "sim_knn_label_vote",
-    "sk_hll_daily_users",
-    "tj_asof_forward_tol",
-    "w8_forward_fill",
-    "p12_prefix_filter",
-    "dedup_affix_groups",
-    "sim_pq_encode",
-    "sim_pq_adc_topk",
-    "sim_ivfpq_topk",
-    "sim_quantized_topk",
-    "samp_epoch_shard_shuffle",
-    "p13_above_customer_avg",
-    "decon_bloom_prefilter",
-    "ivm_agg_merge",
-    "j9_reconcile_orders_lines",
-    "dedup_span_chunks",
-    "text_bigram_topk",
-    "w9_cume_dist_nth",
-    "p14_exists_semi",
-    "dedup_keep_best",
-    "sim_centroid_outlier",
-    "ts_gapfill_daily",
-    "funnel_steps",
-    "cohort_retention",
-    "a18_event_histogram",
-    "reco_item_cooccurrence",
-    "reco_item_lift",
-    "dq_benford_digits",
-    "graph_pagerank_items",
-    "dedup_minhash_jaccard_est",
-    "dedup_containment_est",
-    "samp_negative_mining",
-    "dedup_latest_snapshot",
-    "w10_range_numeric_frame",
-    "sk_hll_set_algebra",
-    "samp_soft_dedup",
-    "f8_calendar_features",
-    "a21_multi_distinct",
-    "w11_ratio_to_report",
-    "w12_rank_variants",
-    "set_except_all",
-    "dedup_cdc_chunks",
-    "json_variant_extract",
-    "text_inverted_index",
-    "text_keywords_topk",
-    "ivm_index_merge",
-    "text_bm25_topk",
-    "text_phrase_search",
-    "sim_tfidf_cosine",
-    "link_fuzzy_parts",
-    "ts_ohlc_bars",
-    "dq_zscore_outliers",
-    "dq_psi_splits",
-    "dq_snapshot_diff",
-    "ts_cusum_alerts",
-    "dq_winsorize",
-    "samp_weighted_fixed_k",
-    "attrib_multi_model",
-    "ts_interpolate_hourly",
-    "path_top_trigrams",
-    "dq_key_skew_report",
-    "graph_triangles",
-    "ts_max_concurrency",
-    "w13_rolling_median",
-    "dq_mad_outliers",
-    "ts_linear_trend",
-    "dq_category_entropy",
-    "ts_seasonal_baseline",
-    "text_collocation_pmi",
-    "w14_activity_streaks",
-    "reco_user_user_cf",
-    "sim_mmr_rerank",
-    "samp_temporal_embargo",
-    "graph_link_prediction",
-    "multi_image_phash",
-    "graph_label_propagation",
-    "pipe_pretrain_layout",
-    "tj_asof_nearest",
-    "w15_skyline_orders",
-    "tj_interval_overlap",
-    "dq_uniqueness_profile",
-    "a23_weighted_median",
-    "a24_mode",
-    "dedup_pipeline_eval",
-    "graph_modularity",
-    "samp_apportion_lr",
-    "sim_ann_recall_eval",
-    "sim_threshold_calibration",
-    "text_zipf_fit",
-    "path_markov_transitions",
-    "samp_entity_split",
-    "dq_fk_integrity",
-    "w16_new_vs_returning",
-    "ts_autocorrelation",
-    "sk_hist_merge",
-    "q4_shipping_priority",
-    "dq_ks_drift",
-    "pack_balanced_shards",
-    "a29_gini_concentration",
-    "a31_lorenz_deciles",
-    "samp_dsir_importance",
-    "sim_pq_trained_encode",
-    "dedup_decontaminate",
-    # r13 additions (registered in plans/llm/sim.py)
-    "sim_nsw_topk",
-    "sim_nsw_recall_cert",
-]
-
-_moved = {
-    n: dict.pop(REGISTRY, n)
-    for n in _CANONICAL_ORDER
-    if dict.__contains__(REGISTRY, n)
-}
-for _n, _rq in _moved.items():
-    dict.__setitem__(REGISTRY, _n, _rq)
-del _moved

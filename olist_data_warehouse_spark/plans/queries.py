@@ -64,8 +64,8 @@ class _Registry(dict):
         if _Registry._loaded:
             return
         _Registry._loaded = True
-        # import order IS tail registration order (llm, stream, lake
-        # — the historical eager order; keep it stable across rounds)
+        # import order IS tail registration order (llm, stream, lake);
+        # the evaluated prefix is DRIVER_PRIORITY regardless
         from olist_data_warehouse_spark.plans import llm_queries  # noqa: F401,E501
         from olist_data_warehouse_spark.plans import stream_queries  # noqa: F401,E501
         from olist_data_warehouse_spark.plans import lake_queries  # noqa: F401,E501

@@ -1096,11 +1096,11 @@ class LakeBatchDataSource(DataSource):
             if gen or cons:
                 # executor-side enforcement runs through DuckDB, so
                 # each expression must carry a DDL-TIME dialect proof
-                # (recorded by add_constraint / create(generated=) /
-                # prove_native_write via the canary cross-check — this
-                # writer runs in the sessionless Python-data-source
-                # worker and cannot run the canary itself); any
-                # unproven expression keeps the refusal
+                # (recorded by add_constraint / create(generated=) via
+                # the canary cross-check — this writer runs in the
+                # sessionless Python-data-source worker and cannot run
+                # the canary itself); any unproven expression keeps
+                # the refusal
                 proofs = cfg.get("native_proofs") or {}
                 reason = None
                 for nme in sorted(cons):
@@ -1108,8 +1108,7 @@ class LakeBatchDataSource(DataSource):
                     if p is not True:
                         reason = p or (
                             f"constraint {nme!r} has no DDL-time "
-                            "dialect proof — run "
-                            "LakeTable.prove_native_write(spark)"
+                            "dialect proof"
                         )
                         break
                 if reason is None:
@@ -1123,9 +1122,7 @@ class LakeBatchDataSource(DataSource):
                                 if isinstance(p, str)
                                 else (
                                     f"generated column {c!r} has no "
-                                    "DDL-time dialect proof — run "
-                                    "LakeTable.prove_native_write("
-                                    "spark)"
+                                    "DDL-time dialect proof"
                                 )
                             )
                             break

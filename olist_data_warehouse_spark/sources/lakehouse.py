@@ -1,8 +1,7 @@
 """Log-structured table format on plain parquet — file-level sharing.
 
-Retires the copy-on-write caveat of :func:`writers.write_versioned`
-(every version a full copy): here a version is a LOG COMMIT of
-``add``/``remove`` FILE actions, so
+A version is a LOG COMMIT of ``add``/``remove`` FILE actions, never a
+full copy of the table, so
 
 * ``append`` writes only the new files (no rewrite, no copy),
 * ``delete_where`` rewrites ONLY the files that contain matching rows
@@ -103,8 +102,7 @@ class LakeTable:
     Delta checkpoint design (Armbrust et al., VLDB 2020). At 100 TB /
     ~1M files a JSON snapshot is hundreds of MB of text to parse on
     every state resolution; the columnar form is ~10x smaller and
-    decodes in bulk. Tables written before the switch (JSON
-    checkpoints) stay readable.
+    decodes in bulk.
 
     Concurrency contract: every write lands through ONE commit path,
     :meth:`_commit`, which races the O_EXCL gate
@@ -136,7 +134,7 @@ class LakeTable:
         return sorted(
             int(f.split(".", 1)[0])
             for f in os.listdir(self.log_dir)
-            if f.endswith(".json") and not f.endswith(".checkpoint.json")
+            if f.endswith(".json")
         )
 
     def version(self) -> int | None:
@@ -155,8 +153,7 @@ class LakeTable:
         os.makedirs(self.log_dir, exist_ok=True)
         if "ts" not in commit:
             # commit wall-clock (epoch seconds) — what timestamp time
-            # travel resolves against; legacy commits without it fall
-            # back to the log file's mtime
+            # travel resolves against
             commit["ts"] = time.time()
         final = os.path.join(self.log_dir, f"{v:08d}.json")
         tmp = final + f".{uuid.uuid4().hex}.tmp"
@@ -176,7 +173,7 @@ class LakeTable:
     def _write_checkpoint(self, v: int, state: dict) -> None:
         """Columnar full-state snapshot (see class docstring): one row
         per live file, schema/config/txns/version as table metadata.
-        Written atomically; readers prefer it over legacy JSON."""
+        Written atomically."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -226,7 +223,7 @@ class LakeTable:
                 )
             }
         )
-        cp = os.path.join(self.log_dir, f"{v:08d}.checkpoint.parquet")
+        cp = self._checkpoint_path(v)
         tmp = cp + f".{uuid.uuid4().hex}.tmp"
         pq.write_table(table, tmp)
         os.replace(tmp, cp)
@@ -236,48 +233,67 @@ class LakeTable:
             {
                 int(f.split(".", 1)[0])
                 for f in os.listdir(self.log_dir)
-                if (
-                    f.endswith(".checkpoint.parquet")
-                    or f.endswith(".checkpoint.json")
-                )
+                if f.endswith(".checkpoint.parquet")
                 and int(f.split(".", 1)[0]) <= upto
             }
         )
 
-    def _load_checkpoint(self, v: int) -> dict:
-        pqp = os.path.join(self.log_dir, f"{v:08d}.checkpoint.parquet")
-        if os.path.exists(pqp):
-            import pyarrow.parquet as pq
+    def _checkpoint_path(self, v: int) -> str:
+        return os.path.join(self.log_dir, f"{v:08d}.checkpoint.parquet")
 
-            t = pq.read_table(pqp)
-            meta = json.loads(t.schema.metadata[b"lake_state"])
-            d = t.to_pydict()
-            files = {}
-            for i, p in enumerate(d["path"]):
-                m = {
-                    "path": p,
-                    "rows": d["rows"][i],
-                    "bytes": d["bytes"][i],
-                    "stats": json.loads(d["stats"][i]),
-                }
-                if d["partition"][i] is not None:
-                    m["partition"] = json.loads(d["partition"][i])
-                # checkpoints written before deletion vectors lack the
-                # dv column — absent means no dv, same as None
-                if d.get("dv") is not None and d["dv"][i] is not None:
-                    m["dv"] = json.loads(d["dv"][i])
-                files[p] = m
-            return {
-                "files": files,
-                "schema": meta["schema"],
-                "config": meta["config"],
-                "txns": meta["txns"],
-                "version": meta["version"],
+    def _load_checkpoint(self, v: int) -> dict:
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(self._checkpoint_path(v))
+        meta = json.loads(t.schema.metadata[b"lake_state"])
+        d = t.to_pydict()
+        files = {}
+        for i, p in enumerate(d["path"]):
+            m = {
+                "path": p,
+                "rows": d["rows"][i],
+                "bytes": d["bytes"][i],
+                "stats": json.loads(d["stats"][i]),
             }
-        with open(
-            os.path.join(self.log_dir, f"{v:08d}.checkpoint.json")
-        ) as f:
-            return json.load(f)  # legacy JSON checkpoint (pre-parquet)
+            if d["partition"][i] is not None:
+                m["partition"] = json.loads(d["partition"][i])
+            if d["dv"][i] is not None:
+                m["dv"] = json.loads(d["dv"][i])
+            files[p] = m
+        return {
+            "files": files,
+            "schema": meta["schema"],
+            "config": meta["config"],
+            "txns": meta["txns"],
+            "version": meta["version"],
+        }
+
+    def _schema_config_at(self, v: int) -> tuple[dict, dict]:
+        """The table schema and config as of ``v``, without the file
+        map: commits carry each only when it changes, so walk back
+        from ``v`` to the nearest checkpoint, whose footer metadata
+        holds both — at most CHECKPOINT_EVERY commit reads, and no
+        data page of the checkpoint is decoded."""
+        schema = config = None
+        for cv in range(v, -1, -1):
+            cp = self._checkpoint_path(cv)
+            if os.path.exists(cp):
+                import pyarrow.parquet as pq
+
+                meta = json.loads(
+                    pq.read_schema(cp).metadata[b"lake_state"]
+                )
+                schema = meta["schema"] if schema is None else schema
+                config = meta["config"] if config is None else config
+                break
+            c = self._read_commit(cv)
+            schema = c.get("schema") if schema is None else schema
+            config = c.get("config") if config is None else config
+            if schema is not None and config is not None:
+                break
+        if schema is None:
+            raise ValueError(f"no schema action in log of {self.path}")
+        return schema, config or {}
 
     def _check_assign_types(
         self,
@@ -1685,34 +1701,9 @@ class LakeTable:
             )
         return proofs
 
-    def prove_native_write(self, spark: SparkSession) -> int:
-        """Re-run the DDL-time dialect canaries for every CHECK
-        constraint and GENERATED column and record the verdicts in a
-        metadata-only ``alter`` commit — the migration path that
-        unlocks ``df.write.format('lake')`` on governed tables created
-        before proofs existed (new DDL records them automatically).
-        Returns the commit version."""
-        state = self._state()
-        cfg = dict(state.get("config", {}))
-        cons = cfg.get("constraints") or {}
-        gen = cfg.get("generated") or {}
-        cfg["native_proofs"] = self._native_proofs(
-            spark, state["schema"], cons, gen
-        )
-        return self._alter(
-            state, config=cfg,
-            native_proofs={"action": "refresh"},
-        )
-
     def _commit_ts(self, v: int) -> float:
-        """A commit's wall-clock time: the recorded 'ts' action, or the
-        log file's mtime for commits written before ts existed."""
-        c = self._read_commit(v)
-        if "ts" in c:
-            return float(c["ts"])
-        return os.path.getmtime(
-            os.path.join(self.log_dir, f"{v:08d}.json")
-        )
+        """A commit's wall-clock time (its recorded ``ts``)."""
+        return float(self._read_commit(v)["ts"])
 
     def resolve_timestamp(self, ts) -> int:
         """The version a TIMESTAMP denotes: the LAST commit at or
@@ -3509,11 +3500,8 @@ class LakeTable:
         cps = self._checkpoint_versions(cur)
         removed = []
         for v in cps[:-keep] if len(cps) > keep else []:
-            for suffix in (".checkpoint.parquet", ".checkpoint.json"):
-                full = os.path.join(self.log_dir, f"{v:08d}{suffix}")
-                if os.path.exists(full):
-                    os.unlink(full)
-                    removed.append(f"{v:08d}{suffix}")
+            os.unlink(self._checkpoint_path(v))
+            removed.append(os.path.basename(self._checkpoint_path(v)))
         return removed
 
 

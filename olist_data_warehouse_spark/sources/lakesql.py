@@ -24,45 +24,9 @@ reads and writes::
         WHEN NOT MATCHED THEN INSERT *
     ''')
 
-Grammar (ANSI / Delta SQL subset — every shape the Python engines
-support, nothing they don't):
-
-- ``DELETE FROM <lake> [AS a] [WHERE <pred>]``
-- ``UPDATE <lake> [AS a] SET c = expr, ... [WHERE <pred>]``
-- ``MERGE INTO <lake> [AS t] USING <view | (subquery)> [AS s]
-  ON t.k = s.k [AND ...]
-  [WHEN MATCHED [AND cond] THEN UPDATE SET * | SET c = expr, ...]*
-  [WHEN MATCHED [AND cond] THEN DELETE]*
-  [WHEN NOT MATCHED [BY TARGET] [AND cond] THEN
-     INSERT * | INSERT (cols) VALUES (exprs)]
-  [WHEN NOT MATCHED BY SOURCE [AND cond] THEN
-     DELETE | UPDATE SET c = expr, ...]``
-- ``INSERT INTO|OVERWRITE <lake> [(cols)] SELECT ... | VALUES ...``
-- ``INSERT INTO <lake> REPLACE WHERE <pred> SELECT ... | VALUES
-  ...`` (Delta's replaceWhere: atomic predicate-scoped overwrite)
-- ``COPY INTO <lake> FROM '<path-or-glob>' [FILEFORMAT =
-  PARQUET|CSV|JSON]`` (idempotent ingestion: loaded-file
-  identities land in the same commit as the data)
-- ``VACUUM <lake> [RETAIN n HOURS] [DRY RUN] [FORCE]``
-- ``RESTORE [TABLE] <lake> TO VERSION|TIMESTAMP AS OF x``
-- ``OPTIMIZE <lake> [WHERE <stats conjunction>] [ZORDER BY (cols)]``
-- ``DESCRIBE HISTORY <lake> [LIMIT n]`` / ``DESCRIBE DETAIL <lake>``
-- ``ALTER TABLE <lake> ADD COLUMNS (defs) | RENAME COLUMN a TO b |
-  DROP COLUMN a | ADD CONSTRAINT n CHECK (expr) | DROP CONSTRAINT n |
-  SET TBLPROPERTIES ('k'='v', ...) | UNSET TBLPROPERTIES ('k', ...)``
-- ``CREATE [OR REPLACE] TABLE [IF NOT EXISTS] <name> [(col type
-  [GENERATED ALWAYS AS (expr)], ...)] USING lake LOCATION 'path'
-  [PARTITIONED BY (cols)] [TBLPROPERTIES (...)] [AS SELECT ...]``
-  (creates AND registers the SQL binding; OR REPLACE on a live table
-  is one atomic overwrite commit — history stays time-travelable)
-- ``CREATE TABLE [IF NOT EXISTS] <name> SHALLOW CLONE <lake>
-  LOCATION 'path'`` (zero-copy branch; source gets a retention pin)
-- ``DROP TABLE [IF EXISTS] <name>`` (drops the binding; data stays)
-- ``SHOW TBLPROPERTIES <name>``
-- read extensions inside any query (and the query side of INSERT /
-  CTAS / MERGE USING): ``FROM <lake> VERSION|TIMESTAMP AS OF x`` and
-  ``table_changes('<lake>', since_version)`` rewrite to registered
-  snapshot/CDF views and run through plain ``spark.sql``
+The grammar — an ANSI / Delta SQL subset, every shape the Python
+engines support and nothing they don't — is listed once, statement by
+statement with the engine each reaches, in :func:`sql`.
 
 Matched clauses form an ordered first-match chain (Delta evaluation
 order); the ON clause must be a conjunction of ``t.k = s.k``
@@ -97,8 +61,10 @@ from __future__ import annotations
 
 import json
 import re
+import threading
 
 from pyspark.errors import ParseException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -115,6 +81,13 @@ _NOT_RESERVED = "spark.sql.legacy.notReserveProperties"
 _MARK = "\x1f"  # renames a reserved property key past the grammar
 _CREATES = ("CreateTable", "CreateTableAsSelect", "ReplaceTable",
             "ReplaceTableAsSelect")
+# pyspark logs every ParseException it converts, at ERROR and with the
+# JVM stack trace, before the caller can handle it; _parse mutes that
+# record in its own thread only
+_PARSING = threading.local()
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    lambda record: not getattr(_PARSING, "active", False)
+)
 
 
 def _parse(spark: SparkSession, text: str, expression: bool = False):
@@ -125,11 +98,21 @@ def _parse(spark: SparkSession, text: str, expression: bool = False):
     API hands back an unresolved plan — so this is the one place that
     reaches it. The plan-node class names the dispatcher reads are
     pinned in ``tests/test_lakesql.py``, so a Spark upgrade that
-    renames one fails there, loudly."""
+    renames one fails there, loudly.
+
+    A ParseException raised here is not logged: the dispatcher handles
+    it, raises a ValueError chained from it, or hands the text to
+    ``spark.sql``, which reports Spark's own error. pyspark's ERROR
+    record of it would report an error the user never gets, or one
+    twice."""
     parser = spark._jsparkSession.sessionState().sqlParser()
-    if expression:
-        return parser.parseExpression(text)
-    return parser.parsePlan(text)
+    _PARSING.active = True
+    try:
+        if expression:
+            return parser.parseExpression(text)
+        return parser.parsePlan(text)
+    finally:
+        _PARSING.active = False
 
 
 # ------------------------------------------------------- plan-tree reading
@@ -1155,14 +1138,28 @@ def sql(spark: SparkSession, text: str):
     the :class:`LakeTable` engines; anything else returns
     ``spark.sql(text)`` untouched. Statement -> engine -> return:
 
-    - ``MERGE INTO`` / ``DELETE FROM`` / ``UPDATE`` -> merge_into /
-      delete_where / update_where -> their result dicts
+    - ``DELETE FROM t [AS a] [WHERE pred]`` / ``UPDATE t [AS a] SET
+      c = expr, ... [WHERE pred]`` / ``MERGE INTO t [AS t] USING
+      <view | (subquery)> [AS s] ON t.k = s.k [AND ...]`` with
+      ``WHEN MATCHED [AND cond] THEN UPDATE SET * | UPDATE SET c =
+      expr, ... | DELETE`` (any number), ``WHEN NOT MATCHED [BY
+      TARGET] [AND cond] THEN INSERT * | INSERT (cols) VALUES
+      (exprs)`` and ``WHEN NOT MATCHED BY SOURCE [AND cond] THEN
+      DELETE | UPDATE SET c = expr, ...`` -> delete_where /
+      update_where / merge_into -> their result dicts
       (``{version, rows_*, files_*}``)
     - ``INSERT INTO|OVERWRITE t [(cols)] SELECT ...|VALUES ...`` ->
       append / overwrite (positional SQL semantics; a column list
       NULLs omitted columns and lets generated ones compute; non-lake
       targets fall through to spark.sql, which handles catalog
       tables natively) -> ``{version}``
+    - ``INSERT INTO t REPLACE WHERE pred SELECT ...|VALUES ...`` ->
+      replace_where (Delta's replaceWhere: an atomic predicate-scoped
+      overwrite) -> its result dict
+    - ``COPY INTO t FROM 'path-or-glob' [FILEFORMAT =
+      PARQUET|CSV|JSON]`` -> copy_into (idempotent ingestion: the
+      loaded files' identities land in the same commit as the data)
+      -> its result dict
     - ``VACUUM t [RETAIN n HOURS] [DRY RUN] [FORCE]`` -> vacuum ->
       removed paths (FORCE maps to force=True — the sub-floor
       retention override; Delta spells it as a session conf). A bare

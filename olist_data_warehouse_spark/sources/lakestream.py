@@ -304,97 +304,22 @@ class LakeStreamReader(DataSourceStreamReader):
         # or the first partitions/commit call (restart) reveals it.
         self._anchor: int | None = None
 
-    # -- log helpers (driver side; mirrors LakeTable without importing
-    # pyspark-session machinery into the executor-pickled reader) -----
+    @property
+    def table(self):
+        """The table, whose log the reader reads (driver side; built on
+        use, so the pickled reader carries only its path)."""
+        from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
-    def _versions(self) -> list[int]:
-        log = os.path.join(self.table_path, "_log")
-        if not os.path.isdir(log):
-            return []
-        return sorted(
-            int(f.split(".", 1)[0])
-            for f in os.listdir(log)
-            if f.endswith(".json") and not f.endswith(".checkpoint.json")
-        )
+        return LakeTable(self.table_path)
 
-    def _commit(self, v: int) -> dict:
+    def _stream_schema_json(self, table_schema: dict) -> str:
+        """The stream's output schema over ``table_schema``: the table
+        schema, plus the two delta columns in cdf mode."""
         import json
 
-        with open(
-            os.path.join(self.table_path, "_log", f"{v:08d}.json")
-        ) as f:
-            return json.load(f)
-
-    def _schema_json_at(self, v: int) -> str:
-        """Latest schema action at or before ``v``. Commits carry
-        schema only when it changes, so scan backwards — but stop at
-        the first checkpoint (full-state snapshots embed the schema),
-        which bounds the walk to CHECKPOINT_EVERY commit reads however
-        long the log grows. Parquet checkpoints yield the schema from
-        FILE METADATA alone — no data pages read; legacy JSON
-        checkpoints stay supported."""
-        import json
-
-        log = os.path.join(self.table_path, "_log")
-        for cv in range(v, -1, -1):
-            cpq = os.path.join(log, f"{cv:08d}.checkpoint.parquet")
-            if os.path.exists(cpq):
-                import pyarrow.parquet as pq
-
-                meta = json.loads(
-                    pq.read_schema(cpq).metadata[b"lake_state"]
-                )
-                if meta.get("schema") is not None:
-                    return json.dumps(meta["schema"])
-            cpj = os.path.join(log, f"{cv:08d}.checkpoint.json")
-            if os.path.exists(cpj):
-                with open(cpj) as f:
-                    state = json.load(f)
-                if state.get("schema") is not None:
-                    return json.dumps(state["schema"])
-            c = self._commit(cv)
-            if c.get("schema") is not None:
-                return json.dumps(c["schema"])
-        raise ValueError(f"no schema action in log of {self.table_path}")
-
-    def _mapping_at(self, v: int) -> dict[str, str]:
-        """Latest COLUMN MAPPING at or before ``v`` — the config twin
-        of :meth:`_schema_json_at`, same checkpoint-bounded backward
-        walk (config is committed only when it changes; checkpoints
-        embed it)."""
-        import json
-
-        log = os.path.join(self.table_path, "_log")
-        for cv in range(v, -1, -1):
-            cpq = os.path.join(log, f"{cv:08d}.checkpoint.parquet")
-            if os.path.exists(cpq):
-                import pyarrow.parquet as pq
-
-                meta = json.loads(
-                    pq.read_schema(cpq).metadata[b"lake_state"]
-                )
-                if meta.get("config") is not None:
-                    return meta["config"].get("column_mapping") or {}
-            cpj = os.path.join(log, f"{cv:08d}.checkpoint.json")
-            if os.path.exists(cpj):
-                with open(cpj) as f:
-                    state = json.load(f)
-                if state.get("config") is not None:
-                    return state["config"].get("column_mapping") or {}
-            c = self._commit(cv)
-            if c.get("config") is not None:
-                return c["config"].get("column_mapping") or {}
-        return {}
-
-    def _stream_schema_json(self, v: int) -> str:
-        """The stream's output schema at ``v``: the table schema, plus
-        the two delta columns in cdf mode."""
-        import json
-
-        base = self._schema_json_at(v)
         if self.mode != "cdf":
-            return base
-        d = json.loads(base)
+            return json.dumps(table_schema)
+        d = dict(table_schema)
         d["fields"] = list(d["fields"]) + [
             {"name": "_change_type", "type": "string",
              "nullable": True, "metadata": {}},
@@ -472,12 +397,9 @@ class LakeStreamReader(DataSourceStreamReader):
         ``resolve_timestamp``, but first-at-or-after instead of
         last-at-or-before so a commit stamped exactly AT the instant
         is SERVED (Delta's startingTimestamp contract)."""
-        from olist_data_warehouse_spark.sources.lakehouse import (
-            LakeTable,
-            _parse_ts,
-        )
+        from olist_data_warehouse_spark.sources.lakehouse import _parse_ts
 
-        t = LakeTable(self.table_path)
+        t = self.table
         target = _parse_ts(self._start_ts)
         vs = t._commit_versions()
         if not vs:
@@ -494,8 +416,10 @@ class LakeStreamReader(DataSourceStreamReader):
         return vs[lo - 1] if lo > 0 else -1
 
     def latestOffset(self) -> dict:
-        vs = self._versions()
-        newest = vs[-1] if vs else self._start
+        t = self.table
+        newest = t.version()
+        if newest is None:
+            newest = self._start
         if self.max_files is None and self.max_bytes is None:
             return {"version": newest}
         if self._anchor is None:
@@ -518,7 +442,7 @@ class LakeStreamReader(DataSourceStreamReader):
 
         end, files, nbytes = self._anchor, 0, 0
         for v in range(self._anchor + 1, newest + 1):
-            c = self._commit(v)
+            c = t._read_commit(v)
             if self.mode == "cdf":
                 try:
                     entries = [e for _, e in _cdf_pairs(c)]
@@ -563,11 +487,13 @@ class LakeStreamReader(DataSourceStreamReader):
             _cdf_pairs,
         )
 
+        t = self.table
+        table_schema, config = t._schema_config_at(hi)
         schema_json = _with_physical(
             self.schema_json
             if self.schema_json is not None
-            else self._stream_schema_json(hi),
-            self._mapping_at(hi),
+            else self._stream_schema_json(table_schema),
+            config.get("column_mapping") or {},
         )
 
         def pj(entry) -> str | None:
@@ -593,7 +519,7 @@ class LakeStreamReader(DataSourceStreamReader):
 
         out: list[_FileSlice] = []
         for v in range(lo + 1, hi + 1):
-            c = self._commit(v)
+            c = t._read_commit(v)
             if self.mode == "cdf":
                 # row-level delta feed: every commit replays as signed
                 # file slices — deletes from pre-images/file-exact
@@ -662,8 +588,9 @@ class LakeStreamDataSource(DataSource):
 
     def schema(self):
         reader = LakeStreamReader(self.options)
-        vs = reader._versions()
-        if not vs:
+        t = reader.table
+        v = t.version()
+        if v is None:
             raise ValueError(
                 f"no lake table at {self.options.get('path')!r}"
             )
@@ -672,7 +599,9 @@ class LakeStreamDataSource(DataSource):
         from pyspark.sql.types import StructField
 
         declared = StructType.fromJson(
-            json.loads(reader._stream_schema_json(vs[-1]))
+            json.loads(
+                reader._stream_schema_json(t._schema_config_at(v)[0])
+            )
         )
         # defensively nullable, like Spark's own file sources: schema
         # evolution backfills NULLs into columns regardless of what
@@ -727,20 +656,6 @@ def register_isolated(spark, prefix: str = "lakestream") -> str:
     )
     spark.dataSource.register(cls)
     return name
-
-
-def _newest_version(table_path: str) -> int:
-    """Newest commit version in the table's log, -1 for an empty log —
-    driver-side listdir, mirrors LakeStreamReader._versions."""
-    log = os.path.join(table_path, "_log")
-    if not os.path.isdir(log):
-        return -1
-    vs = [
-        int(f.split(".", 1)[0])
-        for f in os.listdir(log)
-        if f.endswith(".json") and not f.endswith(".checkpoint.json")
-    ]
-    return max(vs) if vs else -1
 
 
 def _progress_version(progress: dict, probe_dir: str) -> int | None:
@@ -824,8 +739,12 @@ def drain(
     queries in one JVM; timeouts never retry. Reference parity: the E3 incremental load
     (`Package.dtsx:657-673`) is a bounded-buffer run-to-completion
     drain; this is its streaming twin."""
+    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
+
     pdir = probe_dir or os.path.join(table_path, "_probes")
-    target = _newest_version(table_path)
+    target = LakeTable(table_path).version()
+    if target is None:
+        target = -1
     deadline = time.time() + timeout
     attempt = 0
     all_recent: list = []

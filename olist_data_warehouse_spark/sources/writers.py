@@ -342,115 +342,3 @@ def verify_manifest(spark: SparkSession, path: str) -> bool:
     ).head()
     fp = str(row["fp"]) if row["fp"] is not None else None
     return row["n"] == manifest["rows"] and fp == manifest["fingerprint"]
-
-
-# ---------------------------------------------------------------------------
-# Versioned tables (time travel on plain parquet)
-# ---------------------------------------------------------------------------
-
-_LATEST = "_LATEST"
-
-
-def write_versioned(df: DataFrame, path: str) -> int:
-    """Write ``df`` as a NEW immutable version of the table at ``path``
-    and atomically advance the version pointer; returns the new version
-    number.
-
-    Layout: ``path/v=N/`` parquet dirs (append-only, never rewritten)
-    plus a tiny ``path/_LATEST`` pointer file whose content is the
-    current N. This is the copy-on-write snapshot scheme Delta/Iceberg
-    implement with manifests, reduced to its essence on plain parquet:
-    readers resolve the pointer then read one immutable directory, so
-    a concurrent writer can never give a reader a half-written table
-    (the pointer only advances AFTER the directory commit). Rollback
-    is a pointer update — metadata-only, no data rewrite. At 100 TB
-    each version shares nothing (full copy-on-write); production puts
-    a lakehouse format underneath for file-level sharing and keeps
-    these call shapes.
-    """
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    # Allocate after the highest version EVER written (not the pointer:
-    # after a rollback the pointer is behind, and pointer+1 would
-    # collide with a surviving newer version).
-    existing = [
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("v=")
-    ]
-    new = (max(existing) if existing else -1) + 1
-    df.write.mode("errorifexists").parquet(os.path.join(path, f"v={new}"))
-    tmp = os.path.join(path, f"{_LATEST}.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(new))
-    os.replace(tmp, os.path.join(path, _LATEST))  # atomic pointer swap
-    return new
-
-
-def table_version(path: str) -> int | None:
-    """Current version number, or None for an empty/new table."""
-    import os
-
-    p = os.path.join(path, _LATEST)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return int(f.read().strip())
-
-
-def read_versioned(
-    spark: SparkSession, path: str, version: int | None = None
-) -> DataFrame:
-    """Read the table AS OF ``version`` (default: the current pointer).
-    Old versions stay readable until vacuumed — the time-travel /
-    reproducible-training-run guarantee."""
-    import os
-
-    v = version if version is not None else table_version(path)
-    if v is None:
-        raise FileNotFoundError(f"no versions at {path}")
-    return spark.read.parquet(os.path.join(path, f"v={v}"))
-
-
-def rollback_versioned(path: str, version: int) -> None:
-    """Point the table back at an existing older version — metadata
-    only, no data movement; later versions remain on disk (and a
-    subsequent write_versioned allocates AFTER the highest ever
-    written, so rolled-back-over versions are never clobbered)."""
-    import os
-
-    if not os.path.isdir(os.path.join(path, f"v={version}")):
-        raise FileNotFoundError(f"version {version} does not exist at {path}")
-    tmp = os.path.join(path, f"{_LATEST}.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(path, _LATEST))
-
-
-def vacuum_versioned(path: str, keep: int = 2) -> list[int]:
-    """Drop all but the newest ``keep`` versions (never the pointer's
-    target); returns the removed version numbers."""
-    import os
-    import shutil
-
-    if keep < 1:
-        # versions[-0:] would slice the WHOLE list and silently keep
-        # everything — inverted semantics; the pointer's target is
-        # always retained, so keep >= 1 is the minimum meaningful ask.
-        raise ValueError("keep must be >= 1")
-    current = table_version(path)
-    versions = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(path)
-        if d.startswith("v=")
-    )
-    keep_set = set(versions[-keep:])
-    if current is not None:
-        keep_set.add(current)
-    removed = []
-    for v in versions:
-        if v not in keep_set:
-            shutil.rmtree(os.path.join(path, f"v={v}"))
-            removed.append(v)
-    return removed

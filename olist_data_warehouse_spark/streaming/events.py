@@ -1091,31 +1091,30 @@ def hll_refresh_stream(events_stream: DataFrame, regs_path: str):
     identity), so the daily-distinct estimate stays current at a per-
     batch cost of O(delta + days*64), never a re-scan.
 
-    Each merge publishes a NEW VERSION of the register table via the
-    versioned-table writer (immutable ``v=N`` dir + atomic pointer
-    swap): readers can never see a half-written merge, a crashed batch
-    leaves the previous version live, and every historical estimate
-    stays as-of-readable (time travel over sketch state). Returns the
+    The register table is a lake table: the first batch creates it
+    (version 0) and each later merge is one ``overwrite`` commit, so
+    readers never see a half-written merge, a crashed batch leaves the
+    previous version live, and every historical estimate stays
+    as-of-readable (time travel over sketch state). Returns the
     writeStream builder — caller picks trigger/checkpoint."""
     from olist_data_warehouse_spark.operators import sketches
-    from olist_data_warehouse_spark.sources import writers
+    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
         daily = batch_df.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
         delta = sketches.hll_registers(daily, ["day"], F.col("user_id"))
-        if writers.table_version(regs_path) is None:
-            merged = delta
-        else:
-            base = writers.read_versioned(spark_l, regs_path)
-            merged = (
-                base.unionByName(delta)
-                .groupBy("day", "bucket")
-                .agg(F.max("register").alias("register"))
-            )
-        # The write targets a NEW immutable version dir, so reading the
-        # old version while writing the new one is safe by layout.
-        writers.write_versioned(merged, regs_path)
+        regs = LakeTable(regs_path)
+        if regs.version() is None:
+            LakeTable.create(delta, regs_path)
+            return
+        # lake data files are immutable, so the overwrite may read the
+        # version it replaces
+        regs.overwrite(
+            regs.read(batch_df.sparkSession)
+            .unionByName(delta)
+            .groupBy("day", "bucket")
+            .agg(F.max("register").alias("register"))
+        )
 
     return events_stream.writeStream.foreachBatch(merge)
 
@@ -1126,8 +1125,8 @@ def read_hll_daily(
     """(day, approx_distinct, n_zero_registers) from the materialized
     register table — current by default, or AS OF an older version."""
     from olist_data_warehouse_spark.operators import sketches
-    from olist_data_warehouse_spark.sources import writers
+    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
     return sketches.hll_estimate(
-        writers.read_versioned(spark, regs_path, version), ["day"]
+        LakeTable(regs_path).read(spark, version=version), ["day"]
     )

@@ -5,8 +5,8 @@ CHECK constraints and GENERATED columns enforce on
 expressions whose Spark/DuckDB agreement was PROVEN at DDL time over a
 typed canary battery (recorded as ``native_proofs`` in the table
 config — the sessionless data-source writer reads the verdict, it
-cannot run the canary). Unproven expressions keep the refusal;
-``prove_native_write`` is the migration path for pre-proof tables.
+cannot run the canary). Unproven expressions keep the refusal, and
+so does a table whose proofs are missing.
 Column-mapped tables write under PHYSICAL names executor-side.
 """
 
@@ -60,16 +60,19 @@ def test_unproven_generated_refuses_with_remedy(registered, tmp_path):
     assert t.read(spark).count() == 8
 
 
-def test_prove_native_write_unlocks_preproof_tables(
+def test_native_write_refuses_table_without_proofs(
     registered, tmp_path
 ):
+    """Each DDL records its own proofs; a table whose config carries
+    none keeps the native writer's refusal, and the table API still
+    writes it."""
     spark = registered
     t = LakeTable.create(
         spark.range(5).withColumn("v", F.col("id") * 1.0),
         str(tmp_path / "t"),
     )
     t.add_constraint(spark, "v_ok", "v >= 0")
-    # simulate a table from before proofs existed
+    # a table whose config lost its proofs
     state = t._state()
     cfg = dict(state["config"])
     cfg.pop("native_proofs", None)
@@ -78,14 +81,14 @@ def test_prove_native_write_unlocks_preproof_tables(
         {"op": "alter", "add": [], "remove": [], "config": cfg},
     )
     batch = spark.createDataFrame([(9, 1.0)], "id long, v double")
-    with pytest.raises(Exception, match="prove_native_write"):
+    with pytest.raises(
+        Exception, match="constraint 'v_ok' has no DDL-time dialect proof"
+    ):
         batch.write.format("lake").option("path", t.path).mode(
             "append"
         ).save()
-    t.prove_native_write(spark)
-    batch.write.format("lake").option("path", t.path).mode(
-        "append"
-    ).save()
+    assert t.version() == 2
+    t.append(batch)
     assert t.read(spark).count() == 6
 
 

@@ -3,7 +3,6 @@ file-granular DELETE, time travel, compaction, vacuum, concurrency."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -840,30 +839,23 @@ def test_thousand_commit_log_bounded_reads(spark, tmp_path, monkeypatch):
     assert t.read(spark).count() == 10
     assert calls["n"] <= CHECKPOINT_EVERY, f"read replayed {calls['n']}"
 
-    # stream planning: schema resolution stops at the newest
-    # checkpoint; a micro-batch plan reads only its own commit range
-    rcalls = {"n": 0}
-    orig_rc = ls.LakeStreamReader._commit
-
-    def counting_rc(self, v):
-        rcalls["n"] += 1
-        return orig_rc(self, v)
-
-    monkeypatch.setattr(ls.LakeStreamReader, "_commit", counting_rc)
+    # stream planning (the reader reads the log through LakeTable):
+    # the schema/config walk stops at the newest checkpoint; a
+    # micro-batch plan reads only its own commit range
+    calls["n"] = 0
+    assert t._schema_config_at(1000)[0] == st["schema"]
+    assert calls["n"] <= CHECKPOINT_EVERY, f"schema walk {calls['n']}"
     reader = ls.LakeStreamReader({"path": t.path})
-    rcalls["n"] = 0
-    reader._schema_json_at(1000)
-    assert rcalls["n"] <= CHECKPOINT_EVERY, f"schema walk {rcalls['n']}"
-    rcalls["n"] = 0
+    calls["n"] = 0
     parts = reader.partitions({"version": 995}, {"version": 1000})
     assert parts == []  # metadata-only appends carry no files
-    assert rcalls["n"] <= CHECKPOINT_EVERY + 5
+    assert calls["n"] <= CHECKPOINT_EVERY + 5
 
 
-def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_path):
+def test_parquet_checkpoint_roundtrip(spark, tmp_path):
     """Checkpoints are parquet (Delta VLDB'20 shape): state round-trips
     through the columnar snapshot — including stats and partition
-    values — and a table whose checkpoint is legacy JSON still reads."""
+    values — and the footer-only schema/config walk agrees with it."""
     t = LakeTable.create(
         _orders(spark, 0, 50).repartition(2),
         str(tmp_path / "pcp"),
@@ -876,6 +868,9 @@ def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_path):
     assert direct["files"] == replayed["files"]
     assert direct["schema"] == replayed["schema"]
     assert direct["config"] == replayed["config"]
+    assert t._schema_config_at(v) == (
+        replayed["schema"], replayed["config"]
+    )
     # partitioned table: partition values survive the roundtrip
     p = LakeTable.create(
         _orders(spark, 0, 30), str(tmp_path / "ppcp"),
@@ -886,22 +881,6 @@ def test_parquet_checkpoint_roundtrip_and_legacy_json(spark, tmp_path):
     cp = p._load_checkpoint(CHECKPOINT_EVERY)
     assert all("partition" in m for m in cp["files"].values())
     assert cp["files"] == p._state(CHECKPOINT_EVERY)["files"]
-    # legacy JSON checkpoint: delete the parquet one, write the old
-    # format in its place — state resolution and the streaming schema
-    # walk must still prefer-and-parse it
-    pqp = os.path.join(t.log_dir, f"{v:08d}.checkpoint.parquet")
-    os.unlink(pqp)
-    legacy = dict(replayed)
-    with open(
-        os.path.join(t.log_dir, f"{v:08d}.checkpoint.json"), "w"
-    ) as f:
-        json.dump(legacy, f)
-    assert t._state(v)["files"] == replayed["files"]
-    assert t.read(spark).count() == 50 + 10 * CHECKPOINT_EVERY
-    import olist_data_warehouse_spark.sources.lakestream as ls
-
-    reader = ls.LakeStreamReader({"path": t.path})
-    assert "order_id" in reader._schema_json_at(v)
 
 
 def test_checkpoint_scales_past_json(spark, tmp_path):
@@ -1064,10 +1043,8 @@ def test_detail_and_vacuum_dry_run(spark, table):
 def test_timestamp_time_travel(spark, tmp_path):
     """Delta's timestampAsOf shape: read(timestamp=...) resolves to
     the LAST commit at or before the given time — epoch float, ISO
-    string, and datetime all accepted; legacy commits without a
-    recorded ts resolve via the log file's mtime."""
+    string, and datetime all accepted."""
     import datetime as dt
-    import json as _json
     import time as _time
 
     t = LakeTable.create(_orders(spark, 0, 10), str(tmp_path / "t"))
@@ -1103,16 +1080,6 @@ def test_timestamp_time_travel(spark, tmp_path):
         t.resolve_timestamp(ts[0] - 10)
     with pytest.raises(ValueError, match="not both"):
         t.read(spark, version=1, timestamp=ts[1])
-    # legacy commit (no recorded ts): mtime fallback still resolves
-    p = os.path.join(t.log_dir, "00000001.json")
-    with open(p) as f:
-        c = _json.load(f)
-    c.pop("ts")
-    with open(p, "w") as f:
-        _json.dump(c, f)
-    os.utime(p, (ts[1], ts[1]))
-    assert abs(t._commit_ts(1) - ts[1]) < 1.0
-    assert t.resolve_timestamp(ts[1] + 0.001) == 1
 
 
 def test_history_limit_is_bounded(spark, tmp_path, monkeypatch):

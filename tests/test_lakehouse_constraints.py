@@ -261,7 +261,7 @@ def test_batch_writer_enforces_proven_constraints(spark, tmp_path):
 def test_batch_writer_refuses_unproven_constraint(spark, tmp_path):
     """An expression whose canary cross-check could not prove
     Spark/DuckDB agreement (here: a Spark-only function) keeps the
-    refusal, and prove_native_write names the remedy."""
+    refusal."""
     from olist_data_warehouse_spark.sources.lakebatch import (
         LakeBatchDataSource,
     )

@@ -231,6 +231,35 @@ def test_parse_error_in_lake_create_is_a_value_error(spark, tmp_path):
     assert isinstance(e.value.__cause__, ParseException)
 
 
+def test_handled_parse_errors_are_not_logged(spark, tmp_path, capfd):
+    """pyspark logs every ParseException it converts at ERROR on
+    ``SQLQueryContextLogger``, with the JVM stack trace. The reserved
+    key below is refused by Spark's grammar and then handled (the
+    column named ``location`` is one more rename trial Spark refuses):
+    no such record is printed. A parse error that reaches the caller
+    keeps its type, message and cause."""
+    p = tmp_path / "quiet"
+    capfd.readouterr()
+    lakesql.sql(
+        spark,
+        f"CREATE TABLE quiet_t (id INT, location STRING) USING lake "
+        f"LOCATION '{p}' TBLPROPERTIES ('owner' = 'alice')",
+    )
+    assert LakeTable(str(p)).properties()["owner"] == "alice"
+    with pytest.raises(
+        ValueError, match=r"^cannot parse CREATE statement: \S"
+    ) as e:
+        lakesql.sql(
+            spark,
+            f"CREATE TABLE quiet_c (k INT,) USING lake "
+            f"LOCATION '{tmp_path / 'quiet_c'}'",
+        )
+    assert isinstance(e.value.__cause__, ParseException)
+    err = capfd.readouterr().err
+    assert "SQLQueryContextLogger" not in err
+    assert "ParseException" not in err
+
+
 # ----------------------------------------------- misreads of valid SQL
 
 @pytest.mark.parametrize(

@@ -103,3 +103,10 @@ def test_priority_list_fits_the_driver_cap():
     """The driver evaluates 50 entries; a priority name past the cap is
     never evaluated, so the list must not grow beyond it."""
     assert len(DRIVER_PRIORITY) <= 50
+
+
+def test_evaluated_prefix_is_the_priority_list():
+    """The first 50 entries of ordered_registry() are the evaluated
+    prefix; they are DRIVER_PRIORITY itself, so the registration order
+    of the entries after it can change without moving the prefix."""
+    assert list(ordered_registry())[:50] == DRIVER_PRIORITY[:50]

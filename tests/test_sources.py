@@ -437,67 +437,6 @@ def test_manifest_detects_schema_drift(spark, tmp_path):
     with open(os.path.join(p, "_MANIFEST.json"), "w") as f:
         f.write(manifest)
     assert not verify_manifest(spark, p)
-
-
-def test_versioned_table_write_read_rollback_vacuum(spark, tmp_path):
-    """Time travel on plain parquet: immutable v=N dirs + an atomic
-    pointer. Write 3 versions, read as-of each, roll back (metadata
-    only), prove a post-rollback write never clobbers survivors, then
-    vacuum keeps the pointer's target."""
-    from olist_data_warehouse_spark.sources import writers as W
-
-    p = str(tmp_path / "vt")
-    for n in (1, 2, 3):
-        v = W.write_versioned(
-            spark.range(n * 10).withColumnRenamed("id", "x"), p
-        )
-        assert v == n - 1
-    assert W.table_version(p) == 2
-    assert W.read_versioned(spark, p).count() == 30
-    assert W.read_versioned(spark, p, version=0).count() == 10
-
-    W.rollback_versioned(p, 1)
-    assert W.table_version(p) == 1
-    assert W.read_versioned(spark, p).count() == 20
-    # post-rollback write allocates AFTER the highest ever written
-    assert W.write_versioned(
-        spark.range(5).withColumnRenamed("id", "x"), p
-    ) == 3
-    assert W.read_versioned(spark, p).count() == 5
-    assert W.read_versioned(spark, p, version=2).count() == 30
-
-    removed = W.vacuum_versioned(p, keep=1)
-    assert 0 in removed and 3 not in removed
-    assert W.read_versioned(spark, p).count() == 5
-
-
-def test_versioned_read_is_snapshot_isolated(spark, tmp_path):
-    """A reader that resolved the pointer keeps reading ITS version
-    even if a writer publishes a new one mid-read — the layout
-    guarantees it (immutable v=N dirs), pin it."""
-    from olist_data_warehouse_spark.sources import writers as W
-
-    p = str(tmp_path / "iso")
-    W.write_versioned(spark.range(7).withColumnRenamed("id", "x"), p)
-    reader = W.read_versioned(spark, p)  # resolves pointer -> v=0 now
-    W.write_versioned(spark.range(99).withColumnRenamed("id", "x"), p)
-    assert reader.count() == 7          # still the v=0 snapshot
-    assert W.read_versioned(spark, p).count() == 99  # new resolve sees v=1
-
-
-def test_vacuum_versioned_rejects_keep_zero(spark, tmp_path):
-    """keep=0 would slice versions[-0:] == everything and silently keep
-    all versions (inverted semantics) — pinned as a ValueError."""
-    import pytest
-
-    from olist_data_warehouse_spark.sources import writers as W
-
-    p = str(tmp_path / "vz")
-    W.write_versioned(spark.range(3).withColumnRenamed("id", "x"), p)
-    with pytest.raises(ValueError):
-        W.vacuum_versioned(p, keep=0)
-
-
 # -- footer schemas ------------------------------------------------------
 
 SALES_TABLES = ("orders", "lineitem", "part", "supplier", "nation", "region")

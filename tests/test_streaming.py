@@ -816,7 +816,7 @@ def test_streaming_hll_register_merge_matches_batch(spark):
 
     from olist_data_warehouse_spark.operators import sketches
     from olist_data_warehouse_spark.plans.queries import REGISTRY
-    from olist_data_warehouse_spark.sources import writers
+    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
     events = load_testdata(spark, SF, ("events",))["events"]
     batch_all = rows(
@@ -852,7 +852,7 @@ def test_streaming_hll_register_merge_matches_batch(spark):
             .start()
         )
         q.awaitTermination()
-        assert writers.table_version(regs) == 1  # one version per batch
+        assert LakeTable(regs).version() == 1  # one version per batch
         got = rows(
             ev.read_hll_daily(spark, regs),
             "day", "approx_distinct", "n_zero_registers",
