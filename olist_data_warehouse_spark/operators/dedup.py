@@ -39,11 +39,12 @@ HASH_A_MULT = 2654435761
 HASH_B_MULT = 40503
 HASH_B_ADD = 17
 
-# Bounded cache residency (same convention as the _BM25_CACHES /
-# _CEST_CACHES lists in plans/llm_queries.py): each persist site keeps
-# at most ONE cached frame alive — the next call through the same slot
-# unpersists its predecessor — so a session running many dedup passes
-# holds one cached lineage per helper, not an ever-growing set.
+# Bounded cache residency (the _BM25_CACHES list in plans/llm/text.py
+# and _CEST_CACHES in plans/llm/dedup.py bound theirs to one frame):
+# each persist slot keeps at most _CACHE_CAP cached frames alive — a
+# new plan through a full slot unpersists the least-recently-used one —
+# so a session running many dedup passes holds a bounded set of cached
+# lineages per helper, not an ever-growing one.
 #
 # Semantic reuse, not blind eviction: re-running the SAME plan (bench
 # repetitions, a verify pass after a discovery pass over one corpus)

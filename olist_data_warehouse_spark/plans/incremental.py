@@ -16,7 +16,7 @@ Lookup + Split + Insert collapse to one ``left_anti`` + append. The
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from olist_data_warehouse_spark.plans import warehouse
@@ -106,50 +106,3 @@ def incremental_load_orders(
     )
     return incremental_new_rows(delta, dw["orders"])
 
-
-def refresh_fact_partitions(
-    spark: SparkSession,
-    fact_path: str,
-    delta_fact: DataFrame,
-    partition_col: str = "yr",
-) -> None:
-    """Partition-scoped fact maintenance: rewrite ONLY the partitions
-    the delta touches (Spark's dynamic partition overwrite), leaving
-    every other partition's files untouched on disk.
-
-    The 100 TB maintenance lever for the materialized star: a daily
-    correction batch touches one year (or day) partition, so the write
-    cost scales with the *churn*, never the accumulated fact — the
-    partition analog of `merge_upsert`'s row-level MERGE, and the
-    idiomatic lakehouse pattern (Delta/Iceberg `replaceWhere` /
-    dynamic overwrite have identical call shape).
-
-    ``delta_fact`` must carry ``partition_col``; its rows REPLACE those
-    partitions wholesale (recompute-the-partition semantics — simpler
-    and more scalable than row diffs when a partition fits a task,
-    which the whole-date grain guarantees here).
-
-    Constraints:
-
-    - ``delta_fact`` must NOT be derived from reading ``fact_path``
-      itself: Spark refuses (or, with lazy file listing, corrupts)
-      writes that overwrite their own input. Recompute the delta from
-      upstream staging, or ``localCheckpoint()`` it first to sever the
-      lineage before calling this.
-    - The overwrite-mode conf save/restore is session-global and not
-      concurrency-safe: two jobs flipping ``partitionOverwriteMode`` on
-      one session can race and leak the wrong mode into an unrelated
-      write. Serialize maintenance per session (at cluster scale this
-      boundary is a catalog table with atomic commit — Delta/Iceberg
-      ``replaceWhere`` — where the problem disappears).
-    """
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            delta_fact.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(fact_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

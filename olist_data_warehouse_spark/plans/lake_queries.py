@@ -665,7 +665,7 @@ WHERE o_orderstatus IS NULL OR o_orderstatus <> 'F'
     "survive a value drop). This is the retention/GDPR shape at "
     "100 TB: reference parity is S7 DELETE (SURVEY §2.1) at partition "
     "granularity, an O(matched files) metadata action instead of a "
-    "rewrite — the versioned twin of writers.drop_partitions.",
+    "rewrite.",
 )
 def lake_partition_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")["orders"]

@@ -1045,7 +1045,7 @@ FROM r WHERE rn = 1
     "(key ORDER BY ts DESC, id DESC) with the id tie-break makes "
     "same-timestamp updates deterministic on both engines. One hash "
     "exchange on the key; at 100 TB this runs per ingested partition "
-    "and merges via refresh_fact_partitions, never over the full "
+    "and merges via LakeTable.replace_where, never over the full "
     "history. The windowed form beats groupBy+join-back (one shuffle "
     "vs two) and beats max_by (which has no deterministic tie rule).",
 )

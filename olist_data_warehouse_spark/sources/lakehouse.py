@@ -1059,8 +1059,7 @@ class LakeTable:
         tuple (Hive ``data/col=val/`` layout), the manifest records it,
         and :meth:`drop_partitions` retires whole partitions as a
         METADATA-ONLY commit — zero files read or written, the
-        retention/GDPR shape (the versioned twin of the plain-parquet
-        ``drop_partitions`` in writers.py). Partition values also prune
+        retention/GDPR shape. Partition values also prune
         reads without needing min/max stats precision. Choose low-
         cardinality columns (a date, a region): at 100 TB each
         partition should still hold many ~128 MB files."""
@@ -3286,9 +3285,8 @@ class LakeTable:
         No file is read or written — the commit lists the dropped
         files as removes, old versions still time-travel to them, and
         vacuum reclaims them when their versions age out. This is the
-        retention/GDPR shape on the versioned format: the plain-parquet
-        twin is ``writers.drop_partitions``; the reference's bulk
-        DELETE reloads (S7, `Olist DW.sql:39-186`) become an O(matched
+        retention/GDPR shape on the versioned format: the reference's
+        bulk DELETE reloads (S7, `Olist DW.sql:39-186`) become an O(matched
         files) manifest edit instead of a rewrite.
 
         Returns ``{version, files_dropped, rows_deleted}``."""
@@ -3740,7 +3738,10 @@ def _stats_might_match(meta: dict, column: str, op: str, value) -> bool:
     (a list of normalized values for ``op='in'``). A file with no
     stats for the column is always a candidate (never silently
     skipped); NULLs never match a comparison, so an all-NULL file
-    (min and max both None with stats present) is provably clean."""
+    (min and max both None with stats present) is provably clean.
+    Spark orders NaN above every double while every Python comparison
+    with NaN is False, so a NaN bound (or a NaN probe value) never
+    proves a file clean."""
     st = (meta.get("stats") or {}).get(column)
     if st is None or st["min"] is None or st["max"] is None:
         # no stats, or all-NULL file for '=' etc. — all-NULL
@@ -3750,6 +3751,9 @@ def _stats_might_match(meta: dict, column: str, op: str, value) -> bool:
             st is not None and st["min"] is None and st["max"] is None
         )
     lo, hi = st["min"], st["max"]
+    probes = value if op == "in" else [value]
+    if any(isinstance(x, float) and x != x for x in (lo, hi, *probes)):
+        return True
     if op == "in":
         return any(lo <= v <= hi for v in value)
     might = {

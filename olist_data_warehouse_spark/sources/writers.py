@@ -63,33 +63,6 @@ def delete_where(spark: SparkSession, table: str, predicate: Column) -> None:
     kept.write.mode("overwrite").saveAsTable(table)
 
 
-def compact(spark: SparkSession, path: str, target_file_bytes: int = 128 * 1024 * 1024) -> int:
-    """Compact a parquet directory's small files toward
-    ``target_file_bytes`` per output file. Returns the file count
-    written.
-
-    Streaming sinks and incremental appends accrete one file per
-    micro-batch/run; at 100 TB the resulting file-count explosion
-    dominates scan planning time and kills row-group locality. This is
-    the plain-parquet form of OPTIMIZE/rewriteDataFiles: size-based
-    repartition, atomic overwrite. Runs as maintenance, not in the
-    query path.
-    """
-    import math
-    import os
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path).repartition(n_files).localCheckpoint(eager=True)
-    df.write.mode("overwrite").parquet(path)
-    return n_files
-
-
 def write_bucketed(
     df: DataFrame, table: str, bucket_cols: list[str], n_buckets: int,
     sort_cols: list[str] | None = None,
@@ -105,42 +78,6 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def delete_partitions(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    values: list,
-) -> int:
-    """Metadata-only DELETE for partition-aligned predicates: drop the
-    listed partition directories of a ``partition_col``-partitioned
-    parquet dataset without reading or rewriting a single row. Returns
-    the number of partitions removed.
-
-    The scale counterpart of :func:`delete_where` (copy-on-write row
-    rewrite): when the predicate is exactly a partition-column
-    membership test — retention windows ("drop days older than X"),
-    GDPR-by-tenant, backfill resets — the delete cost is file-system
-    metadata, independent of data volume. This is what Delta/Iceberg
-    ``DELETE WHERE <partition pred>`` compiles to (a metadata commit);
-    plain parquet makes it a directory remove + catalog refresh.
-    Non-partition-aligned predicates must keep using ``delete_where``
-    — this function never inspects row contents.
-    """
-    import os
-    import shutil
-
-    removed = 0
-    for v in values:
-        p = os.path.join(path, f"{partition_col}={v}")
-        if os.path.isdir(p):
-            shutil.rmtree(p)
-            removed += 1
-    # Drop cached file listings so subsequent reads don't chase the
-    # deleted directories.
-    spark.catalog.refreshByPath(path)
-    return removed
 
 
 def write_clustered(
@@ -160,7 +97,7 @@ def write_clustered(
 
     The range partitioner samples key quantiles, so output files are
     balanced even under key skew. Layout maintenance, not a query-path
-    operator — pair with :func:`compact` on streaming-accreted data.
+    operator.
     """
     w = df
     if n_files is not None:

@@ -2,13 +2,14 @@
 
 The reference's "incremental" story is a scheduled re-run of a delta
 query plus an anti-join insert (SSIS package, SURVEY.md §2.9/E3). Its
-idiomatic Spark upgrade is Structured Streaming: the same anti-join
+idiomatic Spark upgrade is Structured Streaming: the same insert-only
 merge runs per micro-batch in ``foreachBatch``, with watermarked
 event-time windows replacing the whole-date granularity.
 
-Everything here works identically on a real cluster: the parquet file
-source is replaced by Kafka/files-on-object-store and the memory/table
-sinks by Delta — the plan in the middle doesn't change.
+Every table maintained here is a lake table (``sources.lakehouse``):
+each micro-batch lands as one ``LakeTable`` commit. On a real cluster
+the parquet file source is replaced by Kafka/files-on-object-store —
+the plan in the middle doesn't change.
 
 Batch/stream parity: each streaming transformation has a batch twin in
 ``plans/queries.py`` (`stream_*` entries) whose DuckDB oracle pins the
@@ -21,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from olist_data_warehouse_spark.schemas import TESTDATA
+from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 from olist_data_warehouse_spark.sources.readers import read_parquet
 
 # The parquet file source needs an explicit schema. Requesting plain
@@ -168,10 +169,61 @@ def ohlc_bars(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
+def merge_batch(
+    batch: DataFrame,
+    path: str,
+    keys: list[str],
+    when_matched: str = "update",
+    partition_by: str | None = None,
+) -> None:
+    """The one foreachBatch body behind every maintained table: the
+    first batch creates the lake table at ``path``, every later batch
+    is one :meth:`LakeTable.merge_into` on ``keys`` — one atomic
+    commit, so a crashed batch leaves the previous version live.
+
+    ``when_matched='update'`` is the upsert (a re-emitted cumulative
+    row replaces the stored one); ``'keep'`` is the insert-only merge,
+    the reference's SSIS reload (`Package.dtsx:657-673`). Both are
+    idempotent, so a replayed epoch leaves the rows as they were.
+    ``partition_by`` names a partition column that is a function of
+    ``keys``; the merge is pruned to the partitions the batch holds."""
+    t = LakeTable(path)
+    if t.version() is None:
+        LakeTable.create(
+            batch, path, partition_by=[partition_by] if partition_by else None
+        )
+        return
+    prune = None
+    if partition_by:
+        touched = [r[0] for r in batch.select(partition_by).distinct().collect()]
+        prune = (partition_by, "in", touched)
+    t.merge_into(batch.sparkSession, batch, keys, when_matched, prune=prune)
+
+
+def _maintain(
+    agg: DataFrame,
+    output_mode: str,
+    checkpoint_dir: str,
+    path: str,
+    keys: list[str],
+    **merge,
+) -> None:
+    """Run ``agg`` to the end of its input (availableNow), merging each
+    micro-batch into the lake table at ``path`` (:func:`merge_batch`)."""
+    (
+        agg.writeStream.outputMode(output_mode)
+        .foreachBatch(lambda b, _id: merge_batch(b, path, keys, **merge))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def run_streaming_ohlc(
     spark: SparkSession,
     sf_dir: str,
-    target_table: str,
+    target_path: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
 ) -> None:
@@ -180,131 +232,59 @@ def run_streaming_ohlc(
     contract as :func:`run_streaming_rollup` — a bar split across
     micro-batches is written partial, then revised complete, because
     update mode re-emits the window's cumulative aggregate."""
-    agg = ohlc_bars(read_events_stream(spark, sf_dir), watermark)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if not spark_l.catalog.tableExists(target_table):
-            batch_df.write.saveAsTable(target_table)
-            return
-        keys = batch_df.select("event_type", "bucket").distinct()
-        kept = spark_l.table(target_table).join(
-            F.broadcast(keys), ["event_type", "bucket"], "left_anti"
-        )
-        out = kept.unionByName(batch_df).localCheckpoint(eager=True)
-        out.write.mode("overwrite").saveAsTable(target_table)
-        spark_l.catalog.refreshTable(target_table)
-
-    (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _maintain(
+        ohlc_bars(read_events_stream(spark, sf_dir), watermark),
+        "update", checkpoint_dir, target_path, ["event_type", "bucket"],
     )
-    if spark.catalog.tableExists(target_table):
-        spark.catalog.refreshTable(target_table)
 
 
 def run_streaming_incremental(
     spark: SparkSession,
     sf_dir: str,
-    target_table: str,
+    target_path: str,
     checkpoint_dir: str,
 ) -> None:
     """The J7 incremental load as a streaming job.
 
-    Per micro-batch: aggregate, anti-join against already-loaded
-    window keys in the target, append only new ones — exactly the SSIS
-    Lookup→Split→Insert semantics, continuously. availableNow makes it
-    a catch-up batch run (the scheduled-daily analog).
+    Per micro-batch: aggregate, then an insert-only merge on the window
+    key into the lake table at ``target_path`` — already-loaded keys
+    stay, only new ones land: the SSIS Lookup→Split→Insert semantics,
+    continuously. availableNow makes it a catch-up batch run (the
+    scheduled-daily analog).
     """
-    agg = tumbling_counts(read_events_stream(spark, sf_dir))
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        if not spark_l.catalog.tableExists(target_table):
-            batch_df.write.saveAsTable(target_table)
-            return
-        existing = spark_l.table(target_table).select(
-            "window_start", "event_type"
-        ).distinct()
-        new_rows = batch_df.join(
-            F.broadcast(existing), ["window_start", "event_type"], "left_anti"
-        )
-        new_rows.write.mode("append").saveAsTable(target_table)
-
-    (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _maintain(
+        tumbling_counts(read_events_stream(spark, sf_dir)),
+        "complete", checkpoint_dir, target_path,
+        ["window_start", "event_type"], when_matched="keep",
     )
 
 
 def run_streaming_rollup(
     spark: SparkSession,
     sf_dir: str,
-    target_table: str,
+    target_path: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
 ) -> None:
     """Continuously-maintained rollup (the "hypertable rollup" /
     incremental materialized view): per micro-batch, UPSERT the updated
-    windows into the target — late rows within the watermark *revise*
-    an already-written window instead of being skipped.
+    windows into the lake table at ``target_path`` — late rows within
+    the watermark *revise* an already-written window instead of being
+    skipped.
 
-    The complement of :func:`run_streaming_incremental` (anti-join
-    insert = "late item for a loaded date is skipped", the reference's
+    The complement of :func:`run_streaming_incremental` (insert-only
+    merge = "late item for a loaded date is skipped", the reference's
     SSIS policy): this is the streaming twin of the batch MERGE
     (``j7_merge_upsert``). Update-mode aggregation re-emits a window's
     *cumulative* totals whenever a batch touches it, so replacing the
     target's rows for exactly the emitted keys converges to the full
     batch aggregate — a window split across micro-batches is first
     written partial, then revised complete.
-
-    Copy-on-write upsert on plain parquet (anti-join keys + union);
-    Delta/Iceberg would make the merge a real MERGE INTO with the same
-    call shape.
     """
-    agg = tumbling_counts(read_events_stream(spark, sf_dir), watermark)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        # Stabilize the micro-batch before it is read twice (keys +
-        # union) and before overwriting a table it derives from.
-        batch_df = batch_df.localCheckpoint(eager=True)
-        if not spark_l.catalog.tableExists(target_table):
-            batch_df.write.saveAsTable(target_table)
-            return
-        keys = batch_df.select("window_start", "event_type").distinct()
-        kept = spark_l.table(target_table).join(
-            F.broadcast(keys), ["window_start", "event_type"], "left_anti"
-        )
-        out = kept.unionByName(batch_df).localCheckpoint(eager=True)
-        out.write.mode("overwrite").saveAsTable(target_table)
-        # The overwrite replaced the table's files; drop the cached
-        # file listing so the next micro-batch's anti-join read doesn't
-        # chase deleted part files.
-        spark_l.catalog.refreshTable(target_table)
-
-    (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _maintain(
+        tumbling_counts(read_events_stream(spark, sf_dir), watermark),
+        "update", checkpoint_dir, target_path, ["window_start", "event_type"],
     )
-    # foreachBatch runs under a cloned session whose refresh doesn't
-    # reach the caller's catalog cache — refresh here too so the
-    # caller's next read of the target sees the rewritten files.
-    if spark.catalog.tableExists(target_table):
-        spark.catalog.refreshTable(target_table)
 
 
 def run_streaming_fact_maintenance(
@@ -314,76 +294,30 @@ def run_streaming_fact_maintenance(
     checkpoint_dir: str,
     watermark: str = "1 hour",
 ) -> None:
-    """CDC-style continuous fact maintenance: the streaming twin of
-    ``plans.incremental.refresh_fact_partitions``, composing the rollup
-    upsert (late rows within the watermark *revise* written windows)
-    with dynamic partition overwrite (only touched partitions' files
-    are rewritten).
+    """CDC-style continuous fact maintenance: the rollup upsert (late
+    rows within the watermark *revise* written windows) on a lake table
+    partitioned by day (``pday``).
 
     Per micro-batch: update-mode aggregation emits the cumulative
-    totals of every (window, type) the batch touched; the batch's
-    touched day-partitions are read back partition-pruned, their
-    untouched rows kept, and ONLY those partitions replaced wholesale.
-    Every other partition's files stay physically untouched on disk —
-    write cost scales with the churn window (a day or two), never the
-    accumulated fact, which is the whole 100 TB maintenance story: a
-    year-old fact partition costs nothing when today's events arrive.
-
-    Plain-parquet dynamic overwrite here; Delta/Iceberg ``replaceWhere``
-    or MERGE is the same call shape with an atomic commit.
+    totals of every (window, type) the batch touched, and the merge is
+    pruned to the batch's day partitions. Only files that hold a
+    revised window are rewritten; every other file stays live by
+    reference — write cost scales with the churn window (a day or
+    two), never the accumulated fact, which is the whole 100 TB
+    maintenance story: a year-old fact partition costs nothing when
+    today's events arrive.
     """
-    import os
-
-    from olist_data_warehouse_spark.plans.incremental import (
-        refresh_fact_partitions,
-    )
-
     agg = tumbling_counts(read_events_stream(spark, sf_dir), watermark)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        batch_df = batch_df.withColumn(
+    _maintain(
+        agg.withColumn(
             "pday",
             F.date_format(F.to_timestamp("window_start"), "yyyyMMdd").cast(
                 "int"
             ),
-        ).localCheckpoint(eager=True)
-        # Dynamic partition overwrite commits per-partition and writes
-        # no root _SUCCESS — the fact exists iff partition dirs do.
-        fact_exists = os.path.isdir(fact_path) and any(
-            d.startswith("pday=") for d in os.listdir(fact_path)
-        )
-        if not fact_exists:
-            refresh_fact_partitions(
-                spark_l, fact_path, batch_df, partition_col="pday"
-            )
-            return
-        touched = [r["pday"] for r in batch_df.select("pday").distinct().collect()]
-        # Partition-pruned read of ONLY the touched days; drop the file-
-        # listing cache first in case an earlier batch rewrote them.
-        spark_l.catalog.refreshByPath(fact_path)
-        existing = spark_l.read.parquet(fact_path).filter(
-            F.col("pday").isin(touched)
-        )
-        keys = batch_df.select("window_start", "event_type").distinct()
-        kept = existing.join(
-            F.broadcast(keys), ["window_start", "event_type"], "left_anti"
-        )
-        out = kept.unionByName(batch_df).localCheckpoint(eager=True)
-        refresh_fact_partitions(spark_l, fact_path, out, partition_col="pday")
-
-    (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+        ),
+        "update", checkpoint_dir, fact_path, ["window_start", "event_type"],
+        partition_by="pday",
     )
-    # The caller's session caches file listings separately from the
-    # cloned foreachBatch session — refresh so its next read sees the
-    # rewritten partitions.
-    spark.catalog.refreshByPath(fact_path)
 
 
 def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -989,34 +923,15 @@ def index_refresh_stream(docs_stream: DataFrame, index_path: str):
     read time, so a term crossing the threshold mid-stream publishes
     exactly as a rebuild would.
 
-    Plain-parquet overwrite per batch here (the base is
-    vocabulary-sized, far below the fact scale that needs dynamic
-    partition overwrite); a lakehouse MERGE is the same call shape
-    with an atomic commit. Returns the started-query builder — caller
-    picks trigger/checkpoint.
+    The base is a lake table (vocabulary-sized): the first batch
+    creates it and each later merge is one ``overwrite`` commit, so a
+    batch that dies mid-write leaves the previous version live and the
+    checkpointed retry re-merges against it. Returns the writeStream
+    builder — caller picks trigger/checkpoint.
     """
-    import os
-    import shutil
-
     from olist_data_warehouse_spark.operators import textops
 
-    tmp_path = index_path.rstrip("/") + "._staging"
-
-    def _has_parquet(p: str) -> bool:
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(p)
-            for f in fs
-        )
-
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        # Crash recovery: a completed staging dir with no live index
-        # means the previous batch died between removing the old index
-        # and publishing the new one — promote the staging copy first
-        # so the merge below never degrades to delta-only.
-        if not _has_parquet(index_path) and _has_parquet(tmp_path):
-            os.replace(tmp_path, index_path)
         delta = (
             batch_df.select(
                 "doc_id", F.explode(textops.tokens("text")).alias("term")
@@ -1028,37 +943,28 @@ def index_refresh_stream(docs_stream: DataFrame, index_path: str):
             .groupBy("term")
             .agg(F.collect_set("doc_id").alias("docs"))
         )
+        idx = LakeTable(index_path)
+        if idx.version() is None:
+            LakeTable.create(delta, index_path)
+            return
         empty = F.array().cast("array<bigint>")
-        if _has_parquet(index_path):
-            base = spark_l.read.parquet(index_path)
-            merged = (
-                base.select("term", F.col("docs").alias("b"))
-                .join(
-                    delta.select("term", F.col("docs").alias("d")),
-                    "term",
-                    "full_outer",
-                )
-                .select(
-                    "term",
-                    F.array_union(
-                        F.coalesce("b", empty), F.coalesce("d", empty)
-                    ).alias("docs"),
-                )
+        # lake data files are immutable, so the overwrite may read the
+        # version it replaces
+        idx.overwrite(
+            idx.read(batch_df.sparkSession)
+            .select("term", F.col("docs").alias("b"))
+            .join(
+                delta.select("term", F.col("docs").alias("d")),
+                "term",
+                "full_outer",
             )
-            # Publish via staging + swap, never overwrite-in-place: an
-            # in-place overwrite deletes the base BEFORE the write job
-            # commits, so any mid-write failure would silently reset
-            # the index to delta-only on the checkpointed retry. The
-            # staging write can fail harmlessly (base intact, retry
-            # re-merges); after it commits, the swap window is covered
-            # by the recovery branch above. A lakehouse MERGE gives
-            # the same contract as one atomic commit.
-            shutil.rmtree(tmp_path, ignore_errors=True)
-            merged.write.mode("overwrite").parquet(tmp_path)
-            shutil.rmtree(index_path, ignore_errors=True)
-            os.replace(tmp_path, index_path)
-        else:
-            delta.write.mode("overwrite").parquet(index_path)
+            .select(
+                "term",
+                F.array_union(
+                    F.coalesce("b", empty), F.coalesce("d", empty)
+                ).alias("docs"),
+            )
+        )
 
     return docs_stream.writeStream.foreachBatch(merge)
 
@@ -1067,7 +973,7 @@ def read_published_index(spark: SparkSession, index_path: str) -> DataFrame:
     """The published view over the maintained raw postings: df >= 2,
     canonical ascending-id CSV — same contract as text_inverted_index
     and ivm_index_merge."""
-    raw = spark.read.parquet(index_path)
+    raw = LakeTable(index_path).read(spark)
     return (
         raw.select(
             "term",
@@ -1098,7 +1004,6 @@ def hll_refresh_stream(events_stream: DataFrame, regs_path: str):
     as-of-readable (time travel over sketch state). Returns the
     writeStream builder — caller picks trigger/checkpoint."""
     from olist_data_warehouse_spark.operators import sketches
-    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         daily = batch_df.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
@@ -1125,7 +1030,6 @@ def read_hll_daily(
     """(day, approx_distinct, n_zero_registers) from the materialized
     register table — current by default, or AS OF an older version."""
     from olist_data_warehouse_spark.operators import sketches
-    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
     return sketches.hll_estimate(
         LakeTable(regs_path).read(spark, version=version), ["day"]

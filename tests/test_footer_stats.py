@@ -219,3 +219,37 @@ def test_partition_value_parse_roundtrip():
     assert p("2.5", "float") == 2.5
     with pytest.raises(ValueError):
         p("maybe", "boolean")
+
+
+def test_nan_bound_never_prunes_a_file(spark, tmp_path):
+    """Spark orders NaN above every double, so a file whose max is NaN
+    may hold any value above its min: no stats prune may call it clean.
+    The DataSource read, ``prune_files``, ``delete_where(prune=)`` and
+    the SQL DELETE (auto-derived prune) all keep seeing its rows."""
+    from olist_data_warehouse_spark.sources import lakebatch, lakesql
+
+    df = spark.createDataFrame(
+        [(1, 1.0), (2, float("nan")), (3, 5.0)], "k int, x double"
+    ).coalesce(1)
+    t = LakeTable.create(df, str(tmp_path / "nan"))
+    (meta,) = t._state()["files"].values()
+    assert math.isnan(meta["stats"]["x"]["max"])
+
+    lakebatch.register(spark)
+    got = (
+        spark.read.format("lake").option("path", t.path).load()
+        .where("x = 5.0")
+    )
+    assert [r.k for r in got.collect()] == [3]
+    assert t.prune_files("x", "=", 5.0) == ([sorted(t._state()["files"])[0]], [])
+
+    # NaN > 100 is TRUE in Spark: the pruned delete removes the NaN row
+    # exactly as the unpruned one does
+    r = t.delete_where(spark, F.col("x") > 100.0, prune=("x", ">", 100.0))
+    assert r["rows_deleted"] == 1
+    assert sorted(r.k for r in t.read(spark).collect()) == [1, 3]
+
+    s = LakeTable.create(df, str(tmp_path / "nan_sql"))
+    lakebatch.register_table(spark, "nan_sql", s.path)
+    lakesql.sql(spark, "DELETE FROM nan_sql WHERE x > 100")
+    assert sorted(r.k for r in s.read(spark).collect()) == [1, 3]

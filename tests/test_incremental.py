@@ -86,29 +86,23 @@ def test_merge_upsert_idempotent(spark):
     }
 
 
-def test_refresh_fact_partitions_touches_only_delta_partitions(spark, tmp_path):
-    """Dynamic partition overwrite: the delta's partitions are replaced
-    wholesale, every other partition's files stay byte-identical."""
-    import os
+def test_replace_where_touches_only_delta_partitions(spark, tmp_path):
+    """Partition-scoped fact maintenance on the lake: a replace_where
+    over the delta's partitions swaps them in one commit, and every
+    other partition's files stay live, unread and unrewritten."""
+    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
-    from olist_data_warehouse_spark.plans.incremental import (
-        refresh_fact_partitions,
-    )
-
-    path = str(tmp_path / "fact")
     base = spark.createDataFrame(
         [(19960101, 10), (19960102, 20), (19970101, 30), (19980101, 40)],
         "date_key int, units bigint",
     ).withColumn("yr", (F.col("date_key") / 10000).cast("int"))
-    base.write.mode("overwrite").partitionBy("yr").parquet(path)
+    t = LakeTable.create(base, str(tmp_path / "fact"), partition_by=["yr"])
 
     def files_of(yr):
-        d = os.path.join(path, f"yr={yr}")
-        return sorted(
-            (f, os.path.getsize(os.path.join(d, f)), os.path.getmtime(os.path.join(d, f)))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
+        return {
+            p: m["rows"] for p, m in t._state()["files"].items()
+            if m["partition"]["yr"] == yr
+        }
 
     before_96, before_98 = files_of(1996), files_of(1998)
 
@@ -116,18 +110,17 @@ def test_refresh_fact_partitions_touches_only_delta_partitions(spark, tmp_path):
     delta = spark.createDataFrame(
         [(19970101, 35), (19970202, 5)], "date_key int, units bigint"
     ).withColumn("yr", (F.col("date_key") / 10000).cast("int"))
-    refresh_fact_partitions(spark, path, delta)
+    r = t.replace_where(
+        spark, delta, F.col("yr") == 1997, prune=("yr", "=", 1997)
+    )
 
     assert files_of(1996) == before_96
     assert files_of(1998) == before_98
+    assert r["rows_deleted"] == 1 and r["rows_inserted"] == 2
     got = sorted(
-        map(tuple, spark.read.parquet(path).select("date_key", "units").collect())
+        map(tuple, t.read(spark).select("date_key", "units").collect())
     )
     assert got == [
         (19960101, 10), (19960102, 20), (19970101, 35), (19970202, 5),
         (19980101, 40),
     ]
-    # static mode restored
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic"
-    )

@@ -1,9 +1,9 @@
 """Salted join correctness (row-identical to the plain join, salt in
-the shuffle key) and small-file compaction."""
+the shuffle key) and the parquet layout writers (bucketing, range
+clustering, Z-order)."""
 
 from __future__ import annotations
 
-import glob
 import io
 from contextlib import redirect_stdout
 
@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from olist_data_warehouse_spark.operators import skew
-from olist_data_warehouse_spark.sources import writers
 
 
 @pytest.fixture(scope="module")
@@ -51,18 +50,6 @@ def test_salted_join_shuffles_on_salted_key(spark, skewed):
     with redirect_stdout(buf):
         df.explain("formatted")
     assert "_salt" in buf.getvalue()  # the salt is part of the join key
-
-
-def test_compact_reduces_file_count(spark, tmp_path):
-    p = str(tmp_path / "frag")
-    df = spark.range(10000).withColumn("x", F.col("id") * 2)
-    df.repartition(64).write.parquet(p)   # simulate 64 tiny appended files
-    assert len(glob.glob(f"{p}/*.parquet")) == 64
-    n = writers.compact(spark, p, target_file_bytes=1 << 30)
-    assert n == 1 and len(glob.glob(f"{p}/*.parquet")) == 1
-    back = spark.read.parquet(p)
-    assert back.count() == 10000
-    assert back.agg(F.sum("x")).collect()[0][0] == 9999 * 10000
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

@@ -210,38 +210,6 @@ def load_testdata_orders(spark):
     ].select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
 
 
-def test_delete_partitions_is_metadata_only(spark, tmp_path):
-    """Partition-aligned DELETE drops whole directories: untouched
-    partitions' data files keep their exact paths and mtimes (nothing
-    was read or rewritten), and reads see only surviving rows."""
-    import os
-
-    from olist_data_warehouse_spark.sources.writers import delete_partitions
-
-    path = str(tmp_path / "fact")
-    df = spark.range(100).selectExpr("id", "id % 5 AS part")
-    df.write.partitionBy("part").parquet(path)
-
-    def files():
-        return {
-            os.path.join(dp, f): os.path.getmtime(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        }
-
-    before = files()
-    removed = delete_partitions(spark, path, "part", [1, 3, 99])
-    assert removed == 2  # 99 didn't exist
-    after = files()
-    # survivors byte-untouched (same path, same mtime)
-    survivors = {p: m for p, m in before.items() if "part=1/" not in p and "part=3/" not in p}
-    assert after == survivors
-    got = spark.read.parquet(path)
-    assert got.count() == 60
-    assert sorted(r["part"] for r in got.select("part").distinct().collect()) == [0, 2, 4]
-
-
 def test_schema_evolution_merge_read(spark, tmp_path):
     """read_evolving_parquet: generations with added columns read as
     one DataFrame; pre-evolution rows surface NULL for new columns;

@@ -8,6 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 from olist_data_warehouse_spark.sources.readers import load_testdata
 from olist_data_warehouse_spark.streaming import events as ev
 
@@ -18,32 +19,47 @@ def rows(df, *cols):
     return {tuple(r) for r in df.select(*cols).collect()}
 
 
-def test_streaming_incremental_matches_batch(spark):
+def test_streaming_incremental_matches_batch(spark, tmp_path):
     batch = ev.tumbling_counts(load_testdata(spark, SF, ("events",))["events"])
-    with tempfile.TemporaryDirectory() as ckpt:
-        spark.sql("CREATE DATABASE IF NOT EXISTS stream_test")
-        spark.sql("DROP TABLE IF EXISTS stream_test.win_counts")
-        ev.run_streaming_incremental(
-            spark, SF, "stream_test.win_counts", ckpt
-        )
-        got = spark.table("stream_test.win_counts")
-        cols = ("window_start", "event_type", "n_events", "total_value")
-        assert rows(got, *cols) == rows(batch, *cols)
+    target = str(tmp_path / "win_counts")
+    ev.run_streaming_incremental(spark, SF, target, str(tmp_path / "ckpt"))
+    got = LakeTable(target).read(spark)
+    cols = ("window_start", "event_type", "n_events", "total_value")
+    assert rows(got, *cols) == rows(batch, *cols)
 
 
-def test_streaming_incremental_is_idempotent(spark):
+def test_streaming_incremental_is_idempotent(spark, tmp_path):
     """Re-running the merge against an already-loaded target appends
-    nothing (anti-join on the window key — the J7 semantics)."""
+    nothing (insert-only merge on the window key — the J7 semantics)."""
     batch = ev.tumbling_counts(load_testdata(spark, SF, ("events",))["events"])
-    with tempfile.TemporaryDirectory() as ckpt:
-        spark.sql("CREATE DATABASE IF NOT EXISTS stream_test")
-        spark.sql("DROP TABLE IF EXISTS stream_test.win_counts2")
-        ev.run_streaming_incremental(spark, SF, "stream_test.win_counts2", ckpt)
-        n1 = spark.table("stream_test.win_counts2").count()
-    with tempfile.TemporaryDirectory() as ckpt2:  # fresh checkpoint, same target
-        ev.run_streaming_incremental(spark, SF, "stream_test.win_counts2", ckpt2)
-        n2 = spark.table("stream_test.win_counts2").count()
+    target = str(tmp_path / "win_counts2")
+    ev.run_streaming_incremental(spark, SF, target, str(tmp_path / "ckpt"))
+    n1 = LakeTable(target).read(spark).count()
+    # fresh checkpoint, same target
+    ev.run_streaming_incremental(spark, SF, target, str(tmp_path / "ckpt2"))
+    n2 = LakeTable(target).read(spark).count()
     assert n1 == n2 == batch.count()
+
+
+@pytest.mark.parametrize("when_matched", ["update", "keep"])
+def test_merge_batch_replayed_epoch_is_idempotent(
+    spark, tmp_path, when_matched
+):
+    """A replayed epoch hands foreachBatch the same micro-batch again:
+    the second merge must leave the table's rows exactly as the first
+    left them, for the upsert and the insert-only form alike."""
+    path = str(tmp_path / "t")
+    schema = "k string, g string, n bigint"
+    first = spark.createDataFrame([("a", "x", 1), ("b", "x", 2)], schema)
+    epoch = spark.createDataFrame([("b", "x", 5), ("c", "y", 3)], schema)
+    ev.merge_batch(first, path, ["k", "g"], when_matched)
+    ev.merge_batch(epoch, path, ["k", "g"], when_matched)
+    once = sorted(map(tuple, LakeTable(path).read(spark).collect()))
+    ev.merge_batch(epoch, path, ["k", "g"], when_matched)
+    again = sorted(map(tuple, LakeTable(path).read(spark).collect()))
+    assert again == once
+    b = 5 if when_matched == "update" else 2
+    assert once == [("a", "x", 1), ("b", "x", b), ("c", "y", 3)]
 
 
 def test_session_window_stream_matches_batch_sessionize(spark):
@@ -294,9 +310,7 @@ def test_streaming_rollup_revises_boundary_windows(spark, tmp_path):
     events_dir = data_dir / "events.parquet"
     events_dir.mkdir(parents=True)
     ckpt = str(tmp_path / "ckpt")
-    target = "stream_test.rollup_counts"
-    spark.sql("CREATE DATABASE IF NOT EXISTS stream_test")
-    spark.sql(f"DROP TABLE IF EXISTS {target}")
+    target = str(tmp_path / "rollup_counts")
 
     batch = ev.tumbling_counts(load_testdata(spark, SF, ("events",))["events"])
     cols = ("window_start", "event_type", "n_events", "total_value")
@@ -307,7 +321,7 @@ def test_streaming_rollup_revises_boundary_windows(spark, tmp_path):
         chunk = src.slice(cuts[i], cuts[i + 1] - cuts[i])
         pq.write_table(chunk, events_dir / f"part-{i:03d}.parquet")
         ev.run_streaming_rollup(spark, str(data_dir), target, ckpt)
-        snapshots.append(rows(spark.table(target), *cols))
+        snapshots.append(rows(LakeTable(target).read(spark), *cols))
 
     assert snapshots[-1] == want
 
@@ -328,12 +342,10 @@ def test_streaming_rollup_revises_boundary_windows(spark, tmp_path):
 
 def test_streaming_fact_maintenance_partition_scoped(spark, tmp_path):
     """CDC-style continuous fact maintenance: events arrive as three
-    time-ordered files; each arrival rewrites ONLY the day-partitions
-    it touches (dynamic partition overwrite). Final fact == full batch
-    aggregate, and at least one early partition's data files are
-    physically untouched (same path + mtime) across the later runs."""
-    import os
-
+    time-ordered files; each arrival merges into ONLY the day-partitions
+    it touches. Final fact == full batch aggregate, and at least one
+    data file written by the first run is still live after the later
+    runs (carried by reference, never rewritten)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -347,15 +359,7 @@ def test_streaming_fact_maintenance_partition_scoped(spark, tmp_path):
     events_dir.mkdir(parents=True)
     ckpt = str(tmp_path / "ckpt")
     fact_path = str(tmp_path / "fact")
-
-    def part_files():
-        out = {}
-        for root, _dirs, files in os.walk(fact_path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    p = os.path.join(root, f)
-                    out[p] = os.path.getmtime(p)
-        return out
+    fact = LakeTable(fact_path)
 
     snapshots = []
     for i in range(3):
@@ -364,23 +368,21 @@ def test_streaming_fact_maintenance_partition_scoped(spark, tmp_path):
         ev.run_streaming_fact_maintenance(
             spark, str(data_dir), fact_path, ckpt
         )
-        snapshots.append(part_files())
+        snapshots.append(set(fact._state()["files"]))
 
     batch = ev.tumbling_counts(load_testdata(spark, SF, ("events",))["events"])
     cols = ("window_start", "event_type", "n_events", "total_value")
-    got = spark.read.parquet(fact_path)
+    got = fact.read(spark)
     assert rows(got, *cols) == rows(batch, *cols)
 
     # Partition scoping: data files of days untouched by later arrivals
-    # survive runs 2 and 3 verbatim. (Time-ordered arrivals guarantee
+    # stay live through runs 2 and 3. (Time-ordered arrivals guarantee
     # run 1 wrote days the later chunks never revisit.)
-    survived = [
-        p for p, m in snapshots[0].items()
-        if snapshots[-1].get(p) == m
-    ]
-    assert survived, "every run-1 data file was rewritten by later runs"
+    assert snapshots[0] & snapshots[-1], (
+        "every run-1 data file was rewritten by later runs"
+    )
     # And maintenance did not balloon the fact: every batch aggregate
-    # row lives in exactly one pday partition dir.
+    # row lives in exactly one pday partition.
     assert got.filter(
         F.col("pday") != F.date_format(
             F.to_timestamp("window_start"), "yyyyMMdd"
@@ -739,9 +741,10 @@ def test_index_refresh_stream_converges_to_rebuild(spark):
             "term", "df", "posting_list",
         )
         assert got == rebuild
+        assert LakeTable(idx).version() == 1  # one version per batch
 
 
-def test_streaming_ohlc_matches_batch_and_oracle_form(spark):
+def test_streaming_ohlc_matches_batch_and_oracle_form(spark, tmp_path):
     """The min_by/max_by OHLC transform through real availableNow
     micro-batches with per-batch upsert equals the same transform run
     as a batch query (whose ranked-CTE oracle pins the selection
@@ -750,12 +753,10 @@ def test_streaming_ohlc_matches_batch_and_oracle_form(spark):
     cols = (
         "event_type", "bucket", "open", "high", "low", "close", "n_events"
     )
-    with tempfile.TemporaryDirectory() as ckpt:
-        spark.sql("CREATE DATABASE IF NOT EXISTS stream_test")
-        spark.sql("DROP TABLE IF EXISTS stream_test.ohlc")
-        ev.run_streaming_ohlc(spark, SF, "stream_test.ohlc", ckpt)
-        got = spark.table("stream_test.ohlc")
-        assert rows(got, *cols) == rows(batch, *cols)
+    target = str(tmp_path / "ohlc")
+    ev.run_streaming_ohlc(spark, SF, target, str(tmp_path / "ckpt"))
+    got = LakeTable(target).read(spark)
+    assert rows(got, *cols) == rows(batch, *cols)
 
 
 def test_streaming_phash_kernel_matches_batch(spark):
@@ -816,7 +817,6 @@ def test_streaming_hll_register_merge_matches_batch(spark):
 
     from olist_data_warehouse_spark.operators import sketches
     from olist_data_warehouse_spark.plans.queries import REGISTRY
-    from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
     events = load_testdata(spark, SF, ("events",))["events"]
     batch_all = rows(

@@ -2,9 +2,11 @@
 
 Replicates the driver's correctness gate over EVERY registry entry (the
 driver itself evaluates only a ~50-entry prefix per round; this closes
-the evidentiary gap locally). Usage:
+the evidentiary gap locally), in the driver's ``ordered_registry()``
+order, so an entry leaning on state a neighbour left behind fails here
+as it would there. Usage:
 
-    python tools/oracle_sweep.py [sf_dir]          # default sf0.01
+    python tools/oracle_sweep.py [sf_dir] [name ...]   # default sf0.01
 
 Prints one line per entry and a final tally; exit code 1 on any fail.
 """
@@ -19,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
-from olist_data_warehouse_spark.plans.queries import REGISTRY
+from olist_data_warehouse_spark.plans.queries import ordered_registry
 from tests.oracle_check import compare_query
 
 
@@ -35,7 +37,7 @@ def main() -> int:
     )
     t0 = time.time()
     fails = []
-    names = sorted(REGISTRY)
+    names = list(ordered_registry())
     if len(sys.argv) > 2:  # optional name filters
         want = set(sys.argv[2:])
         unknown = want - set(names)
