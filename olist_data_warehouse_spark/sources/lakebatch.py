@@ -22,15 +22,19 @@ last commit at or before it (Delta's ``timestampAsOf``).
 CHANGE FEED through the same surface (Delta's ``readChangeFeed``
 shape): the table's columns plus ``_change_type``
 ('insert' | 'delete') and ``_commit_version``, replaying the commits
-in ``(since, version-or-current]`` exactly as
-``LakeTable.read_changes_since`` does — so a batch consumer folds
-signed deltas with zero Python-API coupling. Pushed filters prune CDF
-slices PER MANIFEST ENTRY (pre-images carry full stats), and stay
-residual as always.
+in ``(since, version-or-current]`` through the log walk
+``LakeTable.read_changes_since`` uses (``LakeTable._feed``, whose
+``_cdf_pairs`` maps each commit to its feed entries) — so a batch
+consumer folds signed deltas with zero Python-API coupling. Pushed
+filters prune CDF slices PER MANIFEST ENTRY (pre-images carry full
+stats), and stay residual as always. The schema, in both modes, is
+``lakehouse._feed_schema``; the version pin is ``LakeTable.read``'s.
 
-Executor side shares :func:`lakestream.read_file_slice` — one file
+Both modes build their slices with :func:`lakestream.file_slice` and
+the executor side shares :func:`lakestream.read_file_slice` — one file
 per input partition, Arrow record batches projected by name to the
-table schema (partition columns fill as constants from the manifest).
+table schema (partition columns fill as constants from the manifest,
+deletion-vector rows masked out).
 
 Scale posture (100 TB): planning is one manifest resolution
 (checkpoint-bounded) plus an O(files) driver-side stats pass; the scan
@@ -56,17 +60,16 @@ from pyspark.sql.datasource import (
     GreaterThan,
     GreaterThanOrEqual,
     In,
-    InputPartition,
     LessThan,
     LessThanOrEqual,
     WriterCommitMessage,
 )
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 from olist_data_warehouse_spark.sources.lakehouse import (
     _STATS_TYPES,
     LakeTable,
-    _cdf_pairs,
+    _feed_schema,
     _norm_path,
 )
 
@@ -85,22 +88,12 @@ _FILTER_OPS = {
 
 def _resolve_as_of(options) -> int | None:
     """The scan's pinned version from the 'version' / 'timestamp'
-    options (mutually exclusive): 'timestamp' resolves through
-    LakeTable.resolve_timestamp (Delta's timestampAsOf), 'version' is
-    exact, neither means the current version."""
+    options, as :meth:`LakeTable.read` pins it (Delta's timestampAsOf;
+    neither means the current version)."""
     v = options.get("version")
-    ts = options.get("timestamp")
-    if ts is not None:
-        if v is not None:
-            raise ValueError(
-                "pass option 'version' OR 'timestamp', not both"
-            )
-        from olist_data_warehouse_spark.sources.lakehouse import LakeTable
-
-        return LakeTable(
-            _norm_path(options.get("path"))
-        ).resolve_timestamp(ts)
-    return int(v) if v is not None else None
+    return LakeTable(_norm_path(options.get("path")))._as_of(
+        int(v) if v is not None else None, options.get("timestamp")
+    )
 
 
 class LakeBatchReader(DataSourceReader):
@@ -143,29 +136,22 @@ class LakeBatchReader(DataSourceReader):
             yield f
 
     def partitions(self):
-        import os
-
         from olist_data_warehouse_spark.sources.lakehouse import (
-            LakeTable,
             _json_safe,
             _stats_might_match,
         )
         from olist_data_warehouse_spark.sources.lakestream import (
             _FileSlice,
             _with_physical,
+            file_slice,
         )
 
         t = LakeTable(self.table_path)
-        # ONE state resolution for planning: file list (snapshot mode),
-        # column mapping (stats key on physical names; pushed filters
-        # and the query schema speak logical), pruning stats
-        if self.mode == "cdf":
-            end = self.version if self.version is not None else t.version()
-            if end is None:
-                raise ValueError(f"no lake table at {self.table_path!r}")
-            state = t._state(end)
-        else:
-            state = t._state(self.version)
+        # ONE state resolution for planning: file list (snapshot mode)
+        # or feed end (cdf mode), column mapping (stats key on physical
+        # names; pushed filters and the query schema speak logical),
+        # pruning stats
+        state = t._state(self.version)
         mapping = t._mapping(state)
         sj = _with_physical(self.schema_json, mapping)
         # pushed-conjunct values normalized ONCE, evaluated per file
@@ -191,59 +177,27 @@ class LakeBatchReader(DataSourceReader):
                     continue  # unprunable op/type: Spark filters rows
             return True
 
-        def slice_of(meta: dict, **delta) -> _FileSlice:
-            return _FileSlice(
-                path=os.path.join(self.table_path, meta["path"]),
-                schema_json=sj,
-                partition_json=(
-                    json.dumps(meta["partition"])
-                    if meta.get("partition") is not None
-                    else None
-                ),
-                # deletion vectors: thread the sidecar paths so the
-                # executor masks deleted row indexes (merge-on-read)
-                dv_json=(
-                    json.dumps(
-                        [
-                            os.path.join(self.table_path, q)
-                            for q in meta["dv"]["paths"]
-                        ]
-                    )
-                    if meta.get("dv")
-                    else None
-                ),
-                **delta,
-            )
-
         if self.mode == "cdf":
-            # row-delta feed: replay the commits in (since, end] as
-            # signed file slices (the shared `_cdf_pairs` dispatch,
-            # through the DataSource surface). Stats pruning applies PER
-            # ENTRY — pre-image and add entries carry full stats — and
-            # every filter stays residual, so pruning a provably-clean
-            # slice from either change side never alters the filtered
-            # fold.
-            out = []
-            for v in range(self.since + 1, end + 1):
-                for kind, e in _cdf_pairs(t._read_commit(v)):
-                    meta = e if isinstance(e, dict) else {"path": e}
-                    if might(meta):
-                        out.append(
-                            slice_of(meta, change_type=kind, version=v)
-                        )
-            return out or [
-                _FileSlice(path="", schema_json=sj)
+            # row-delta feed: the commits in (since, end] as signed
+            # file slices. Stats pruning applies PER ENTRY — pre-image
+            # and add entries carry full stats — and every filter stays
+            # residual, so pruning a provably-clean slice from either
+            # change side never alters the filtered fold.
+            out = [
+                file_slice(self.table_path, e, sj, kind, v)
+                for v, pairs in t._feed(self.since, state["version"])
+                for kind, e in pairs
+                if might(e)
             ]
-        files = [
-            p for p in sorted(state["files"]) if might(state["files"][p])
-        ]
-        if not files:
-            # Spark requires >= 1 partition; an empty slice yields an
-            # empty but correctly-typed scan
-            return [
-                _FileSlice(path="", schema_json=sj)
+        else:
+            out = [
+                file_slice(self.table_path, state["files"][p], sj)
+                for p in sorted(state["files"])
+                if might(state["files"][p])
             ]
-        return [slice_of(state["files"][p]) for p in files]
+        # Spark requires >= 1 partition; an empty slice yields an empty
+        # but correctly-typed scan
+        return out or [_FileSlice(path="", schema_json=sj)]
 
     def read(self, partition) -> Iterator:
         from olist_data_warehouse_spark.sources.lakestream import (
@@ -1016,8 +970,6 @@ class LakeBatchDataSource(DataSource):
         return "lake"
 
     def _schema_json(self) -> str:
-        from olist_data_warehouse_spark.sources.lakehouse import LakeTable
-
         path = _norm_path(self.options.get("path"))
         if not path:
             raise ValueError("lake source requires .option('path', ...)")
@@ -1025,20 +977,8 @@ class LakeBatchDataSource(DataSource):
         if t.version() is None:
             raise ValueError(f"no lake table at {path!r}")
         state = t._state(_resolve_as_of(self.options))
-        declared = StructType.fromJson(state["schema"])
-        # defensively nullable, like every other file source here:
-        # evolution backfills NULLs whatever the writer's batch claimed
-        fields = [StructField(f.name, f.dataType, True) for f in declared]
-        if str(self.options.get("mode", "read")).lower() == "cdf":
-            # built directly (not fromDDL): schema() runs in the
-            # sessionless Python data source worker
-            from pyspark.sql.types import LongType, StringType
-
-            fields += [
-                StructField("_change_type", StringType(), True),
-                StructField("_commit_version", LongType(), True),
-            ]
-        return json.dumps(StructType(fields).jsonValue())
+        cdf = str(self.options.get("mode", "read")).lower() == "cdf"
+        return json.dumps(_feed_schema(state["schema"], cdf).jsonValue())
 
     def schema(self):
         return StructType.fromJson(json.loads(self._schema_json()))

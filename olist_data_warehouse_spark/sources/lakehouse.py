@@ -48,6 +48,7 @@ deleted; FALSE and NULL survive — SQL three-valued logic).
 
 from __future__ import annotations
 
+import bisect
 import datetime
 import functools
 import glob
@@ -58,12 +59,14 @@ import shutil
 import struct
 import time
 import uuid
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, StructField, StructType
+from pyspark.sql.types import (
+    BooleanType, LongType, StringType, StructField, StructType,
+)
 
 CHECKPOINT_EVERY = 10
 
@@ -72,8 +75,8 @@ CHECKPOINT_EVERY = 10
 # with_occ_retry's whole-operation retries
 OCC_ATTEMPTS = 5
 
-# commit ops that only add rows: both change feeds replay their adds as
-# inserts, and the strict streaming source admits them
+# commit ops that only add rows: every feed replays their adds as
+# inserts, and they are all an append feed admits (_cdf_pairs)
 APPEND_OPS = ("create", "append", "stream_append", "copy_into")
 
 # Stats are kept for flat orderable types only; nested/binary columns
@@ -1717,18 +1720,21 @@ class LakeTable:
         vs = self._commit_versions()
         if not vs:
             raise FileNotFoundError(f"no committed versions at {self.path}")
-        if self._commit_ts(vs[0]) > ts:
+        i = bisect.bisect_right(vs, ts, key=self._commit_ts)
+        if i == 0:
             raise ValueError(
                 f"timestamp {ts} predates the table's first commit"
             )
-        lo, hi = 0, len(vs) - 1
-        while lo < hi:  # last index with commit_ts <= ts
-            mid = (lo + hi + 1) // 2
-            if self._commit_ts(vs[mid]) <= ts:
-                lo = mid
-            else:
-                hi = mid - 1
-        return vs[lo]
+        return vs[i - 1]
+
+    def _as_of(self, version: int | None, timestamp) -> int | None:
+        """The version a read pins: ``version``, the version
+        ``timestamp`` resolves to, or None (current) — never both."""
+        if timestamp is None:
+            return version
+        if version is not None:
+            raise ValueError("pass version OR timestamp, not both")
+        return self.resolve_timestamp(timestamp)
 
     def read(
         self,
@@ -1759,10 +1765,7 @@ class LakeTable:
         version/timestamp reads (manifest-scale stat calls); the
         current-version hot path is untouched — vacuum always keeps
         the newest version's live set."""
-        if timestamp is not None:
-            if version is not None:
-                raise ValueError("pass version OR timestamp, not both")
-            version = self.resolve_timestamp(timestamp)
+        version = self._as_of(version, timestamp)
         state = self._state(version)
         if prune is not None:
             conds = prune if isinstance(prune, list) else [prune]
@@ -2913,6 +2916,35 @@ class LakeTable:
 
     # -- incremental consumption ----------------------------------------
 
+    def _feed(
+        self,
+        since: int,
+        end: int,
+        append: bool = False,
+        skip_rewrites: bool = False,
+        lenient: bool = False,
+    ) -> Iterator[tuple[int, list[tuple[str, dict]]]]:
+        """The ONE log walk under every feed: each commit in ``(since,
+        end]`` as ``(version, _cdf_pairs(commit, ...))``. -1 replays the
+        whole log; a lower ``since`` names no commit and raises. With
+        ``lenient`` a commit the feed cannot replay yields no entries
+        (the stream's admission count; its planning raises)."""
+        if since < -1:
+            raise ValueError(
+                f"feed lower bound {since} is below -1 (exclusive; -1 "
+                "replays the whole log)"
+            )
+        for v in range(since + 1, end + 1):
+            try:
+                pairs = _cdf_pairs(
+                    self._read_commit(v), append, skip_rewrites
+                )
+            except ValueError as e:
+                if not lenient:
+                    raise ValueError(f"commit v{v}: {e}") from None
+                pairs = []
+            yield v, pairs
+
     def read_appends_since(
         self, spark: SparkSession, version: int
     ) -> tuple[DataFrame, int]:
@@ -2921,7 +2953,8 @@ class LakeTable:
         plus the current version to checkpoint for the next call.
         Reading only the delta files is what lets a downstream
         maintained aggregate (the `ivm_agg_merge` pattern) refresh by
-        scanning the churn, never the table.
+        scanning the churn, never the table. A file added with a
+        deletion vector (a shallow clone's create) serves its live rows.
 
         Row-level semantics are only well-defined while the feed is
         append-only: a delete/merge/compact/overwrite/rollback commit
@@ -2933,22 +2966,12 @@ class LakeTable:
         cur = self.version()
         if cur is None or version > cur:
             raise ValueError(f"version {version} ahead of table ({cur})")
-        add_paths: list[str] = []
-        for v in range(version + 1, cur + 1):
-            c = self._read_commit(v)
-            if c["op"] == "alter":
-                continue  # metadata-only: no rows added or rewritten
-                # (the streaming source skips these too)
-            if c["op"] not in APPEND_OPS:
-                raise ValueError(
-                    f"non-append commit v{v} ({c['op']}) in range — "
-                    "row identity rewritten; re-read the table"
-                )
-            add_paths += [f["path"] for f in c.get("add", [])]
-        return (
-            self._scan(spark, self._state(cur), sorted(add_paths)),
-            cur,
+        adds = sorted(
+            e["path"]
+            for _, pairs in self._feed(version, cur, append=True)
+            for _, e in pairs
         )
+        return self._scan_live(spark, self._state(cur), adds), cur
 
     def read_changes_since(
         self, spark: SparkSession, version: int
@@ -2969,8 +2992,12 @@ class LakeTable:
         compact is invisible (rewrite-identity: zero row changes).
         overwrite/rollback/drop_partitions need no pre-images at all —
         their remove list IS the delete side, file-exact. At 100 TB the
-        consumer scans O(churn), never the table; vacuum respects the
-        feed's pre-image files for the versions it keeps.
+        consumer scans O(churn), never the table. :meth:`vacuum` keeps
+        the pre- and post-image files of the commits it keeps, but
+        not the files an overwrite, rollback or drop_partitions
+        removed: a kept one of those replays its delete side from
+        files only an earlier version holds, so once vacuum drops that
+        version the replay fails.
 
         Plan shape: ONE scan per change side (insert/delete) over all
         its files, with ``_commit_version`` tagged by a broadcast
@@ -2982,38 +3009,19 @@ class LakeTable:
         cur = self.version()
         if cur is None or version > cur:
             raise ValueError(f"version {version} ahead of table ({cur})")
-
-        def _p(entry) -> str:
-            # one shape on disk going forward (file dicts); path strings
-            # accepted for logs written before the normalization
-            return entry["path"] if isinstance(entry, dict) else entry
-
-        def _dvk(entry) -> tuple:
-            # an entry's deletion-vector identity: replaying a
-            # dv-carrying file (a rollback re-add, or a removal
-            # recorded in remove_dv) must be dv-FILTERED — the live
-            # rows are the delta, not the physical rows
-            if isinstance(entry, dict) and entry.get("dv"):
-                return tuple(entry["dv"]["paths"])
-            return ()
-
-        # (version, path, dv-key) triples per side
-        ins: list[tuple[int, str, tuple]] = []
-        dels: list[tuple[int, str, tuple]] = []
-        for v in range(version + 1, cur + 1):
-            for kind, e in _cdf_pairs(self._read_commit(v)):
-                (ins if kind == "insert" else dels).append(
-                    (v, _p(e), _dvk(e))
-                )
+        # (version, path, dv-key) triples per side; the dv-key is an
+        # entry's deletion-vector identity: replaying a dv-carrying file
+        # (a clone's or rollback's add, or a removal recorded in
+        # remove_dv) must be dv-FILTERED — the live rows are the delta
+        sides_of: dict[str, list] = {"insert": [], "delete": []}
+        for v, pairs in self._feed(version, cur):
+            for kind, e in pairs:
+                dvk = tuple(e["dv"]["paths"]) if e.get("dv") else ()
+                sides_of[kind].append((v, e["path"], dvk))
         state = self._state(cur)
-        schema = StructType.fromJson(state["schema"])
-        out_cols = [f.name for f in schema.fields] + [
-            "_change_type", "_commit_version",
-        ]
+        out_schema = _feed_schema(state["schema"], cdf=True)
         sides: list[DataFrame] = []
-        for kind, triples in (("insert", ins), ("delete", dels)):
-            if not triples:
-                continue
+        for kind, triples in sides_of.items():
             # one scan per DISTINCT dv-set: dv-free entries (the
             # overwhelming case) share the single plain scan exactly as
             # before; each dv-set group anti-joins its own sidecars
@@ -3052,16 +3060,10 @@ class LakeTable:
                 sides.append(
                     scan.join(F.broadcast(lookup), "_cdf_file")
                     .withColumn("_change_type", F.lit(kind))
-                    .select(*out_cols)
+                    .select(*out_schema.names)
                 )
         if not sides:
-            empty = StructType(
-                schema.fields
-                + StructType.fromDDL(
-                    "_change_type string, _commit_version long"
-                ).fields
-            )
-            return spark.createDataFrame([], empty), cur
+            return spark.createDataFrame([], out_schema), cur
         out = sides[0]
         for p in sides[1:]:
             out = out.unionByName(p)
@@ -3425,9 +3427,13 @@ class LakeTable:
         for v in vs[-keep_versions:]:
             live |= _live_of(self._state(v))
         # change-feed pre/post-image files of the KEPT commit range
-        # stay: a consumer may still replay those versions' row deltas
-        # (an update's post-images are standalone CDF files — unlike a
-        # merge's, they appear in no version's live set)
+        # stay, so a kept delete/merge/update/replace_where still
+        # replays its row deltas (an update's post-images are
+        # standalone CDF files — unlike a merge's, they appear in no
+        # version's live set). A kept overwrite, rollback or
+        # drop_partitions replays its delete side from the files it
+        # removed, which only an earlier version holds: once that
+        # version falls out of the window, its row deltas are gone.
         for v in vs[-keep_versions:]:
             c = self._read_commit(v)
             live |= {f["path"] for f in c.get("cdf_delete", [])}
@@ -3575,25 +3581,41 @@ def _zorder_column(
     return z
 
 
-def _cdf_pairs(c: dict) -> list[tuple[str, object]]:
-    """A commit's row deltas as ``(kind, entry)`` pairs, kind
-    'insert' or 'delete' — the ONE op → delta mapping under both change
-    feeds (:meth:`LakeTable.read_changes_since` and the cdf-mode
-    stream). An entry is a file dict or a bare path; a removed file
-    that carried a deletion vector comes back with its ``remove_dv``
-    record as ``dv``, so it replays its LIVE rows only. Raises when a
-    rewriting commit has no persisted pre-images (the table was
-    created without ``cdf=True``)."""
+def _cdf_pairs(
+    c: dict, append: bool = False, skip_rewrites: bool = False
+) -> list[tuple[str, dict]]:
+    """A commit's feed entries as ``(kind, entry)`` pairs, kind
+    'insert' or 'delete' — the ONE op → feed mapping under every feed
+    (:meth:`LakeTable._feed`). An entry is a file dict; a removed file
+    is ``{"path": p}`` plus, if it carried a deletion vector, its
+    ``remove_dv`` record as ``dv``, so it replays its LIVE rows only.
+    The row-delta rule raises when a rewriting commit has no pre-images
+    (the table was created without ``cdf=True``). The ``append`` rule:
+    an alter adds nothing, an :data:`APPEND_OPS` commit its adds, and
+    any other commit rewrites row identity, so it raises — or, with
+    ``skip_rewrites``, is skipped (its adds copy rows already served)."""
     op = c["op"]
     if op in APPEND_OPS:
         return [("insert", f) for f in c.get("add", [])]
-    if op in ("compact", "alter"):
-        return []  # rewrite-identity / metadata-only: no row change
+    if op == "alter":
+        return []  # metadata-only: no row change
+    if append:
+        if skip_rewrites:
+            return []
+        raise ValueError(
+            f"non-append commit ({op}) rewrites rows — an append feed "
+            "cannot replay it: re-read the table or re-seed the stream, "
+            "skip it with skip_rewrites=true (at-least-once, deletes "
+            "unsent), or consume the row-delta feed of a cdf=True table "
+            "(read_changes_since, .option('mode', 'cdf'))"
+        )
+    if op == "compact":
+        return []  # rewrite-identity: no row change
     if op in ("overwrite", "rollback", "drop_partitions"):
         # no pre-images needed: the remove list IS the delete side
         rd = c.get("remove_dv") or {}
         return [("insert", f) for f in c.get("add", [])] + [
-            ("delete", {"path": p, "dv": rd[p]} if p in rd else p)
+            ("delete", {"path": p, "dv": rd[p]} if p in rd else {"path": p})
             for p in c.get("remove", [])
         ]
     if op in ("delete", "merge", "update", "replace_where"):
@@ -3605,9 +3627,31 @@ def _cdf_pairs(c: dict) -> list[tuple[str, object]]:
             )
         pairs = [("delete", f) for f in c["cdf_delete"]]
         if op != "delete":
-            pairs += [("insert", e) for e in c.get("cdf_insert", [])]
+            # path strings: cdf_insert entries of logs written before
+            # the file-dict normalization
+            pairs += [
+                ("insert", e if isinstance(e, dict) else {"path": e})
+                for e in c.get("cdf_insert", [])
+            ]
         return pairs
     raise ValueError(f"unknown commit op {op!r}")
+
+
+def _feed_schema(table_schema: dict, cdf: bool) -> StructType:
+    """The schema a feed serves over the log's ``table_schema``: every
+    column nullable (evolution backfills NULLs whatever a batch
+    claimed), plus the delta columns when ``cdf``. Built from types,
+    not DDL: a DataSource's schema() runs in a sessionless worker."""
+    fields = [
+        StructField(f.name, f.dataType, True)
+        for f in StructType.fromJson(table_schema)
+    ]
+    if cdf:
+        fields += [
+            StructField("_change_type", StringType(), True),
+            StructField("_commit_version", LongType(), True),
+        ]
+    return StructType(fields)
 
 
 def _pick(r: dict, *keys: str) -> dict:

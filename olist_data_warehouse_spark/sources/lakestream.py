@@ -66,21 +66,26 @@ micro-batch), so `_record_probe` opportunistically sweeps — and the
 table's vacuum also reclaims — records older than
 PROBE_RETENTION_SECONDS.
 
-Semantics follow the public Delta streaming-source contract. The
-default feed is the APPEND feed (create/append/stream_append commits):
-a commit that rewrites rows (delete/merge/compact/overwrite/rollback/
-drop_partitions) breaks row-identity for a streaming consumer, so by
-default the reader raises at planning time;
-`.option("skip_rewrites", "true")` opts into skipping those commits
-entirely (their adds are rewrite copies whose rows were already
-streamed — streaming them would duplicate; their removes were already
-delivered and cannot be unsent), the documented
+Semantics follow the public Delta streaming-source contract. Which
+files a commit feeds is not decided here: `latestOffset`'s admission
+count and `partitions` both walk the log with `LakeTable._feed`, whose
+`_cdf_pairs` is the one commit -> feed-entry mapping, and every entry
+becomes a slice through `file_slice` (deletion vectors included, so a
+shallow clone's create streams its live rows only). The default feed
+is the APPEND feed (create/append/stream_append/copy_into commits;
+metadata-only alters add nothing): a commit that rewrites rows
+(delete/merge/compact/overwrite/rollback/drop_partitions) breaks
+row-identity for a streaming consumer, so by default the reader raises
+at planning time; `.option("skip_rewrites", "true")` opts into
+skipping those commits entirely (their adds are rewrite copies whose
+rows were already streamed — streaming them would duplicate; their
+removes were already delivered and cannot be unsent), the documented
 at-least-once-minus-deletes tradeoff of Delta's `ignoreChanges` family.
 
 `.option("mode", "cdf")` lifts that tradeoff on a `cdf=True` table:
 the stream emits ROW-LEVEL DELTAS — the table's columns plus
-`_change_type` ('insert' | 'delete') and `_commit_version` — replaying
-every commit the way `LakeTable.read_changes_since` does (deletes and
+`_change_type` ('insert' | 'delete') and `_commit_version` — from the
+same mapping `LakeTable.read_changes_since` replays (deletes and
 update-merges from their vacuum-protected pre-images;
 overwrite/rollback/drop_partitions file-exact from their remove lists;
 compaction invisible). A downstream consumer folds the deltas as
@@ -97,6 +102,7 @@ churn, never its size, and a post-downtime catch-up is paced at
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -129,6 +135,36 @@ class _FileSlice(InputPartition):
     #                                    masking this file's row indexes
 
 
+def file_slice(
+    table_path: str,
+    entry: dict,
+    schema_json: str,
+    change_type: str | None = None,
+    version: int | None = None,
+) -> _FileSlice:
+    """The input partition reading one manifest ``entry`` (a snapshot
+    or feed file dict): absolute path, partition values, and the
+    deletion-vector sidecars whose rows the executor masks out."""
+    return _FileSlice(
+        path=os.path.join(table_path, entry["path"]),
+        schema_json=schema_json,
+        partition_json=(
+            json.dumps(entry["partition"])
+            if entry.get("partition") is not None
+            else None
+        ),
+        change_type=change_type,
+        version=version,
+        dv_json=(
+            json.dumps(
+                [os.path.join(table_path, q) for q in entry["dv"]["paths"]]
+            )
+            if entry.get("dv")
+            else None
+        ),
+    )
+
+
 def read_file_slice(partition: _FileSlice) -> Iterator:
     """Executor-side kernel shared by the streaming and batch lake
     sources: one parquet file -> Arrow record batches projected BY NAME
@@ -136,7 +172,6 @@ def read_file_slice(partition: _FileSlice) -> Iterator:
     extra file columns are dropped; Hive-partition columns fill as
     constants from the manifest value (or, for bare-path slices, the
     directory segments); cdf slices add their constant delta columns."""
-    import json
     from urllib.parse import unquote
 
     import pyarrow as pa
@@ -239,8 +274,6 @@ def _with_physical(schema_json: str, mapping: dict[str, str]) -> str:
     parquet name via field metadata (``lake_physical``) so the
     executor-side slice reader projects the right stored column.
     Identity for unmapped tables (returns the input string)."""
-    import json
-
     if not mapping:
         return schema_json
     d = json.loads(schema_json)
@@ -312,22 +345,6 @@ class LakeStreamReader(DataSourceStreamReader):
 
         return LakeTable(self.table_path)
 
-    def _stream_schema_json(self, table_schema: dict) -> str:
-        """The stream's output schema over ``table_schema``: the table
-        schema, plus the two delta columns in cdf mode."""
-        import json
-
-        if self.mode != "cdf":
-            return json.dumps(table_schema)
-        d = dict(table_schema)
-        d["fields"] = list(d["fields"]) + [
-            {"name": "_change_type", "type": "string",
-             "nullable": True, "metadata": {}},
-            {"name": "_commit_version", "type": "long",
-             "nullable": True, "metadata": {}},
-        ]
-        return json.dumps(d)
-
     def _bump_anchor(self, v: int) -> None:
         if self._anchor is None or v > self._anchor:
             self._anchor = v
@@ -345,8 +362,6 @@ class LakeStreamReader(DataSourceStreamReader):
         opportunistically sweeps sibling records older than
         PROBE_RETENTION_SECONDS, so _probes/ stays O(recent cold
         restarts) instead of growing forever."""
-        import json
-
         os.makedirs(self.probe_dir, exist_ok=True)
         tmp = self._probe_path(nonce) + ".tmp"
         with open(tmp, "w") as f:
@@ -367,8 +382,6 @@ class LakeStreamReader(DataSourceStreamReader):
         were first planned, read back from the durable record."""
         if "probe" not in off:
             return off["version"]
-        import json
-
         try:
             with open(self._probe_path(off["probe"])) as f:
                 return json.load(f)["version"]
@@ -393,27 +406,24 @@ class LakeStreamReader(DataSourceStreamReader):
         last version committed strictly BEFORE the instant (-1 when
         the instant predates the table — serve everything; the newest
         version when it postdates the log — serve only future
-        commits). Bisection on the nondecreasing commit clock, like
-        ``resolve_timestamp``, but first-at-or-after instead of
+        commits). Like ``resolve_timestamp`` a bisection on the
+        nondecreasing commit clock, but first-at-or-after instead of
         last-at-or-before so a commit stamped exactly AT the instant
         is SERVED (Delta's startingTimestamp contract)."""
+        import bisect
+
         from olist_data_warehouse_spark.sources.lakehouse import _parse_ts
 
         t = self.table
-        target = _parse_ts(self._start_ts)
         vs = t._commit_versions()
         if not vs:
             raise FileNotFoundError(
                 f"no committed versions at {self.table_path}"
             )
-        lo, hi = 0, len(vs)  # first index with commit_ts >= target
-        while lo < hi:
-            mid = (lo + hi) // 2
-            if t._commit_ts(vs[mid]) >= target:
-                hi = mid
-            else:
-                lo = mid + 1
-        return vs[lo - 1] if lo > 0 else -1
+        i = bisect.bisect_left(
+            vs, _parse_ts(self._start_ts), key=t._commit_ts
+        )
+        return vs[i - 1] if i > 0 else -1
 
     def latestOffset(self) -> dict:
         t = self.table
@@ -435,25 +445,16 @@ class LakeStreamReader(DataSourceStreamReader):
                 "version": self._start,
                 "probe": f"{int(time.time() * 1000)}-{os.getpid()}",
             }
-        from olist_data_warehouse_spark.sources.lakehouse import (
-            APPEND_OPS,
-            _cdf_pairs,
-        )
-
         end, files, nbytes = self._anchor, 0, 0
-        for v in range(self._anchor + 1, newest + 1):
-            c = t._read_commit(v)
-            if self.mode == "cdf":
-                try:
-                    entries = [e for _, e in _cdf_pairs(c)]
-                except ValueError:
-                    entries = []  # partitions() raises the real error
-            else:
-                entries = c.get("add", []) if c["op"] in APPEND_OPS else []
-            nf = len(entries)
-            nb = sum(
-                e.get("bytes", 0) for e in entries if isinstance(e, dict)
-            )
+        for v, pairs in t._feed(
+            self._anchor,
+            newest,
+            append=self.mode != "cdf",
+            skip_rewrites=self.skip_rewrites,
+            lenient=True,  # partitions() raises the real error
+        ):
+            nf = len(pairs)
+            nb = sum(e.get("bytes", 0) for _, e in pairs)
             over = (
                 self.max_files is not None and files + nf > self.max_files
             ) or (
@@ -480,86 +481,31 @@ class LakeStreamReader(DataSourceStreamReader):
         self._bump_anchor(max(lo, hi))
         if hi <= lo:
             return []
-        import json
-
         from olist_data_warehouse_spark.sources.lakehouse import (
-            APPEND_OPS,
-            _cdf_pairs,
+            _feed_schema,
         )
 
         t = self.table
+        cdf = self.mode == "cdf"
         table_schema, config = t._schema_config_at(hi)
         schema_json = _with_physical(
             self.schema_json
             if self.schema_json is not None
-            else self._stream_schema_json(table_schema),
+            else json.dumps(_feed_schema(table_schema, cdf).jsonValue()),
             config.get("column_mapping") or {},
         )
-
-        def pj(entry) -> str | None:
-            return (
-                json.dumps(entry["partition"])
-                if isinstance(entry, dict)
-                and entry.get("partition") is not None
-                else None
+        # cdf mode replays every commit as signed row deltas; the
+        # append feed serves append commits' adds (see _cdf_pairs)
+        return [
+            file_slice(
+                self.table_path, e, schema_json,
+                *((kind, v) if cdf else ()),
             )
-
-        def dvj(entry) -> str | None:
-            # deletion-vector mask for a dv-carrying entry (rollback
-            # re-add, remove_dv-annotated removal): absolute sidecar
-            # paths for the executor-side reader
-            if isinstance(entry, dict) and entry.get("dv"):
-                return json.dumps(
-                    [
-                        os.path.join(self.table_path, q)
-                        for q in entry["dv"]["paths"]
-                    ]
-                )
-            return None
-
-        out: list[_FileSlice] = []
-        for v in range(lo + 1, hi + 1):
-            c = t._read_commit(v)
-            if self.mode == "cdf":
-                # row-level delta feed: every commit replays as signed
-                # file slices — deletes from pre-images/file-exact
-                # removes, inserts from the incoming files
-                out += [
-                    _FileSlice(
-                        path=os.path.join(
-                            self.table_path,
-                            e["path"] if isinstance(e, dict) else e,
-                        ),
-                        schema_json=schema_json,
-                        partition_json=pj(e),
-                        change_type=kind,
-                        version=v,
-                        dv_json=dvj(e),
-                    )
-                    for kind, e in _cdf_pairs(c)
-                ]
-                continue
-            if c["op"] == "alter":
-                continue  # metadata-only: nothing added or rewritten
-            if c["op"] not in APPEND_OPS:
-                if self.skip_rewrites:
-                    continue
-                raise ValueError(
-                    f"commit v{v} ({c['op']}) rewrites rows — a "
-                    "streaming consumer cannot replay it. Re-seed the "
-                    "stream, use skip_rewrites=true (at-least-once, "
-                    "deletes unsent), switch to .option('mode','cdf') "
-                    "on a cdf=True table, or consume read_changes_since."
-                )
-            out += [
-                _FileSlice(
-                    path=os.path.join(self.table_path, f["path"]),
-                    schema_json=schema_json,
-                    partition_json=pj(f),
-                )
-                for f in c.get("add", [])
-            ]
-        return out
+            for v, pairs in t._feed(
+                lo, hi, append=not cdf, skip_rewrites=self.skip_rewrites
+            )
+            for kind, e in pairs
+        ]
 
     def read(self, partition: _FileSlice) -> Iterator:
         """Executor-side: one parquet file -> Arrow record batches
@@ -587,6 +533,10 @@ class LakeStreamDataSource(DataSource):
         return "lakestream"
 
     def schema(self):
+        from olist_data_warehouse_spark.sources.lakehouse import (
+            _feed_schema,
+        )
+
         reader = LakeStreamReader(self.options)
         t = reader.table
         v = t.version()
@@ -594,25 +544,9 @@ class LakeStreamDataSource(DataSource):
             raise ValueError(
                 f"no lake table at {self.options.get('path')!r}"
             )
-        import json
-
-        from pyspark.sql.types import StructField
-
-        declared = StructType.fromJson(
-            json.loads(
-                reader._stream_schema_json(t._schema_config_at(v)[0])
-            )
-        )
-        # defensively nullable, like Spark's own file sources: schema
-        # evolution backfills NULLs into columns regardless of what
-        # the writing batch's nullability claimed
-        return StructType(
-            [StructField(f.name, f.dataType, True) for f in declared]
-        )
+        return _feed_schema(t._schema_config_at(v)[0], reader.mode == "cdf")
 
     def streamReader(self, schema) -> LakeStreamReader:
-        import json
-
         # Thread the ANALYSIS-TIME schema into the reader: the running
         # query's shape is fixed here; the log's schema may move on.
         sj = (
@@ -665,8 +599,6 @@ def _progress_version(progress: dict, probe_dir: str) -> int | None:
     API serializes offsets as JSON); probe offsets resolve through
     their durable record — present by the time the probe's (empty)
     batch reports progress, since partitions() writes it at planning."""
-    import json
-
     import ast
 
     for src in progress.get("sources") or []:

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from olist_data_warehouse_spark.sources import lakebatch, lakestream
 from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
 
@@ -187,3 +188,29 @@ def test_vacuum_keeps_preimages_of_kept_range(spark, cdf_table):
         for f in t._read_commit(v).get("cdf_delete", [])
     }
     assert preimages & set(removed)
+
+
+def test_feed_lower_bound_below_minus_one_raises(spark, cdf_table, tmp_path):
+    """-1 is the lowest feed bound (it replays the whole log); a lower
+    one names no commit, so every surface rejects it up front instead of
+    opening a log file that cannot exist."""
+    t = cdf_table
+    for feed in (t.read_changes_since, t.read_appends_since):
+        with pytest.raises(ValueError, match="below -1"):
+            feed(spark, -5)
+    lakebatch.register(spark)
+    with pytest.raises(Exception, match="below -1"):
+        spark.read.format("lake").option("path", t.path).option(
+            "mode", "cdf"
+        ).option("since", "-5").load().collect()
+    lakestream.register(spark)
+    q = (
+        spark.readStream.format("lakestream").option("path", t.path)
+        .option("starting_version", "-5").load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="below -1"):
+        q.awaitTermination(180)

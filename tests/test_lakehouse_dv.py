@@ -16,7 +16,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from olist_data_warehouse_spark.sources import lakebatch
+from olist_data_warehouse_spark.sources import lakebatch, lakestream
 from olist_data_warehouse_spark.sources.lakehouse import LakeTable
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -188,8 +188,9 @@ def test_clone_shares_dv_and_diverges(spark, tmp_path):
 
 def test_clone_change_feed_replays_live_rows_only(spark, tmp_path):
     """A shallow clone's create commit adds the source's files with
-    their deletion vectors: its change feed inserts the LIVE rows only,
-    as the cdf-mode stream already did."""
+    their deletion vectors: every feed over it serves the LIVE rows
+    only — the row-delta feed, the append feed and the append-mode
+    stream alike."""
     src = LakeTable.create(
         spark.range(10).withColumn("v", F.col("id") % 2),
         str(tmp_path / "src"),
@@ -200,6 +201,20 @@ def test_clone_change_feed_replays_live_rows_only(spark, tmp_path):
     ch, _ = clone.read_changes_since(spark, -1)
     assert sorted(r["id"] for r in ch.collect()) == list(range(3, 10))
     assert {r["_change_type"] for r in ch.collect()} == {"insert"}
+    ap, _ = clone.read_appends_since(spark, -1)
+    assert sorted(r["id"] for r in ap.collect()) == list(range(3, 10))
+    lakestream.register(spark)
+    rows: list = []
+    (
+        spark.readStream.format("lakestream").option("path", clone.path)
+        .load()
+        .writeStream.foreachBatch(lambda bdf, _: rows.extend(bdf.collect()))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(180)
+    )
+    assert sorted(r["id"] for r in rows) == list(range(3, 10))
 
 
 @pytest.mark.parametrize("via", ["table", "datasource"])

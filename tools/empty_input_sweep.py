@@ -13,8 +13,8 @@ values stay realistic) and runs the full registry against it. Usage:
 
     python tools/empty_input_sweep.py [k_rows] [name_substring ...]
 
-Prints one line per entry (rows / guard / CRASH) and exits 1 on any
-CRASH.
+Prints one line per entry in the driver's order (``ok`` with its rows
+or guard message, ``FAIL`` with the crash) and exits 1 on any crash.
 """
 
 from __future__ import annotations
@@ -22,13 +22,12 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import SparkSession
+from oracle_sweep import select, session, sweep
 
 from olist_data_warehouse_spark.plans.queries import REGISTRY
 
@@ -56,49 +55,19 @@ def main() -> int:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     dst = tempfile.mkdtemp(prefix=f"sf_deg{k}_")
     make_sliced_sf(dst, k)
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
-        .appName("empty-input-sweep")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    crashes, guards = [], []
-    # optional name filter: positional args after k are substrings —
-    # run only matching entries (new-entry battery without a full sweep)
-    pats = sys.argv[2:]
-    names = sorted(
-        n for n in REGISTRY
-        if not pats or any(p in n for p in pats)
-    )
-    t0 = time.time()
-    for i, name in enumerate(names, 1):
-        t = time.time()
+    spark = session("empty-input-sweep", 8)
+
+    def check(name: str) -> tuple[bool, str]:
         try:
-            n = len(REGISTRY[name].fn(spark, dst).collect())
-            status = f"{n} rows"
+            return True, f"{len(REGISTRY[name].fn(spark, dst).collect())} rows"
         except ValueError as e:
             # An explicit guard raising its documented error is a
             # designed outcome, not a robustness failure.
-            guards.append((name, str(e)[:100]))
-            status = f"guard: {str(e)[:60]}"
-        except Exception as e:  # noqa: BLE001 - classify and continue
-            crashes.append((name, f"{type(e).__name__}: {str(e)[:200]}"))
-            status = f"CRASH {type(e).__name__}"
-        print(
-            f"[{i:3d}/{len(names)}] {name:40s} {time.time() - t:5.1f}s "
-            f" {status}",
-            flush=True,
-        )
-    print(
-        f"\nEMPTY-INPUT SWEEP: {len(names) - len(crashes)}/{len(names)} "
-        f"clean ({len(guards)} guard-raises) in {time.time() - t0:.0f}s"
-    )
-    for name, msg in guards:
-        print(f"  guard {name}: {msg}")
-    for name, msg in crashes:
-        print(f"  CRASH {name}: {msg}")
-    return 1 if crashes else 0
+            return True, f"guard: {e}"
+
+    # optional name filter: positional args after k are substrings —
+    # run only matching entries (new-entry battery without a full sweep)
+    return sweep(f"EMPTY-INPUT SWEEP (k={k})", select(sys.argv[2:]), check)
 
 
 if __name__ == "__main__":

@@ -34,15 +34,12 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import SparkSession
-
-from olist_data_warehouse_spark.plans.queries import REGISTRY
+from oracle_sweep import select, session, sweep
 
 SF_SRC = "/root/testdata/sf0.001"
 TABLES = (
@@ -152,41 +149,12 @@ def main() -> int:
 
     from tests.oracle_check import compare_query
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
-        .appName("null-fuzz-sweep")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
+    spark = session("null-fuzz-sweep", 16)
+    return sweep(
+        f"NULL-FUZZ SWEEP (denom={denom}{', groups' if groups else ''})",
+        select(pats, oracle_only=True),
+        lambda name: compare_query(spark, dst, name),
     )
-    names = sorted(
-        n for n, rq in REGISTRY.items()
-        if rq.oracle is not None
-        and (not pats or any(p in n for p in pats))
-    )
-    fails = []
-    t0 = time.time()
-    for i, name in enumerate(names, 1):
-        t = time.time()
-        try:
-            ok, detail = compare_query(spark, dst, name)
-        except Exception as e:  # noqa: BLE001 - report and continue
-            ok, detail = False, f"EXC {type(e).__name__}: {str(e)[:200]}"
-        if not ok:
-            fails.append((name, detail))
-        print(
-            f"[{i:3d}/{len(names)}] {'ok' if ok else 'FAIL':4s} "
-            f"{name:40s} {time.time() - t:5.1f}s  {detail[:100]}",
-            flush=True,
-        )
-    print(
-        f"\nNULL-FUZZ SWEEP {len(names) - len(fails)}/{len(names)} pass "
-        f"in {time.time() - t0:.0f}s (denom={denom})"
-    )
-    for name, detail in fails:
-        print(f"  FAIL {name}: {detail}")
-    return 1 if fails else 0
 
 
 if __name__ == "__main__":
