@@ -53,6 +53,7 @@ import datetime
 import functools
 import glob
 import json
+import logging
 import os
 import re
 import shutil
@@ -67,6 +68,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType, LongType, StringType, StructField, StructType,
 )
+
+log = logging.getLogger("olist.lake")
 
 CHECKPOINT_EVERY = 10
 
@@ -698,30 +701,39 @@ class LakeTable:
         staging writes to its own uuid stage dir and appends to its
         own meta list, so the only shared state is Spark's own
         thread-safe job submission. If any staging raises, the files
-        its siblings staged are unlinked before the error propagates."""
+        its siblings staged are unlinked before the error propagates.
+
+        These are the row mutations' stagings (:meth:`_mutate`): a
+        part file holding no row — Spark writes one for an empty
+        frame, such as an empty rewrite, insert side or batch — is
+        unlinked and left out, so a mutation never commits one."""
         live = [(i, df, pby) for i, (df, pby) in enumerate(jobs)
                 if df is not None]
         out: list[list[dict]] = [[] for _ in jobs]
         if len(live) <= 1:
             for i, df, pby in live:
                 out[i] = self._stage_files(df, partition_by=pby)
-            return out
-        with ThreadPoolExecutor(max_workers=len(live)) as pool:
-            futs = [
-                (i, pool.submit(self._stage_files, df, partition_by=pby))
-                for i, df, pby in live
-            ]
-        # the pool has drained: if any staging raised, no commit will
-        # reference its siblings' files — reclaim them, then raise
-        errs = [f.exception() for _, f in futs if f.exception()]
-        if errs:
-            for _, f in futs:
-                if not f.exception():
-                    self._reclaim([m["path"] for m in f.result()])
-            raise errs[0]
-        for i, fut in futs:
-            out[i] = fut.result()
-        return out
+        else:
+            with ThreadPoolExecutor(max_workers=len(live)) as pool:
+                futs = [
+                    (i, pool.submit(self._stage_files, df, partition_by=pby))
+                    for i, df, pby in live
+                ]
+            # the pool has drained: if any staging raised, no commit
+            # will reference its siblings' files — reclaim them, then
+            # raise
+            errs = [f.exception() for _, f in futs if f.exception()]
+            if errs:
+                for _, f in futs:
+                    if not f.exception():
+                        self._reclaim([m["path"] for m in f.result()])
+                raise errs[0]
+            for i, fut in futs:
+                out[i] = fut.result()
+        self._reclaim(
+            [m["path"] for part in out for m in part if not m["rows"]]
+        )
+        return [[m for m in part if m["rows"]] for part in out]
 
     def _commit(
         self,
@@ -1773,24 +1785,30 @@ class LakeTable:
         else:
             files = sorted(state["files"])
         if version is not None:
-            referenced = list(files) + self._dv_paths_of(state, files)
-            missing = [
-                p
-                for p in referenced
-                if not os.path.exists(os.path.join(self.path, p))
-            ]
-            if missing:
-                raise FileNotFoundError(
-                    f"version {version} of {self.path} references "
-                    f"{len(missing)} file(s) no longer on disk "
-                    f"(vacuumed?): {missing[:3]}... — time travel "
-                    "reaches only versions whose files outlived "
-                    "vacuum's keep_versions/retention window (pin a "
-                    "version with clone() to keep it readable)"
-                )
+            self._require_on_disk(
+                list(files) + self._dv_paths_of(state, files),
+                f"version {version} of {self.path}",
+            )
         # merge-on-read: anti-join out any deletion-vector rows (a
         # dv-free file set keeps the plain scan plan)
         return self._scan_live(spark, state, files)
+
+    def _require_on_disk(self, paths: Iterable[str], what: str) -> None:
+        """Fail with ``FileNotFoundError`` naming the vacuum window when
+        any table-relative path in ``paths`` is gone — loudly at plan
+        time, never as Spark's opaque missing-path error at scan time
+        or a silently partial frame."""
+        missing = [
+            p for p in paths if not os.path.exists(os.path.join(self.path, p))
+        ]
+        if missing:
+            raise FileNotFoundError(
+                f"{what} references {len(missing)} file(s) no longer on "
+                f"disk (vacuumed?): {missing[:3]}... — time travel and "
+                "change feeds reach only versions whose files outlived "
+                "vacuum's keep_versions/retention window (pin a version "
+                "with clone() to keep it readable)"
+            )
 
     def prune_files(
         self, column: str, op: str, value, version: int | None = None
@@ -1862,9 +1880,13 @@ class LakeTable:
            reading them;
         2. ONE scan over the candidates counts matches per file
            (per-file group-by — map-side combine, no data movement
-           beyond the per-file counts);
+           beyond the per-file counts). It filters on ``predicate``
+           before it counts, so Parquet pushes a plain predicate into
+           the scan and skips the row groups it cannot match;
         3. only files with matches are read again, filtered, and
-           rewritten; every other file is carried by reference.
+           rewritten — a file whose every live row matches is removed
+           with no rewrite at all; every other file is carried by
+           reference.
 
         ``mode='dv'`` — MERGE-ON-READ deletion vectors (the public
         Delta DV design, VLDB 2023): no data file is rewritten at all.
@@ -1890,9 +1912,8 @@ class LakeTable:
         if mode not in ("rewrite", "dv"):
             raise ValueError("mode must be 'rewrite' or 'dv'")
         # only literally TRUE rows go: FALSE and NULL rows survive
-        hit = predicate.eqNullSafe(F.lit(True))
         r = self._mutate(
-            spark, self._state(), "delete", mode, hit, hit,
+            spark, self._state(), "delete", mode, predicate, predicate,
             prune=prune, count_as="rows_deleted",
             extra={"predicate": str(predicate)},
         )
@@ -1913,30 +1934,42 @@ class LakeTable:
         replaces the same region again instead of duplicating it, and
         no reader ever sees the region half-swapped.
 
-        Delta's incoming-row gate applies: every ``df`` row must
-        satisfy the predicate (one short-circuit scan) — otherwise
-        rows would land OUTSIDE the region being replaced and the
-        re-run would not be idempotent.
+        ``df`` is computed ONCE: it stages as the frozen batch before
+        anything else reads it (:meth:`_mutate` step 1), and every
+        check then scans those few staged files, never its lineage
+        again. Delta's incoming-row gate applies there: every batch
+        row must satisfy the predicate — otherwise rows would land
+        OUTSIDE the region being replaced and the re-run would not be
+        idempotent — and so do the generated-column and CHECK gates. A
+        refused batch unlinks its staged files and commits nothing.
 
         File granularity is delete_where's: optional stats ``prune``
         (must be implied by the predicate) drops provably-clean files
-        unread, one match-count scan finds files holding TRUE rows,
-        their FALSE/NULL rows rewrite as survivors, every other file
-        is carried by reference. On a table partitioned by the
-        predicate column the touched set is exactly the region's
-        partitions — the day-repair loop costs O(region), never
-        O(table). The survivor rewrite, the pre-images and ``df``
-        stage in one parallel batch.
+        unread, one match-count scan — filtered on the predicate, so
+        Parquet skips the row groups it cannot match — finds files
+        holding TRUE rows, their FALSE/NULL rows rewrite as survivors,
+        a file holding only region rows is removed without a rewrite,
+        and every other file is carried by reference. On a table
+        partitioned by the predicate column the touched set is exactly
+        the region's partitions — the day-repair loop costs O(region),
+        never O(table). The frozen batch files are the commit's new
+        files as they are.
 
         CDF on ``cdf=True`` tables: the region's pre-images persist as
-        the delete side and ONLY the staged ``df`` files are the
-        insert side (survivor rewrites are carried rows, not inserts),
-        so :meth:`read_changes_since` replays the swap exactly.
+        the delete side and ONLY the frozen batch files are the insert
+        side (survivor rewrites are carried rows, not inserts), so
+        :meth:`read_changes_since` replays the swap exactly.
 
         Returns ``{version, rows_deleted, rows_inserted,
         files_rewritten, files_kept}``."""
         state = self._state()
-        df = self._apply_generated(state, df, "replace_where")
+        # omitted generated columns compute here; the gate validates
+        # the provided ones over the frozen batch
+        df = df.withColumns({
+            c: F.expr(sql)
+            for c, sql in self._generated(state).items()
+            if c not in df.columns
+        })
         cols = [f["name"] for f in state["schema"]["fields"]]
         if sorted(df.columns) != sorted(cols):
             raise ValueError(
@@ -1945,20 +1978,25 @@ class LakeTable:
             )
         df = df.select(*cols)
         self._check_types(state, df)
-        self._enforce_constraints(state, df, "replace_where")
-        hit = predicate.eqNullSafe(F.lit(True))
-        if df.where(~hit).limit(1).count():
-            raise ValueError(
-                "replace_where: incoming rows must ALL satisfy the "
-                f"predicate {predicate} — rows outside the replaced "
-                "region would break idempotent re-runs (widen the "
-                "predicate or filter the batch)"
-            )
+
+        def gate(batch: DataFrame) -> None:
+            self._apply_generated(state, batch, "replace_where")
+            self._enforce_constraints(state, batch, "replace_where")
+            outside = batch.where(~predicate.eqNullSafe(F.lit(True)))
+            if outside.limit(1).count():
+                raise ValueError(
+                    "replace_where: incoming rows must ALL satisfy the "
+                    f"predicate {predicate} — rows outside the replaced "
+                    "region would break idempotent re-runs (widen the "
+                    "predicate or filter the batch)"
+                )
+
         r = self._mutate(
-            spark, state, "replace_where", "rewrite", hit, hit,
-            prune=prune, incoming=lambda _hit, _src: df,
+            spark, state, "replace_where", "rewrite", predicate, predicate,
+            gate=gate, prune=prune, source=df, lands=True,
             count_as="rows_deleted", extra={"predicate": str(predicate)},
         )
+        r["rows_inserted"] = r["rows_source"]
         return _pick(r, "rows_deleted", "rows_inserted")
 
     def copy_into(
@@ -2081,68 +2119,80 @@ class LakeTable:
         merge and CDC apply: find → stage → commit, each step once.
 
         A front end validates its inputs and describes the mutation as
-        flags over the candidates' live rows, aliased ``t`` — with a
-        ``source``, left-outer-joined on ``keys`` to the frozen source,
+        flags over the candidates' live rows, aliased ``t`` — with
+        ``keys``, left-outer-joined on them to the frozen source,
         aliased ``s``: ``changed`` (the row's content changes) and
-        ``drop`` (the row is deleted; implies ``changed``), both
-        null-free booleans, plus ``post``, a full-row projection that
-        yields a changed row's post-image and any other row unchanged.
+        ``drop`` (the row is deleted; implies ``changed``), booleans
+        whose NULL counts as FALSE, plus ``post``, a full-row
+        projection that yields a changed row's post-image and any
+        other row unchanged.
 
         1. Freeze ``source`` (its columns are the table's plus any
-           front-end extras): stage its parquet once — ``rows_source``
-           without a ``count()``, and every join re-reads the staged
-           files instead of recomputing the lineage — drop empty part
-           files, and enforce the MERGE precondition that the source
-           is key-unique (a target row matching two source rows is
-           nondeterministic — Delta throws too; NULL keys never match,
-           so they are exempt).
+           front-end extras): stage its parquet once, so its lineage
+           runs once — ``rows_source`` comes without a ``count()``, and
+           the gate, the join and the inserts re-read the staged files.
+           With ``keys``, enforce the MERGE precondition that the
+           source is key-unique (a target row matching two source rows
+           is nondeterministic — Delta throws too; NULL keys never
+           match, so they are exempt) and join on them; without
+           ``keys`` the source only lands.
         2. Candidates: the stats ``prune`` (must be implied by the
            mutation) or all files.
         3. ONE per-file aggregation over the candidates yields the
            touched files (a changed row), the hit files (a source
-           match — the insert anti-join scope) and the row counts.
-           Files where nothing changes stay shared by reference.
+           match — the insert anti-join scope) and the changed,
+           matched and dropped row counts. It keeps only the rows where
+           ``changed`` as given, or the match, is TRUE before it
+           aggregates, so Parquet can push a plain predicate and skip
+           the row groups it cannot match. Files where nothing changes
+           stay shared by reference.
         4. Stage. ``mode='rewrite'``: touched files rewrite through
-           ``post`` minus the dropped rows, in ONE parallel batch with
-           the CDF pre-images (-1 side), the changed rows' post-images
-           (+1 side; carried rows of rewritten files never appear) and
-           the ``incoming(hit, frozen source)`` rows (guide §2.6: the
-           jobs are independent, so their tasks overlap).
-           ``mode='dv'``: the changed rows become deletion vectors and
-           their post-images land as new files — zero rewrites for any
-           mutation. ``gate`` vets the post-images before anything
-           stages. ``lands=True`` means every source row lands
-           (unconditional ``SET *`` and ``INSERT *``): the frozen
-           source files ARE the commit's incoming files, so the front
-           end drops every matched row instead of projecting
-           post-images, and ``gate`` vets the frozen source instead.
-           Otherwise the frozen source was scratch and is unlinked.
+           ``post`` minus the dropped rows — a file whose every live
+           row drops is removed whole, with no rewrite — in ONE
+           parallel batch with the CDF pre-images (-1 side), the
+           changed rows' post-images (+1 side; carried rows of
+           rewritten files never appear) and the ``incoming(hit,
+           frozen source)`` rows (guide §2.6: the jobs are independent,
+           so their tasks overlap). ``mode='dv'``: the changed rows
+           become deletion vectors and their post-images land as new
+           files — zero rewrites for any mutation. ``gate`` vets the
+           post-images before anything stages. ``lands=True`` means
+           every source row lands (replace_where's batch, the
+           unconditional ``SET *`` and ``INSERT *`` merge): the frozen
+           source files ARE the commit's incoming files and CDF insert
+           side, so the front end drops every changed row instead of
+           projecting post-images, and ``gate`` vets the frozen source
+           as soon as it stages. Otherwise the frozen source was
+           scratch and is unlinked.
         5. ONE commit: ``op`` plus ``extra``, ``count_as`` naming the
            changed-row count, ``mode``/``dv`` in dv mode, and
            ``cdf_delete`` (+ ``cdf_insert`` unless ``op='delete'``) on
-           ``cdf=True`` tables, through :meth:`_commit`. A staging job
-           raising or the O_EXCL gate lost to a concurrent writer
-           unlinks every data file this attempt staged, so a retry
-           loop leaves no orphans.
+           ``cdf=True`` tables, through :meth:`_commit`. A refusal, a
+           staging job raising or the O_EXCL gate lost to a concurrent
+           writer unlinks every data file this attempt staged, so a
+           retry loop leaves no orphans.
 
-        Returns every count a front end may report; each picks its
-        own keys (:func:`_pick`)."""
+        Each call logs one DEBUG record on ``olist.lake`` with the file
+        counts of steps 2-4 and the source rows. Returns every count a
+        front end may report; each picks its own keys (:func:`_pick`)."""
         cdf_on = self._cdf_enabled(state)
         pby = self._partition_by(state)
         table = StructType.fromJson(state["schema"])
         cols = table.names
         all_files = sorted(state["files"])
+        # row filters take the flag as given (NULL allowed; WHERE drops
+        # NULL rows anyway), the form Parquet can push; everything else
+        # reads the flags on IS TRUE
+        find = changed
+        changed, drop = (c.eqNullSafe(F.lit(True)) for c in (changed, drop))
         staged: list[str] = []  # data/ files this attempt wrote
         try:
             src_add: list[dict] = []
             src_df = None
             matched = F.lit(False)
             if source is not None:
-                src_add = self._stage_files(source, partition_by=pby)
+                (src_add,) = self._stage_files_par([(source, pby)])
                 staged += [m["path"] for m in src_add]
-                # empty part files carry no rows — never reference them
-                self._reclaim([m["path"] for m in src_add if not m["rows"]])
-                src_add = [m for m in src_add if m["rows"]]
                 src_df = self._scan(
                     spark,
                     state,
@@ -2153,29 +2203,34 @@ class LakeTable:
                            if f.name not in cols]
                     ),
                 )
-                nn = functools.reduce(
-                    lambda a, b: a & b, [F.col(k).isNotNull() for k in keys]
-                )
-                if (
-                    src_df.where(nn)
-                    .groupBy(*keys)
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .where(F.col("_n") > 1)
-                    .limit(1)
-                    .count()
-                ):
-                    raise ValueError(
-                        f"{op} source is not key-unique on {keys} — a "
-                        "multi-match is nondeterministic"
+                if keys is not None:
+                    nn = functools.reduce(
+                        lambda a, b: a & b,
+                        [F.col(k).isNotNull() for k in keys],
                     )
+                    if (
+                        src_df.where(nn)
+                        .groupBy(*keys)
+                        .agg(F.count(F.lit(1)).alias("_n"))
+                        .where(F.col("_n") > 1)
+                        .limit(1)
+                        .count()
+                    ):
+                        raise ValueError(
+                            f"{op} source is not key-unique on {keys} — "
+                            "a multi-match is nondeterministic"
+                        )
+                    matched = _matched()
+                    on = functools.reduce(
+                        lambda a, b: a & b,
+                        [F.col(f"t.`{k}`") == F.col(f"s.`{k}`")
+                         for k in keys],
+                    )
+                    s_side = src_df.withColumn(
+                        "_s_match", F.lit(True)
+                    ).alias("s")
                 if lands and gate is not None:
                     gate(src_df)
-                matched = _matched()
-                on = functools.reduce(
-                    lambda a, b: a & b,
-                    [F.col(f"t.`{k}`") == F.col(f"s.`{k}`") for k in keys],
-                )
-                s_side = src_df.withColumn("_s_match", F.lit(True)).alias("s")
 
             def rows(files: list[str], meta: bool = True) -> DataFrame:
                 # _lake_file/_lake_ridx are captured ON the scan (metadata
@@ -2185,7 +2240,7 @@ class LakeTable:
                 # the optimizer does not prune an unused row index
                 t = self._scan_live(spark, state, files, keep_meta=meta)
                 t = t.alias("t")
-                return t if src_df is None else t.join(s_side, on, "left_outer")
+                return t if keys is None else t.join(s_side, on, "left_outer")
 
             def image(df: DataFrame) -> DataFrame:  # the target row as is
                 return df.select(*[F.col(f"t.`{c}`").alias(c) for c in cols])
@@ -2197,18 +2252,23 @@ class LakeTable:
             )
             hit: list[str] = []
             touched: list[str] = []
+            dropped: dict[str, int] = {}  # touched file -> rows dropped
             n_changed = n_matched = n_both = 0
             if cand:
                 by_name = {os.path.basename(p): p for p in cand}
+                # rows failing both flags add 0 to every sum: filter
+                # them first (without a source, `find OR false` is
+                # `find`, which Parquet pushes into its scan)
                 per_file = (
                     rows(cand)
+                    .where(find | matched)
                     .groupBy("_lake_file")
                     .agg(
                         F.sum(changed.cast("long")).alias("_c"),
                         F.sum(matched.cast("long")).alias("_m"),
                         F.sum((changed & matched).cast("long")).alias("_cm"),
+                        F.sum(drop.cast("long")).alias("_d"),
                     )
-                    .where((F.col("_c") > 0) | (F.col("_m") > 0))
                     .collect()
                 )
                 for r in per_file:
@@ -2219,23 +2279,25 @@ class LakeTable:
                         hit.append(by_name[r["_lake_file"]])
                     if r["_c"]:
                         touched.append(by_name[r["_lake_file"]])
+                        dropped[by_name[r["_lake_file"]]] = r["_d"]
                 hit.sort()
                 touched.sort()
 
             remove: list[str] = []
+            whole: list[str] = []  # removed with no survivor rewrite
             dv_metas: list[dict] = []
             rewrite = pre = post_rows = None
             if touched:
                 tf = rows(touched, meta=mode == "dv")
                 if cdf_on:
-                    pre = image(tf.where(changed))
+                    pre = image(tf.where(find))
                 if post is not None:
-                    post_rows = post(tf.where(changed & ~drop))
+                    post_rows = post(tf.where(find & ~drop))
                     if gate is not None:
                         gate(post_rows)
                 if mode == "dv":
                     new_dv = self._stage_dv(
-                        tf.where(changed).select(
+                        tf.where(find).select(
                             F.col("_lake_file").alias("_dv_file"),
                             F.col("_lake_ridx").alias("_dv_row"),
                         )
@@ -2244,7 +2306,15 @@ class LakeTable:
                     dv_metas = self._fold_dv_metas(state, touched, new_dv)
                 else:
                     remove = touched
-                    rewrite = (post or image)(tf.where(~drop))
+                    whole = [
+                        p for p in touched
+                        if 0 < dropped[p] == _live_rows(state["files"][p])
+                    ]
+                    partial = [p for p in touched if p not in whole]
+                    if partial:
+                        rewrite = (post or image)(
+                            rows(partial, meta=False).where(~drop)
+                        )
                     if not cdf_on:
                         post_rows = None  # the rewrite carries them
             ins = incoming(hit, src_df) if incoming is not None else None
@@ -2278,14 +2348,22 @@ class LakeTable:
         except BaseException:
             self._reclaim(staged)
             raise
+        version = self._commit(state, commit, staged)
+        n_source = sum(m["rows"] for m in src_add)
+        log.debug(
+            "lake %s (%s): %d candidates, %d touched, %d removed whole, "
+            "%d rewritten, %d source rows",
+            op, mode, len(cand), len(touched), len(whole),
+            len(remove) - len(whole), n_source,
+        )
         return {
-            "version": self._commit(state, commit, staged),
+            "version": version,
             **({count_as: n_changed} if count_as is not None else {}),
             "rows_matched": n_matched,
             "rows_matched_changed": n_both,
             "rows_not_matched_by_source_changed": n_changed - n_both,
             "rows_inserted": sum(m["rows"] for m in ins_add),
-            "rows_source": sum(m["rows"] for m in src_add),
+            "rows_source": n_source,
             "files_rewritten": len(remove),
             "files_kept": len(all_files) - len(remove),
         }
@@ -2451,7 +2529,7 @@ class LakeTable:
             )
 
         r = self._mutate(
-            spark, state, "update", mode, hit, F.lit(False),
+            spark, state, "update", mode, predicate, F.lit(False),
             post=post, gate=gate, prune=prune, count_as="rows_updated",
             extra={"predicate": str(predicate),
                    "set": {c: str(e) for c, e in assigns.items()}},
@@ -2997,7 +3075,8 @@ class LakeTable:
         not the files an overwrite, rollback or drop_partitions
         removed: a kept one of those replays its delete side from
         files only an earlier version holds, so once vacuum drops that
-        version the replay fails.
+        version the feed fails with ``FileNotFoundError`` naming the
+        vacuum window, as :meth:`read` does for such a version.
 
         Plan shape: ONE scan per change side (insert/delete) over all
         its files, with ``_commit_version`` tagged by a broadcast
@@ -3018,6 +3097,15 @@ class LakeTable:
             for kind, e in pairs:
                 dvk = tuple(e["dv"]["paths"]) if e.get("dv") else ()
                 sides_of[kind].append((v, e["path"], dvk))
+        self._require_on_disk(
+            sorted({
+                p
+                for triples in sides_of.values()
+                for _v, path, dvk in triples
+                for p in (path, *dvk)
+            }),
+            f"the change feed of {self.path} after version {version}",
+        )
         state = self._state(cur)
         out_schema = _feed_schema(state["schema"], cdf=True)
         sides: list[DataFrame] = []
@@ -3319,9 +3407,7 @@ class LakeTable:
                 for spec in norm
             ):
                 dropped.append(p)
-                rows += state["files"][p].get("rows", 0) - (
-                    state["files"][p].get("dv") or {}
-                ).get("deleted", 0)
+                rows += _live_rows(state["files"][p])
         return {
             "version": self._commit(
                 state,
@@ -3660,6 +3746,12 @@ def _pick(r: dict, *keys: str) -> dict:
     tallies every mutator reports."""
     return {k: r[k] for k in ("version", *keys, "files_rewritten",
                               "files_kept")}
+
+
+def _live_rows(meta: dict) -> int:
+    """A manifest entry's live row count: its rows minus those its
+    deletion vector deletes."""
+    return meta.get("rows", 0) - (meta.get("dv") or {}).get("deleted", 0)
 
 
 def _matched() -> Column:

@@ -116,3 +116,16 @@ def test_dv_sidecars_checked_on_time_travel(spark, orders, tmp_path):
     os.unlink(os.path.join(t.path, dv_paths[0]))
     with pytest.raises(FileNotFoundError, match="vacuum"):
         t.read(spark, version=1)
+
+
+def test_change_feed_past_vacuum_fails_loudly(spark, tmp_path):
+    """A kept overwrite replays its delete side from the files it
+    removed; once vacuum drops them the feed fails like time travel
+    does, naming the vacuum window, not with Spark's missing-path
+    error at scan time."""
+    t = LakeTable.create(spark.range(10), str(tmp_path / "t"), cdf=True)
+    t.overwrite(spark.range(5))
+    t.vacuum(keep_versions=1, retention_seconds=0, force=True)
+    with pytest.raises(FileNotFoundError, match="vacuum"):
+        t.read_changes_since(spark, 0)
+    assert t.read(spark).count() == 5
