@@ -468,25 +468,22 @@ LIMIT 5
     "q1_top_units_oltp",
     oracle=_Q1_ORACLE_OLTP,
     doc="Top-5 (seller, state, category) by units, OLTP 6-way join form "
-    "(Olist DW.sql:215-226): J1+J2, A3, P7, T1.",
+    "(Olist DW.sql:215-226): J1 + calendar attributes computed from the "
+    "order date (the oracle keeps the J2 join), A3, P7, T1.",
 )
 def q1_top_units_oltp(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir, "orders", "lineitem", "part", "supplier", "nation", "region")
-    tp = star.build_time_period(t["orders"])
     nr = t["nation"].join(
         F.broadcast(t["region"]), t["nation"].n_regionkey == t["region"].r_regionkey
     )
+    orders = star.with_calendar(t["orders"], "o_orderdate").filter(
+        F.col("year") == 1998
+    )
     joined = (
-        t["orders"]
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
+        orders.join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(nr), F.col("n_nationkey") == F.col("s_nationkey"))
-        .join(
-            F.broadcast(tp),
-            date_key_to_date(F.col("date_key")) == F.to_date("o_orderdate"),
-        )
-        .filter(F.col("year") == 1998)
     )
     agg = joined.groupBy(
         F.col("year"),
@@ -564,25 +561,23 @@ LIMIT 5
 @register(
     "q2_top_revenue_oltp",
     oracle=_Q2_ORACLE_OLTP,
-    doc="Top-5 by revenue, OLTP form (Olist DW.sql:239-250): A1+F4+T1.",
+    doc="Top-5 by revenue, OLTP form (Olist DW.sql:239-250): J1 + calendar "
+    "attributes computed from the order date (the oracle keeps the J2 "
+    "join), A1+F4+T1.",
 )
 def q2_top_revenue_oltp(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir, "orders", "lineitem", "part", "supplier", "nation", "region")
-    tp = star.build_time_period(t["orders"])
     nr = t["nation"].join(
         F.broadcast(t["region"]), t["nation"].n_regionkey == t["region"].r_regionkey
     )
+    orders = star.with_calendar(t["orders"], "o_orderdate").filter(
+        F.col("year") == 1998
+    )
     joined = (
-        t["orders"]
-        .join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
+        orders.join(t["lineitem"], F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(t["supplier"]), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(nr), F.col("n_nationkey") == F.col("s_nationkey"))
-        .join(
-            F.broadcast(tp),
-            date_key_to_date(F.col("date_key")) == F.to_date("o_orderdate"),
-        )
-        .filter(F.col("year") == 1998)
     )
     agg = joined.groupBy(
         F.col("year"),
@@ -657,20 +652,14 @@ LIMIT 5
     "q3_conversion_oltp",
     oracle=_Q3_ORACLE_OLTP,
     doc="Top-5 fastest funnel conversions, OLTP form (Olist DW.sql:264-271): "
-    "F3 hour-boundary DATEDIFF + A2 integer AVG + T2 ASC top-k.",
+    "J4 + calendar attributes computed from won_date (the oracle keeps the "
+    "J2 join), F3 hour-boundary DATEDIFF + A2 integer AVG + T2 ASC top-k.",
 )
 def q3_conversion_oltp(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _t(spark, sf_dir, "events")
-    tp = star.build_calendar(t["events"], "ts")
     leads = star.build_conversion_leads(t["events"])
     deals = star.build_conversion_deals(t["events"])
-    joined = (
-        deals.join(leads, "user_id")
-        .join(
-            F.broadcast(tp),
-            date_key_to_date(F.col("date_key")) == F.to_date("won_date"),
-        )
-    )
+    joined = star.with_calendar(deals.join(leads, "user_id"), "won_date")
     agg = joined.groupBy("year", "origin", "lead_type").agg(
         int_avg(datediff_hours("first_contact_date", "won_date")).alias(
             "avg_hrs_convert"

@@ -104,6 +104,22 @@ def build_calendar(df: DataFrame, ts_col: str) -> DataFrame:
     )
 
 
+def with_calendar(df: DataFrame, ts_col: str) -> DataFrame:
+    """``df`` with the ``date_key`` and ``year`` a J2 join to a calendar
+    covering every ``ts_col`` date would attach, without the join.
+
+    Such a calendar (``build_calendar`` over ``df``, or over a frame whose
+    dates include ``df``'s) matches every non-NULL date exactly once, so
+    the join only attaches these two attributes and drops the NULL-dated
+    rows. Computing them saves the calendar's second scan, its min/max
+    stage and its broadcast, which Catalyst cannot prove redundant.
+    """
+    d = F.to_date(ts_col)
+    return df.filter(d.isNotNull()).withColumns(
+        {"date_key": date_to_date_key(d), "year": F.year(d)}
+    )
+
+
 def build_sales_fact(
     orders: DataFrame,
     lineitem: DataFrame,
@@ -191,24 +207,18 @@ def build_conversions_fact(events: DataFrame) -> DataFrame:
     """Conversions fact: AVG hours from first contact to close.
 
     Mirrors `Olist DW.sql:166-180` (J4 + A2 + F3): join leads to deals,
-    expression-join the time dimension on won_date, and aggregate
-    DATEDIFF(HOUR) with the integer-AVG convention. The reference's
-    AVG-weighting fan-out trap (SURVEY.md §7.4.5) is replicated by the
-    grain: one row per (user, date) pair feeding a grouped AVG.
+    attach won_date's calendar attributes (:func:`with_calendar`), and
+    aggregate DATEDIFF(HOUR) with the integer-AVG convention. The
+    reference's AVG-weighting fan-out trap (SURVEY.md §7.4.5) is
+    replicated by the grain: one row per (user, date) pair feeding a
+    grouped AVG.
     """
-    # The marketing calendar spans the *events* dates — the reference
-    # keeps per-database time_period copies for the same reason
-    # (`Olist DW.sql:269` joins Olist_Marketing's own copy).
-    time_period = build_calendar(events, "ts")
+    # The reference joins Olist_Marketing's own calendar copy
+    # (`Olist DW.sql:269`), which spans the events dates; every won_date
+    # is one of them, so its attributes are computed, not joined.
     leads = build_conversion_leads(events)
     deals = build_conversion_deals(events)
-    joined = (
-        leads.join(deals, "user_id")
-        .join(
-            F.broadcast(time_period),
-            date_key_to_date(F.col("date_key")) == F.to_date("won_date"),
-        )
-    )
+    joined = with_calendar(leads.join(deals, "user_id"), "won_date")
     return (
         joined.groupBy("date_key", "origin", "lead_type")
         .agg(

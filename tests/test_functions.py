@@ -46,6 +46,79 @@ def test_date_key_roundtrip(spark):
     assert out.d == dt.date(2018, 3, 5)
 
 
+def _j2_join(df, ts_col: str, calendar):
+    """The reference's expression join of a yyyyMMdd-keyed calendar."""
+    return df.join(
+        F.broadcast(calendar),
+        date_key_to_date(F.col("date_key")) == F.to_date(ts_col),
+    )
+
+
+def test_computed_calendar_attributes_keep_the_j2_join_rows(spark):
+    """``star.with_calendar`` keeps the rows, and attaches the
+    ``date_key``/``year``, that the J2 join to a calendar built from the
+    same rows did: a NULL date drops, as the inner join dropped it.
+    Checked on the q1/q2 orders path and on the conversions fact."""
+    from olist_data_warehouse_spark.plans import star
+
+    orders = spark.createDataFrame(
+        [
+            (1, dt.datetime(1997, 12, 31, 12, 0)),
+            (2, dt.datetime(1998, 1, 1, 12, 0)),
+            (3, dt.datetime(1998, 12, 31, 12, 0)),
+            (4, dt.datetime(1999, 1, 1, 12, 0)),
+            (5, None),
+        ],
+        "o_orderkey long, o_orderdate timestamp",
+    )
+    cols = ["o_orderkey", "date_key", "year"]
+    joined = _j2_join(orders, "o_orderdate", star.build_time_period(orders))
+    computed = star.with_calendar(orders, "o_orderdate")
+    assert sorted(computed.select(cols).collect()) == sorted(
+        joined.select(cols).collect()
+    )
+    q1_rows = sorted(computed.filter(F.col("year") == 1998).select(cols).collect())
+    assert q1_rows == sorted(
+        joined.filter(F.col("year") == 1998).select(cols).collect()
+    )
+    assert [tuple(r) for r in q1_rows] == [(2, 19980101, 1998), (3, 19981231, 1998)]
+
+    h = dt.datetime(2024, 3, 1, 12, 0)
+    events = spark.createDataFrame(
+        [
+            (1, "signup", h),
+            (1, "purchase", h + dt.timedelta(hours=30)),
+            (2, "signup", h),
+            (2, "purchase", None),  # its only purchase: won_date is NULL
+            (3, "signup", h + dt.timedelta(days=1)),
+            (3, "purchase", h + dt.timedelta(days=2, hours=5)),
+            (3, "purchase", None),
+        ],
+        "user_id long, event_type string, ts timestamp",
+    )
+    leads = star.build_conversion_leads(events)
+    deals = star.build_conversion_deals(events)
+    reference = (
+        _j2_join(
+            leads.join(deals, "user_id"), "won_date",
+            star.build_calendar(events, "ts"),
+        )
+        .groupBy("date_key", "origin", "lead_type")
+        .agg(
+            int_avg(datediff_hours("first_contact_date", "won_date")).alias(
+                "avg_hrs_convert"
+            )
+        )
+        .filter(F.col("avg_hrs_convert") >= 1)
+    )
+    got = sorted(star.build_conversions_fact(events).collect())
+    assert got == sorted(reference.collect())
+    assert [tuple(r) for r in got] == [
+        (20240302, "origin_1", "type_1", 30),
+        (20240303, "origin_3", "type_0", 29),
+    ]
+
+
 def test_int_avg_floors(spark):
     df = spark.createDataFrame([(1,), (2,), (2,)], "x int")
     assert df.agg(int_avg("x")).collect()[0][0] == 1  # avg=1.666 -> 1

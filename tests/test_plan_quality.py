@@ -18,12 +18,15 @@ from olist_data_warehouse_spark.plans.queries import REGISTRY
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    df = REGISTRY[name].fn(spark, SF)
+def _explain(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_of(spark, name: str) -> str:
+    return _explain(REGISTRY[name].fn(spark, SF))
 
 
 def test_dw_star_join_broadcasts_dims_and_takeordered(spark):
@@ -48,12 +51,71 @@ def test_incremental_anti_join_is_broadcast(spark):
     assert "BroadcastHashJoin LeftAnti BuildRight" in plan
 
 
+def _subtree(tree: str, head: str) -> str:
+    """The first node of the tree string ``tree`` whose line contains
+    ``head``, with every node below it."""
+    lines = tree.splitlines()
+    i = next(i for i, ln in enumerate(lines) if head in ln)
+    depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+    out = [lines[i]]
+    for ln in lines[i + 1:]:
+        if len(ln) - len(ln.lstrip(" :+-")) <= depth:
+            break
+        out.append(ln)
+    return "\n".join(out)
+
+
 def test_expression_join_stays_equi_join(spark):
-    """The yyyyMMdd↔date expression join must plan as a hash join on
-    computed keys — never a cartesian product + filter."""
-    plan = plan_of(spark, "q1_top_units_oltp")
+    """The sales fact's yyyyMMdd↔date expression join (J2) must plan as
+    a hash join on computed keys — never a cartesian product + filter."""
+    from olist_data_warehouse_spark.plans import star
+    from olist_data_warehouse_spark.sources.readers import load_testdata
+
+    t = load_testdata(
+        spark, SF, ("orders", "lineitem", "part", "supplier", "nation", "region")
+    )
+    fact = star.build_sales_fact(
+        t["orders"], t["lineitem"], t["part"], t["supplier"], t["nation"],
+        t["region"], star.build_product_dim(t["part"]),
+        star.build_location_dim(t["nation"], t["region"]),
+        star.build_time_period(t["orders"]),
+    )
+    plan = _explain(fact)
+    keys = [ln for ln in plan.splitlines() if ln.startswith("Right keys")]
+    assert any("yyyyMMdd" in ln for ln in keys), "J2 join is gone"
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_oltp_reports_compute_calendar_attributes(spark):
+    """The OLTP reports and the conversions fact compute ``date_key`` and
+    ``year`` from the date instead of generating a calendar from the
+    same rows and joining it back through a yyyyMMdd parse: the fact
+    table is scanned once and q1/q2 filter orders to 1998 before they
+    meet lineitem."""
+    from olist_data_warehouse_spark.plans import star
+    from olist_data_warehouse_spark.sources.readers import load_testdata
+
+    events = load_testdata(spark, SF, ("events",))["events"]
+    frames = {n: REGISTRY[n].fn(spark, SF) for n in (
+        "q1_top_units_oltp", "q2_top_revenue_oltp", "q3_conversion_oltp"
+    )}
+    frames["build_conversions_fact"] = star.build_conversions_fact(events)
+    for name, df in frames.items():
+        plan = _explain(df)
+        logical = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "sequence(" not in plan, name
+        joins = [ln for ln in logical.splitlines() if "Join " in ln]
+        assert joins and not any("yyyyMMdd" in ln for ln in joins), name
+        if name.startswith(("q1", "q2")):
+            assert plan.count("Location: InMemoryFileIndex [file:"
+                              f"{SF}/orders.parquet]") == 1, name
+            below = _subtree(logical, "Join Inner, (l_orderkey#")
+            assert "= o_orderkey#" in below.splitlines()[0], name
+            assert any(
+                ln.lstrip(" :+-").startswith("Filter") and "= 1998)" in ln
+                for ln in below.splitlines()
+            ), name
 
 
 def test_minhash_has_no_udf_and_single_agg_shuffle(spark):

@@ -53,21 +53,21 @@ def make_sliced_sf(dst: str, k: int) -> None:
 
 def main() -> int:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 0
-    dst = tempfile.mkdtemp(prefix=f"sf_deg{k}_")
-    make_sliced_sf(dst, k)
-    spark = session("empty-input-sweep", 8)
+    with tempfile.TemporaryDirectory(prefix=f"sf_deg{k}_") as dst:
+        make_sliced_sf(dst, k)
+        spark = session("empty-input-sweep", 8)
 
-    def check(name: str) -> tuple[bool, str]:
-        try:
-            return True, f"{len(REGISTRY[name].fn(spark, dst).collect())} rows"
-        except ValueError as e:
-            # An explicit guard raising its documented error is a
-            # designed outcome, not a robustness failure.
-            return True, f"guard: {e}"
+        def check(name: str) -> tuple[bool, str]:
+            try:
+                return True, f"{len(REGISTRY[name].fn(spark, dst).collect())} rows"
+            except ValueError as e:
+                # An explicit guard raising its documented error is a
+                # designed outcome, not a robustness failure.
+                return True, f"guard: {e}"
 
-    # optional name filter: positional args after k are substrings —
-    # run only matching entries (new-entry battery without a full sweep)
-    return sweep(f"EMPTY-INPUT SWEEP (k={k})", select(sys.argv[2:]), check)
+        # optional name filter: positional args after k are substrings —
+        # run only matching entries (new-entry battery without a full sweep)
+        return sweep(f"EMPTY-INPUT SWEEP (k={k})", select(sys.argv[2:]), check)
 
 
 if __name__ == "__main__":

@@ -142,19 +142,19 @@ def main() -> int:
     denom = int(args[0]) if args and args[0].isdigit() else 10
     pats = args[1:] if args and args[0].isdigit() else args
     mode = "groupkill" if groups else "nullfuzz"
-    dst = tempfile.mkdtemp(prefix=f"sf_{mode}{denom}_")
-    make_fuzzed_sf(dst, denom, groups=groups)
-    unit = "groups per column" if groups else "cells"
-    print(f"fuzzed copy at {dst} (~1/{denom} {unit} nulled)")
+    with tempfile.TemporaryDirectory(prefix=f"sf_{mode}{denom}_") as dst:
+        make_fuzzed_sf(dst, denom, groups=groups)
+        unit = "groups per column" if groups else "cells"
+        print(f"fuzzed copy at {dst} (~1/{denom} {unit} nulled)")
 
-    from tests.oracle_check import compare_query
+        from tests.oracle_check import compare_query
 
-    spark = session("null-fuzz-sweep", 16)
-    return sweep(
-        f"NULL-FUZZ SWEEP (denom={denom}{', groups' if groups else ''})",
-        select(pats, oracle_only=True),
-        lambda name: compare_query(spark, dst, name),
-    )
+        spark = session("null-fuzz-sweep", 16)
+        return sweep(
+            f"NULL-FUZZ SWEEP (denom={denom}{', groups' if groups else ''})",
+            select(pats, oracle_only=True),
+            lambda name: compare_query(spark, dst, name),
+        )
 
 
 if __name__ == "__main__":

@@ -95,18 +95,18 @@ def make_fuzzed_sf(dst: str) -> None:
 
 
 def main() -> int:
-    dst = tempfile.mkdtemp(prefix="sf_unifuzz_")
-    make_fuzzed_sf(dst)
-    print(f"unicode-fuzzed copy at {dst}")
+    with tempfile.TemporaryDirectory(prefix="sf_unifuzz_") as dst:
+        make_fuzzed_sf(dst)
+        print(f"unicode-fuzzed copy at {dst}")
 
-    from tests.oracle_check import compare_query
+        from tests.oracle_check import compare_query
 
-    spark = session("unicode-fuzz-sweep", 16)
-    return sweep(
-        "UNICODE-FUZZ SWEEP",
-        select(sys.argv[1:], oracle_only=True),
-        lambda name: compare_query(spark, dst, name),
-    )
+        spark = session("unicode-fuzz-sweep", 16)
+        return sweep(
+            "UNICODE-FUZZ SWEEP",
+            select(sys.argv[1:], oracle_only=True),
+            lambda name: compare_query(spark, dst, name),
+        )
 
 
 if __name__ == "__main__":
