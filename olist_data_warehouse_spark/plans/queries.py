@@ -210,9 +210,11 @@ def _star_build_src_hash() -> str:
 
 
 def _sweep_stale_star_dirs(cache_root: str, keep: set[str]) -> None:
-    """Remove ``star_*`` dirs that are not in ``keep`` and are older
-    than a day — previous sessions'/commits' builds. Age-gated so a
-    concurrently running session's fresh build is never deleted."""
+    """Remove ``star_*`` dirs that are not in ``keep`` and either were
+    built from an ``sf_dir`` that no longer exists (a temporary
+    testdata copy: the key can never be hit again) or are older than a
+    day — previous sessions'/commits' builds. The age gate keeps a
+    concurrently running session's fresh build."""
     import os
     import shutil
     import time
@@ -222,12 +224,14 @@ def _sweep_stale_star_dirs(cache_root: str, keep: set[str]) -> None:
     cutoff = time.time() - 86400
     for d in os.listdir(cache_root):
         p = os.path.join(cache_root, d)
-        if (
-            d.startswith("star_")
-            and d not in keep
-            and os.path.isdir(p)
-            and os.path.getmtime(p) < cutoff
-        ):
+        if not d.startswith("star_") or d in keep or not os.path.isdir(p):
+            continue
+        try:
+            with open(os.path.join(p, "SF_DIR")) as f:
+                gone = not os.path.exists(f.read())
+        except OSError:
+            gone = False
+        if gone or os.path.getmtime(p) < cutoff:
             shutil.rmtree(p, ignore_errors=True)
 
 
@@ -292,6 +296,11 @@ def warehouse_tables(
                 # Touch on reuse: an actively-used cache never ages
                 # into the sweep window.
                 os.utime(base)
+            else:
+                # the sweep drops the build once its sf_dir is gone
+                os.makedirs(base, exist_ok=True)
+                with open(os.path.join(base, "SF_DIR"), "w") as f:
+                    f.write(os.path.abspath(sf_dir))
             out: dict[str, DataFrame] = dict(
                 star_tables(spark, sf_dir, groups=(group,))
             )

@@ -501,8 +501,9 @@ class LakeBatchWriter(DataSourceArrowWriter):
     directly under the table's data/ (immutable unique names — a
     crashed task's files are simply never referenced, and vacuum's
     retention window reclaims them). Per-column min/max/null stats
-    compute EXECUTOR-SIDE from the Arrow data — the manifest needs no
-    second Spark scan, unlike the LakeTable.append path. The driver's
+    compute EXECUTOR-SIDE from the Arrow data, so the manifest needs
+    no Spark scan (``LakeTable._stage_files`` reads the same stats
+    from the written files' parquet footers). The driver's
     ``commit`` assembles the add list and lands it through
     ``LakeTable._commit`` as a blind writer (append and overwrite do
     not depend on what they read, so a lost gate retries the commit
@@ -992,7 +993,10 @@ class LakeBatchDataSource(DataSource):
         return LakeBatchReader(self.options, schema_json=sj)
 
     def writer(self, schema, overwrite: bool) -> LakeBatchWriter:
-        from olist_data_warehouse_spark.sources.lakehouse import LakeTable
+        from olist_data_warehouse_spark.sources.lakehouse import (
+            LakeTable,
+            admit_schema,
+        )
 
         path = _norm_path(self.options.get("path"))
         if not path:
@@ -1085,26 +1089,8 @@ class LakeBatchDataSource(DataSource):
                         "LakeTable.append / overwrite, which validate "
                         "with Spark itself before committing"
                     )
-            for fld in table_schema.fields:
-                if fld.name in schema.fieldNames():
-                    got = schema[fld.name].dataType
-                    if got != fld.dataType:
-                        raise ValueError(
-                            f"column {fld.name!r} type mismatch: table "
-                            f"{fld.dataType.simpleString()} vs write "
-                            f"{got.simpleString()}"
-                        )
             # generated columns may be OMITTED from the write (they
-            # are computed executor-side); anything else must match
-            if not overwrite and sorted(
-                [*schema.fieldNames(), *gen_missing]
-            ) != sorted(table_schema.fieldNames()):
-                raise ValueError(
-                    f"append schema mismatch: table "
-                    f"{table_schema.fieldNames()} vs write "
-                    f"{schema.fieldNames()} (no merge_schema on this "
-                    "path — use LakeTable.append)"
-                )
+            # are computed executor-side)
             schema_replaced = overwrite and sorted(
                 [*schema.fieldNames(), *gen_missing]
             ) != sorted(table_schema.fieldNames())
@@ -1130,6 +1116,9 @@ class LakeBatchDataSource(DataSource):
                     "their config against a replaced schema — drop "
                     "them first or use LakeTable.overwrite"
                 )
+            if not schema_replaced:
+                # the table API's own column-set and type rule
+                admit_schema(table_schema, schema, gen_missing)
             # files (and create/overwrite commits) carry the TABLE
             # schema: omitted generated columns are computed in, and
             # mapped tables rename to physical names executor-side

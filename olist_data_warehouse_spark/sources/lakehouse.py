@@ -333,64 +333,13 @@ class LakeTable:
             probe = probe.join(
                 spark.createDataFrame([], schema).alias("s"), how="cross"
             )
-        self._check_types(
-            state,
+        admit_schema(
+            schema,
             probe.select(
                 *[assigns.get(c, F.col(f"t.`{c}`")).alias(c)
                   for c in schema.names]
-            ),
+            ).schema,
         )
-
-    def _check_types(self, state: dict, df: DataFrame) -> None:
-        """Shared-column TYPE gate for every write path. Names alone
-        are not enough: a batch whose column type differs from the
-        table schema would commit fine and poison every later read
-        (:meth:`read` applies the table schema over the incompatible
-        parquet, so the failure surfaces at scan time, versions after
-        the bad write). Fail here, before any file is staged."""
-        table = StructType.fromJson(state["schema"])
-        for fld in table.fields:
-            if fld.name in df.columns:
-                got = df.schema[fld.name].dataType
-                if got != fld.dataType:
-                    raise ValueError(
-                        f"column {fld.name!r} type mismatch: table "
-                        f"{fld.dataType.simpleString()} vs batch "
-                        f"{got.simpleString()}"
-                    )
-
-    def _enforce_constraints(
-        self, state: dict, df: DataFrame, what: str
-    ) -> None:
-        """CHECK-constraint gate for every row-writing path: ONE
-        aggregate over ``df`` counts, per constraint, the rows whose
-        expression is literally FALSE (NULL passes — the SQL standard
-        CHECK semantics, Delta's posture), and any violation fails the
-        whole write before it commits. Tables without constraints pay
-        nothing (no job, no plan)."""
-        cons = (state.get("config") or {}).get("constraints") or {}
-        if not cons:
-            return
-        names = sorted(cons)
-        row = df.agg(
-            *[
-                F.sum(
-                    F.expr(cons[n])
-                    .eqNullSafe(F.lit(False))
-                    .cast("long")
-                ).alias(n)
-                for n in names
-            ]
-        ).collect()[0]
-        bad = [(n, row[n]) for n in names if (row[n] or 0) > 0]
-        if bad:
-            raise ValueError(
-                f"CHECK constraint violation on {what}: "
-                + "; ".join(
-                    f"{n} CHECK ({cons[n]}) fails for {v} rows"
-                    for n, v in bad
-                )
-            )
 
     def _generated(self, state: dict) -> dict[str, str]:
         """GENERATED columns, ``{col: sql_expr}`` — fixed at
@@ -398,50 +347,106 @@ class LakeTable:
         added to an existing table)."""
         return (state.get("config") or {}).get("generated") or {}
 
-    def _apply_generated(
-        self, state: dict, df: DataFrame, what: str
-    ) -> DataFrame:
-        """The generated-column write contract (Delta's GENERATED
-        ALWAYS AS): a batch OMITTING a generated column gets it
-        COMPUTED; a batch PROVIDING one is VALIDATED against the
-        expression (null-safe equality — one aggregate over the batch,
-        like a CHECK constraint) and the whole write fails on any
-        mismatch. Tables without generation rules return ``df``
-        untouched."""
+    def _constraints(self, state: dict) -> dict[str, str]:
+        """CHECK constraints, ``{name: sql_expr}``."""
+        return (state.get("config") or {}).get("constraints") or {}
+
+    def _admit(self, state: dict, df: DataFrame) -> DataFrame:
+        """Admit a batch to ``state``'s table, analysis only (no Spark
+        job): the GENERATED columns it omits are computed (Delta's
+        GENERATED ALWAYS AS — the ones it provides are checked against
+        their expression once staged: :meth:`_vet` over
+        :meth:`_provided`), it is held to
+        the shared column-set and type rule (:func:`admit_schema`), and
+        its columns come back in table order. A state without a schema
+        (``create``, ``overwrite``) takes the batch's own columns as
+        the new schema."""
         gen = self._generated(state)
-        if not gen:
-            return df
-        to_check = []
-        for col, sql in sorted(gen.items()):
-            if col in df.columns:
-                to_check.append((col, sql))
-            else:
-                df = df.withColumn(col, F.expr(sql))
-        if to_check:
-            row = df.agg(
-                *[
-                    F.sum(
-                        (~F.col(c).eqNullSafe(F.expr(sql)))
-                        .cast("long")
-                    ).alias(c)
-                    for c, sql in to_check
-                ]
-            ).collect()[0]
-            bad = [
-                (c, row[c])
-                for c, _ in to_check
-                if (row[c] or 0) > 0
+        computed = [c for c in sorted(gen) if c not in df.columns]
+        table = state.get("schema")
+        if table is not None:
+            table = StructType.fromJson(table)
+            admit_schema(table, df.schema, computed)
+        for c in computed:
+            df = df.withColumn(c, F.expr(gen[c]))
+        return df if table is None else df.select(*table.names)
+
+    def _provided(self, state: dict, df: DataFrame) -> dict:
+        """``state`` holding only the GENERATED columns ``df``
+        provides: the ones admission computes need no check."""
+        return {**state, "config": {
+            **(state.get("config") or {}),
+            "generated": {
+                c: e for c, e in self._generated(state).items()
+                if c in df.columns
+            },
+        }}
+
+    def _vet(self, state: dict, df: DataFrame, what: str) -> None:
+        """The write contract's ONE data check: a single aggregate over
+        ``df`` — a batch's staged files (:meth:`_vet_staged`) or a
+        mutation's post-images — counts, per GENERATED column, the rows
+        whose value differs from its expression (null-safe equality),
+        and per CHECK constraint the rows where it is literally FALSE
+        (NULL passes — the SQL standard CHECK semantics, Delta's
+        posture). Any count refuses the whole write. A table with
+        neither pays nothing: no job, no plan."""
+        gen, cons = self._generated(state), self._constraints(state)
+        if not gen and not cons:
+            return
+        tests = [
+            ("gen", c, ~F.col(c).eqNullSafe(F.expr(gen[c])))
+            for c in sorted(gen)
+        ] + [
+            ("check", n, F.expr(cons[n]).eqNullSafe(F.lit(False)))
+            for n in sorted(cons)
+        ]
+        row = df.agg(
+            *[
+                F.sum(bad.cast("long")).alias(f"_v{i}")
+                for i, (_k, _n, bad) in enumerate(tests)
             ]
-            if bad:
-                raise ValueError(
-                    f"generated-column violation on {what}: "
-                    + "; ".join(
-                        f"{c} GENERATED ALWAYS AS ({gen[c]}) differs "
-                        f"for {n} rows"
-                        for c, n in bad
-                    )
+        ).first()
+        failed = [
+            (kind, name, row[f"_v{i}"])
+            for i, (kind, name, _bad) in enumerate(tests)
+            if (row[f"_v{i}"] or 0) > 0
+        ]
+        gen_bad = [(c, n) for kind, c, n in failed if kind == "gen"]
+        if gen_bad:
+            raise ValueError(
+                f"generated-column violation on {what}: "
+                + "; ".join(
+                    f"{c} GENERATED ALWAYS AS ({gen[c]}) differs for "
+                    f"{n} rows"
+                    for c, n in gen_bad
                 )
-        return df
+            )
+        if failed:
+            raise ValueError(
+                f"CHECK constraint violation on {what}: "
+                + "; ".join(
+                    f"{c} CHECK ({cons[c]}) fails for {n} rows"
+                    for _kind, c, n in failed
+                )
+            )
+
+    def _vet_staged(
+        self, spark: SparkSession, state: dict, add: list[dict], what: str
+    ) -> None:
+        """:meth:`_vet` over staged files, read through :meth:`_scan`
+        so column mapping holds; a refusal unlinks them and raises.
+        Builds no scan at all for a table without rules."""
+        paths = [m["path"] for m in add]
+        if not paths or not (
+            self._generated(state) or self._constraints(state)
+        ):
+            return
+        try:
+            self._vet(state, self._scan(spark, state, paths), what)
+        except BaseException:
+            self._reclaim(paths)
+            raise
 
     def _state(self, v: int | None = None) -> dict:
         """Table state at version ``v``: replay latest checkpoint <= v,
@@ -591,6 +596,10 @@ class LakeTable:
                 shutil.rmtree(stage, ignore_errors=True)
                 if "OptionalDataException" not in str(e) or attempt == 3:
                     raise
+                log.warning(
+                    "lake stage retry %d of 3 after OptionalDataException",
+                    attempt + 1,
+                )
                 time.sleep(0.2 * (attempt + 1))
         prefix = uuid.uuid4().hex[:8]
         moved = []  # data/-relative paths
@@ -638,52 +647,61 @@ class LakeTable:
         metas = _footer_metas(
             self.data_dir, moved, df.schema, partition_by
         )
-        if metas is not None:
-            return metas
-        reader = spark.read.schema(df.schema)
-        if partition_by:
-            # Hive partition discovery restores the directory columns,
-            # typed by the explicit schema — so partition columns get
-            # min/max/null stats exactly like data columns
-            reader = reader.option("basePath", self.data_dir)
-        scan = reader.parquet(*paths).withColumn(
-            "_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in statted:
-            aggs += [
-                F.min(c).alias(f"_min_{c}"),
-                F.max(c).alias(f"_max_{c}"),
-                F.sum(F.col(c).isNull().cast("long")).alias(f"_nulls_{c}"),
-            ]
-        rows = {r["_file"]: r for r in scan.groupBy("_file").agg(*aggs).collect()}
-        metas = []
-        for m in moved:
-            r = rows.get(os.path.basename(m))
-            stats = {}
-            if r is not None:
-                for c in statted:
-                    stats[c] = {
-                        "min": _json_safe(r[f"_min_{c}"]),
-                        "max": _json_safe(r[f"_max_{c}"]),
-                        "nulls": r[f"_nulls_{c}"],
-                    }
-            meta = {
-                "path": f"data/{m}",
-                "rows": r["_rows"] if r is not None else 0,
-                "bytes": os.path.getsize(os.path.join(self.data_dir, m)),
-                "stats": stats,
-            }
+        if metas is None:
+            reader = spark.read.schema(df.schema)
             if partition_by:
-                # single-valued per file, so min IS the value (None for
-                # the __HIVE_DEFAULT_PARTITION__ null dir); typed by
-                # the schema, serialized like every other stat
-                meta["partition"] = {
-                    c: stats[c]["min"] if c in stats else None
-                    for c in partition_by
+                # Hive partition discovery restores the directory
+                # columns, typed by the explicit schema — so partition
+                # columns get min/max/null stats exactly like data ones
+                reader = reader.option("basePath", self.data_dir)
+            scan = reader.parquet(*paths).withColumn(
+                "_file",
+                F.element_at(F.split(F.input_file_name(), "/"), -1),
+            )
+            aggs = [F.count(F.lit(1)).alias("_rows")]
+            for c in statted:
+                aggs += [
+                    F.min(c).alias(f"_min_{c}"),
+                    F.max(c).alias(f"_max_{c}"),
+                    F.sum(F.col(c).isNull().cast("long"))
+                    .alias(f"_nulls_{c}"),
+                ]
+            rows = {
+                r["_file"]: r
+                for r in scan.groupBy("_file").agg(*aggs).collect()
+            }
+            metas = []
+            for m in moved:
+                r = rows.get(os.path.basename(m))
+                stats = {}
+                if r is not None:
+                    for c in statted:
+                        stats[c] = {
+                            "min": _json_safe(r[f"_min_{c}"]),
+                            "max": _json_safe(r[f"_max_{c}"]),
+                            "nulls": r[f"_nulls_{c}"],
+                        }
+                meta = {
+                    "path": f"data/{m}",
+                    "rows": r["_rows"] if r is not None else 0,
+                    "bytes": os.path.getsize(
+                        os.path.join(self.data_dir, m)
+                    ),
+                    "stats": stats,
                 }
-            metas.append(meta)
-        return metas
+                if partition_by:
+                    # single-valued per file, so min IS the value (None
+                    # for the __HIVE_DEFAULT_PARTITION__ null dir); typed
+                    # by the schema, serialized like every other stat
+                    meta["partition"] = {
+                        c: stats[c]["min"] if c in stats else None
+                        for c in partition_by
+                    }
+                metas.append(meta)
+        # Spark writes one part file for an empty frame (an empty
+        # batch, rewrite or insert side): no write commits one
+        self._reclaim([m["path"] for m in metas if not m["rows"]])
+        return [m for m in metas if m["rows"]]
 
     def _stage_files_par(
         self,
@@ -701,12 +719,7 @@ class LakeTable:
         staging writes to its own uuid stage dir and appends to its
         own meta list, so the only shared state is Spark's own
         thread-safe job submission. If any staging raises, the files
-        its siblings staged are unlinked before the error propagates.
-
-        These are the row mutations' stagings (:meth:`_mutate`): a
-        part file holding no row — Spark writes one for an empty
-        frame, such as an empty rewrite, insert side or batch — is
-        unlinked and left out, so a mutation never commits one."""
+        its siblings staged are unlinked before the error propagates."""
         live = [(i, df, pby) for i, (df, pby) in enumerate(jobs)
                 if df is not None]
         out: list[list[dict]] = [[] for _ in jobs]
@@ -730,10 +743,34 @@ class LakeTable:
                 raise errs[0]
             for i, fut in futs:
                 out[i] = fut.result()
-        self._reclaim(
-            [m["path"] for part in out for m in part if not m["rows"]]
+        return out
+
+    def _land(
+        self, state: dict, df: DataFrame, what: str
+    ) -> tuple[DataFrame, list[dict]]:
+        """The admission path of every writer that lands a batch as
+        new files (create, append, overwrite, copy_into, the streaming
+        sink): :meth:`_admit` it, stage it once, then :meth:`_vet` the
+        staged files in one aggregate (the CHECK constraints and the
+        generated columns the batch provided) — so its lineage is
+        evaluated exactly once, whatever the table's rules. A refused
+        batch unlinks what it staged and raises. Returns the admitted
+        frame (its schema is the commit's) and the staged files'
+        metas."""
+        vetted = self._provided(state, df)
+        df = self._admit(state, df)
+        add = self._stage_files(
+            df,
+            partition_by=self._partition_by(state),
+            mapping=self._mapping(state),
         )
-        return [[m for m in part if m["rows"]] for part in out]
+        self._vet_staged(
+            df.sparkSession,
+            {**vetted, "schema": df.schema.jsonValue()},
+            add,
+            what,
+        )
+        return df, add
 
     def _commit(
         self,
@@ -1081,64 +1118,50 @@ class LakeTable:
         t = cls(path)
         if t.version() is not None:
             raise FileExistsError(f"lake table already exists at {path}")
+        # GENERATED ALWAYS AS columns, fixed at create (Delta's
+        # posture), resolve against the incoming frame
+        for col, sql in sorted((generated or {}).items()):
+            if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", col):
+                raise ValueError(
+                    f"generated column name {col!r} must be an "
+                    "identifier"
+                )
+            if col in (partition_by or []):
+                raise ValueError(
+                    f"partition column {col!r} cannot be generated"
+                )
+            try:
+                df.select(F.expr(sql))
+            except Exception as e:
+                raise ValueError(
+                    f"generated expression for {col!r} does not "
+                    f"resolve: {sql!r} ({e})"
+                ) from None
+        for c in partition_by or []:
+            if c not in df.columns:
+                raise ValueError(
+                    f"partition column {c!r} not in {df.columns}"
+                )
+            st = df.schema[c].dataType.simpleString()
+            if st not in _STATS_TYPES:
+                raise ValueError(
+                    f"partition column {c!r} has non-partitionable "
+                    f"type {st} (need one of {_STATS_TYPES})"
+                )
+        config = {
+            "cdf": bool(cdf),
+            **({"partition_by": list(partition_by)} if partition_by else {}),
+            **({"generated": dict(generated)} if generated else {}),
+        }
+        df, add = t._land({"config": config}, df, "create")
         if generated:
-            # GENERATED ALWAYS AS columns, fixed at create (Delta's
-            # posture). Resolve each expression against the incoming
-            # frame; compute columns the frame omits, validate ones it
-            # provides via the shared write-path contract.
-            for col, sql in sorted(generated.items()):
-                if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", col):
-                    raise ValueError(
-                        f"generated column name {col!r} must be an "
-                        "identifier"
-                    )
-                if col in (partition_by or []):
-                    raise ValueError(
-                        f"partition column {col!r} cannot be generated"
-                    )
-                try:
-                    df.select(F.expr(sql))
-                except Exception as e:
-                    raise ValueError(
-                        f"generated expression for {col!r} does not "
-                        f"resolve: {sql!r} ({e})"
-                    ) from None
-            df = t._apply_generated(
-                {"config": {"generated": dict(generated)}},
-                df,
-                "create",
-            )
-        if partition_by:
-            for c in partition_by:
-                if c not in df.columns:
-                    raise ValueError(
-                        f"partition column {c!r} not in {df.columns}"
-                    )
-                st = df.schema[c].dataType.simpleString()
-                if st not in _STATS_TYPES:
-                    raise ValueError(
-                        f"partition column {c!r} has non-partitionable "
-                        f"type {st} (need one of {_STATS_TYPES})"
-                    )
-        gen_proofs = (
-            t._native_proofs(
+            config["native_proofs"] = t._native_proofs(
                 df.sparkSession, df.schema.jsonValue(), {}, generated
             )
-            if generated
-            else None
-        )
-        add = t._stage_files(df, partition_by=partition_by)
         t._commit(
             None,
             {"op": "create", "add": add, "remove": [],
-             "schema": df.schema.jsonValue(),
-             "config": {"cdf": bool(cdf),
-                        **({"partition_by": list(partition_by)}
-                           if partition_by else {}),
-                        **({"generated": dict(generated)}
-                           if generated else {}),
-                        **({"native_proofs": gen_proofs}
-                           if gen_proofs else {})}},
+             "schema": df.schema.jsonValue(), "config": config},
             [m["path"] for m in add],
         )
         return t
@@ -1158,69 +1181,47 @@ class LakeTable:
         file set (the Delta/Iceberg evolution contract: schema lives in
         the log, not the files). Type changes and drops stay errors."""
         state = self._state()
-        # generated columns: compute when omitted, validate when
-        # provided — BEFORE the column-set check, so a batch may
-        # legitimately omit them
-        df = self._apply_generated(state, df, "append")
-        cols = [f["name"] for f in state["schema"]["fields"]]
-        extra = [c for c in df.columns if c not in cols]
-        if extra and not merge_schema:
-            raise ValueError(
-                f"append schema mismatch: table {cols} vs df {df.columns}"
-            )
-        if not merge_schema and sorted(df.columns) != sorted(cols):
-            raise ValueError(
-                f"append schema mismatch: table {cols} vs df {df.columns}"
-            )
-        self._check_types(state, df)
+        table = StructType.fromJson(state["schema"])
         commit: dict = {"op": "append", "remove": []}
-        stage_mapping = None  # default: staging re-reads the log's
+        extra = [c for c in df.columns if c not in table.names]
         if merge_schema:
-            if extra and state.get("config", {}).get(
-                "column_mapping"
-            ) is not None:
+            gen = self._generated(state)
+            # columns the batch lacks land as typed NULLs (generated
+            # ones are computed on admission)
+            df = df.select(
+                *df.columns,
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in table.fields
+                    if f.name not in df.columns and f.name not in gen
+                ],
+            )
+        if merge_schema and extra:
+            cfg = dict(state.get("config", {}))
+            if cfg.get("column_mapping") is not None:
                 # column mapping active: a NEW column gets a freshly
                 # MINTED physical name, so it can never collide with a
                 # previously-dropped column's physical data still
                 # sitting in old files (the resurrection hazard column
                 # mapping exists to prevent)
-                cfg = dict(state.get("config", {}))
-                mp = dict(cfg.get("column_mapping") or {})
-                for c in extra:
-                    mp[c] = f"{c}_{uuid.uuid4().hex[:8]}"
-                cfg["column_mapping"] = mp
+                cfg["column_mapping"] = {
+                    **cfg["column_mapping"],
+                    **{c: f"{c}_{uuid.uuid4().hex[:8]}" for c in extra},
+                }
                 commit["config"] = cfg
-                stage_mapping = mp  # stage under the NEW mapping
-            old = StructType.fromJson(state["schema"])
-            merged = StructType(
-                list(old.fields)
+            commit["schema"] = StructType(
+                table.fields
                 + [
                     # widened columns are ALWAYS nullable: every
                     # pre-evolution row backfills them as NULL, whatever
                     # the batch's own nullability said
                     StructField(c, df.schema[c].dataType, True)
-                    for c in df.columns
-                    if c not in cols
+                    for c in extra
                 ]
-            )
-            df = df.select(
-                *[
-                    F.col(f.name)
-                    if f.name in df.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in merged.fields
-                ]
-            )
-            if extra:
-                commit["schema"] = merged.jsonValue()
-        else:
-            df = df.select(*cols)
-        self._enforce_constraints(state, df, "append")
-        commit["add"] = self._stage_files(
-            df,
-            partition_by=self._partition_by(state),
-            mapping=stage_mapping,
-        )
+            ).jsonValue()
+            # admit and stage under the widened schema and mapping
+            state = {**state, "schema": commit["schema"], "config": cfg}
+        _, commit["add"] = self._land(state, df, "append")
         return self._commit(
             state, commit, [m["path"] for m in commit["add"]]
         )
@@ -1228,27 +1229,25 @@ class LakeTable:
     def overwrite(self, df: DataFrame) -> int:
         """Replace table contents; old files stay for time travel."""
         state = self._state()
-        df = self._apply_generated(state, df, "overwrite")
         pby = self._partition_by(state)
         if pby and any(c not in df.columns for c in pby):
             raise ValueError(
                 f"overwrite must keep partition columns {pby}"
             )
-        if state.get("config", {}).get(
-            "column_mapping"
-        ) is not None and sorted(df.columns) != sorted(
-            f["name"] for f in state["schema"]["fields"]
+        if state.get("config", {}).get("column_mapping") is not None and (
+            sorted({*df.columns, *self._generated(state)})
+            != sorted(f["name"] for f in state["schema"]["fields"])
         ):
             raise ValueError(
                 "schema-changing overwrite on a column-mapped table "
                 "would orphan the mapping — use append(merge_schema="
                 "True), rename_column, or drop_column instead"
             )
-        # constraints bind the NEW contents too; an overwrite whose
-        # schema drops a constrained column fails here at analysis —
-        # drop the constraint first
-        self._enforce_constraints(state, df, "overwrite")
-        add = self._stage_files(df, partition_by=pby)
+        # the batch's columns are the new schema; constraints bind the
+        # new contents too, so an overwrite whose schema drops a
+        # constrained column fails its check — drop the constraint
+        # first
+        df, add = self._land({**state, "schema": None}, df, "overwrite")
         return self._commit(
             state,
             {"op": "overwrite", "add": add,
@@ -1326,9 +1325,7 @@ class LakeTable:
 
     def constraints(self) -> dict[str, str]:
         """The table's CHECK constraints, ``{name: sql_expr}``."""
-        return dict(
-            (self._state().get("config") or {}).get("constraints") or {}
-        )
+        return dict(self._constraints(self._state()))
 
     def add_constraint(
         self, spark: SparkSession, name: str, expr_sql: str
@@ -1336,11 +1333,15 @@ class LakeTable:
         """ALTER TABLE ADD CONSTRAINT ``name`` CHECK (``expr_sql``) —
         the Delta constraint contract: the expression must be a
         BOOLEAN SQL expression over the table's columns, EXISTING data
-        must already satisfy it (one aggregate over the live view —
-        otherwise the constraint would be a lie from birth), and every
-        subsequent row-writing commit (append, overwrite, merge,
-        apply_changes, update post-images, the streaming sink) fails
-        atomically if any written row evaluates it to FALSE. NULL
+        must already satisfy it (the writers' one check, :meth:`_vet`,
+        over the live view — otherwise the constraint would be a lie
+        from birth), and every later row-writing commit fails
+        atomically if any written row evaluates it to FALSE: append,
+        overwrite, copy_into and the foreachBatch sink check their
+        staged batch (:meth:`_land`); replace_where its staged batch;
+        update_where, merge_into and apply_changes their post-images
+        and their staged source or inserts; the native batch and
+        streaming writers each Arrow batch, through DuckDB. NULL
         results PASS (SQL standard CHECK three-valued semantics) — a
         NOT NULL rule is spelled ``col IS NOT NULL``.
 
@@ -1355,9 +1356,7 @@ class LakeTable:
                 f"constraint name {name!r} must be an identifier"
             )
         state = self._state()
-        cons = dict(
-            (state.get("config") or {}).get("constraints") or {}
-        )
+        cons = dict(self._constraints(state))
         if name in cons:
             raise ValueError(
                 f"constraint {name!r} already exists: "
@@ -1379,18 +1378,12 @@ class LakeTable:
                 f"constraint expression must be BOOLEAN, got "
                 f"{dt.simpleString()}: {expr_sql!r}"
             )
-        # existing data must satisfy (Delta's ADD CONSTRAINT posture)
-        trial = dict(state)
-        trial["config"] = {
-            **state.get("config", {}),
-            "constraints": {name: expr_sql},
-        }
-        self._enforce_constraints(
-            trial,
-            self._scan_live(
-                spark, state, sorted(state["files"])
-            ),
-            what=f"add_constraint({name!r}) over existing rows",
+        # existing data must satisfy (Delta's ADD CONSTRAINT posture):
+        # the writers' one check, holding the new constraint alone
+        self._vet(
+            {"config": {"constraints": {name: expr_sql}}},
+            self._scan_live(spark, state, sorted(state["files"])),
+            f"add_constraint({name!r}) over existing rows",
         )
         cons[name] = expr_sql
         cfg = dict(state.get("config", {}))
@@ -1424,7 +1417,7 @@ class LakeTable:
                 f"cannot {what} partition column {col!r} — partition "
                 "names are baked into the directory layout"
             )
-        cons = (state.get("config") or {}).get("constraints") or {}
+        cons = self._constraints(state)
         for cname, expr in sorted(cons.items()):
             if re.search(rf"\b{re.escape(col)}\b", expr):
                 raise ValueError(
@@ -1432,7 +1425,7 @@ class LakeTable:
                     f"CHECK ({expr}) references it — drop the "
                     "constraint first"
                 )
-        gen = (state.get("config") or {}).get("generated") or {}
+        gen = self._generated(state)
         if col in gen:
             raise ValueError(
                 f"cannot {what} {col!r}: it is GENERATED ALWAYS AS "
@@ -1511,9 +1504,7 @@ class LakeTable:
     def drop_constraint(self, name: str) -> int:
         """ALTER TABLE DROP CONSTRAINT — metadata-only commit."""
         state = self._state()
-        cons = dict(
-            (state.get("config") or {}).get("constraints") or {}
-        )
+        cons = dict(self._constraints(state))
         if name not in cons:
             raise ValueError(f"no constraint named {name!r}")
         del cons[name]
@@ -1963,25 +1954,11 @@ class LakeTable:
         Returns ``{version, rows_deleted, rows_inserted,
         files_rewritten, files_kept}``."""
         state = self._state()
-        # omitted generated columns compute here; the gate validates
-        # the provided ones over the frozen batch
-        df = df.withColumns({
-            c: F.expr(sql)
-            for c, sql in self._generated(state).items()
-            if c not in df.columns
-        })
-        cols = [f["name"] for f in state["schema"]["fields"]]
-        if sorted(df.columns) != sorted(cols):
-            raise ValueError(
-                f"replace_where schema mismatch: table {cols} vs df "
-                f"{df.columns}"
-            )
-        df = df.select(*cols)
-        self._check_types(state, df)
+        vetted = self._provided(state, df)
+        df = self._admit(state, df)
 
         def gate(batch: DataFrame) -> None:
-            self._apply_generated(state, batch, "replace_where")
-            self._enforce_constraints(state, batch, "replace_where")
+            self._vet(vetted, batch, "replace_where")
             outside = batch.where(~predicate.eqNullSafe(F.lit(True)))
             if outside.limit(1).count():
                 raise ValueError(
@@ -2046,12 +2023,12 @@ class LakeTable:
             raise FileNotFoundError(
                 f"COPY INTO source files do not exist: {missing[:3]}"
             )
-        schema = StructType.fromJson(state["schema"])
         gen = self._generated(state)
-        need = [f.name for f in schema.fields if f.name not in gen]
-        read_schema = StructType(
-            [f for f in schema.fields if f.name not in gen]
-        )
+        read_schema = StructType([
+            f for f in StructType.fromJson(state["schema"]).fields
+            if f.name not in gen
+        ])
+        need = read_schema.names
         fmt = file_format.lower()
         if fmt == "parquet":
             df = spark.read.parquet(*new)
@@ -2074,13 +2051,7 @@ class LakeTable:
                 f"file_format must be parquet|csv|json, got "
                 f"{file_format!r}"
             )
-        df = self._apply_generated(state, df.select(*need), "copy_into")
-        df = df.select(*[f.name for f in schema.fields])
-        self._check_types(state, df)
-        self._enforce_constraints(state, df, "copy_into")
-        add = self._stage_files(
-            df, partition_by=self._partition_by(state)
-        )
+        _, add = self._land(state, df.select(*need), "copy_into")
         cfg = dict(state.get("config", {}))
         cfg["copy_loaded"] = sorted(loaded | set(new))
         return {
@@ -2135,7 +2106,9 @@ class LakeTable:
            source is key-unique (a target row matching two source rows
            is nondeterministic — Delta throws too; NULL keys never
            match, so they are exempt) and join on them; without
-           ``keys`` the source only lands.
+           ``keys`` the source only lands. ``gate`` vets the frozen
+           source as staged (replace_where's region and write checks,
+           the landing merge's write checks, CDC's op tally).
         2. Candidates: the stats ``prune`` (must be implied by the
            mutation) or all files.
         3. ONE per-file aggregation over the candidates yields the
@@ -2155,14 +2128,14 @@ class LakeTable:
            frozen source)`` rows (guide §2.6: the jobs are independent,
            so their tasks overlap). ``mode='dv'``: the changed rows
            become deletion vectors and their post-images land as new
-           files — zero rewrites for any mutation. ``gate`` vets the
-           post-images before anything stages. ``lands=True`` means
-           every source row lands (replace_where's batch, the
+           files — zero rewrites for any mutation. The post-images
+           pass the write checks (:meth:`_vet`) before anything
+           stages, and the incoming rows as staged. ``lands=True``
+           means every source row lands (replace_where's batch, the
            unconditional ``SET *`` and ``INSERT *`` merge): the frozen
            source files ARE the commit's incoming files and CDF insert
            side, so the front end drops every changed row instead of
-           projecting post-images, and ``gate`` vets the frozen source
-           as soon as it stages. Otherwise the frozen source was
+           projecting post-images. Otherwise the frozen source was
            scratch and is unlinked.
         5. ONE commit: ``op`` plus ``extra``, ``count_as`` naming the
            changed-row count, ``mode``/``dv`` in dv mode, and
@@ -2229,7 +2202,7 @@ class LakeTable:
                     s_side = src_df.withColumn(
                         "_s_match", F.lit(True)
                     ).alias("s")
-                if lands and gate is not None:
+                if gate is not None:
                     gate(src_df)
 
             def rows(files: list[str], meta: bool = True) -> DataFrame:
@@ -2293,8 +2266,7 @@ class LakeTable:
                     pre = image(tf.where(find))
                 if post is not None:
                     post_rows = post(tf.where(find & ~drop))
-                    if gate is not None:
-                        gate(post_rows)
+                    self._vet(state, post_rows, f"{op} post-images")
                 if mode == "dv":
                     new_dv = self._stage_dv(
                         tf.where(find).select(
@@ -2326,6 +2298,7 @@ class LakeTable:
                 for part in (rew_add, pre_add, post_add, ins_add)
                 for m in part
             ]
+            self._vet_staged(spark, state, ins_add, f"{op} inserts")
             lead = src_add if lands else []
             if not lands:
                 self._reclaim([m["path"] for m in src_add])  # scratch
@@ -2397,13 +2370,13 @@ class LakeTable:
         src: DataFrame,
         cond: str | None,
         insert_set: dict[str, str] | None,
-        what: str,
     ) -> DataFrame:
         """MERGE's not-matched insert side: the frozen source
         anti-joined against the HIT files' live keys (a NULL-key
         source row matches nothing and inserts — SQL semantics), gated
         by ``cond`` on IS TRUE (bare source columns — only the source
-        row is in scope), projected through ``insert_set`` and CHECKed.
+        row is in scope) and projected through ``insert_set``; the
+        caller checks the rows as staged.
 
         ``insert_set`` is SQL ``INSERT (cols) VALUES (exprs)``:
         assigned columns take their expression cast to the column's
@@ -2411,7 +2384,6 @@ class LakeTable:
         columns insert NULL, omitted GENERATED columns are computed
         (provided ones validate) — the Delta insert contract."""
         table = StructType.fromJson(state["schema"])
-        cols = table.names
         ins = (
             src.join(
                 self._scan_live(spark, state, hit).select(*keys),
@@ -2423,26 +2395,23 @@ class LakeTable:
         )
         if cond is not None:
             ins = ins.where(_is_true(cond))
-        if insert_set is not None:
-            gen = self._generated(state)
-            ins = self._apply_generated(
-                state,
-                ins.select(
-                    *[
-                        (
-                            F.expr(insert_set[f.name])
-                            if f.name in insert_set
-                            else F.lit(None)
-                        ).cast(f.dataType).alias(f.name)
-                        for f in table.fields
-                        if f.name in insert_set or f.name not in gen
-                    ]
-                ),
-                what,
-            )
-        ins = ins.select(*cols)
-        self._enforce_constraints(state, ins, what)
-        return ins
+        if insert_set is None:
+            return ins.select(*table.names)
+        gen = self._generated(state)
+        return self._admit(
+            state,
+            ins.select(
+                *[
+                    (
+                        F.expr(insert_set[f.name])
+                        if f.name in insert_set
+                        else F.lit(None)
+                    ).cast(f.dataType).alias(f.name)
+                    for f in table.fields
+                    if f.name in insert_set or f.name not in gen
+                ]
+            ),
+        )
 
     # -- update ---------------------------------------------------------
 
@@ -2461,8 +2430,10 @@ class LakeTable:
         ``{"a": F.col("b"), "b": F.col("a")}`` swaps. FALSE and NULL
         predicate rows are untouched (three-valued semantics, same as
         :meth:`delete_where`). Assigned expressions must keep the
-        column's type — the shared type gate rejects drift before any
-        file stages (cast explicitly in the expression).
+        column's type — the shared type rule rejects drift before any
+        file stages (cast explicitly in the expression). Only the
+        post-images pass the write checks: carried-over rows satisfied
+        them when they were written — O(matched).
 
         ``mode='rewrite'`` (default) — file-granular copy-on-write,
         the :meth:`delete_where` discipline: optional stats ``prune``,
@@ -2502,35 +2473,24 @@ class LakeTable:
         hit = predicate.eqNullSafe(F.lit(True))
 
         def post(df: DataFrame) -> DataFrame:
-            out = df.select(
-                *[
+            # generated columns RECOMPUTE over the post-assignment row
+            # (Delta's contract: dependencies changed, so the generated
+            # value follows) — admission computes them, as for any
+            # batch that omits them
+            return self._admit(
+                state,
+                df.select(*[
                     F.when(hit, assigns[c]).otherwise(F.col(c)).alias(c)
                     if c in assigns
                     else F.col(c)
                     for c in cols
-                ],
-                *([hit.alias("_upd_m")] if gen else []),
-            )
-            # generated columns RECOMPUTE over the post-assignment row
-            # (Delta's contract: dependencies changed, so the generated
-            # value follows); carried-over rows keep theirs
-            for c, sql in sorted(gen.items()):
-                out = out.withColumn(
-                    c, F.when(F.col("_upd_m"), F.expr(sql)).otherwise(F.col(c))
-                )
-            return out.drop("_upd_m") if gen else out
-
-        def gate(post_rows: DataFrame) -> None:
-            # only the post-images: carried-over rows satisfied the
-            # constraints when they were written — O(matched)
-            self._check_types(state, post_rows)
-            self._enforce_constraints(
-                state, post_rows, "update_where post-images"
+                    if c not in gen
+                ]),
             )
 
         r = self._mutate(
             spark, state, "update", mode, predicate, F.lit(False),
-            post=post, gate=gate, prune=prune, count_as="rows_updated",
+            post=post, prune=prune, count_as="rows_updated",
             extra={"predicate": str(predicate),
                    "set": {c: str(e) for c, e in assigns.items()}},
         )
@@ -2579,7 +2539,12 @@ class LakeTable:
         front: the staging metadata gives ``rows_source`` without a
         ``count()`` action, in update mode the staged files ARE the
         commit's incoming files, and the semi/anti joins re-read the
-        staged parquet instead of recomputing the source plan.
+        staged parquet instead of recomputing the source plan. What
+        lands passes the write checks (:meth:`_vet`, generated columns
+        and CHECK constraints): the unconditional ``SET *`` +
+        ``INSERT *`` merge checks the staged source itself, every other
+        shape its post-images and its staged inserts, so a source row
+        that lands nowhere is not checked.
 
         ``mode='dv'`` is the Delta DV MERGE shape: changed target rows
         become DELETION VECTORS and only post-images and inserts land
@@ -2729,13 +2694,9 @@ class LakeTable:
                 norm.append((action, cond, sm))
             matched_clauses = norm
         state = self._state()
-        source = self._apply_generated(state, source, "merge_into source")
-        cols = [f["name"] for f in state["schema"]["fields"]]
-        if sorted(source.columns) != sorted(cols):
-            raise ValueError(
-                f"merge schema mismatch: table {cols} vs source "
-                f"{source.columns}"
-            )
+        vetted = self._provided(state, source)
+        source = self._admit(state, source)
+        cols = source.columns
         nms = when_not_matched_by_source
         nms_set = not_matched_by_source_set or {}
         bad_set = sorted(set(nms_set) - set(cols))
@@ -2744,8 +2705,6 @@ class LakeTable:
                 f"not_matched_by_source_set targets unknown columns "
                 f"{bad_set}"
             )
-        self._check_types(state, source)
-        gen = self._generated(state)
         # the single-clause surface is the chain's one-element case
         clauses: list[tuple] = (
             list(matched_clauses)
@@ -2780,25 +2739,8 @@ class LakeTable:
         if lands:
             # every source row lands: matched rows leave their files
             # and the frozen source files carry the post-images and
-            # inserts alike — gate all of them, from the staged scan
+            # inserts alike — the gate checks all of them, as staged
             drop, post = changed, None
-
-            def gate(src: DataFrame) -> None:
-                self._enforce_constraints(state, src, "merge_into source")
-        else:
-
-            def gate(post_rows: DataFrame) -> None:
-                if gen and (nms == "update" or set_maps):
-                    # SET exprs could leave a generated column stale
-                    # (full-row SET * rows take the whole source row,
-                    # already validated above)
-                    self._apply_generated(
-                        state, post_rows, "merge_into SET post-images"
-                    )
-                self._enforce_constraints(
-                    state, post_rows, "merge_into changed rows"
-                )
-
         extra = {"merge_keys": keys, "when_matched": when_matched}
         if general:
             extra["clauses"] = {
@@ -2819,16 +2761,21 @@ class LakeTable:
             }
         r = self._mutate(
             spark, state, "merge", mode, changed, drop,
-            post=post, gate=gate,
+            post=post,
+            gate=(
+                (lambda src: self._vet(vetted, src, "merge_into source"))
+                if lands
+                else None
+            ),
             # a by-source clause: ANY file may hold a not-matched row
             prune=None if nms is not None else prune,
-            source=source.select(*cols), keys=keys, lands=lands,
+            source=source, keys=keys, lands=lands,
             incoming=(
                 None
                 if lands or when_not_matched != "insert"
                 else lambda hit, src: self._merge_inserts(
                     spark, state, keys, hit, src, not_matched_condition,
-                    not_matched_insert_set, "merge_into inserts",
+                    not_matched_insert_set,
                 )
             ),
             extra=extra,
@@ -2887,56 +2834,45 @@ class LakeTable:
         if mode not in ("rewrite", "dv"):
             raise ValueError("mode must be 'rewrite' or 'dv'")
         state = self._state()
-        cols = [f["name"] for f in state["schema"]["fields"]]
         if op_col not in source.columns:
             raise ValueError(f"source lacks op column {op_col!r}")
-        gen = self._generated(state)
-        if gen:
-            # compute omitted generated columns for ALL rows (a
-            # tombstone's payload is ignored anyway), but VALIDATE
-            # only the upserts — delete rows apply by key and may
-            # carry NULL payloads that would trivially mismatch
-            for c, sql in sorted(gen.items()):
-                if c not in source.columns:
-                    source = source.withColumn(c, F.expr(sql))
-            self._apply_generated(
-                state,
-                source.where(F.col(op_col) == "u").drop(op_col),
-                "apply_changes upserts",
-            )
-        if sorted(c for c in source.columns if c != op_col) != sorted(
-            cols
-        ):
-            raise ValueError(
-                f"apply_changes schema mismatch: table {cols} vs source "
-                f"{[c for c in source.columns if c != op_col]}"
-            )
-        self._check_types(state, source.drop(op_col))
+        table = StructType.fromJson(state["schema"])
+        # the op column is admitted as one more column; omitted
+        # generated columns compute for every row (a tombstone's
+        # payload is ignored), and only the rows that land — the
+        # upserts' post-images and inserts — are checked
+        source = self._admit(
+            {**state, "schema": StructType(
+                table.fields + [source.schema[op_col]]
+            ).jsonValue()},
+            source,
+        )
         op = F.col(op_col)
-        tally = source.agg(
-            F.sum((~op.isin("u", "d")).cast("long")).alias("bad"),
-            F.sum((op == "u").cast("long")).alias("u"),
-            F.sum((op == "d").cast("long")).alias("d"),
-        ).first()
-        if tally["bad"]:
-            raise ValueError(
-                f"{op_col!r} must be 'u' or 'd' for every source row"
-            )
+        tally: dict = {}
+
+        def gate(src: DataFrame) -> None:
+            tally.update(src.agg(
+                F.sum((~op.isin("u", "d")).cast("long")).alias("bad"),
+                F.sum((op == "u").cast("long")).alias("u"),
+                F.sum((op == "d").cast("long")).alias("d"),
+            ).first().asDict())
+            if tally["bad"]:
+                raise ValueError(
+                    f"{op_col!r} must be 'u' or 'd' for every source row"
+                )
+
         q = f"`{op_col}`"
         changed, drop, post = _merge_flags(
-            cols, [("delete", f"s.{q} = 'd'", None), ("update", None, None)]
+            table.names,
+            [("delete", f"s.{q} = 'd'", None), ("update", None, None)],
         )
         r = self._mutate(
             spark, state, "merge", mode, changed, drop, post=post,
-            gate=lambda d: self._enforce_constraints(
-                state, d, "apply_changes upserts"
-            ),
-            prune=prune,
-            source=source.where(op.isin("u", "d")).select(*cols, op_col),
-            keys=keys,
+            gate=gate, prune=prune,
+            # a row without an op applies nothing
+            source=source.where(op.isNotNull()), keys=keys,
             incoming=lambda hit, src: self._merge_inserts(
                 spark, state, keys, hit, src, f"{q} = 'u'", None,
-                "apply_changes upserts",
             ),
             extra={"merge_keys": keys, "when_matched": "update",
                    "cdc": True},
@@ -2944,7 +2880,6 @@ class LakeTable:
         r["rows_upserts"] = tally["u"] or 0
         r["rows_deletes"] = tally["d"] or 0
         return _pick(r, "rows_upserts", "rows_deletes", "rows_matched")
-
 
     # -- streaming sink (exactly-once) -----------------------------------
 
@@ -2970,17 +2905,8 @@ class LakeTable:
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             state = self._state()
-            cols = [f["name"] for f in state["schema"]["fields"]]
-            batch_df = self._apply_generated(
+            _, add = self._land(
                 state, batch_df, f"streaming batch {batch_id}"
-            )
-            self._check_types(state, batch_df)
-            self._enforce_constraints(
-                state, batch_df.select(*cols), f"streaming batch {batch_id}"
-            )
-            add = self._stage_files(
-                batch_df.select(*cols),
-                partition_by=self._partition_by(state),
             )
             self._commit(
                 state,
@@ -3443,9 +3369,7 @@ class LakeTable:
             "partition_by": self._partition_by(state) or [],
             "cdf": self._cdf_enabled(state),
             "column_mapping": self._mapping(state),
-            "constraints": dict(
-                (state.get("config") or {}).get("constraints") or {}
-            ),
+            "constraints": dict(self._constraints(state)),
             "generated": dict(self._generated(state)),
             "properties": dict(
                 (state.get("config") or {}).get("properties") or {}
@@ -3738,6 +3662,32 @@ def _feed_schema(table_schema: dict, cdf: bool) -> StructType:
             StructField("_commit_version", LongType(), True),
         ]
     return StructType(fields)
+
+
+def admit_schema(
+    table: StructType, batch: StructType, computed: Iterable[str] = ()
+) -> None:
+    """The column-set and type rule of every lake write, shared by
+    :meth:`LakeTable._admit` and the native writer
+    (``lakebatch.LakeBatchDataSource.writer``), so both engines refuse
+    the same batches with the same text: the batch's columns plus the
+    ``computed`` ones (GENERATED columns the write derives) must be
+    exactly the table's, and each must carry the table's type. Names
+    alone are not enough: a batch whose column type differs would
+    commit fine and poison every later read, which applies the table
+    schema over the incompatible parquet."""
+    if sorted([*batch.names, *computed]) != sorted(table.names):
+        raise ValueError(
+            f"schema mismatch: table {table.names} vs batch {batch.names}"
+        )
+    for fld in table.fields:
+        got = batch[fld.name].dataType if fld.name in batch.names else None
+        if got is not None and got != fld.dataType:
+            raise ValueError(
+                f"column {fld.name!r} type mismatch: table "
+                f"{fld.dataType.simpleString()} vs batch "
+                f"{got.simpleString()}"
+            )
 
 
 def _pick(r: dict, *keys: str) -> dict:

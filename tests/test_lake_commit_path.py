@@ -1,4 +1,5 @@
-"""Every lake write lands through ONE commit path.
+"""Every lake write lands through ONE commit path, and admits its
+batch by ONE column-set and type rule.
 
 ``LakeTable._commit`` owns the version choice, txn dedup, the
 ``remove_dv`` record, the O_EXCL gate with its bounded blind retries
@@ -6,7 +7,9 @@ and the reclaim of staged files. This guard keeps it the only caller
 of ``_write_commit`` in the package sources, and keeps commit retries
 out of the writers (``with_occ_retry`` is for callers retrying whole
 operations). Tests may still call ``_write_commit`` to forge competitor
-commits.
+commits. ``admit_schema`` is that rule: ``LakeTable._admit`` applies it
+to every batch (and ``_check_assign_types`` to SET assignments), and
+the native writer applies it too, so both engines refuse alike.
 """
 
 from __future__ import annotations
@@ -52,3 +55,11 @@ def test_write_commit_is_called_only_by_commit():
 
 def test_writers_do_not_retry_commits_themselves():
     assert _uses("with_occ_retry") == []
+
+
+def test_one_admission_rule():
+    assert sorted(_uses("admit_schema")) == [
+        "lakebatch:LakeBatchDataSource.writer",
+        "lakehouse:LakeTable._admit",
+        "lakehouse:LakeTable._check_assign_types",
+    ]

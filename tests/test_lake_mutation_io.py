@@ -1,15 +1,20 @@
-"""What a lake row mutation computes and writes.
+"""What a lake write computes and writes.
 
-`LakeTable._mutate` stages a mutation's input once and reads only the
-files it may change:
+Every writer stages its batch once and checks what it staged;
+`LakeTable._mutate` reads only the files a mutation may change:
 
-- `replace_where` evaluates its batch lineage once (it stages as the
-  frozen batch; the region and CHECK gates scan the staged files), and
-  a refused batch leaves no file, stage directory or version behind.
+- Each writer evaluates its batch lineage once: `replace_where` stages
+  it as the frozen batch, `create`/`append`/`overwrite`/the streaming
+  sink stage it through `_land`, and a merge source stages in
+  `_mutate`; the generated-column, CHECK and region checks scan the
+  staged files. A refused batch leaves no file, stage directory or
+  version behind.
 - The per-file match pass filters on the raw predicate before it
   aggregates, so Parquet pushes it into the scan.
 - A file whose every live row is deleted is removed without a
-  survivor rewrite, and no mutation commits a zero-row file.
+  survivor rewrite, and no write commits a zero-row file.
+- A staging retried after a transient task-deserialization error is
+  logged and leaves no stage directory behind.
 """
 
 from __future__ import annotations
@@ -71,6 +76,104 @@ def test_replace_where_evaluates_its_batch_once(spark, tmp_path):
     assert (r["rows_deleted"], r["rows_inserted"]) == (3, 2)
     got = sorted(tuple(x) for x in t.read(spark).collect())
     assert got == [(1, 1, 10.0), (2, 1, 20.0), (4, 2, 4.0), (5, 2, 5.0)]
+
+
+def _governed(spark, path):
+    """Two rows under a generated column ``v2 = v * 2`` and a CHECK
+    constraint ``v > 0``."""
+    t = LakeTable.create(
+        _mk(spark, [(1, 1, 1.0), (2, 2, 2.0)]), path,
+        generated={"v2": "v * 2"},
+    )
+    t.add_constraint(spark, "v_pos", "v > 0")
+    return t
+
+
+# each writer lands ``batch`` on the governed table ``t``; create lands
+# it as a new governed table next to it
+WRITERS = {
+    "create": lambda spark, t, batch: LakeTable.create(
+        batch, t.path + "_new", generated={"v2": "v * 2"}
+    ),
+    "append": lambda spark, t, batch: t.append(batch),
+    "overwrite": lambda spark, t, batch: t.overwrite(batch),
+    "streaming_sink": lambda spark, t, batch: t.streaming_sink("app")(
+        batch, 0
+    ),
+    "merge_into": lambda spark, t, batch: t.merge_into(spark, batch, ["k"]),
+    "replace_where": lambda spark, t, batch: t.replace_where(
+        spark, batch, F.col("day") > 0
+    ),
+}
+
+
+def _batch(spark, rows, v2):
+    """``rows`` of (k, day, v), with ``v2`` provided as ``v * 2 + v2``
+    or, when ``v2`` is None, omitted."""
+    if v2 is None:
+        return _mk(spark, rows)
+    return spark.createDataFrame(
+        [(*r, r[2] * 2 + v2) for r in rows], SCHEMA + ", v2 double"
+    )
+
+
+@pytest.mark.parametrize(
+    "writer, provided",
+    [("create", True), ("append", True), ("append", False),
+     ("overwrite", False), ("streaming_sink", False),
+     ("merge_into", True), ("replace_where", True)],
+)
+def test_governed_writers_evaluate_their_batch_once(
+    spark, tmp_path, writer, provided
+):
+    """With a generated column and a CHECK constraint to hold, each
+    writer still runs its batch's UDF once per row: the checks read
+    the staged files, not the lineage."""
+    t = _governed(spark, str(tmp_path / "t"))
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def tick(v):
+        acc.add(1)
+        return v
+
+    rows = [(3, 1, 3.0), (4, 2, 4.0)]
+    batch = _batch(spark, rows, 0.0 if provided else None)
+    WRITERS[writer](spark, t, batch.withColumn("v", tick("v")))
+    assert acc.value == len(rows)
+    out = LakeTable(t.path + "_new") if writer == "create" else t
+    got = {r["k"]: r["v2"] for r in out.read(spark).collect()}
+    assert {k: got[k] for k, _d, _v in rows} == {3: 6.0, 4: 8.0}
+
+
+@pytest.mark.parametrize(
+    "writer, refusal",
+    [("create", "generated"), ("append", "generated"),
+     ("append", "check"), ("overwrite", "check"),
+     ("streaming_sink", "generated"), ("streaming_sink", "check"),
+     ("merge_into", "generated"), ("merge_into", "check"),
+     ("replace_where", "generated")],
+)
+def test_refused_governed_write_leaves_nothing(
+    spark, tmp_path, writer, refusal
+):
+    t = _governed(spark, str(tmp_path / "t"))
+    if refusal == "check":
+        batch, match = _batch(spark, [(3, 1, -3.0)], None), "v_pos"
+    else:
+        batch, match = _batch(spark, [(3, 1, 3.0)], 1.0), "GENERATED"
+    out = LakeTable(t.path + "_new") if writer == "create" else t
+    version, files = out.version(), (
+        _data_files(out) if os.path.isdir(out.data_dir) else []
+    )
+    with pytest.raises(ValueError, match=match):
+        WRITERS[writer](spark, t, batch)
+    assert out.version() == version
+    if os.path.isdir(out.path):
+        assert _data_files(out) == files
+        assert not [
+            n for n in os.listdir(out.path) if n.startswith("_stage-")
+        ]
 
 
 @pytest.mark.parametrize("refusal", ["region", "check"])
@@ -137,15 +240,56 @@ def test_match_pass_pushes_the_predicate(spark, tmp_path, monkeypatch):
 
 
 def test_empty_mutation_stagings_add_no_file(spark, tmp_path):
-    """Spark writes one part file for an empty frame; a mutation
-    commits none: not for an empty batch, an empty insert side or an
-    emptied table, whose reads keep the schema."""
+    """Spark writes one part file for an empty frame; no lake write
+    commits one: not a mutation's empty batch, empty insert side or
+    emptied table, nor an empty create, append or overwrite. Each
+    still commits its version, and reads keep the schema."""
     t = _two_days(spark, str(tmp_path / "t"))
     t.replace_where(spark, _mk(spark, []), F.col("day") == 2)
     t.merge_into(spark, _mk(spark, [(1, 1, 9.0)]), ["k"], when_matched="keep")
     t.delete_where(spark, F.lit(True))
     assert [h["added"] for h in t.history()[-3:]] == [0, 0, 0]
-    assert t._state()["files"] == {}
-    df = t.read(spark)
-    assert df.schema.simpleString() == _mk(spark, []).schema.simpleString()
-    assert df.count() == 0
+    e = LakeTable.create(_mk(spark, []), str(tmp_path / "e"))
+    e.append(_mk(spark, []))
+    e.overwrite(_mk(spark, []))
+    assert [h["added"] for h in e.history()] == [0, 0, 0]
+    assert _data_files(e) == []
+    for table in (t, e):
+        assert table._state()["files"] == {}
+        df = table.read(spark)
+        assert df.schema.simpleString() == (
+            _mk(spark, []).schema.simpleString()
+        )
+        assert df.count() == 0
+
+
+def test_stage_retry_is_logged_and_leaves_no_stage_dir(
+    spark, tmp_path, caplog, monkeypatch
+):
+    """A staging whose parquet write fails with the transient
+    ``OptionalDataException`` is resubmitted to a fresh stage dir, and
+    each retry logs one record on ``olist.lake``."""
+    t = _two_days(spark, str(tmp_path / "t"))
+    cls = type(_mk(spark, []).write)
+    parquet = cls.parquet
+    failed = []
+
+    def once(self, path, *a, **kw):
+        if not failed:
+            failed.append(path)
+            raise RuntimeError("java.io.OptionalDataException")
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(cls, "parquet", once)
+    caplog.set_level(logging.WARNING, logger="olist.lake")
+    v = t.append(_mk(spark, [(6, 3, 6.0)]))
+    monkeypatch.undo()
+    assert len(failed) == 1
+    assert _mutation_records(caplog) == [
+        "lake stage retry 1 of 3 after OptionalDataException"
+    ]
+    assert t.version() == v
+    assert sorted(x["k"] for x in t.read(spark).collect()) == [
+        1, 2, 3, 4, 5, 6
+    ]
+    assert not [n for n in os.listdir(t.path) if n.startswith("_stage-")]

@@ -1,11 +1,13 @@
 """Process hygiene of the package: lake entries leave no scratch
-behind, and in-entry contracts are not ``assert`` statements (which
+behind, a cached warehouse does not outlive its testdata directory,
+and in-entry contracts are not ``assert`` statements (which
 ``python -O`` strips, together with any work done inside them)."""
 
 from __future__ import annotations
 
 import ast
 import os
+import shutil
 import subprocess
 import sys
 from pathlib import Path
@@ -35,6 +37,24 @@ def test_scratch_root_removed_at_exit(tmp_path):
     root = out.stdout.strip().splitlines()[-1]
     assert root.startswith(str(tmp_path)), root
     assert not os.path.exists(root)
+
+
+def test_star_cache_of_a_deleted_sf_dir_is_swept(spark, sf_dir, tmp_path):
+    """``warehouse_tables`` caches each build under ``.cache/star_*``;
+    once the build's ``sf_dir`` is deleted the key can never be hit
+    again, so the next call removes it whatever its age."""
+    from olist_data_warehouse_spark.plans.queries import warehouse_tables
+
+    cache = REPO / ".cache"
+    before = set(os.listdir(cache)) if cache.is_dir() else set()
+    copy = tmp_path / "sf_copy"
+    shutil.copytree(sf_dir, copy)
+    warehouse_tables(spark, str(copy))
+    built = {d for d in os.listdir(cache) if d.startswith("star_")} - before
+    assert len(built) == 1
+    shutil.rmtree(copy)
+    warehouse_tables(spark, sf_dir)
+    assert not built & set(os.listdir(cache))
 
 
 def test_no_assert_statements_in_package():

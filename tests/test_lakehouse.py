@@ -4,6 +4,7 @@ file-granular DELETE, time travel, compaction, vacuum, concurrency."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -283,6 +284,27 @@ def test_write_paths_reject_type_mismatch_before_commit(spark, table):
         table.merge_into(spark, bad, ["order_id"])
     with pytest.raises(ValueError, match="type mismatch"):
         table.streaming_sink("tj")(bad, 0)
+    # a batch with an extra or a missing column: the foreachBatch sink
+    # refuses it with append's error, the native writer with the same
+    # text, and neither stages a file
+    from olist_data_warehouse_spark.sources import lakebatch
+
+    lakebatch.register(spark)
+    files = _data_files(table)
+    for off in (
+        _orders(spark, 0, 5).withColumn("extra", F.lit(1)),
+        _orders(spark, 0, 5).drop("price"),
+    ):
+        with pytest.raises(ValueError, match="schema mismatch") as appended:
+            table.append(off)
+        with pytest.raises(ValueError, match="schema mismatch") as sunk:
+            table.streaming_sink("tj")(off, 0)
+        assert str(sunk.value) == str(appended.value)
+        with pytest.raises(Exception, match=re.escape(str(appended.value))):
+            off.write.format("lake").option("path", table.path).mode(
+                "append"
+            ).save()
+    assert _data_files(table) == files
     # nothing committed, table still fully readable
     assert table.version() == v_before
     assert table.read(spark).count() == 100
